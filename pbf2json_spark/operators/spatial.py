@@ -15,18 +15,24 @@ Design per operator (all range-like joins reduced to cell equi joins):
   single task.  Explicit hot-key salting lives in plans/salting.py and
   applies where a SHUFFLE hash join exists (the denormalize node
   join); this join is broadcast, so salting has nothing to split here.
-- knn: ADAPTIVE-RESOLUTION cell-disk expansion.  A bounded coarse
-  density aggregate picks a per-query cell level (fine cells in
-  zipfian hotspots, coarse in sparse regions) so the initial disk is
-  expected to hold ~margin*k points; rounds are (lvl, cell)-equi joins
-  re-ranked by a JVM-side haversine under one rank<=k window
-  (WindowGroupLimit partial top-k); a query terminates when its kth
-  distance <= the conservative disk-exit bound.  Escalation coarsens
-  the level at a constant ring (bounded join-key rows, ~margin*k
-  expected candidates per round); survivors fold into one brute-force
-  scan when its priced op count fits BRUTE_OPS_BUDGET.  This is the
-  reference-free operator the survey maps from 'H3 k-ring expansion +
-  distance re-rank'.
+- knn / knn_join: ONE priced route rule (_brute_fits).  A call whose
+  n_queries x n_points fits BRUTE_OPS_BUDGET (2e9 pair-ops) is one
+  vectorized brute scan, with no ladder job at all.  Measured on a
+  4-core host (warm knn_join, zipfian, k=8, exclude_self; identical
+  ids and ranks on both routes), brute vs ladder:
+      2e7 pair-ops  (2k x 10k)     1.3 s  vs   8.8 s
+      5e8 pair-ops  (5k x 100k)    3.8 s  vs  12.9 s
+      2e9 pair-ops  (20k x 100k)  11.7 s  vs  14.6 s
+  so the budget sits near the crossover.  Above it runs the cell ladder:
+  ADAPTIVE-RESOLUTION cell-disk expansion, where per-query cell levels
+  (fine in zipfian hotspots, coarse in sparse regions) make each disk
+  hold ~margin*k points; rounds are (lvl, cell)-equi joins re-ranked by
+  a JVM-side haversine under one rank<=k window (WindowGroupLimit
+  partial top-k); a query terminates when its kth distance <= the
+  conservative disk-exit bound.  Escalation coarsens the level at a
+  constant ring, and survivors fold into the same brute scan once the
+  rule admits them.  This is the reference-free operator the survey
+  maps from 'H3 k-ring expansion + distance re-rank'.
 - tile_assignment: decode image bytes (mapInPandas batches), block-
   reduce pixels to a gxg grid, map each block to the geo cell under its
   footprint, and aggregate per cell — raster->vector, 'assign decoded
@@ -444,15 +450,22 @@ def _query_disk_pdf(remaining: pd.DataFrame, levels_used: list,
     return pd.concat(frames, ignore_index=True)
 
 
-# legacy guard kept for callers that size their own disks: rings this
-# large cost more to explode+join than they prune (escalation now
-# coarsens the LEVEL at a constant ring instead of growing rings)
-MAX_RING = 16
-
-# total pairwise haversine ops the brute tail may absorb when folding
-# round survivors into an already-queued scan (~a few seconds of
-# vectorized numpy across one node's cores)
+# pairwise haversine ops up to which kNN is ONE vectorized brute scan
+# instead of the cell ladder: the ladder's cost is Spark job floors,
+# the scan's is numpy work, so the crossover is an op count, not a row
+# count (measured crossover table: module docstring)
 BRUTE_OPS_BUDGET = 2_000_000_000
+
+
+def _brute_fits(n_queries: int, n_points: int) -> bool:
+    """The single kNN route rule (knn and knn_join entry, and both
+    ladders' small-tail folds): brute scan iff the pair-op count fits
+    BRUTE_OPS_BUDGET.  The scan collects the query side to the driver,
+    so it also requires n_queries <= KNN_MAX_QUERIES — a larger side
+    stays on the distributed ladder."""
+    return (n_queries <= KNN_MAX_QUERIES
+            and n_queries * n_points <= BRUTE_OPS_BUDGET)
+
 
 # density snapshots keyed on the points DataFrame OBJECT (weak refs):
 # the coarse density aggregate is ingest-time metadata at 10^12 rows —
@@ -462,39 +475,18 @@ BRUTE_OPS_BUDGET = 2_000_000_000
 import weakref
 
 _DENSITY_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-# packed brute-scan point store (ids + unit xyz + its broadcast),
-# memoized per input points DataFrame exactly like _DENSITY_CACHE: an
-# interactive caller issuing repeated knn() calls over the same corpus
-# re-collected and re-broadcast ~20 MB per call (r7: ~0.5 s/call at
-# 300k points).  Same staleness contract — the store is a pure
-# function of the DataFrame object; the broadcast is released when
-# the caller drops the corpus DataFrame.
-_BRUTE_STORE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-# constructed equirect multi-level cell expressions keyed by the
-# levels tuple (the s2 family's array is rebuilt per call — it is a
-# handful of bit-op Columns over materialized fst columns, too cheap
-# to cache):
-# each cell_id_col is ~40 py4j round-trips of Column construction, and
-# rebuilding the full ladder per knn() call measured ~1 s of pure
-# driver time.  Column objects are immutable unresolved expressions
-# over (p_lat, p_lon), so one instance serves every call.
-_CELLS_EXPR_CACHE: dict = {}
-
-
-def _cells_expr(levels: tuple):
-    expr = _CELLS_EXPR_CACHE.get(levels)
-    if expr is None:
-        # one finest-level floor/Morton chain + 2 bit ops per extra
-        # level (cells_array_col) — the per-level cell_id_col array
-        # was the measured bulk of the round-0 key-build scan (r7)
-        from ..functions.cellsql import cells_array_col
-        expr = cells_array_col(F.col("p_lat"), F.col("p_lon"),
-                               tuple(levels))
-        _CELLS_EXPR_CACHE[levels] = expr
-    return expr
-
-
+# packed brute-scan point store (ids + unit xyz + its broadcast) of the
+# LAST corpus scanned, as [(corpus DataFrame, id column, Broadcast)]:
+# an interactive caller issuing repeated knn()/knn_join() calls over
+# the same corpus re-collected and re-broadcast ~20 MB per call (r7:
+# ~0.5 s/call at 300k points).  The store is a pure function of the
+# DataFrame object and its id column.  ONE slot: a scan over another
+# corpus unpersists the previous broadcast and drops the last reference
+# to it, so a session never pins more than one store (the per-corpus
+# memo pinned one for every corpus the caller kept).  unpersist, not
+# destroy: a call still running in another thread re-fetches an
+# evicted store instead of failing.
+_BRUTE_STORE: list = []
 
 
 # above this point count, the brute scan partitions the POINTS (the
@@ -610,8 +602,8 @@ def _topk_merge(best_d, best_i, qla, qlo, qxyz, pla, plo, ids, pxyz, k):
 
 
 def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
-                     point_id: str, n_points: int | None = None,
-                     cache_key: DataFrame | None = None) -> DataFrame:
+                     point_id: str, n_points: int, corpus: tuple,
+                     exclude_self: bool = False) -> DataFrame:
     """Exact kNN for queries the cell index can't help (sparse regions).
 
     Two shapes by corpus size:
@@ -625,42 +617,44 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
       running top-k per query (only partitions x Q x k rows leave the
       stage — never the points x queries matrix) and one rank<=k
       window merges.  This is the 10^12-row shape; it only runs for
-      small Q there because the op-count budget gates the tail."""
+      small Q there because the op-count budget gates the tail.
+
+    `corpus` is (caller DataFrame, its id column), the key of the
+    one-slot _BRUTE_STORE memo.  exclude_self drops query_id ==
+    point_id pairs before ranking: the scan keeps k+1 per query, so
+    the k nearest OTHER points survive."""
     spark = pts.sparkSession
+    kk = k + 1 if exclude_self else k
     qla = remaining["lat"].to_numpy(np.float64)
     qlo = remaining["lon"].to_numpy(np.float64)
     qids = remaining["query_id"].to_numpy()
     nq = len(qids)
     qxyz = _unit_xyz(qla, qlo)
-    if n_points is None:
-        n_points = pts.count()
 
     # project the 3 needed columns explicitly: the s2 family's point
     # store carries fst scratch columns that must not ship here
     pts = pts.select(point_id, "p_lat", "p_lon")
     if n_points <= BRUTE_BCAST_MAX_POINTS:
-        store = None
-        if cache_key is not None:
-            hit = _BRUTE_STORE_CACHE.get(cache_key)
-            if hit is not None and hit[0] == point_id:
-                store = hit[1]
-        if store is None:
+        sc = spark.sparkContext
+        hit = _BRUTE_STORE[0] if _BRUTE_STORE else None
+        if hit and hit[0] is corpus[0] and hit[1] == corpus[1]:
+            store = hit[2]
+        else:
             pts_pdf = pts.toPandas()
             pla = pts_pdf["p_lat"].to_numpy(np.float64)
             plo = pts_pdf["p_lon"].to_numpy(np.float64)
             ids = pts_pdf[point_id].to_numpy()
             pxyz = _unit_xyz(pla, plo)
-            store = spark.sparkContext.broadcast((pla, plo, ids, pxyz))
-            if cache_key is not None:
-                try:
-                    _BRUTE_STORE_CACHE[cache_key] = (point_id, store)
-                except TypeError:
-                    pass  # object not weak-referenceable
-        par = spark.sparkContext.defaultParallelism
+            store = sc.broadcast((pla, plo, ids, pxyz))
+            # a stopped session already released its own broadcasts
+            if hit and hit[0].sparkSession.sparkContext is sc:
+                hit[2].unpersist()
+            _BRUTE_STORE[:] = [(*corpus, store)]
+        # the Arrow local relation already spreads the queries over
+        # defaultParallelism partitions, so no repartition shuffle
         qdf = spark.createDataFrame(
             remaining[["query_id", "lat", "lon"]],
-            schema="query_id string, lat double, lon double"
-        ).repartition(min(2 * par, max(nq, 1)))
+            schema="query_id string, lat double, lon double")
 
         def gen_q(batches):
             bpla, bplo, bids, bpxyz = store.value
@@ -671,8 +665,8 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
                 bla = pdf["lat"].to_numpy(np.float64)
                 blo = pdf["lon"].to_numpy(np.float64)
                 bxyz = _unit_xyz(bla, blo)
-                best_d = np.full((m, k), np.inf)
-                best_i = np.empty((m, k), dtype=object)
+                best_d = np.full((m, kk), np.inf)
+                best_i = np.empty((m, kk), dtype=object)
                 # feed the store in blocks so the running-kth
                 # threshold in _topk_merge can skip settled queries
                 # after the first block (one big merge starts every
@@ -681,22 +675,28 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
                     sl = slice(p0, p0 + 16384)
                     _topk_merge(best_d, best_i, bla, blo, bxyz,
                                 bpla[sl], bplo[sl], bids[sl],
-                                bpxyz[sl], k)
+                                bpxyz[sl], kk)
+                qid = pdf["query_id"].to_numpy()
                 mask = np.isfinite(best_d)
-                qi, ki = np.nonzero(mask)
+                if exclude_self:
+                    mask &= best_i.astype(str) != qid.astype(str)[:, None]
+                # kept slots stay in (dist, id) order, so the running
+                # count of kept slots is the rank
+                rank = np.cumsum(mask, axis=1)
+                qi, ki = np.nonzero(mask & (rank <= k))
                 yield pd.DataFrame({
-                    "query_id": pdf["query_id"].to_numpy()[qi],
+                    "query_id": qid[qi],
                     point_id: best_i[qi, ki],
                     "dist_m": best_d[qi, ki],
-                    "rank": (ki + 1).astype(np.int32)})
+                    "rank": rank[qi, ki].astype(np.int32)})
 
         return qdf.mapInPandas(
             gen_q, f"query_id string, {point_id} string, "
                    f"dist_m double, rank int")
 
     def gen(batches):
-        best_d = np.full((nq, k), np.inf)
-        best_i = np.empty((nq, k), dtype=object)
+        best_d = np.full((nq, kk), np.inf)
+        best_i = np.empty((nq, kk), dtype=object)
         for pdf in batches:
             pla = pdf["p_lat"].to_numpy(np.float64)
             plo = pdf["p_lon"].to_numpy(np.float64)
@@ -704,7 +704,7 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
             if len(pla) == 0:
                 continue
             _topk_merge(best_d, best_i, qla, qlo, qxyz,
-                        pla, plo, ids, _unit_xyz(pla, plo), k)
+                        pla, plo, ids, _unit_xyz(pla, plo), kk)
         mask = np.isfinite(best_d)
         qi, ki = np.nonzero(mask)
         yield pd.DataFrame({
@@ -714,6 +714,8 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
 
     partial = pts.mapInPandas(
         gen, f"query_id string, {point_id} string, dist_m double")
+    if exclude_self:
+        partial = partial.filter(F.col("query_id") != F.col(point_id))
     win = Window.partitionBy("query_id").orderBy("dist_m", point_id)
     return (partial.withColumn("rank", F.row_number().over(win))
             .filter(F.col("rank") <= k)
@@ -756,19 +758,17 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
     For s2 with keep_fst ingest columns, see the staleness caller
     contract below.
 
-    MEASURED CROSSOVER vs knn_join (r7, VERDICT r6 #6; 300k-point
-    zipfian corpus, k=8, local[32], fresh session): one-shot knn() is
-    ALREADY slower than knn_join at Q=2,000 (19.1 s vs 12.8 s) and 5x
-    slower at Q=20,000 (73.8 s vs 14.2 s) — knn()'s per-round cost is
-    corpus-linear (density aggregate, per-query driver disk tables,
-    key-table explode per call) while knn_join's W-table probe
-    amortizes over the whole left side; at Q=100,000 knn() also hit
-    GCLocker allocation walls on a default 8g driver.  knn() earns its
-    keep for REPEATED interactive calls over the same corpus
-    DataFrame, where the density and brute-store memos make warm calls
-    ~3x faster than cold (bench leg: 10.7 s cold / 3.6 s warm at
-    Q=2,000).  Rule of thumb: one-shot or growing query sides ->
-    knn_join; an interactive session probing the same corpus -> knn().
+    ROUTE — one priced rule (_brute_fits): when n_queries x n_points
+    fits BRUTE_OPS_BUDGET (2e9 pair-ops, the measured crossover — table
+    in the module docstring) the whole call is ONE vectorized brute
+    scan (_brute_force_knn) — no density job, no rounds, no per-round
+    stats collects.  Above the budget the cell ladder below runs, and
+    its survivors fold into the same scan once their op count fits.
+    There, a one-shot or growing query side belongs in knn_join:
+    knn()'s per-round cost is corpus-linear (r7, 300k points,
+    local[32]: 73.8 s vs knn_join's 14.2 s at Q=20,000); knn() earns
+    its keep for repeated calls over one corpus DataFrame, which its
+    density and brute-store memos serve warm.
 
     family='s2' runs the identical ladder on the quad-sphere index
     (points carry s2_l{density} for the density aggregate): disks are
@@ -820,7 +820,6 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
             trace[label] = round(trace.get(label, 0.0) + now - _t0, 3)
             _t0 = now
 
-    spark0 = points.sparkSession
     fst_cols = ["_s2f", "_s2s", "_s2t"]
     have_fst = family == "s2" and set(fst_cols) <= set(points.columns)
     if have_fst:
@@ -828,34 +827,13 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
         # point side is contractually (point_id, lat, lon)) — ADVICE r5
         from ..functions.cellsql import check_fst_source
         check_fst_source(points, "lat", "lon")
+    fam = _FAMILIES.get(family)
+    if fam is None:
+        raise ValueError(f"unknown cell family {family!r}")
     pts = points.select(
         F.col(point_id), F.col("lat").alias("p_lat"),
         F.col("lon").alias("p_lon"),
         *(fst_cols if have_fst else []))
-    if family == "s2" and not have_fst:
-        # materialize (face, s, t) INTO the point-store cache: the key
-        # arrays each round are then 3 bit-ops per level off cheap
-        # cached columns.  This is both the scale shape (fst is an
-        # ingest-time column set at 10^12 rows, ~32 B/row) and a hard
-        # janino constraint: fusing the trig projection chain AND the
-        # posexplode Generate into one columnar-scan stage OOMed the
-        # driver in janino's local-variable-map pass (see
-        # cellsql.with_s2_cells docstring).  Corpora that already
-        # carry the fst columns (cellsql.with_s2_cell(keep_fst=True),
-        # the ingest-time pattern) skip this derivation entirely —
-        # CALLER CONTRACT: like any precomputed index column, fst must
-        # have been derived from the CURRENT lat/lon values; knn
-        # cannot detect stale fst after a lat/lon rewrite and would
-        # key the index on the old coordinates.
-        from ..functions.cellsql import with_s2_fst
-        pts = with_s2_fst(pts, "p_lat", "p_lon")
-    # the projected point store is narrow; more partitions than task
-    # slots only buys scheduling floor on the per-round joins.
-    # coalesce is a no-op when the scan already has fewer partitions,
-    # so no .rdd conversion plan is ever forced just to count them
-    par = spark0.sparkContext.defaultParallelism
-    pts = pts.coalesce(2 * par).persist()
-
     # DESIGNED dimension-side assumption: the query set is collected to
     # the driver (the ladder builds per-query disk tables driver-side,
     # ~100 B/query/round).  Unlike the point side there is no plan that
@@ -878,6 +856,47 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
             f"design; ceiling {KNN_MAX_QUERIES}) — batch the query set, or "
             f"use knn_join (both sides distributed, no driver tables)")
     _mark("collect_queries")
+    # ROUTE before any ladder work (_brute_fits, see the docstring): a
+    # call whose pair-op count fits BRUTE_OPS_BUDGET is one brute scan.
+    # A warm density memo already knows the corpus size, so repeated
+    # ladder calls over one corpus skip the count job
+    cached = _DENSITY_CACHE.get(points)
+    n_points = (int(cached[1]["count"].sum()) if cached is not None
+                else points.count())
+    _mark("count_points")
+    if not remaining.empty and _brute_fits(len(remaining), n_points):
+        if trace is not None:
+            trace["n_brute_queries"] = int(len(remaining))
+        out = _brute_force_knn(pts, remaining, k, point_id, n_points,
+                               (points, point_id))
+        out = out.localCheckpoint(eager=True)
+        _mark("brute_scan")
+        return out
+
+    if family == "s2" and not have_fst:
+        # materialize (face, s, t) INTO the point-store cache: the key
+        # arrays each round are then 3 bit-ops per level off cheap
+        # cached columns.  This is both the scale shape (fst is an
+        # ingest-time column set at 10^12 rows, ~32 B/row) and a hard
+        # janino constraint: fusing the trig projection chain AND the
+        # posexplode Generate into one columnar-scan stage OOMed the
+        # driver in janino's local-variable-map pass (see
+        # cellsql.with_s2_cells docstring).  Corpora that already
+        # carry the fst columns (cellsql.with_s2_cell(keep_fst=True),
+        # the ingest-time pattern) skip this derivation entirely —
+        # CALLER CONTRACT: like any precomputed index column, fst must
+        # have been derived from the CURRENT lat/lon values; knn
+        # cannot detect stale fst after a lat/lon rewrite and would
+        # key the index on the old coordinates.
+        from ..functions.cellsql import with_s2_fst
+        pts = with_s2_fst(pts, "p_lat", "p_lon")
+    # the projected point store is narrow; more partitions than task
+    # slots only buys scheduling floor on the per-round joins.
+    # coalesce is a no-op when the scan already has fewer partitions,
+    # so no .rdd conversion plan is ever forced just to count them
+    par = points.sparkSession.sparkContext.defaultParallelism
+    pts = pts.coalesce(2 * par).persist()
+
     n_queries0 = max(len(remaining), 1)
     spark = points.sparkSession
     results = []          # DataFrames of (query_id, point_id, dist_m, rank)
@@ -890,15 +909,11 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
     # is expected to hold ~margin*k points, so round 1 usually
     # terminates with a near-minimal candidate set at both density
     # extremes (zipfian hotspots AND empty ocean).
-    fam = _FAMILIES.get(family)
-    if fam is None:
-        raise ValueError(f"unknown cell family {family!r}")
     LADDER_RES = (9, 7, 5, 3)
     density_res = 9
     density_col = fam.col_pat.format(density_res)
     margin = 4.0
     if density_col in points.columns and not remaining.empty:
-        cached = _DENSITY_CACHE.get(points)
         if cached is not None and cached[0] == density_res:
             counts = cached[1]
         else:
@@ -909,7 +924,6 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
             except TypeError:
                 pass  # object not weak-referenceable
         _mark("density_job")
-        n_points = int(counts["count"].sum())
         qla = remaining["lat"].to_numpy(np.float64)
         qlo = remaining["lon"].to_numpy(np.float64)
         cells9 = counts["c"].to_numpy(np.int64)
@@ -969,8 +983,6 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
         qlvl = np.full(len(remaining), res, dtype=np.int64)
         rung_counts = np.zeros((len(remaining), len(LADDER_RES)),
                                dtype=np.int64)
-        n_points = pts.count()
-        _mark("density_job")
     lmin, lmax = 2, min(res + 6, fam.max_res)
     rings = np.full(len(remaining), initial_ring, dtype=np.int64)
 
@@ -1128,14 +1140,14 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
                .select("query_id", point_id, "dist_m", "rank", "exit_m")
                .persist())
         round_caches.append(top)
-        _mark(f"r{_round}_prep")
+        _mark(f"round{_round}_prep")
         # driver sees only the Q-row stats aggregate (ring escalation
         # bookkeeping), never the result rows
         stat = (top.groupBy("query_id")
                 .agg(F.count("*").alias("n"),
                      F.max("dist_m").alias("worst"),
                      F.first("exit_m").alias("exit_m"))).toPandas()
-        _mark(f"r{_round}_job")
+        _mark(f"round{_round}_job")
         stat["done"] = (stat["n"] >= k) & (stat["worst"] <= stat["exit_m"])
         done_ids = set(stat[stat["done"]]["query_id"])
         found_map = dict(zip(stat["query_id"], stat["n"]))
@@ -1184,7 +1196,7 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
         # scan.  At 10^12 points the budget never fits, so escalation
         # rounds carry the load at scale.
         small_tail = (len(remaining) < tail_to_brute_frac * n_queries0
-                      or n_points * len(remaining) <= BRUTE_OPS_BUDGET)
+                      or _brute_fits(len(remaining), n_points))
         if small_tail:
             to_brute[:] = True
         brute.append(remaining[to_brute])
@@ -1199,7 +1211,7 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
         trace["n_brute_queries"] = int(len(remaining))
     if not remaining.empty:
         brute_df = _brute_force_knn(pts, remaining, k, point_id,
-                                    n_points=n_points, cache_key=points)
+                                    n_points, (points, point_id))
         _mark("brute_prep")  # eager part: pts.toPandas + sc.broadcast
         if trace is not None:
             # trace-only barrier: split the brute scan out of the final
@@ -1290,22 +1302,22 @@ def _disk_exit_bound_col(lat: Column, lon: Column,
 def knn_join(left: DataFrame, right: DataFrame, k: int,
              left_id: str = "left_id", right_id: str = "right_id",
              levels=(24, 22, 20, 18, 16, 14, 12, 10, 8, 6, 4),
-             probe_level: int = 9,  # unused since r6 (kept for API
-             # compat: the W table measures every ladder level exactly)
              margin: float = 4.0, ring: int = 1,
              tail_fold_frac: float = 0.01,
-             early_fold_min: int = 1024,
              brute_fold_ops: float = 1e12,
              exclude_self: bool = False,
              trace: dict | None = None) -> DataFrame:
     """EXACT k nearest `right` rows for EVERY `left` row — the
     corpus-x-corpus shape knn() cannot take (its query side is a
     driver-collected dim table; this operator's BOTH sides are
-    unbounded DataFrames and nothing row-scale touches the driver).
-    The measured crossover favours this operator for ANY one-shot
-    query side from Q~2,000 up (see the knn() docstring, r7): a small
-    left side skips the ladder entirely (early-fold), so there is no
-    scale below which knn_join pays the round machinery.
+    unbounded DataFrames, and only a left side or fold within
+    KNN_MAX_QUERIES rows is ever collected to the driver).
+    ROUTE — the same priced rule as knn() (_brute_fits): when
+    n_left x n_right fits BRUTE_OPS_BUDGET (2e9 pair-ops, the measured
+    crossover — table in the module docstring) and n_left <=
+    KNN_MAX_QUERIES, the whole call is the exact tail fold below (one
+    vectorized brute scan): no W-table probe, no rounds, no histogram
+    collects.  Above it the distributed ladder runs.
 
     left: (left_id, lat, lon); right: (right_id, lat, lon).  Returns
     (left_id, right_id, dist_m, rank) with the (dist, id) tiebreak —
@@ -1381,10 +1393,10 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     minute of cluster work (5.8e11 ops at 32 cores).  Below ~1e12
     ops the brute side wins at any realistic core count for a corpus
     this size; above it, chunked knn() amortizes its corpus-linear
-    rounds over >= 10^5 queries per chunk.  A left side already at-or-under the
-    early-fold threshold (max(early_fold_min, tail_fold_frac *
-    n_left)) skips the ladder entirely — round 0 could never be
-    followed by round 1 there, so the fold IS the plan.
+    rounds over >= 10^5 queries per chunk.  The ladder also stops
+    early and folds once the unsatisfied rows are at most
+    tail_fold_frac of the left side or their op count fits the route
+    rule — another round costs fixed job floors the scan does not.
 
     Exactness across levels: recomputing at a coarser level never
     loses candidates — a point's ring-1 window at level L is
@@ -1434,27 +1446,20 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             F.col(left_id), F.col("lat").alias("l_lat"),
             F.col("lon").alias("l_lon"))
         n_left = left_raw.count()
-        thr_fold = max(early_fold_min, int(tail_fold_frac * n_left))
+        n_right = right_base.count() if n_left else 0
 
         results = []
         fold_rows = None
         n_rem = 0
-        n_right = None  # counted by the ladder's W build; else by the fold
         import time as _time
         _tp0 = _time.perf_counter()
-        run_ladder = n_left > thr_fold
+        run_ladder = not _brute_fits(n_left, n_right)
         if not run_ladder and n_left > 0:
-            # LADDER SKIP (r6): with the whole left side already under the
-            # early-fold threshold, round 0 could never be followed by a
-            # round 1 — every unsatisfied row folds into knn() regardless —
-            # so the round machinery (density probe, key-table build, join,
-            # window, checkpoint: ~10 fixed job floors) would be pure tax.
-            # Measured at the sf0.1 gate (750 x 15k, k=8): round 0
-            # certified ZERO rows (a sparse corpus's self-count inflates
-            # the density estimate) and cost ~12 s of floors before the
-            # fold did all the work anyway.  Fold is the exact ladder-kNN
-            # path, so results are identical.  early_fold_min=0 forces the
-            # ladder (benches/tests of the distributed rounds).
+            # LADDER SKIP: below the priced crossover the round machinery
+            # (W probe, key-table build, join, window, histogram collects:
+            # ~30 fixed job floors at 2,000 x 10,000) costs more than the
+            # whole brute scan.  The fold is exact, so results are
+            # identical to the ladder's.
             if trace is not None:
                 trace["ladder_skipped"] = n_left
             fold_rows = left_raw
@@ -1526,7 +1531,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # Results are invariant — the exit-bound certificate decides
             # row completion and the fold is exact — only the routing
             # changes (pinned by the fold-equivalence tests + oracle).
-            n_right = right_base.count()
             wcap = float(max(64 * mk, n_right // 20))
             adj = F.lit(1 if exclude_self else 0)
             iF, jF = cell_ij_cols(F.col("r_lat"), F.col("r_lon"), finest)
@@ -1811,10 +1815,11 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             if n_rem == 0:
                 break
             # small-tail early fold: another distributed round costs fixed
-            # job floors regardless of size; below this fraction the ladder
-            # kNN finishes the stragglers faster than the round machinery
-            # restarts
-            if n_rem <= thr_fold:
+            # job floors regardless of size; below this fraction, or once
+            # the stragglers' op count fits the route rule, the fold
+            # finishes them faster than the round machinery restarts
+            if (n_rem <= tail_fold_frac * n_left
+                    or _brute_fits(n_rem, n_right)):
                 fold_rows = remaining if fold_rows is None else \
                     fold_rows.unionByName(remaining)
                 n_rem = 0
@@ -1834,9 +1839,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             n_fold = n_left if fold_rows is not None else 0
         _tf0 = _time.perf_counter()
         if n_fold:
-            adj1 = 1 if exclude_self else 0
-            if n_right is None:
-                n_right = right_base.count()
             if (n_fold <= KNN_MAX_QUERIES
                     and float(n_fold) * float(n_right) <= brute_fold_ops):
                 # SMALL-TAIL BRUTE (r6): the common fold is a few thousand
@@ -1851,7 +1853,8 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                 # (broadcast store) or by points (running top-k merge),
                 # nothing driver-side but the fold rows themselves.  Exact
                 # by construction, same distance kernel knn bottoms out
-                # in, so results are bit-identical to the knn fold.
+                # in, so results are bit-identical to the knn fold.  The
+                # scan itself drops self pairs (no re-rank window).
                 fold_pdf = fold_rows.select(
                     F.col(left_id).alias("query_id"),
                     F.col("l_lat").alias("lat"),
@@ -1860,16 +1863,8 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                     F.col(right_id).alias("_pid"),
                     F.col("r_lat").alias("p_lat"),
                     F.col("r_lon").alias("p_lon"))
-                folded = _brute_force_knn(bpts, fold_pdf, k + adj1,
-                                          "_pid", n_points=n_right)
-                if exclude_self:
-                    folded = folded.filter(
-                        F.col("query_id") != F.col("_pid"))
-                    wf = Window.partitionBy("query_id").orderBy(
-                        F.asc("dist_m"), F.asc("_pid"))
-                    folded = folded.withColumn(
-                        "rank", F.row_number().over(wf)) \
-                        .filter(F.col("rank") <= k)
+                folded = _brute_force_knn(bpts, fold_pdf, k, "_pid", n_right,
+                                          (right, right_id), exclude_self)
                 results.append(folded.select(
                     F.col("query_id").alias(left_id),
                     F.col("_pid").alias(right_id), "dist_m", "rank"))

@@ -89,17 +89,22 @@ def test_knn_exact(spark, points, points_pdf):
     assert len(got) == 30 * K
 
 
-def test_knn_exact_dense_corpus_all_paths(spark):
+def test_knn_exact_dense_corpus_all_paths(spark, monkeypatch):
     """Exactness at a density contrast that exercises EVERY kNN path:
     fine levels for hotspot queries, coarse levels + coarsen-retry for
     sparse ones, ring escalation, tail folding, and the brute scan —
-    against the brute numpy oracle, for every query."""
+    against the brute numpy oracle, for every query.  A zero brute
+    budget forces the ladder (this size is below the route crossover)."""
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
     N, Q, K = 6000, 300, 7
     imgs = synth.images_df(spark, N, partitions=16)
     pts = sp.attach_geo(imgs, res_list=(9, 12)).persist()
     pts.count()
     queries = synth.knn_queries_df(spark, Q, k=K, seed=77)
-    got = sp.knn(pts, queries, k=K, res=12, initial_ring=2).toPandas()
+    tr = {}
+    got = sp.knn(pts, queries, k=K, res=12, initial_ring=2,
+                 trace=tr).toPandas()
+    assert "round0_job" in tr, tr
 
     pdf = synth.gen_images_pdf(N)
     pla, plo = ic.geotag_from_phash(pdf["phash"].to_numpy())
@@ -271,21 +276,25 @@ def test_point_in_polygon_s2_family_matches(spark):
     assert len(s2_pairs) > 50
 
 
-def test_knn_s2_family_matches_equirect(spark):
+def test_knn_s2_family_matches_equirect(spark, monkeypatch):
     """knn on the quad-sphere ladder returns the IDENTICAL rows as the
     equirect ladder (both are exact with the same (dist, id) tiebreak;
-    only candidate generation differs)."""
+    only candidate generation differs).  A zero brute budget forces
+    both ladders."""
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
     K = 5
     imgs = synth.images_df(spark, N_IMAGES, partitions=8)
     geo = sp.attach_geo(imgs, res_list=(9, sp.KNN_RES),
                         s2_levels=(9,)).persist()
     geo.count()
     queries = synth.knn_queries_df(spark, 30, k=K)
+    tr_eq, tr_s2 = {}, {}
     try:
-        eq = sp.knn(geo, queries, k=K).toPandas()
-        s2 = sp.knn(geo, queries, k=K, family="s2").toPandas()
+        eq = sp.knn(geo, queries, k=K, trace=tr_eq).toPandas()
+        s2 = sp.knn(geo, queries, k=K, family="s2", trace=tr_s2).toPandas()
     finally:
         geo.unpersist()
+    assert "round0_job" in tr_eq and "round0_job" in tr_s2
     cols = ["query_id", "rank"]
     eq = eq.sort_values(cols).reset_index(drop=True)
     s2 = s2.sort_values(cols).reset_index(drop=True)
@@ -294,12 +303,14 @@ def test_knn_s2_family_matches_equirect(spark):
     assert np.allclose(eq["dist_m"].to_numpy(), s2["dist_m"].to_numpy())
 
 
-def test_knn_s2_polar_exact(spark):
+def test_knn_s2_polar_exact(spark, monkeypatch):
     """s2-family kNN at polar latitudes vs the brute numpy oracle —
     the regime the quad-sphere ladder exists for (equirect cells
     degenerate toward the poles; s2 cell area stays ~uniform).  Points
-    include both pole caps, face seams, and a sparse band."""
+    include both pole caps, face seams, and a sparse band.  A zero
+    brute budget forces the ladder."""
     import pandas as pd
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
     K = 4
     rng = np.random.Generator(np.random.Philox(key=np.uint64(91)))
     n = 1200
@@ -329,11 +340,13 @@ def test_knn_s2_polar_exact(spark):
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [f"q{i}" for i in range(qn)],
                       "lat": qlat, "lon": qlon}))
+    tr = {}
     try:
         got = sp.knn(pts, queries, k=K, res=12, initial_ring=2,
-                     point_id="point_id", family="s2").toPandas()
+                     point_id="point_id", family="s2", trace=tr).toPandas()
     finally:
         pts.unpersist()
+    assert "round0_job" in tr, tr
     ids = pdf["point_id"].to_numpy()
     for qi in range(qn):
         d = gk.haversine_m(qlat[qi], qlon[qi], lat, lon)
@@ -522,7 +535,7 @@ def test_point_in_polygon_bucketed_equals_dim_path(spark, points, points_pdf):
     assert key(big_s2) == key(dim)
 
 
-def test_knn_join_exact_vs_brute(spark):
+def test_knn_join_exact_vs_brute(spark, monkeypatch):
     """Distributed corpus-x-corpus kNN join: exact (dist, id) top-k for
     every left row vs the numpy brute oracle, on a mixed hotspot +
     sparse layout that forces ladder escalation AND the knn() tail
@@ -545,9 +558,13 @@ def test_knn_join_exact_vs_brute(spark):
     left = spark.createDataFrame(_pd.DataFrame(
         {"left_id": lids, "lat": llat, "lon": llon}))
 
-    # early_fold_min=0 forces the distributed ladder rounds (the
-    # default would skip the ladder at this sub-threshold size)
-    got = sp.knn_join(left, right, k=K, early_fold_min=0).toPandas()
+    # a zero brute budget forces the distributed ladder rounds (the
+    # route rule sends this size to the brute scan)
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
+    tr = {}
+    got = sp.knn_join(left, right, k=K, trace=tr).toPandas()
+    monkeypatch.undo()
+    assert "round0" in tr, tr
     assert len(got) == NL * K
     for li in range(NL):
         d = gk.haversine_m(llat[li], llon[li], rlat, rlon)
@@ -555,8 +572,8 @@ def test_knn_join_exact_vs_brute(spark):
         sub = got[got["left_id"] == lids[li]].sort_values("rank")
         assert sub["right_id"].tolist() == rids[order].tolist(), lids[li]
 
-    # self-join with exclude_self on the DEFAULT path (ladder skip ->
-    # chunkable knn fold): nearest OTHER row, never itself
+    # self-join with exclude_self on the DEFAULT path (brute route):
+    # nearest OTHER row, never itself
     sr = spark.createDataFrame(_pd.DataFrame(
         {"right_id": rids[:300], "lat": rlat[:300], "lon": rlon[:300]}))
     sl = sr.selectExpr("right_id as left_id", "lat", "lon")
@@ -652,7 +669,7 @@ def test_split_antimeridian_property_random_wrapped_rings():
     run()
 
 
-def test_knn_join_exact_polar(spark):
+def test_knn_join_exact_polar(spark, monkeypatch):
     """knn_join exactness at polar latitudes, where equirect cells
     shrink and disks over-expand — the certificate must still hold."""
     import pandas as _pd
@@ -668,7 +685,10 @@ def test_knn_join_exact_polar(spark):
         {"right_id": rids, "lat": rlat, "lon": rlon}))
     left = spark.createDataFrame(_pd.DataFrame(
         {"left_id": lids, "lat": llat, "lon": llon}))
-    got = sp.knn_join(left, right, k=K, early_fold_min=0).toPandas()
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
+    tr = {}
+    got = sp.knn_join(left, right, k=K, trace=tr).toPandas()
+    assert "round0" in tr, tr
     assert len(got) == NL * K
     for li in range(NL):
         d = gk.haversine_m(llat[li], llon[li], rlat, rlon)
@@ -677,7 +697,7 @@ def test_knn_join_exact_polar(spark):
         assert sub["right_id"].tolist() == rids[order].tolist(), lids[li]
 
 
-def test_knn_join_fold_tail_chunks_past_knn_guard(spark):
+def test_knn_join_fold_tail_chunks_past_knn_guard(spark, monkeypatch):
     """A ladder-exhausted fold LARGER than knn's query-side ceiling must
     complete (in hash-chunked knn batches), not inherit the guard's
     ValueError after every distributed round already ran (VERDICT r5
@@ -699,13 +719,18 @@ def test_knn_join_fold_tail_chunks_past_knn_guard(spark):
         {"right_id": rids, "lat": rlat, "lon": rlon}))
     left = spark.createDataFrame(_pd.DataFrame(
         {"left_id": lids, "lat": llat, "lon": llon}))
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
     orig = sp.KNN_MAX_QUERIES
     sp.KNN_MAX_QUERIES = 16          # fold of 60 -> 5 chunks
+    tr = {}
     try:
         got = sp.knn_join(left, right, k=K, levels=(16,),
-                          early_fold_min=0).toPandas()
+                          trace=tr).toPandas()
     finally:
         sp.KNN_MAX_QUERIES = orig
+    # the probe sends every row straight to the fold: the ladder ran,
+    # but no round has a row to join
+    assert "probe" in tr and "ladder_skipped" not in tr, tr
     assert len(got) == NL * K
     for li in range(NL):
         d = gk.haversine_m(llat[li], llon[li], rlat, rlon)
@@ -755,11 +780,12 @@ def test_disk_exit_bound_col_matches_numpy(spark):
         assert (np.isinf(g) == np.isinf(want)).all(), (level, ring)
 
 
-def test_knn_join_brute_fold_equals_knn_fold(spark):
+def test_knn_join_brute_fold_equals_knn_fold(spark, monkeypatch):
     """The r6 brute sparse-tail short-circuit (_brute_force_knn when
     fold x right ops fit brute_fold_ops) must be result-identical to
     the chunked knn() fold it replaces — same distance kernel, same
-    (dist, id) tiebreak — including the exclude_self re-rank."""
+    (dist, id) tiebreak — including exclude_self, which the brute scan
+    applies in-scan and the knn() fold by a re-rank window."""
     import pandas as _pd
     rng = np.random.default_rng(57)
     NR, NL, K = 150, 70, 3
@@ -775,12 +801,17 @@ def test_knn_join_brute_fold_equals_knn_fold(spark):
          "lat": rng.uniform(-60, 60, NL),
          "lon": rng.uniform(-170, 170, NL)}))
 
-    def run(**kw):
-        out = sp.knn_join(left, right, k=K, levels=(16,),
-                          early_fold_min=0, **kw).toPandas()
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
+
+    def run(lhs=left, **kw):
+        tr = {}
+        out = sp.knn_join(lhs, right, k=K, levels=(16,), trace=tr,
+                          **kw).toPandas()
+        # the ladder ran; its probe folds every row (see above)
+        assert "probe" in tr and "ladder_skipped" not in tr, tr
         return out.sort_values(["left_id", "rank"]).reset_index(drop=True)
 
-    brute = run()                      # default budget -> brute path
+    brute = run()                      # default brute_fold_ops -> brute
     chunk = run(brute_fold_ops=0.0)    # force the knn() chunked fold
     assert brute[["left_id", "right_id", "rank"]].equals(
         chunk[["left_id", "right_id", "rank"]])
@@ -788,18 +819,14 @@ def test_knn_join_brute_fold_equals_knn_fold(spark):
 
     # exclude_self: the self-join shape through both fold paths
     sl = right.selectExpr("right_id as left_id", "lat", "lon")
-    b2 = sp.knn_join(sl, right, k=K, levels=(16,), early_fold_min=0,
-                     exclude_self=True).toPandas() \
-        .sort_values(["left_id", "rank"]).reset_index(drop=True)
-    c2 = sp.knn_join(sl, right, k=K, levels=(16,), early_fold_min=0,
-                     exclude_self=True, brute_fold_ops=0.0).toPandas() \
-        .sort_values(["left_id", "rank"]).reset_index(drop=True)
+    b2 = run(sl, exclude_self=True)
+    c2 = run(sl, exclude_self=True, brute_fold_ops=0.0)
     assert (b2["left_id"] != b2["right_id"]).all()
     assert b2[["left_id", "right_id", "rank"]].equals(
         c2[["left_id", "right_id", "rank"]])
 
 
-def test_knn_join_releases_internal_blocks(spark):
+def test_knn_join_releases_internal_blocks(spark, monkeypatch):
     """knn_join must release every call-internal persisted RDD (round
     tops/remainings, right key table, fold outputs) once its result is
     materialized — only the result's own blocks survive (ADVICE r5:
@@ -813,13 +840,145 @@ def test_knn_join_releases_internal_blocks(spark):
                          "lon": rng.normal(-3, 4, N)})
     right = spark.createDataFrame(pdf)
     left = right.selectExpr("right_id as left_id", "lat", "lon")
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
     before = _persistent_rdd_ids(spark)
-    out = sp.knn_join(left, right, k=3, exclude_self=True,
-                      early_fold_min=0)
+    tr = {}
+    out = sp.knn_join(left, right, k=3, exclude_self=True, trace=tr)
+    assert "round0" in tr, tr
     assert out.count() == N * 3
     delta = _persistent_rdd_ids(spark) - before
     # the result's own checkpoint is the only surviving registration
     assert len(delta) <= 1, delta
+
+
+def _run_counting_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted under a job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_knn_routes_brute_below_budget(spark, monkeypatch):
+    """At the geo_batch shape (2,000 x 10,000 pair-ops = 2e7, far below
+    BRUTE_OPS_BUDGET) knn_join and knn answer with one brute scan: no
+    ladder round runs, each stays within its Spark job budget, and the
+    rows equal the forced-ladder run's."""
+    from pyspark.sql import functions as F
+    imgs = synth.images_df(spark, 10_000, partitions=8)
+    geo = sp.attach_geo(imgs, res_list=(9, 12)).persist()
+    geo.count()
+    left = geo.filter(F.substring("image_id", -1, 1).isin("0", "5")) \
+        .selectExpr("image_id as left_id", "lat", "lon")
+    right = geo.selectExpr("image_id as right_id", "lat", "lon")
+    queries = left.selectExpr("left_id as query_id", "lat", "lon")
+    K = 8
+
+    def both(tr_join, tr_knn):
+        j, n_join = _run_counting_jobs(spark, lambda: sp.knn_join(
+            left, right, k=K, exclude_self=True, trace=tr_join).toPandas())
+        q, n_knn = _run_counting_jobs(spark, lambda: sp.knn(
+            geo, queries, k=K, res=12, trace=tr_knn).toPandas())
+        return j, n_join, q, n_knn
+
+    try:
+        tj, tq = {}, {}
+        j, n_join, q, n_knn = both(tj, tq)
+        assert not any(key.startswith("round") for key in tj), tj
+        assert not any(key.startswith("round") for key in tq), tq
+        assert tj["fold"]["rows"] == 2000
+        assert n_join <= 12, n_join
+        assert n_knn <= 6, n_knn
+
+        monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
+        lj, lq = {}, {}
+        j_lad, _, q_lad, _ = both(lj, lq)
+        assert "round0" in lj and "round0_job" in lq
+    finally:
+        geo.unpersist()
+    for got, want, key in ((j, j_lad, ["left_id", "rank"]),
+                           (q, q_lad, ["query_id", "rank"])):
+        got = got.sort_values(key).reset_index(drop=True)
+        want = want.sort_values(key).reset_index(drop=True)
+        assert len(got) == 2000 * K
+        cols = [c for c in got.columns if c != "dist_m"]
+        assert got[cols].equals(want[cols])
+        assert np.abs(got["dist_m"] - want["dist_m"]).max() <= 1e-6
+
+
+def test_knn_join_ladder_when_left_exceeds_knn_max_queries(spark,
+                                                            monkeypatch):
+    """The brute route collects the left side to the driver, so a left
+    side above KNN_MAX_QUERIES takes the distributed ladder even when
+    its pair-op count is tiny — and stays exact."""
+    import pandas as _pd
+    rng = np.random.default_rng(5)
+    NR, NL, K = 40, 200, 3
+    rlat, rlon = rng.normal(48, 0.5, NR), rng.normal(11, 0.5, NR)
+    llat, llon = rng.normal(48, 0.5, NL), rng.normal(11, 0.5, NL)
+    rids = np.array([f"r{i:05d}" for i in range(NR)])
+    lids = np.array([f"l{i:05d}" for i in range(NL)])
+    right = spark.createDataFrame(_pd.DataFrame(
+        {"right_id": rids, "lat": rlat, "lon": rlon}))
+    left = spark.createDataFrame(_pd.DataFrame(
+        {"left_id": lids, "lat": llat, "lon": llon}))
+    monkeypatch.setattr(sp, "KNN_MAX_QUERIES", 100)
+    tr = {}
+    got = sp.knn_join(left, right, k=K, trace=tr).toPandas()
+    assert "ladder_skipped" not in tr and "round0" in tr, tr
+    assert len(got) == NL * K
+    for li in range(NL):
+        d = gk.haversine_m(llat[li], llon[li], rlat, rlon)
+        order = np.lexsort((rids, d))[:K]
+        sub = got[got["left_id"] == lids[li]].sort_values("rank")
+        assert sub["right_id"].tolist() == rids[order].tolist(), lids[li]
+        assert np.allclose(sub["dist_m"].to_numpy(), d[order], rtol=1e-9)
+
+
+def test_brute_store_keeps_one_broadcast(spark, monkeypatch):
+    """knn's packed brute-scan store is memoized for ONE corpus: a repeat
+    call over the same corpus reuses its broadcast, and each new corpus
+    unpersists the previous one, so N corpora leave at most one live
+    store broadcast."""
+    import pandas as _pd
+    from pyspark import Broadcast, SparkContext
+
+    made, freed = [], []
+    orig_broadcast = SparkContext.broadcast
+    orig_unpersist = Broadcast.unpersist
+
+    def broadcast(self, value):
+        made.append(orig_broadcast(self, value))
+        return made[-1]
+
+    def unpersist(self, blocking=False):
+        freed.append(self)
+        orig_unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    rng = np.random.default_rng(3)
+    queries = spark.createDataFrame(
+        [("q0", 10.0, 20.0), ("q1", -30.0, 140.0)],
+        schema="query_id string, lat double, lon double")
+    N = 4
+    for i in range(N):
+        pts = spark.createDataFrame(_pd.DataFrame(
+            {"image_id": [f"c{i}p{j}" for j in range(50)],
+             "lat": rng.uniform(-60, 60, 50),
+             "lon": rng.uniform(-170, 170, 50)}))
+        for _ in range(2):       # the repeat call hits the memo
+            out = sp.knn(pts, queries, k=3).toPandas()
+            assert len(out) == 2 * 3
+    assert len(made) == N
+    live = [b for b in made if not any(b is f for f in freed)]
+    assert len(live) <= 1, len(live)
 
 
 def test_topk_merge_threshold_skip_bit_identical():
