@@ -49,7 +49,7 @@ def profile_tile(spark):
     from pbf2json_spark.functions import imagecodec as ic
     from pbf2json_spark.functions import cellindex as cx
 
-    files = _list_parquet_files(IMG_PATH)
+    files = [path for path, _ in _list_parquet_files(IMG_PATH)]
     n_parts = min(len(files), 2 * spark.sparkContext.defaultParallelism)
     files_df = spark.createDataFrame([(f,) for f in files], "path string") \
                     .repartition(n_parts)

@@ -288,6 +288,11 @@ def block_means_batch(data: np.ndarray, offsets: np.ndarray,
         return vals, blas, blos
     starts = offsets[:-1].astype(np.int64)
     ends = offsets[1:].astype(np.int64)
+    lens = ends - starts
+    if (lens < 8).any():
+        bad = int(np.nonzero(lens < 8)[0][0])
+        raise ValueError(f"image {bad}: blob is {int(lens[bad])} bytes, "
+                         f"shorter than the 8-byte header")
     hdr = data[starts[:, None] + np.arange(8)]
     magic_u32 = np.ascontiguousarray(hdr[:, :4]).view(np.uint32).reshape(-1)
     w_all = (hdr[:, 4].astype(np.int64) << 8) | hdr[:, 5]
@@ -298,7 +303,20 @@ def block_means_batch(data: np.ndarray, offsets: np.ndarray,
     if (mid < 0).any():
         bad = int(np.nonzero(mid < 0)[0][0])
         raise ValueError(
-            f"unknown image magic {bytes(hdr[bad, :4])!r}")
+            f"image {bad}: unknown image magic {bytes(hdr[bad, :4])!r}")
+    # raw and qdct bodies have a fixed size given (w, h); the stacked
+    # gathers read exactly that many bytes, so a truncated blob would
+    # read into the next image (rle slices stop at the blob's end)
+    hh = (h_all + _BLOCK - 1) // _BLOCK * _BLOCK
+    ww = (w_all + _BLOCK - 1) // _BLOCK * _BLOCK
+    body = np.where(mid == 0, 3 * w_all * h_all, 6 * hh * ww)
+    short = (mid != 1) & (lens - 8 < body)
+    if short.any():
+        bad = int(np.nonzero(short)[0][0])
+        raise ValueError(
+            f"image {bad}: {int(lens[bad]) - 8}-byte body is shorter than "
+            f"the {int(body[bad])} bytes its {int(w_all[bad])}x"
+            f"{int(h_all[bad])} header needs")
     key = (mid << 36) | (w_all << 18) | h_all
     offs = np.arange(grid) - (grid - 1) / 2.0
     for kv in np.unique(key):

@@ -76,24 +76,25 @@ KNN_MAX_QUERIES = 1_000_000
 # geo attachment
 # ---------------------------------------------------------------------------
 
-def _python_stage_parts(df: DataFrame, target_bytes: int = 8 << 20):
-    """Partition count that right-sizes a Python (Arrow) stage over
-    `df`-derived rows: ceil(estimated bytes / target), floored at one
-    task per core (guide §2 — derive partitioning from input size).
-    A slim projection of a byte-heavy table inherits the parent's
-    partitioning (70 KB partitions at the bench's 300k-point geo view),
-    and every Arrow task pays a fixed dispatch cost, so tiny
-    partitions are pure overhead on any cluster.  Returns None when
-    the estimate is unavailable; callers then leave the partitioning
-    alone.  Used with coalesce(), which only ever REDUCES — a
-    corpus-sized input keeps its scan partitioning."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:
-        return None
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return int(max(par, -(-est // target_bytes)))
+def _python_stage_parts(spark, nbytes: int,
+                        target_bytes: int = 8 << 20) -> int:
+    """Task count for a Python (Arrow) stage over `nbytes` of input:
+    ceil(nbytes / target), floored at one task per core (guide §2 —
+    derive partitioning from input size).
+
+    Every Python task pays a fixed dispatch cost before the first line
+    of the UDF runs: 150-360 ms per task on a 4-core host.  cProfile of
+    pyspark.worker.main puts it in the worker's per-task
+    importlib.invalidate_caches() (worker_util.setup_spark_files), which
+    re-reads the zip directories on sys.path — pyspark.zip 12 times
+    (~13 ms each) and the spark-core jar twice (~55 ms each).  So tiny
+    partitions are pure overhead on any cluster.  A Python-list
+    createDataFrame is a Python RDD whose scan pays the same cost, and
+    warm_python_workers does not pre-warm that path (its first task per
+    worker measured ~1.6 s); driver-side tables are built from pandas
+    through Arrow instead, which analyzes to a JVM LocalRelation."""
+    par = spark.sparkContext.defaultParallelism
+    return int(max(par, -(-nbytes // target_bytes)))
 
 
 def make_geo_udf(res_list=(DEFAULT_RES,), s2_levels=()):
@@ -235,11 +236,17 @@ def point_in_polygon(points: DataFrame, polygons: DataFrame,
         F.col(point_id), "lat", "lon",
         F.col(cell_col).alias("cell"))
     # right-size the refine's Arrow stage from the slim point view's
-    # estimated bytes (not the byte-heavy parent's partitioning) —
-    # coalesce only reduces, so a corpus-scale input is untouched
-    n_refine = _python_stage_parts(pts_slim)
-    if n_refine is not None:
-        pts_slim = pts_slim.coalesce(n_refine)
+    # estimated bytes (not the byte-heavy parent's partitioning — a slim
+    # projection inherits it: 70 KB partitions at a 300k-point geo view);
+    # coalesce only reduces, so a corpus-scale input is untouched, and
+    # an unavailable estimate leaves the partitioning alone
+    try:
+        est = int(pts_slim._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+    except Exception:
+        est = None
+    if est is not None:
+        pts_slim = pts_slim.coalesce(_python_stage_parts(spark, est))
     cand = pts_slim.join(F.broadcast(cover), "cell").drop("cell")
 
     out_schema = T.StructType([
@@ -1231,7 +1238,13 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
         # driver never holds result rows), then release round caches
         out = out.localCheckpoint(eager=True)
     else:
-        out = spark.createDataFrame([], schema=schema)
+        # an empty Arrow table analyzes to a JVM LocalRelation; an empty
+        # pandas frame or list would take the Python-RDD path
+        import pyarrow as pa
+        out = spark.createDataFrame(pa.schema([
+            ("query_id", pa.string()), (point_id, pa.string()),
+            ("dist_m", pa.float64()), ("rank", pa.int32())]).empty_table(),
+            schema=schema)
     _mark("final_materialize")
     for c in round_caches:
         c.unpersist()
@@ -2026,14 +2039,15 @@ def _fs_and_path(path: str):
 
 
 def _list_parquet_files(parquet_path: str) -> list:
-    """Recursive parquet listing via pyarrow's filesystem layer — works
-    on object storage and partitioned directory trees, not just a flat
-    local glob."""
+    """Sorted (path, size in bytes) of every parquet file under
+    `parquet_path`, listed recursively via pyarrow's filesystem layer —
+    works on object storage and partitioned directory trees, not just a
+    flat local glob."""
     import pyarrow.fs as pafs
     fs, base = _fs_and_path(parquet_path)
     scheme = parquet_path.split("://", 1)[0] + "://" if "://" in parquet_path else ""
     infos = fs.get_file_info(pafs.FileSelector(base, recursive=True))
-    return sorted(scheme + i.path for i in infos
+    return sorted((scheme + i.path, i.size) for i in infos
                   if i.type == pafs.FileType.File
                   and i.path.endswith(".parquet"))
 
@@ -2069,77 +2083,21 @@ def _binary_np(arr):
     return data, offsets.astype(np.int64)
 
 
-def image_blocks_direct(spark, parquet_path: str, grid: int = 4,
-                        res: int = KNN_RES) -> DataFrame:
-    """Direct-scan variant of image_blocks for byte-heavy tables: Spark
-    parallelizes over parquet FILES and each Python worker reads its
-    split with pyarrow locally, so the multi-GB bytes column never
-    crosses the JVM<->Python channel (measured here: the channel
-    ANTI-scales — 670 MB/s at 8 workers, 400 MB/s at 32 — while local
-    columnar reads scale with cores).  This is the standard
-    petastorm/DataLoader-style design for binary payload stages at
-    100 TB: move the decoder to the data, ship only the reduced rows."""
-    files = _list_parquet_files(parquet_path)
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_path}")
-    # pack several files per task: one-file tasks made task dispatch +
-    # Arrow stream setup the dominant cost when files are small
-    # (128 single-file tasks measured ~2x the wall of 64 two-file
-    # tasks on the 30k-image bench table); 2x parallelism keeps
-    # stragglers bounded while a worker amortizes its setup over the
-    # files it loops through
-    n_parts = min(len(files), 2 * spark.sparkContext.defaultParallelism)
-    files_df = spark.createDataFrame([(f,) for f in files], "path string") \
-                    .repartition(n_parts)
-    gr, gc = np.meshgrid(np.arange(grid), np.arange(grid), indexing="ij")
-    gr = gr.reshape(-1).astype(np.int32)
-    gc = gc.reshape(-1).astype(np.int32)
-
-    def gen(batches):
-        # mapInArrow: the decode stays numpy end-to-end — image bytes
-        # are sliced straight out of the Arrow data buffer (no per-row
-        # Python bytes objects) and the output batch is assembled as
-        # Arrow arrays (no pandas block manager in the hot loop)
-        import pyarrow as pa
-        n = grid * grid
-        for rb_in in batches:
-            for path in rb_in.column(0).to_pylist():
-                for rb, cells, vals, n_img in _decoded_tile_batches(
-                        path, grid, res):
-                    idx = pa.array(np.repeat(
-                        np.arange(n_img, dtype=np.int64), n))
-                    yield pa.RecordBatch.from_arrays([
-                        rb.column(0).take(idx),
-                        pa.array(cells),
-                        pa.array(np.tile(gr, n_img)),
-                        pa.array(np.tile(gc, n_img)),
-                        pa.array(vals.reshape(-1)),
-                    ], schema=pa.schema([
-                        pa.field("image_id", pa.string()),
-                        pa.field("cell", pa.int64()),
-                        pa.field("block_row", pa.int32()),
-                        pa.field("block_col", pa.int32()),
-                        pa.field("mean_intensity", pa.float64()),
-                    ]))
-
-    return files_df.mapInArrow(gen, TILE_SCHEMA)
-
-
 def _decoded_tile_batches(path: str, grid: int, res: int):
-    """Per record batch of one parquet file: (arrow batch, flat cell
-    ids (n_img*grid^2,), flat block means, n_img)."""
-    tbl = _read_parquet_table(path, ["image_id", "bytes", "phash"])
+    """Per record batch of one parquet file: (flat cell ids
+    (n_img*grid^2,), flat block means, n_img)."""
+    tbl = _read_parquet_table(path, ["bytes", "phash"])
     for rb in tbl.to_batches():
         n_img = rb.num_rows
         if n_img == 0:
             continue
-        ph = rb.column(2).to_numpy()
+        ph = rb.column(1).to_numpy()
         lat, lon = ic.geotag_from_phash(ph.astype(np.int64, copy=False))
-        bb = _binary_np(rb.column(1))
+        bb = _binary_np(rb.column(0))
         if bb is not None:
             data, offsets = bb
         else:  # nulls: materialize and re-pack
-            blobs = [bytes(b) for b in rb.column(1).to_pylist()]
+            blobs = [bytes(b) for b in rb.column(0).to_pylist()]
             data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
             lens = np.fromiter((len(b) for b in blobs),
                                dtype=np.int64, count=n_img)
@@ -2147,27 +2105,33 @@ def _decoded_tile_batches(path: str, grid: int, res: int):
         vals, blas, blos = ic.block_means_batch(data, offsets, lat, lon,
                                                 grid)
         cells = cx.cell_id(blas.reshape(-1), blos.reshape(-1), res)
-        yield rb, cells, vals, n_img
+        yield cells, vals, n_img
 
 
 def tile_assignment_direct(spark, parquet_path: str, grid: int = 4,
                            res: int = KNN_RES) -> DataFrame:
-    """tile_assignment over a parquet path via the direct scan, with
-    the per-(cell, image) partial aggregation done INSIDE the Python
-    task (guide §2.3 'aggregate before you shuffle'): every image's
-    blocks live in exactly one task (files are never split), so
-    grouping blocks by (cell, image) locally is exact — n_images
-    becomes a plain count of the partial rows and the image_id string
-    column never crosses the Python->JVM boundary at all (r7: output
-    rows drop ~2x, the countDistinct Expand disappears from the plan).
-    avg_intensity = sum/count is the same weighted mean as
+    """tile_assignment over a parquet path via a direct scan: Spark
+    parallelizes over parquet FILES and each Python task reads its files
+    with pyarrow locally, so the bytes column never crosses the
+    JVM<->Python channel (which anti-scales: 670 MB/s at 8 workers,
+    400 MB/s at 32).  The per-(cell, image) partial aggregation runs
+    INSIDE the task (guide §2.3 'aggregate before you shuffle'): every
+    image's blocks live in exactly one task (files are never split), so
+    grouping blocks by (cell, image) locally is exact — n_images becomes
+    a plain count of the partial rows and image_id is never read (r7:
+    output rows drop ~2x, the countDistinct Expand disappears from the
+    plan).  avg_intensity = sum/count is the same weighted mean as
     avg(mean_intensity), differing only in float summation order."""
     files = _list_parquet_files(parquet_path)
     if not files:
         raise ValueError(f"no parquet files under {parquet_path}")
-    n_parts = min(len(files), 2 * spark.sparkContext.defaultParallelism)
-    files_df = spark.createDataFrame([(f,) for f in files], "path string") \
-                    .repartition(n_parts)
+    # decode tasks sized from the files' bytes, capped at 2x cores (one
+    # short straggler wave) and at the file count; task i reads
+    # paths[i::n] off a JVM Range, so no Python RDD scan and no
+    # repartition shuffle run ahead of the decode
+    n = min(len(files), 2 * spark.sparkContext.defaultParallelism,
+            _python_stage_parts(spark, sum(size for _, size in files)))
+    paths = [path for path, _ in files]
     g2 = grid * grid
 
     def gen(batches):
@@ -2177,27 +2141,29 @@ def tile_assignment_direct(spark, parquet_path: str, grid: int = 4,
             pa.field("nb", pa.int64()),
             pa.field("s", pa.float64()),
         ])
-        for rb_in in batches:
-            for path in rb_in.column(0).to_pylist():
-                for _rb, cells, vals, n_img in _decoded_tile_batches(
-                        path, grid, res):
-                    img = np.repeat(np.arange(n_img, dtype=np.int64), g2)
-                    order = np.lexsort((cells, img))
-                    ck = cells[order]
-                    ik = img[order]
-                    v = vals.reshape(-1)[order]
-                    new = np.empty(len(ck), dtype=bool)
-                    new[0] = True
-                    new[1:] = (ck[1:] != ck[:-1]) | (ik[1:] != ik[:-1])
-                    gstart = np.nonzero(new)[0]
-                    yield pa.RecordBatch.from_arrays([
-                        pa.array(ck[gstart]),
-                        pa.array(np.diff(np.append(gstart, len(ck)))
-                                   .astype(np.int64)),
-                        pa.array(np.add.reduceat(v, gstart)),
-                    ], schema=schema)
+        mine = [path for rb_in in batches
+                for i in rb_in.column(0).to_pylist() for path in paths[i::n]]
+        for path in mine:
+            for cells, vals, n_img in _decoded_tile_batches(
+                    path, grid, res):
+                img = np.repeat(np.arange(n_img, dtype=np.int64), g2)
+                order = np.lexsort((cells, img))
+                ck = cells[order]
+                ik = img[order]
+                v = vals.reshape(-1)[order]
+                new = np.empty(len(ck), dtype=bool)
+                new[0] = True
+                new[1:] = (ck[1:] != ck[:-1]) | (ik[1:] != ik[:-1])
+                gstart = np.nonzero(new)[0]
+                yield pa.RecordBatch.from_arrays([
+                    pa.array(ck[gstart]),
+                    pa.array(np.diff(np.append(gstart, len(ck)))
+                               .astype(np.int64)),
+                    pa.array(np.add.reduceat(v, gstart)),
+                ], schema=schema)
 
-    partial = files_df.mapInArrow(gen, "cell long, nb long, s double")
+    partial = spark.range(n, numPartitions=n).mapInArrow(
+        gen, "cell long, nb long, s double")
     return (partial.groupBy("cell")
             .agg(F.sum("nb").alias("n_blocks"),
                  F.count("*").alias("n_images"),

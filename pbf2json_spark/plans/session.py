@@ -145,7 +145,18 @@ def warm_python_workers(spark: SparkSession, parallelism: int | None = None) -> 
     kernel time (observed: ~25 s at 96% sys for 32 slots) and lands
     inside whatever query runs first.  One trivial pass per eval type
     (scalar pandas_udf + mapInPandas) moves that cost to session setup;
-    workers are reused afterwards (spark.python.worker.reuse)."""
+    workers are reused afterwards (spark.python.worker.reuse).
+
+    Warm workers do not remove the per-task dispatch cost: every Python
+    task still spends 150-360 ms (4-core host) between launch and the
+    first UDF line, in the worker's per-task
+    importlib.invalidate_caches(), which re-reads the zip directories of
+    pyspark.zip and the spark-core jar (see
+    operators.spatial._python_stage_parts).  The Python-list path —
+    createDataFrame(<list>), a plain Python RDD — is NOT pre-warmed
+    here: its first task per worker measured ~1.6 s.  The engine
+    therefore builds driver-side tables from pandas through Arrow (a JVM
+    LocalRelation whose scan starts no Python worker)."""
     import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
     from pyspark.sql import types as T

@@ -3,7 +3,9 @@
 All generators are pure functions of (seed, scale) built on counter-based
 Philox streams — no wall clock, no global RNG state.  Pandas generators
 are Spark-free (usable by the pure-Python oracles in tests); the
-``*_df`` wrappers attach explicit StructType schemas (never inferred).
+``*_df`` wrappers attach explicit StructType schemas (never inferred)
+and convert from pandas through Arrow, so a driver-built table analyzes
+to a JVM LocalRelation and scanning it starts no Python worker.
 
 The `images` generator is *distributed*: pixels are synthesized inside
 ``mapInPandas`` over ``spark.range(n)``, so generation scales with the
@@ -329,16 +331,8 @@ def gen_osm_tables(n_nodes: int, n_ways: int, n_rels: int, seed: int = 42):
 def osm_tables_df(spark, n_nodes: int, n_ways: int, n_rels: int, seed: int = 42):
     s = spark_schemas()
     nodes, ways, rels = gen_osm_tables(n_nodes, n_ways, n_rels, seed)
-    members_rows = [
-        (int(r.id), [(int(m["type"]), int(m["ref"]), m["role"]) for m in r.members],
-         dict(r.tags))
-        for r in rels.itertuples()
-    ]
-    return (
-        spark.createDataFrame(nodes.to_dict("records"), schema=s["nodes"]),
-        spark.createDataFrame(ways.to_dict("records"), schema=s["ways"]),
-        spark.createDataFrame(members_rows, schema=s["relations"]),
-    )
+    return tuple(spark.createDataFrame(pdf, schema=s[name]) for name, pdf in
+                 (("nodes", nodes), ("ways", ways), ("relations", rels)))
 
 
 # ---------------------------------------------------------------------------
@@ -372,8 +366,7 @@ def gen_polygons_pdf(n: int, seed: int = 7) -> pd.DataFrame:
 
 def polygons_df(spark, n: int, seed: int = 7):
     pdf = gen_polygons_pdf(n, seed)
-    return spark.createDataFrame(pdf.to_dict("records"),
-                                 schema=spark_schemas()["polygons"])
+    return spark.createDataFrame(pdf, schema=spark_schemas()["polygons"])
 
 
 def gen_knn_queries_pdf(n: int, k: int = 5, seed: int = 9) -> pd.DataFrame:
@@ -393,5 +386,4 @@ def gen_knn_queries_pdf(n: int, k: int = 5, seed: int = 9) -> pd.DataFrame:
 
 def knn_queries_df(spark, n: int, k: int = 5, seed: int = 9):
     pdf = gen_knn_queries_pdf(n, k, seed)
-    return spark.createDataFrame(pdf.to_dict("records"),
-                                 schema=spark_schemas()["knn_queries"])
+    return spark.createDataFrame(pdf, schema=spark_schemas()["knn_queries"])

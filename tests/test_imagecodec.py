@@ -193,3 +193,23 @@ def test_block_means_batch_rejects_unknown_magic():
     with pytest.raises(ValueError, match="magic"):
         ic.block_means_batch(data, np.array([0, len(bad)]),
                              np.zeros(1), np.zeros(1), 4)
+
+
+def test_block_means_batch_rejects_short_blob():
+    """A blob shorter than its 8-byte header, or than the body its
+    header's w x h needs, raises naming the image instead of reading the
+    next image's bytes."""
+    import numpy as np
+    import pytest
+
+    good = ic.encode_image(ic.gen_pixels(1, 16, 16), "raw")
+    for short in (good[:5], good[:40]):
+        data = np.frombuffer(short + good, dtype=np.uint8)
+        offsets = np.array([0, len(short), len(short) + len(good)])
+        with pytest.raises(ValueError, match="image 0"):
+            ic.block_means_batch(data, offsets, np.zeros(2), np.zeros(2), 4)
+    qd = ic.encode_image(ic.gen_pixels(2, 24, 40), "qdct")
+    data = np.frombuffer(good + qd[:-2] + good, dtype=np.uint8)
+    offsets = np.cumsum([0, len(good), len(qd) - 2, len(good)])
+    with pytest.raises(ValueError, match="image 1"):
+        ic.block_means_batch(data, offsets, np.zeros(3), np.zeros(3), 4)

@@ -227,6 +227,65 @@ def test_tile_assignment_direct_equals_dataframe_path(spark, tmp_path):
     assert np.allclose(a["avg_intensity"], b["avg_intensity"])
 
 
+@pytest.fixture(scope="module")
+def three_file_images(spark, tmp_path_factory):
+    """The 3-file image table test_tile_assignment_direct_equals_
+    dataframe_path writes, shared by the direct-scan plan tests."""
+    path = str(tmp_path_factory.mktemp("three_file") / "imgs")
+    synth.images_df(spark, 300, partitions=3).write.parquet(path)
+    return path
+
+
+def test_driver_tables_are_jvm_local(spark, points, three_file_images):
+    """Tables the engine builds on the driver analyze to a JVM
+    LocalRelation, so scanning them starts no Python worker: the synth
+    OSM, polygon and query tables and knn's empty result.  The frame
+    tile_assignment_direct decodes from is a JVM Range.  Arrow fallback
+    is off, so a silent fallback to the Python-list path fails here."""
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        local = dict(zip(("nodes", "ways", "relations"),
+                         synth.osm_tables_df(spark, 300, 60, 12)))
+        local["polygons"] = synth.polygons_df(spark, 12)
+        local["queries"] = synth.knn_queries_df(spark, 30, k=3)
+        local["knn_empty"] = sp.knn(points, local["queries"].limit(0), k=3)
+        tile = sp.tile_assignment_direct(spark, three_file_images)
+    finally:
+        spark.conf.set(key, old)
+    assert local["knn_empty"].count() == 0
+    for name, df in local.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, \
+            (name, plan)
+    plan = tile._jdf.queryExecution().analyzed().toString()
+    assert "Range" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_tile_assignment_direct_one_decode_wave(spark, three_file_images):
+    """tile_assignment_direct runs its decode straight off the file
+    list: one decode stage of at most defaultParallelism tasks (one per
+    file here) plus the final aggregate — no stage scanning a Python
+    RDD, no repartition shuffle ahead of the decode."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"tile-stages-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count stages")
+    try:
+        sp.tile_assignment_direct(spark, three_file_images).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    stage_ids = sorted({s for j in st.getJobIdsForGroup(group)
+                        for s in st.getJobInfo(j).stageIds})
+    ran = [st.getStageInfo(s) for s in stage_ids]
+    ran = [s for s in ran if s.numCompletedTasks > 0]
+    assert len(ran) == 2, [(s.stageId, s.numTasks) for s in ran]
+    assert ran[0].numTasks == 3 <= sc.defaultParallelism
+
+
 def test_tile_oracle_fixture_pins_operator(spark):
     """The committed q_tile_assignment oracle fixture (tests/fixtures/
     tile_blocks_1000.parquet) must match (a) a fresh run of the
