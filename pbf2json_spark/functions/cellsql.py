@@ -1,7 +1,7 @@
 """JVM-side (Catalyst expression) twins of cellindex.cell_id and
 cellindex.s2_cell_id.
 
-The kNN point-side key build runs over the whole corpus; doing it as a
+A corpus-side cell-key build runs over the whole table; doing it as a
 pandas UDF made the first join's scan a Python stage (Arrow crossing +
 worker pool) for what is just float math + bit interleaving.  This
 module builds the IDENTICAL int64 cell id as a pure Spark column
@@ -252,47 +252,6 @@ def disk_cells_col(i: Column, j: Column, res: int, ring: int = 1) -> Column:
     return F.array(*cells)
 
 
-def with_disk_cells(df, i_col: str, j_col: str, res: int, ring: int,
-                    out_col: str):
-    """df + array<long> of the (2*ring+1)^2 disk cells around the grid
-    coordinate in (i_col, j_col) at `res` — the wide-ring form of
-    disk_cells_col, structured for janino: a (2*ring+1)^2-element array
-    where every element carries its own byte-table Morton spread blew
-    the 64 KB generated-method limit at ring=2 (whole Generate knocked
-    to interpreted mode, measured 2x slower end-to-end).  Here the
-    2*(2*ring+1) spread components are computed ONCE in a projection
-    via the literal-free mask-shift cascade (_spread_steps over cheap
-    column refs — compiles in ms even fused with a scan), and the
-    array elements are 3-bit-op shift/or combos of those columns.
-
-    Out-of-range latitude rows yield NULL elements (callers explode +
-    filter isNotNull); longitude wraps.  i/j must be plain columns on
-    df (project them first)."""
-    nlat, nlon = 1 << res, 2 << res
-    steps = list(zip(_SPREAD_MASKS, _SPREAD_SHIFTS))
-    offs = range(-ring, ring + 1)
-    sel = ["*"]
-    for d in offs:
-        ii = F.col(i_col) + F.lit(d)
-        spread_i = _spread_steps(ii.bitwiseAND(F.lit(0x7FFFFFF)), steps)
-        sel.append(F.when((ii >= 0) & (ii < nlat), spread_i)
-                   .alias(f"_dsi{d + ring}"))
-        jj = F.pmod(F.col(j_col) + F.lit(d), F.lit(nlon))
-        sel.append(_spread_steps(jj.bitwiseAND(F.lit(0x7FFFFFF)), steps)
-                   .alias(f"_dsj{d + ring}"))
-    df = df.select(*sel)
-    pre = F.shiftleft(F.lit(res).cast("long"), 54)
-    cells = []
-    for di in offs:
-        for dj in offs:
-            morton = F.col(f"_dsj{dj + ring}").bitwiseOR(
-                F.shiftleft(F.col(f"_dsi{di + ring}"), 1))
-            cells.append(pre.bitwiseOR(morton))
-    df = df.select("*", F.array(*cells).alias(out_col))
-    return df.drop(*[f"_dsi{d + ring}" for d in offs],
-                   *[f"_dsj{d + ring}" for d in offs])
-
-
 def s2_cell_id_col(lat: Column, lon: Column, level: int) -> Column:
     """(lat, lon) columns -> int64 quad-sphere cell id at `level`,
     the pure-JVM twin of cellindex.s2_cell_id (pinned bit-identical
@@ -377,8 +336,8 @@ def with_s2_fst(df, lat_col: str, lon_col: str,
     STALENESS CALLER CONTRACT (applies to every keeper of these
     columns, ADVICE r4): like any precomputed index column, (f, s, t)
     are a pure function of the lat/lon values AT DERIVATION TIME.
-    Consumers that detect and reuse them (knn family='s2',
-    with_s2_cell) cannot tell if lat/lon were rewritten afterwards —
+    Consumers that detect and reuse them (with_s2_cell,
+    with_s2_cells) cannot tell if lat/lon were rewritten afterwards —
     re-derive after any coordinate mutation.
 
     Two measured reasons this is not a single Column:
@@ -412,7 +371,7 @@ def with_s2_fst(df, lat_col: str, lon_col: str,
             .cast("long")
 
     # source-column stamp (ADVICE r5): consumers that REUSE fst columns
-    # (with_s2_cell/with_s2_cells, knn family='s2') verify at reuse time
+    # (with_s2_cell/with_s2_cells; knn family='s2' checks too) verify
     # that the requested lat/lon pair is the one fst was derived from —
     # presence-only detection silently keyed cells on the WRONG
     # coordinate pair when a frame carried fst from a different pair
@@ -501,14 +460,14 @@ def s2_cells_from_fst(face: Column, s: Column, t: Column,
 def with_s2_cells(df, lat_col: str, lon_col: str, levels,
                   out_col: str):
     """df + array<long> of quad-sphere cell ids, one per level — the
-    hot-path form (kNN ladders, density keys): with_s2_fst's chained
+    multi-level form: with_s2_fst's chained
     projections + one s2_cells_from_fst element.
 
     SCALE/FUSION NOTE: feeding this chain PLUS a posexplode straight
     off a COLUMNAR source (parquet scan or a cached InMemoryRelation)
     OOMed the driver inside janino's local-variable-map pass — the
     fused ColumnarToRow + projections + Generate method goes
-    quadratic.  Exploding callers (kNN's pts_ml) must put a
+    quadratic.  Exploding callers must put a
     materialization boundary between the fst derivation and the
     Generate: persist the fst columns (they are ingest-time columns
     in a real deployment), then explode off the cache."""
@@ -542,7 +501,7 @@ def with_s2_cell(df, lat_col: str, lon_col: str, level: int,
     columnar parquet scan.
 
     keep_fst=True leaves the (_s2f, _s2s, _s2t) columns on the frame —
-    the ingest-time pattern: downstream consumers (knn family='s2',
+    the ingest-time pattern: downstream consumers (with_s2_cells,
     and this function itself on a later call) detect and REUSE them
     instead of re-deriving the trig chain, saving one projection-chain
     compile + evaluation per query.  STALENESS CALLER CONTRACT: the

@@ -336,17 +336,43 @@ def build_stacked_edges(pieces_by_id: dict,
 def raycast_contains_stacked(tables, codes, pt_lats, pt_lons):
     """Vectorized even-odd containment for a batch of (point, polygon)
     candidates: `tables` from build_stacked_edges, `codes` the per-row
-    slot indices.  Bit-identical crossing tests to raycast_contains."""
+    slot indices.  Bit-identical crossing tests to raycast_contains.
+
+    Every row is padded to the largest polygon's edge count emax, so
+    rows run in chunks of at most (1 << 22) // emax — the padded-edge
+    budget build_stacked_edges applies to the table — and the working
+    arrays are updated in place: one 60k-vertex ring among small ones
+    costs a few (chunk, emax) float64 arrays, not a dozen
+    (batch_rows, emax) ones."""
     _slot, X1, Y1, X2, Y2 = tables
     px = np.asarray(pt_lons, dtype=np.float64)[:, None]
     py = np.asarray(pt_lats, dtype=np.float64)[:, None]
-    x1, y1, x2, y2 = X1[codes], Y1[codes], X2[codes], Y2[codes]
-    cond = (y1 > py) != (y2 > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1 + (py - y1) * (x2 - x1) / np.where(y2 == y1, np.inf,
-                                                     y2 - y1)
-    crossings = np.sum(cond & (px < xint), axis=1)
-    return (crossings % 2).astype(bool)
+    codes = np.asarray(codes)
+    out = np.empty(len(codes), dtype=bool)
+    step = max(1, (1 << 22) // max(1, X1.shape[1]))
+    for r0 in range(0, len(codes), step):
+        c, qx, qy = codes[r0:r0 + step], px[r0:r0 + step], py[r0:r0 + step]
+        y1, y2 = Y1[c], Y2[c]
+        cond = (y1 > qy) != (y2 > qy)
+        den = y2 - y1
+        den[y2 == y1] = np.inf
+        del y2
+        # same op order as raycast_contains, in place:
+        # x1 + (py - y1) * (x2 - x1) / den
+        num = qy - y1
+        del y1
+        x1 = X1[c]
+        dx = X2[c]
+        dx -= x1
+        num *= dx
+        del dx
+        with np.errstate(divide="ignore", invalid="ignore"):
+            num /= den
+        del den
+        num += x1
+        cond &= qx < num
+        out[r0:r0 + step] = np.sum(cond, axis=1) % 2 == 1
+    return out
 
 
 def ring_is_canonical(ring_lats, ring_lons) -> bool:

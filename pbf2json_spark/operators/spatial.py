@@ -23,16 +23,17 @@ Design per operator (all range-like joins reduced to cell equi joins):
       2e7 pair-ops  (2k x 10k)     1.3 s  vs   8.8 s
       5e8 pair-ops  (5k x 100k)    3.8 s  vs  12.9 s
       2e9 pair-ops  (20k x 100k)  11.7 s  vs  14.6 s
-  so the budget sits near the crossover.  Above it runs the cell ladder:
-  ADAPTIVE-RESOLUTION cell-disk expansion, where per-query cell levels
-  (fine in zipfian hotspots, coarse in sparse regions) make each disk
-  hold ~margin*k points; rounds are (lvl, cell)-equi joins re-ranked by
-  a JVM-side haversine under one rank<=k window (WindowGroupLimit
-  partial top-k); a query terminates when its kth distance <= the
-  conservative disk-exit bound.  Escalation coarsens the level at a
-  constant ring, and survivors fold into the same brute scan once the
-  rule admits them.  This is the reference-free operator the survey
-  maps from 'H3 k-ring expansion + distance re-rank'.
+  so the budget sits near the crossover.  Above it runs ONE cell
+  ladder, knn_join's: a distributed exact window-occupancy table starts
+  every row at the finest level whose cell disk holds ~margin*k points
+  (fine in zipfian hotspots, coarse in sparse regions); rounds are
+  cell-equi joins re-ranked by a JVM-side haversine under one rank<=k
+  window (WindowGroupLimit partial top-k); a row is done when k
+  candidates lie within its conservative disk-exit bound, unsatisfied
+  rows coarsen one level, and the rest fold into the same brute scan.
+  knn() is an adapter: its queries become knn_join's left side.  This
+  is the reference-free operator the survey maps from 'H3 k-ring
+  expansion + distance re-rank'.
 - tile_assignment: decode image bytes (mapInPandas batches), block-
   reduce pixels to a gxg grid, map each block to the geo cell under its
   footprint, and aggregate per cell — raster->vector, 'assign decoded
@@ -40,8 +41,6 @@ Design per operator (all range-like joins reduced to cell equi joins):
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -66,9 +65,9 @@ PIP_MAX_DIM_VERTICES = 5_000_000
 # staleness cannot arise.
 _COVER_CACHE: dict = {}
 _COVER_CACHE_MAX = 256
-# knn collects the query set to the driver (dim-side design: per-query
-# disk tables are built driver-side each round); above this it OOMs the
-# driver, so the operator refuses with a batching hint instead
+# most query rows one brute scan collects to the driver: a larger query
+# side takes the distributed ladder, and a larger ladder fold runs as
+# several brute scans of at most this many rows
 KNN_MAX_QUERIES = 1_000_000
 
 
@@ -238,15 +237,12 @@ def point_in_polygon(points: DataFrame, polygons: DataFrame,
     # right-size the refine's Arrow stage from the slim point view's
     # estimated bytes (not the byte-heavy parent's partitioning — a slim
     # projection inherits it: 70 KB partitions at a 300k-point geo view);
-    # coalesce only reduces, so a corpus-scale input is untouched, and
-    # an unavailable estimate leaves the partitioning alone
-    try:
-        est = int(pts_slim._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:
-        est = None
-    if est is not None:
-        pts_slim = pts_slim.coalesce(_python_stage_parts(spark, est))
+    # coalesce only reduces, so a corpus-scale input is untouched.  The
+    # estimate reads a private JVM API: if a Spark upgrade breaks it,
+    # this fails loudly rather than silently skipping the right-sizing
+    est = int(pts_slim._jdf.queryExecution().optimizedPlan()
+              .stats().sizeInBytes())
+    pts_slim = pts_slim.coalesce(_python_stage_parts(spark, est))
     cand = pts_slim.join(F.broadcast(cover), "cell").drop("cell")
 
     out_schema = T.StructType([
@@ -393,70 +389,6 @@ def _haversine_col(lat1, lon1, lat2, lon2):
     return 2.0 * gk.EARTH_RADIUS_M * F.atan2(F.sqrt(a), F.sqrt(1.0 - a))
 
 
-class _CellFamily:
-    """Function table giving knn its cell math for one index family.
-    BOTH families carry a JVM Column form of their codec
-    (functions/cellsql.py, pinned bit-identical to numpy) so the
-    corpus-side key build stays in codegen — since round 4 the
-    quad-sphere family no longer pays an Arrow pandas-UDF stage on
-    the round-0 corpus scan (VERDICT r3 missing #3)."""
-
-    def __init__(self, name, cell_id, disk, parent, exit_m, col_pat,
-                 max_res, expr_kind):
-        self.name = name
-        self.cell_id = cell_id
-        self.disk = disk
-        self.parent = parent
-        self.exit_m = exit_m
-        self.col_pat = col_pat
-        self.max_res = max_res
-        self.expr_kind = expr_kind
-
-
-_FAMILIES = {
-    "equirect": _CellFamily(
-        "equirect", cx.cell_id, cx.disk, cx.parent,
-        cx.disk_exit_distance_m, "cell_r{}", cx.MAX_RES, "equirect"),
-    "s2": _CellFamily(
-        "s2", cx.s2_cell_id, cx.s2_disk, cx.s2_parent,
-        cx.s2_disk_exit_distance_m, "s2_l{}", cx.S2_MAX_LEVEL, "s2"),
-}
-
-
-def _query_disk_pdf(remaining: pd.DataFrame, levels_used: list,
-                    lvl_idx: np.ndarray, rings: np.ndarray,
-                    fam: _CellFamily) -> pd.DataFrame:
-    """Driver-side (numpy) expansion of each query's k-disk + exit bound
-    with a PER-QUERY (level, ring): queries are the small dim side, so
-    no Spark UDF round-trips.  `lvl_idx` indexes into levels_used (the
-    same index posexplode assigns on the point side)."""
-    frames = []
-    key = lvl_idx * 1000 + rings
-    for kv in np.unique(key):
-        li, ring = int(kv) // 1000, int(kv) % 1000
-        sel = key == kv
-        sub = remaining[sel]
-        level = levels_used[li]
-        la = sub["lat"].to_numpy(dtype=np.float64)
-        lo = sub["lon"].to_numpy(dtype=np.float64)
-        cells = fam.cell_id(la, lo, level)
-        disks = fam.disk(cells, ring)                # (n, m), -1 padded
-        exit_m = fam.exit_m(la, lo, level, ring)
-        n, m = disks.shape
-        rep = np.repeat(np.arange(n), m)
-        flat = disks.reshape(-1)
-        keep = flat >= 0
-        frames.append(pd.DataFrame({
-            "query_id": sub["query_id"].to_numpy()[rep[keep]],
-            "lat": la[rep[keep]],
-            "lon": lo[rep[keep]],
-            "exit_m": exit_m[rep[keep]],
-            "lvl": np.full(keep.sum(), li, dtype=np.int32),
-            "cell": flat[keep],
-        }))
-    return pd.concat(frames, ignore_index=True)
-
-
 # pairwise haversine ops up to which kNN is ONE vectorized brute scan
 # instead of the cell ladder: the ladder's cost is Spark job floors,
 # the scan's is numpy work, so the crossover is an op count, not a row
@@ -465,8 +397,8 @@ BRUTE_OPS_BUDGET = 2_000_000_000
 
 
 def _brute_fits(n_queries: int, n_points: int) -> bool:
-    """The single kNN route rule (knn and knn_join entry, and both
-    ladders' small-tail folds): brute scan iff the pair-op count fits
+    """The single kNN route rule (knn and knn_join entry, and the
+    ladder's small-tail fold): brute scan iff the pair-op count fits
     BRUTE_OPS_BUDGET.  The scan collects the query side to the driver,
     so it also requires n_queries <= KNN_MAX_QUERIES — a larger side
     stays on the distributed ladder."""
@@ -474,14 +406,6 @@ def _brute_fits(n_queries: int, n_points: int) -> bool:
             and n_queries * n_points <= BRUTE_OPS_BUDGET)
 
 
-# density snapshots keyed on the points DataFrame OBJECT (weak refs):
-# the coarse density aggregate is ingest-time metadata at 10^12 rows —
-# a deployment computes it once per table snapshot, never per query
-# batch.  DataFrames are immutable, so caching per object is safe;
-# a new DataFrame (even over the same files) recomputes.
-import weakref
-
-_DENSITY_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 # packed brute-scan point store (ids + unit xyz + its broadcast) of the
 # LAST corpus scanned, as [(corpus DataFrame, id column, Broadcast)]:
 # an interactive caller issuing repeated knn()/knn_join() calls over
@@ -611,12 +535,12 @@ def _topk_merge(best_d, best_i, qla, qlo, qxyz, pla, plo, ids, pxyz, k):
 def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
                      point_id: str, n_points: int, corpus: tuple,
                      exclude_self: bool = False) -> DataFrame:
-    """Exact kNN for queries the cell index can't help (sparse regions).
+    """Exact kNN by one vectorized scan: the whole call below the route
+    budget, and the ladder's fold of rows the cell index can't help.
 
     Two shapes by corpus size:
 
-    - points fit a broadcast (<= BRUTE_BCAST_MAX_POINTS — always true
-      when the tail-folding budget admitted the scan): partition the
+    - points fit a broadcast (<= BRUTE_BCAST_MAX_POINTS): partition the
       QUERIES, ship the packed point store once per executor, each task
       emits its queries' EXACT top-k with ranks — Q x k output rows,
       zero shuffle, no window.
@@ -626,6 +550,8 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
       window merges.  This is the 10^12-row shape; it only runs for
       small Q there because the op-count budget gates the tail.
 
+    `pts` is exactly (point_id, p_lat, p_lon); `remaining` holds the
+    collected (query_id, lat, lon) queries.
     `corpus` is (caller DataFrame, its id column), the key of the
     one-slot _BRUTE_STORE memo.  exclude_self drops query_id ==
     point_id pairs before ranking: the scan keeps k+1 per query, so
@@ -638,9 +564,6 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
     nq = len(qids)
     qxyz = _unit_xyz(qla, qlo)
 
-    # project the 3 needed columns explicitly: the s2 family's point
-    # store carries fst scratch columns that must not ship here
-    pts = pts.select(point_id, "p_lat", "p_lon")
     if n_points <= BRUTE_BCAST_MAX_POINTS:
         sc = spark.sparkContext
         hit = _BRUTE_STORE[0] if _BRUTE_STORE else None
@@ -729,528 +652,69 @@ def _brute_force_knn(pts: DataFrame, remaining: pd.DataFrame, k: int,
             .select("query_id", point_id, "dist_m", "rank"))
 
 
-def _exit_per_query(remaining: pd.DataFrame, levels_used: list,
-                    lvl_idx: np.ndarray, rings: np.ndarray,
-                    fam: _CellFamily) -> np.ndarray:
-    """Disk-exit bound per query for mixed (level, ring) sizes
-    (order-preserving)."""
-    la = remaining["lat"].to_numpy(np.float64)
-    lo = remaining["lon"].to_numpy(np.float64)
-    out = np.empty(len(la))
-    key = lvl_idx * 1000 + rings
-    for kv in np.unique(key):
-        li, r = int(kv) // 1000, int(kv) % 1000
-        m = key == kv
-        out[m] = fam.exit_m(la[m], lo[m], levels_used[li], r)
-    return out
-
-
 def knn(points: DataFrame, queries: DataFrame, k: int,
-        res: int = KNN_RES, initial_ring: int = 1, max_rounds: int = 3,
-        point_id: str = "image_id",
-        tail_to_brute_frac: float = 0.1,
-        family: str = "equirect",
+        res: int = KNN_RES, initial_ring: int = 1,
+        point_id: str = "image_id", family: str = "equirect",
         trace: dict | None = None) -> DataFrame:
-    """Top-k nearest points per query with exact-termination guarantee.
+    """Exact top-k nearest points per query, (dist, id) tiebreak.
 
-    points: (point_id, lat, lon, cell_r{res}); queries: (query_id, lat,
-    lon).  Returns (query_id, <point_id>, dist_m, rank).
+    points: (point_id, lat, lon); queries: (query_id, lat, lon).
+    Returns (query_id, <point_id>, dist_m, rank).
 
-    QUERIES ARE THE DIM SIDE: the query set is collected to the driver
-    and per-query disk tables are built driver-side each round
-    (~100 B/query/round), so the operator refuses more than
-    KNN_MAX_QUERIES (1M) queries with a batching hint rather than
-    OOMing the driver.  The point side is unbounded.  For a query side
-    that is itself a corpus, use knn_join (both sides distributed).
-    For s2 with keep_fst ingest columns, see the staleness caller
-    contract below.
+    An adapter over the one kNN engine.  The query side is collected
+    to the driver once (queries are the dim side), and the call takes
+    one of two routes by the priced rule _brute_fits:
 
-    ROUTE — one priced rule (_brute_fits): when n_queries x n_points
-    fits BRUTE_OPS_BUDGET (2e9 pair-ops, the measured crossover — table
-    in the module docstring) the whole call is ONE vectorized brute
-    scan (_brute_force_knn) — no density job, no rounds, no per-round
-    stats collects.  Above the budget the cell ladder below runs, and
-    its survivors fold into the same scan once their op count fits.
-    There, a one-shot or growing query side belongs in knn_join:
-    knn()'s per-round cost is corpus-linear (r7, 300k points,
-    local[32]: 73.8 s vs knn_join's 14.2 s at Q=20,000); knn() earns
-    its keep for repeated calls over one corpus DataFrame, which its
-    density and brute-store memos serve warm.
+    - n_queries x n_points fits BRUTE_OPS_BUDGET (2e9 pair-ops, the
+      measured crossover in the module docstring) and n_queries <=
+      KNN_MAX_QUERIES: ONE vectorized brute scan (_brute_force_knn).  Its packed point store is
+      memoized on (points, point_id), so warm repeated calls over one
+      corpus DataFrame skip the collect and the broadcast.
+    - otherwise: knn_join(queries, points) with `initial_ring` as its
+      ring — the distributed cell ladder, both sides DataFrames.
 
-    family='s2' runs the identical ladder on the quad-sphere index
-    (points carry s2_l{density} for the density aggregate): disks are
-    the exact BFS k-disks, the exit certificate is the great-circle
-    plane bound (0 for face-crossing windows, which therefore escalate
-    or fold to brute instead of certifying), and the corpus-side key
-    build is a pure JVM expression just like the equirect family
-    (cellsql.s2_cells_from_fst over materialized face/s/t columns,
-    bit-identical to the numpy codec —
-    no Python stage anywhere in the hot path).  Results are exact and
-    identical to
-    family='equirect' including (dist, id) tie order — pinned in
-    tests.  The win is at polar latitudes, where equirect disks
-    over-expand as cells shrink while quad-sphere cell area stays
-    within ~2.5x globally.
+    `res` does not affect the plan (the ladder picks per-row levels
+    from measured density); it is accepted for existing callers.
+    `family` must be 'equirect' or 's2'.  Both run the same engine and
+    return identical exact rows.  An s2 point side that carries the
+    (face, s, t) ingest columns (cellsql.with_s2_cell(keep_fst=True))
+    must have derived them from its (lat, lon), or the call raises.
 
-    The index is ADAPTIVE-RESOLUTION: one bounded density aggregation
-    (<= 2*4^9 coarse cells) sizes a per-query cell LEVEL so that the
-    initial ring's disk is expected to hold ~margin*k points — dense
-    hotspot queries probe FINE cells (a fixed res would hand them
-    thousands of candidates per cell), sparse queries probe COARSE
-    cells (a fixed res would need thousand-cell disks).  The point
-    side is exploded once to (level, cell) keys for the handful of
-    levels in use; each round is a (lvl, cell)-equi join + one
-    rank<=k window (Spark's WindowGroupLimit keeps it a partial
-    top-k, never a full sort of the candidates).
-
-    A query terminates when its kth distance <= its conservative disk-
-    exit bound.  Escalation COARSENS THE LEVEL at a constant ring by
-    ceil(log4(margin*k/found)) steps — the searched area grows like a
-    ring blowup would, but the per-query join-key rows stay a constant
-    (2r+1)^2 cells and the expected candidate volume stays ~margin*k.
-    Queries stuck at the coarsest level go to the brute-force tail,
-    which is proportionally cheap exactly when the cell index is
-    useless.  Result rows never flow through the driver: round results
-    stay DataFrames (union + localCheckpoint), the driver only
-    collects a Q-row stats aggregate per round for level bookkeeping.
-
-    Pass a dict as `trace` to receive a per-phase wall-clock
-    decomposition (density job, each round's driver prep + Spark job,
-    brute tail, final materialization)."""
-    import time as _time
-    _t0 = _time.perf_counter()
-
-    def _mark(label):
-        nonlocal _t0
-        if trace is not None:
-            now = _time.perf_counter()
-            trace[label] = round(trace.get(label, 0.0) + now - _t0, 3)
-            _t0 = now
-
-    fst_cols = ["_s2f", "_s2s", "_s2t"]
-    have_fst = family == "s2" and set(fst_cols) <= set(points.columns)
-    if have_fst:
-        # refuse fst derived from a different coordinate pair (the knn
-        # point side is contractually (point_id, lat, lon)) — ADVICE r5
+    Pass a dict as `trace`: the brute route records ladder_skipped
+    and fold {sec, rows}, the same keys knn_join records; the ladder
+    route records knn_join's dict."""
+    if family not in ("equirect", "s2"):
+        raise ValueError(f"unknown cell family {family!r}")
+    if family == "s2" and {"_s2f", "_s2s", "_s2t"} <= set(points.columns):
         from ..functions.cellsql import check_fst_source
         check_fst_source(points, "lat", "lon")
-    fam = _FAMILIES.get(family)
-    if fam is None:
-        raise ValueError(f"unknown cell family {family!r}")
-    pts = points.select(
-        F.col(point_id), F.col("lat").alias("p_lat"),
-        F.col("lon").alias("p_lon"),
-        *(fst_cols if have_fst else []))
-    # DESIGNED dimension-side assumption: the query set is collected to
-    # the driver (the ladder builds per-query disk tables driver-side,
-    # ~100 B/query/round).  Unlike the point side there is no plan that
-    # distributes this, so fail loudly instead of OOMing the driver on
-    # an oversized query set (VERDICT r4 'what's wrong' #2); for
-    # corpus-x-corpus workloads flip the sides or run the queries in
-    # KNN_MAX_QUERIES batches.  The guard checks AFTER the collect (a
-    # pre-count would cost one extra Spark job per knn call — measured
-    # ~0.3 s of per-job floor at local[32]): the collect itself is
-    # ~30 B/row and survives well past the ceiling; the thing the
-    # guard protects is the per-query driver loop below it.
-    remaining = queries.select("query_id", "lat", "lon").toPandas()
-    if len(remaining) > KNN_MAX_QUERIES:
-        # ValueError, not assert: python -O strips asserts, which would
-        # silently restore the unbounded per-query driver loop this
-        # guard exists to prevent (ADVICE r5)
-        raise ValueError(
-            f"knn with {len(remaining)} queries would build a driver-side "
-            f"disk table per query per round (queries are the dim side by "
-            f"design; ceiling {KNN_MAX_QUERIES}) — batch the query set, or "
-            f"use knn_join (both sides distributed, no driver tables)")
-    _mark("collect_queries")
-    # ROUTE before any ladder work (_brute_fits, see the docstring): a
-    # call whose pair-op count fits BRUTE_OPS_BUDGET is one brute scan.
-    # A warm density memo already knows the corpus size, so repeated
-    # ladder calls over one corpus skip the count job
-    cached = _DENSITY_CACHE.get(points)
-    n_points = (int(cached[1]["count"].sum()) if cached is not None
-                else points.count())
-    _mark("count_points")
-    if not remaining.empty and _brute_fits(len(remaining), n_points):
-        if trace is not None:
-            trace["n_brute_queries"] = int(len(remaining))
-        out = _brute_force_knn(pts, remaining, k, point_id, n_points,
-                               (points, point_id))
-        out = out.localCheckpoint(eager=True)
-        _mark("brute_scan")
-        return out
-
-    if family == "s2" and not have_fst:
-        # materialize (face, s, t) INTO the point-store cache: the key
-        # arrays each round are then 3 bit-ops per level off cheap
-        # cached columns.  This is both the scale shape (fst is an
-        # ingest-time column set at 10^12 rows, ~32 B/row) and a hard
-        # janino constraint: fusing the trig projection chain AND the
-        # posexplode Generate into one columnar-scan stage OOMed the
-        # driver in janino's local-variable-map pass (see
-        # cellsql.with_s2_cells docstring).  Corpora that already
-        # carry the fst columns (cellsql.with_s2_cell(keep_fst=True),
-        # the ingest-time pattern) skip this derivation entirely —
-        # CALLER CONTRACT: like any precomputed index column, fst must
-        # have been derived from the CURRENT lat/lon values; knn
-        # cannot detect stale fst after a lat/lon rewrite and would
-        # key the index on the old coordinates.
-        from ..functions.cellsql import with_s2_fst
-        pts = with_s2_fst(pts, "p_lat", "p_lon")
-    # the projected point store is narrow; more partitions than task
-    # slots only buys scheduling floor on the per-round joins.
-    # coalesce is a no-op when the scan already has fewer partitions,
-    # so no .rdd conversion plan is ever forced just to count them
-    par = points.sparkSession.sparkContext.defaultParallelism
-    pts = pts.coalesce(2 * par).persist()
-
-    n_queries0 = max(len(remaining), 1)
     spark = points.sparkSession
-    results = []          # DataFrames of (query_id, point_id, dist_m, rank)
-    round_caches = []     # persisted per-round tops, released at the end
-    brute = []
-
-    # density presizing -> per-query LEVEL: one bounded aggregation
-    # (<= 2*4^9 cells regardless of corpus size) estimates local point
-    # density; each query picks the cell level whose initial-ring disk
-    # is expected to hold ~margin*k points, so round 1 usually
-    # terminates with a near-minimal candidate set at both density
-    # extremes (zipfian hotspots AND empty ocean).
-    LADDER_RES = (9, 7, 5, 3)
-    density_res = 9
-    density_col = fam.col_pat.format(density_res)
-    margin = 4.0
-    if density_col in points.columns and not remaining.empty:
-        if cached is not None and cached[0] == density_res:
-            counts = cached[1]
-        else:
-            counts = points.groupBy(
-                F.col(density_col).alias("c")).count().toPandas()
-            try:
-                _DENSITY_CACHE[points] = (density_res, counts)
-            except TypeError:
-                pass  # object not weak-referenceable
-        _mark("density_job")
-        qla = remaining["lat"].to_numpy(np.float64)
-        qlo = remaining["lon"].to_numpy(np.float64)
-        cells9 = counts["c"].to_numpy(np.int64)
-        cnt9 = counts["count"].to_numpy(np.int64)
-        # density LADDER: the res-9 estimate has a resolution floor —
-        # a globally-sparse region reads 0 in a 3x3 res-9 neighbourhood
-        # (~1 deg) even when a coarser disk would hold plenty of
-        # points, and round 2 sent ALL such queries to the brute tail
-        # (85% of the bench mix).  Parent-aggregating the SAME counts
-        # driver-side (pure numpy, no extra Spark job) gives every
-        # query its 3x3 occupancy at ALL rungs — the initial level
-        # comes from the finest non-empty rung, and the SAME table
-        # later prices escalation (see the round loop); only queries
-        # empty at the coarsest rung (a ~135 deg hole) start at brute.
-        rung_counts = np.zeros((len(remaining), len(LADDER_RES)),
-                               dtype=np.int64)
-        for ri, dres in enumerate(LADDER_RES):
-            if dres == density_res:
-                cells_d, cnt_d = cells9, cnt9
-            else:
-                uc, inv = np.unique(fam.parent(cells9, dres),
-                                    return_inverse=True)
-                cnt_d = np.zeros(len(uc), dtype=np.int64)
-                np.add.at(cnt_d, inv, cnt9)
-                cells_d = uc
-            qc = fam.cell_id(qla, qlo, dres)
-            disks = fam.disk(qc, 1)                  # (Q, <=9)
-            # vectorized neighborhood sum (a python dict loop here is
-            # the driver's serial Amdahl term at large Q)
-            cser = pd.Series(cnt_d, index=cells_d)
-            flat = disks.reshape(-1)
-            vals = cser.reindex(np.where(flat >= 0, flat, 0)).fillna(0) \
-                       .to_numpy(np.int64)
-            vals[flat < 0] = 0
-            rung_counts[:, ri] = vals.reshape(disks.shape).sum(axis=1)
-        nz = rung_counts > 0
-        has = nz.any(axis=1)
-        first = nz.argmax(axis=1)
-        ar = np.arange(len(remaining))
-        per_fine = np.where(
-            has,
-            rung_counts[ar, first]
-            / (9 * 4.0 ** (res - np.array(LADDER_RES)[first])),
-            0.0)
-        target_pc = margin * k / float((2 * initial_ring + 1) ** 2)
-        with np.errstate(divide="ignore"):
-            delta = np.log(np.maximum(per_fine, 1e-12) / target_pc) \
-                / np.log(4.0)
-        qlvl = np.clip(np.round(delta) + res, 2,
-                       min(res + 6, fam.max_res)).astype(np.int64)
-        to_brute = ~has
-        brute.append(remaining[to_brute])
-        remaining = remaining[~to_brute]
-        qlvl = qlvl[~to_brute]
-        rung_counts = rung_counts[~to_brute]
-    else:
-        qlvl = np.full(len(remaining), res, dtype=np.int64)
-        rung_counts = np.zeros((len(remaining), len(LADDER_RES)),
-                               dtype=np.int64)
-    lmin, lmax = 2, min(res + 6, fam.max_res)
-    rings = np.full(len(remaining), initial_ring, dtype=np.int64)
-
-    # explode the point side to (lvl, cell) keys for the handful of
-    # levels in use — the one-coarser retry levels are included upfront
-    # so empty-disk escalation never rebuilds the key table (a real
-    # deployment precomputes these columns at ingest via
-    # attach_geo(res_list) and partitions the table by a coarse cell)
-    def _levels_for(lvls: np.ndarray) -> list:
-        base = {int(v) for v in np.unique(lvls)}
-        return sorted(base | {max(v - 2, lmin) for v in base}) or [res]
-
-    levels_used = _levels_for(qlvl)
-    pts_ml = None
-
-    def build_pts_ml(levels):
-        # multi-level cell keys as PURE JVM expressions for BOTH
-        # families (functions/cellsql.py, bit-identical to the numpy
-        # codecs) — the corpus-side key build stays inside whole-stage
-        # codegen instead of paying an Arrow round-trip per round-0
-        # join.  NOT persisted here: in the common one-round flow the
-        # key table is read exactly once (round 0's `top` is itself
-        # persisted), so the cache write (~1-2 s at 60k x 10 levels)
-        # would be pure overhead — the persist happens lazily the
-        # first time a SECOND round is about to re-read it.
-        if fam.expr_kind == "s2":
-            # keys off the CACHED fst columns: one compact array
-            # expression (3 bit ops per level from a single
-            # finest-level morton spread), same shape as the equirect
-            # Generate — no trig and no projection chain between the
-            # cache scan and the explode
-            from ..functions.cellsql import s2_cells_from_fst
-            arr = s2_cells_from_fst(F.col("_s2f"), F.col("_s2s"),
-                                    F.col("_s2t"), tuple(levels))
-            return pts.select(
-                F.col(point_id), "p_lat", "p_lon",
-                F.posexplode(arr).alias("lvl", "cell"))
-        # explode a CONSTANT level array and derive each level's cell
-        # from one codegen'd finest-level Morton column AFTER the
-        # Generate: posexplode over a non-foldable array inlines the
-        # whole key expression into the Generate (and its inferred
-        # size()>0 filter), where it is re-evaluated interpreted per
-        # row — the measured bulk of the round-0 key-build scan (r7:
-        # 1.5 s -> ~0.15 s on the 300k-point bench store).  The
-        # per-level shift is exact: doubles scale by powers of two
-        # losslessly and Morton prefixes nest (cells_array_col note).
-        from ..functions.cellsql import equirect_morton_col
-        finest = int(max(levels))
-        lvl_arr = F.array(*[F.lit(int(L)).cast("int") for L in levels])
-        cell = F.shiftleft(F.col("_L").cast("long"), 54).bitwiseOR(
-            F.call_function(
-                "shiftright", F.col("_mf"),
-                (F.lit(2 * finest) - F.col("_L") * 2).cast("int")))
-        return (pts
-                .withColumn("_mf", equirect_morton_col(
-                    F.col("p_lat"), F.col("p_lon"), finest))
-                .select(F.col(point_id), "p_lat", "p_lon", "_mf",
-                        F.posexplode(lvl_arr).alias("lvl", "_L"))
-                .select(F.col(point_id), "p_lat", "p_lon", "lvl",
-                        cell.alias("cell")))
-
-    pts_ml = build_pts_ml(levels_used)
-    pts_ml_persisted = False
-    _mark("density_prep")
-
-    for _round in range(max_rounds):
-        if remaining.empty:
-            break
-        if not {int(v) for v in np.unique(qlvl)} <= set(levels_used):
-            if pts_ml_persisted:
-                pts_ml.unpersist()
-            levels_used = _levels_for(qlvl)
-            pts_ml = build_pts_ml(levels_used)
-            pts_ml_persisted = False
-        if _round >= 1 and not pts_ml_persisted:
-            pts_ml = pts_ml.persist()
-            pts_ml_persisted = True
-        lvl_idx = np.array([levels_used.index(int(v)) for v in qlvl],
-                           dtype=np.int64)
-        est_rows = int(((2 * rings + 1) ** 2).sum())
-        if est_rows <= 500_000:
-            # small expansion: build it driver-side (one createDataFrame
-            # over vectorized numpy + Arrow) — measured cheaper than the
-            # executor path up to ~500k exploded cells, because the
-            # executor path costs a python-UDF stage + its own exchange
-            # before the broadcast; beyond that the single-threaded
-            # driver conversion becomes the Amdahl term and the
-            # executor path ships only the Q-row query table
-            qcells = spark.createDataFrame(
-                _query_disk_pdf(remaining, levels_used, lvl_idx, rings,
-                                fam),
-                schema="query_id string, lat double, lon double, "
-                       "exit_m double, lvl int, cell long")
-        else:
-            # large expansion: ship the tiny query table and explode the
-            # disks ON EXECUTORS; the exploded side is now the BIG side,
-            # so leave the broadcast decision to AQE
-            qbase = remaining.assign(
-                ring=rings, lvl=lvl_idx,
-                exit_m=_exit_per_query(remaining, levels_used, lvl_idx,
-                                       rings, fam))
-            qdf = spark.createDataFrame(
-                qbase, schema="query_id string, lat double, lon double, "
-                              "ring int, lvl int, exit_m double")
-
-            @F.pandas_udf(T.ArrayType(T.LongType()))
-            def disk_cells(lat, lon, ring, lvl):
-                la = lat.to_numpy(np.float64)
-                lo = lon.to_numpy(np.float64)
-                rg = ring.to_numpy(np.int64)
-                lv = lvl.to_numpy(np.int64)
-                # group rows by (level, ring) for vectorized expansion;
-                # keep everything numpy — a per-element python filter
-                # over millions of cells was a measured hot spot
-                result = [None] * len(la)
-                key = lv * 1000 + rg
-                for kv in np.unique(key):
-                    li, rr = int(kv) // 1000, int(kv) % 1000
-                    idx = np.nonzero(key == kv)[0]
-                    cells = fam.cell_id(la[idx], lo[idx], levels_used[li])
-                    d = fam.disk(cells, rr)
-                    if d.min() >= 0:          # no world-edge padding
-                        for j, row in zip(idx, d):
-                            result[j] = row
-                    else:
-                        mask = d >= 0
-                        for j, row, m in zip(idx, d, mask):
-                            result[j] = row[m]
-                return pd.Series(result)
-
-            qcells = qdf.select(
-                "query_id", "lat", "lon", "exit_m", "lvl",
-                F.explode(disk_cells("lat", "lon", "ring", "lvl"))
-                 .alias("cell"))
-        # broadcast the exploded disks while they are genuinely the
-        # small side (cells are ~40 B/row); beyond that leave the
-        # build-side choice to AQE — forcing a multi-million-row side
-        # through the driver was a measured scale-killer, but so is
-        # sort-merge-joining the point keys against a 100k-row dim
-        if est_rows <= 2_000_000:
-            cand = pts_ml.join(F.broadcast(qcells), ["lvl", "cell"])
-        else:
-            cand = pts_ml.join(qcells, ["lvl", "cell"])
-        cand = cand.withColumn(
-            "dist_m", _haversine_col(F.col("lat"), F.col("lon"),
-                                     F.col("p_lat"), F.col("p_lon")))
-        # ONE ordered window: the rank<=k filter right above row_number
-        # becomes a WindowGroupLimit (partial top-k before the shuffle,
-        # never a full sort of the candidate set).  found is derivable:
-        # n < k means the disk held exactly n candidates.
-        win = Window.partitionBy("query_id").orderBy("dist_m", point_id)
-        top = (cand
-               .withColumn("rank", F.row_number().over(win))
-               .filter(F.col("rank") <= k)
-               .select("query_id", point_id, "dist_m", "rank", "exit_m")
-               .persist())
-        round_caches.append(top)
-        _mark(f"round{_round}_prep")
-        # driver sees only the Q-row stats aggregate (ring escalation
-        # bookkeeping), never the result rows
-        stat = (top.groupBy("query_id")
-                .agg(F.count("*").alias("n"),
-                     F.max("dist_m").alias("worst"),
-                     F.first("exit_m").alias("exit_m"))).toPandas()
-        _mark(f"round{_round}_job")
-        stat["done"] = (stat["n"] >= k) & (stat["worst"] <= stat["exit_m"])
-        done_ids = set(stat[stat["done"]]["query_id"])
-        found_map = dict(zip(stat["query_id"], stat["n"]))
-        if done_ids:
-            done_df = spark.createDataFrame(
-                pd.DataFrame({"query_id": sorted(done_ids)}),
-                schema="query_id string")
-            results.append(
-                top.join(F.broadcast(done_df), "query_id", "leftsemi")
-                   .select("query_id", point_id, "dist_m", "rank"))
-        keep_mask = ~remaining["query_id"].isin(done_ids).to_numpy()
-        remaining = remaining[keep_mask]
-        rings = rings[keep_mask]
-        qlvl = qlvl[keep_mask]
-        rung_counts = rung_counts[keep_mask]
-        if remaining.empty:
-            break
-        # PRICED escalation.  Blind geometric growth (bigger ring OR
-        # one-level coarsening by k/found) both blew up at hotspot
-        # fringes: the next-coarser disk suddenly contains a whole
-        # city-center, and a 40k-query bench round streamed 10^8
-        # candidate rows (26-33 s).  Instead, jump straight to the
-        # FINEST ladder rung whose 3x3 occupancy provably holds >=
-        # margin*k points — and PRICE the move: if that rung already
-        # holds a hotspot-scale mass, the equi-join would stream
-        # rung_count candidate rows for this one query, which costs
-        # more than folding the query into the vectorized brute scan
-        # (~n_points cheap numpy ops).  found==0 rounds carry no new
-        # density information, so the ladder table (computed once) is
-        # the decision input, not the round output.
-        enough = rung_counts >= margin * k
-        has_rung = enough.any(axis=1)
-        first = np.where(has_rung, enough.argmax(axis=1),
-                         len(LADDER_RES) - 1)
-        rung_lvl = np.array(LADDER_RES)[first]
-        cand_est = rung_counts[np.arange(len(first)), first]
-        new_lvl = np.clip(np.minimum(rung_lvl, qlvl - 1), lmin, None)
-        join_cand_max = max(50 * k, n_points // 20)
-        to_brute = ((~has_rung) | (cand_est > join_cand_max)
-                    | (new_lvl >= qlvl))
-        qlvl = np.where(to_brute, qlvl, new_lvl)
-        # tail-folding: the brute pass is ONE corpus scan whose cost we
-        # can PRICE — n_points x remaining vectorized haversines.  When
-        # that total fits the budget (a few seconds of numpy on one
-        # node), another global barrier is strictly worse than the
-        # scan.  At 10^12 points the budget never fits, so escalation
-        # rounds carry the load at scale.
-        small_tail = (len(remaining) < tail_to_brute_frac * n_queries0
-                      or _brute_fits(len(remaining), n_points))
-        if small_tail:
-            to_brute[:] = True
-        brute.append(remaining[to_brute])
-        remaining = remaining[~to_brute]
-        rings = rings[~to_brute]
-        qlvl = qlvl[~to_brute]
-        rung_counts = rung_counts[~to_brute]
-
-    brute.append(remaining)
-    remaining = pd.concat(brute, ignore_index=True)
-    if trace is not None:
-        trace["n_brute_queries"] = int(len(remaining))
-    if not remaining.empty:
-        brute_df = _brute_force_knn(pts, remaining, k, point_id,
-                                    n_points, (points, point_id))
-        _mark("brute_prep")  # eager part: pts.toPandas + sc.broadcast
-        if trace is not None:
-            # trace-only barrier: split the brute scan out of the final
-            # union so the profile attributes it (production keeps ONE
-            # materialization)
-            brute_df = brute_df.localCheckpoint(eager=True)
-            _mark("brute_scan")
-        results.append(brute_df)
-
-    schema = (f"query_id string, {point_id} string, "
-              f"dist_m double, rank int")
-    if results:
-        out = results[0]
-        for r in results[1:]:
-            out = out.unionByName(r)
-        # materialize executor-side (blocks stay on executors — the
-        # driver never holds result rows), then release round caches
-        out = out.localCheckpoint(eager=True)
-    else:
+    remaining = queries.select("query_id", "lat", "lon").toPandas()
+    if remaining.empty:
         # an empty Arrow table analyzes to a JVM LocalRelation; an empty
         # pandas frame or list would take the Python-RDD path
         import pyarrow as pa
-        out = spark.createDataFrame(pa.schema([
+        return spark.createDataFrame(pa.schema([
             ("query_id", pa.string()), (point_id, pa.string()),
             ("dist_m", pa.float64()), ("rank", pa.int32())]).empty_table(),
-            schema=schema)
-    _mark("final_materialize")
-    for c in round_caches:
-        c.unpersist()
-    if pts_ml_persisted:
-        pts_ml.unpersist()
-    pts.unpersist()
+            schema=f"query_id string, {point_id} string, "
+                   f"dist_m double, rank int")
+    n_points = points.count()
+    if not _brute_fits(len(remaining), n_points):
+        return knn_join(queries, points, k, left_id="query_id",
+                        right_id=point_id, ring=initial_ring,
+                        trace=trace) \
+            .select("query_id", point_id, "dist_m", "rank")
+    import time as _time
+    _t0 = _time.perf_counter()
+    pts = points.select(F.col(point_id), F.col("lat").alias("p_lat"),
+                        F.col("lon").alias("p_lon"))
+    out = _brute_force_knn(pts, remaining, k, point_id, n_points,
+                           (points, point_id)).localCheckpoint(eager=True)
+    if trace is not None:
+        trace["ladder_skipped"] = len(remaining)
+        trace["fold"] = {"sec": round(_time.perf_counter() - _t0, 2),
+                         "rows": len(remaining)}
     return out
 
 
@@ -1317,15 +781,13 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
              levels=(24, 22, 20, 18, 16, 14, 12, 10, 8, 6, 4),
              margin: float = 4.0, ring: int = 1,
              tail_fold_frac: float = 0.01,
-             brute_fold_ops: float = 1e12,
              exclude_self: bool = False,
              trace: dict | None = None) -> DataFrame:
-    """EXACT k nearest `right` rows for EVERY `left` row — the
-    corpus-x-corpus shape knn() cannot take (its query side is a
-    driver-collected dim table; this operator's BOTH sides are
-    unbounded DataFrames, and only a left side or fold within
-    KNN_MAX_QUERIES rows is ever collected to the driver).
-    ROUTE — the same priced rule as knn() (_brute_fits): when
+    """EXACT k nearest `right` rows for EVERY `left` row — the one kNN
+    engine.  BOTH sides are unbounded DataFrames, and only a left side
+    or fold chunk within KNN_MAX_QUERIES rows is ever collected to the
+    driver; knn() is an adapter whose queries become the left side.
+    ROUTE — the priced rule _brute_fits: when
     n_left x n_right fits BRUTE_OPS_BUDGET (2e9 pair-ops, the measured
     crossover — table in the module docstring) and n_left <=
     KNN_MAX_QUERIES, the whole call is the exact tail fold below (one
@@ -1389,25 +851,17 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
          count window over the same partition would force the full
          sort WindowGroupLimit just avoided).
     Unsatisfied rows coarsen (lvl_idx + 1) and re-join next round;
-    rows that exhaust the ladder fold into an exact tail pass: when
-    fold x right distance ops fit `brute_fold_ops` the tail goes
-    straight to _brute_force_knn (BLAS-chunked, distributed, no index
-    build — the common few-thousand-row tail), else it batches
-    through knn() in KNN_MAX_QUERIES-sized hash-chunks so a
-    pathological all-sparse corpus degrades to more fold batches
-    instead of aborting.  The 1e12 crossover is deliberately high:
-    brute ops are pure DISTRIBUTABLE work (~3e8 pair evals/s/core
-    measured), while knn()'s cost is CORPUS-LINEAR PER ROUND no
-    matter how few queries remain (the point side re-explodes and
-    re-joins each round, plus its density aggregate and store
-    persist) — at the 9.6M self-join the measured fold was 60k rows,
-    and the knn() route was still running at +970 s (~3 corpus-scale
-    rounds for 0.6% of the left side) where the brute route is ~a
-    minute of cluster work (5.8e11 ops at 32 cores).  Below ~1e12
-    ops the brute side wins at any realistic core count for a corpus
-    this size; above it, chunked knn() amortizes its corpus-linear
-    rounds over >= 10^5 queries per chunk.  The ladder also stops
-    early and folds once the unsatisfied rows are at most
+    rows that exhaust the ladder fold into an exact tail pass,
+    _brute_force_knn (BLAS-chunked, distributed, no index build).  A
+    fold above KNN_MAX_QUERIES rows runs as several scans over
+    deterministic xxhash64 chunks, so a pathological all-sparse
+    corpus costs more scans instead of aborting.  Brute ops are pure
+    DISTRIBUTABLE work (~3e8 pair evals/s/core measured): at the
+    9.6M self-join the measured fold was 60k rows, ~a minute of
+    cluster work (5.8e11 ops at 32 cores), where folding through a
+    per-query ladder (corpus-linear per round) was still running at
+    +970 s.  The ladder
+    also stops early and folds once the unsatisfied rows are at most
     tail_fold_frac of the left side or their op count fits the route
     rule — another round costs fixed job floors the scan does not.
 
@@ -1419,7 +873,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
 
     exclude_self drops left_id == right_id pairs BEFORE ranking (the
     self-dedup shape), on the folded tail too."""
-    from ..functions.cellsql import cell_id_col, cell_ij_cols
+    from ..functions.cellsql import cell_ij_cols
 
     from .dedup import _persistent_rdd_ids, _unpersist_rdd_ids
 
@@ -1443,7 +897,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
 
     # entry snapshot for deterministic block release (ADVICE r5): every
     # persisted/checkpointed RDD this call creates — round tops, round
-    # remainings, the right-side key table, the fold's knn output — is
+    # remainings, the right-side key table, the fold's scan output — is
     # released by id-diff once the final result has its own blocks.
     # The Dataset API exposes no unpersist for localCheckpoint blocks
     # (they otherwise wait on driver GC), so without this a long
@@ -1516,7 +970,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # sparse rows (an extra round of job floors for ~17% of the
             # corpus), and (b) a rung-ladder probe (rung-9 neighborhood
             # counts extrapolated to fine levels under a uniform-density
-            # assumption, knn()'s driver rule) underestimates hotspot peak
+            # assumption) underestimates hotspot peak
             # density ~90x: 1.07e9 actual candidate rows at 300k where the
             # target was ~5e6, 90 GB of window-sort spill.  Exact per-level
             # windows make the start level PRICED: the chosen window really
@@ -1843,81 +1297,42 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
 
         if fold_rows is not None and run_ladder:
             # one materialization serves the size check AND every chunk's
-            # collect inside knn (the union's branches re-aggregate round
-            # tops otherwise).  On the ladder-skip path fold_rows is the
-            # raw left scan: size already known, nothing to materialize.
+            # collect (the union's branches re-aggregate round tops
+            # otherwise).  On the ladder-skip path fold_rows is the raw
+            # left scan: size already known, nothing to materialize.
             fold_rows = fold_rows.localCheckpoint(eager=False)
             n_fold = fold_rows.count()
         else:
             n_fold = n_left if fold_rows is not None else 0
         _tf0 = _time.perf_counter()
         if n_fold:
-            if (n_fold <= KNN_MAX_QUERIES
-                    and float(n_fold) * float(n_right) <= brute_fold_ops):
-                # SMALL-TAIL BRUTE (r6): the common fold is a few thousand
-                # genuinely-sparse rows, but routing them through knn()
-                # paid knn's full ladder machinery — driver presize, a
-                # morton codec build over the ENTIRE right corpus, 3
-                # candidate rounds — measured as ~32 s of SERIAL time at
-                # 600k (S+W/c fit of the 2/8/32-core legs), as much as the
-                # whole distributed round 0.  A bounded tail is exactly
-                # the shape _brute_force_knn already handles: fold x right
-                # distance ops, BLAS-chunked, distributed by queries
-                # (broadcast store) or by points (running top-k merge),
-                # nothing driver-side but the fold rows themselves.  Exact
-                # by construction, same distance kernel knn bottoms out
-                # in, so results are bit-identical to the knn fold.  The
-                # scan itself drops self pairs (no re-rank window).
-                fold_pdf = fold_rows.select(
-                    F.col(left_id).alias("query_id"),
-                    F.col("l_lat").alias("lat"),
-                    F.col("l_lon").alias("lon")).toPandas()
-                bpts = right_base.select(
-                    F.col(right_id).alias("_pid"),
-                    F.col("r_lat").alias("p_lat"),
-                    F.col("r_lon").alias("p_lon"))
-                folded = _brute_force_knn(bpts, fold_pdf, k, "_pid", n_right,
-                                          (right, right_id), exclude_self)
-                results.append(folded.select(
-                    F.col("query_id").alias(left_id),
-                    F.col("_pid").alias(right_id), "dist_m", "rank"))
-                n_chunks = 0
-            else:
-                n_chunks = max(1, -(-n_fold // int(0.9 * KNN_MAX_QUERIES)))
-        if n_fold and n_chunks:
-            # oversized tail: exact fold into the ladder kNN.  knn's
-            # query side is driver-collected and refuses more than
-            # KNN_MAX_QUERIES rows — on a pathological corpus (most of the
-            # left side genuinely sparse at every ladder level) the fold
-            # can exceed that, so batch it through knn in hash-chunks
-            # instead of inheriting the guard after all the distributed
-            # rounds already ran (VERDICT r5 wrong #1 / ADVICE r5).  The
-            # 0.9 slack absorbs hash imbalance; xxhash64 keeps chunking
+            # the fold is the exact brute scan: fold x right distance ops,
+            # BLAS-chunked, distributed by queries (broadcast store) or by
+            # points (running top-k merge), nothing driver-side but the
+            # fold rows themselves; the scan drops self pairs in-scan.
+            # It collects its queries, so a fold above KNN_MAX_QUERIES
+            # rows (most of a pathological left side sparse at every
+            # ladder level) runs as one scan per hash chunk.  The 0.9
+            # slack absorbs hash imbalance; xxhash64 keeps chunking
             # deterministic.
+            n_chunks = 1 if n_fold <= KNN_MAX_QUERIES else \
+                -(-n_fold // int(0.9 * KNN_MAX_QUERIES))
             q_all = fold_rows.select(F.col(left_id).alias("query_id"),
                                      F.col("l_lat").alias("lat"),
                                      F.col("l_lon").alias("lon"))
-            res_col = f"cell_r{KNN_RES}"
-            pts = right_base.select(
-                F.col(right_id).alias("_pid"),
-                F.col("r_lat").alias("lat"), F.col("r_lon").alias("lon"))
-            pts = pts.select("*", cell_id_col(F.col("lat"), F.col("lon"),
-                                              KNN_RES).alias(res_col))
+            bpts = right_base.select(F.col(right_id).alias("_pid"),
+                                     F.col("r_lat").alias("p_lat"),
+                                     F.col("r_lon").alias("p_lon"))
             for chunk in range(n_chunks):
                 q = q_all if n_chunks == 1 else q_all.filter(
                     F.pmod(F.xxhash64("query_id"), F.lit(n_chunks))
                     == chunk)
-                # exclude_self must hold on the folded tail too: ask knn
-                # for one extra neighbor, drop self-pairs, re-rank
-                folded = knn(pts, q, k=k + (1 if exclude_self else 0),
-                             res=KNN_RES, initial_ring=2, point_id="_pid")
-                if exclude_self:
-                    folded = folded.filter(F.col("query_id") != F.col("_pid"))
-                    wf = Window.partitionBy("query_id").orderBy(
-                        F.asc("dist_m"), F.asc("_pid"))
-                    folded = folded.withColumn(
-                        "rank", F.row_number().over(wf)) \
-                        .filter(F.col("rank") <= k)
+                fold_pdf = q.toPandas()
+                if fold_pdf.empty:
+                    continue
+                folded = _brute_force_knn(bpts, fold_pdf, k, "_pid",
+                                          n_right, (right, right_id),
+                                          exclude_self)
                 results.append(folded.select(
                     F.col("query_id").alias(left_id),
                     F.col("_pid").alias(right_id), "dist_m", "rank"))
@@ -1937,7 +1352,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             out = out.unionByName(r)
         # snapshot BEFORE the output materializes: everything registered
         # between entry and here is call-internal state (round blocks, key
-        # table, folded knn outputs) and is released once `out` has copied
+        # table, folded scan outputs) and is released once `out` has copied
         # the result rows into its own blocks; `out`'s blocks appear after
         # this snapshot and are the caller's to keep.
         _ids_internal = _persistent_rdd_ids(spark_cx) - _ids_entry
@@ -1946,11 +1361,11 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
         return out
     except BaseException:
         # exception-safe release (ADVICE r6 #3): without this, an
-        # error escaping mid-call (e.g. the knn guard on a
-        # pathological fold chunk) leaks every internal block until
-        # driver GC.  NOTE the id-diff assumes a single-threaded
-        # session: a concurrent thread's persists registered during
-        # this call would be released here too.
+        # error escaping mid-call (e.g. a failed job in a round or
+        # fold chunk) leaks every internal block until driver GC.
+        # NOTE the id-diff assumes a single-threaded session: a
+        # concurrent thread's persists registered during this call
+        # would be released here too.
         _unpersist_rdd_ids(spark_cx,
                            _persistent_rdd_ids(spark_cx) - _ids_entry)
         raise

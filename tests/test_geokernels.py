@@ -291,3 +291,52 @@ def test_stacked_raycast_matches_per_piece_or():
     big = dict(pieces_by_id)
     big["huge"] = [(np.zeros(3_000_000), np.zeros(3_000_000))]
     assert gk.build_stacked_edges(big, max_padded_edges=1 << 22) is None
+
+
+def test_stacked_raycast_bounded_memory_with_one_huge_ring():
+    """One 60k-vertex ring among 63 small ones pads every candidate row
+    to 60k edges: the stacked refine must process rows in chunks whose
+    rows x emax stays inside the table's padded-edge budget, and still
+    agree bit for bit with the per-piece raycast_contains."""
+    import tracemalloc
+
+    import numpy as np
+
+    rng = np.random.default_rng(2024)
+    pieces_by_id = {}
+    ang = np.linspace(0, 2 * np.pi, 60_000, endpoint=False)
+    pieces_by_id["huge"] = [(5.0 * np.sin(ang), 5.0 * np.cos(ang))]
+    for i in range(63):
+        a = np.linspace(0, 2 * np.pi, 8, endpoint=False)
+        pieces_by_id[f"s{i:02d}"] = [(-40.0 + i + 0.4 * np.sin(a),
+                                      -150.0 + 4.0 * i + 0.4 * np.cos(a))]
+    tables = gk.build_stacked_edges(pieces_by_id)
+    assert tables is not None and tables[1].shape == (64, 60_000)
+    slot = tables[0]
+
+    ids = sorted(pieces_by_id)
+    n = 300
+    codes = rng.integers(0, len(ids), n)
+    codes[: n // 2] = ids.index("huge")
+    cla = np.array([pieces_by_id[ids[c]][0][0].mean() for c in codes])
+    clo = np.array([pieces_by_id[ids[c]][0][1].mean() for c in codes])
+    spread = np.where(codes == ids.index("huge"), 6.0, 0.5)
+    pla = cla + rng.uniform(-1, 1, n) * spread
+    plo = clo + rng.uniform(-1, 1, n) * spread
+    slot_codes = np.array([slot[ids[c]] for c in codes])
+
+    tracemalloc.start()
+    try:
+        got = gk.raycast_contains_stacked(tables, slot_codes, pla, plo)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 200 * 2**20, peak / 2**20
+
+    want = np.zeros(n, dtype=bool)
+    for c in np.unique(codes):
+        m = codes == c
+        for rla, rlo in pieces_by_id[ids[c]]:
+            want[m] |= gk.raycast_contains(rla, rlo, pla[m], plo[m])
+    assert np.array_equal(got, want)
+    assert 0 < want.sum() < n

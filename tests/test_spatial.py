@@ -69,6 +69,26 @@ def test_point_in_polygon_dim_side_guard(spark, points, monkeypatch):
         sp.point_in_polygon(points, polys, res=sp.DEFAULT_RES)
 
 
+def test_point_in_polygon_refine_input_sized_from_plan_estimate(
+        spark, points, monkeypatch):
+    """The refine's input is coalesced to _python_stage_parts(spark,
+    est) partitions, est being the slim point view's plan-size
+    estimate.  The estimate reads a private JVM API with no fallback,
+    so a Spark upgrade that breaks it fails here, not silently."""
+    seen = []
+
+    def parts(spark_, nbytes):
+        seen.append(nbytes)
+        return 3
+
+    monkeypatch.setattr(sp, "_python_stage_parts", parts)
+    polys = synth.polygons_df(spark, 12)
+    out = sp.point_in_polygon(points, polys, res=sp.DEFAULT_RES)
+    assert len(seen) == 1 and isinstance(seen[0], int) and seen[0] > 0
+    assert points.rdd.getNumPartitions() == 8
+    assert out.rdd.getNumPartitions() == 3
+
+
 def test_knn_exact(spark, points, points_pdf):
     K = 5
     queries = synth.knn_queries_df(spark, 30, k=K)
@@ -90,11 +110,11 @@ def test_knn_exact(spark, points, points_pdf):
 
 
 def test_knn_exact_dense_corpus_all_paths(spark, monkeypatch):
-    """Exactness at a density contrast that exercises EVERY kNN path:
-    fine levels for hotspot queries, coarse levels + coarsen-retry for
-    sparse ones, ring escalation, tail folding, and the brute scan —
-    against the brute numpy oracle, for every query.  A zero brute
-    budget forces the ladder (this size is below the route crossover)."""
+    """Exactness at a density contrast that exercises the kNN ladder:
+    fine levels for hotspot queries, coarse levels + coarsening rounds
+    for sparse ones, and the brute tail fold — against the brute numpy
+    oracle, for every query.  A zero brute budget forces the ladder
+    (this size is below the route crossover)."""
     monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
     N, Q, K = 6000, 300, 7
     imgs = synth.images_df(spark, N, partitions=16)
@@ -104,7 +124,7 @@ def test_knn_exact_dense_corpus_all_paths(spark, monkeypatch):
     tr = {}
     got = sp.knn(pts, queries, k=K, res=12, initial_ring=2,
                  trace=tr).toPandas()
-    assert "round0_job" in tr, tr
+    assert "round0" in tr, tr
 
     pdf = synth.gen_images_pdf(N)
     pla, plo = ic.geotag_from_phash(pdf["phash"].to_numpy())
@@ -150,8 +170,8 @@ def test_topk_merge_boundary_ties_keep_smallest_ids():
 def test_knn_s2_reuses_preattached_fst(spark):
     """knn(family='s2') over a corpus that already carries the
     (_s2f,_s2s,_s2t) columns (with_s2_cell(keep_fst=True), the
-    ingest-time pattern) must return IDENTICAL rows to the
-    derive-internally path."""
+    ingest-time pattern) must return IDENTICAL rows to the same
+    corpus without them."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -336,10 +356,9 @@ def test_point_in_polygon_s2_family_matches(spark):
 
 
 def test_knn_s2_family_matches_equirect(spark, monkeypatch):
-    """knn on the quad-sphere ladder returns the IDENTICAL rows as the
-    equirect ladder (both are exact with the same (dist, id) tiebreak;
-    only candidate generation differs).  A zero brute budget forces
-    both ladders."""
+    """knn(family='s2') returns the IDENTICAL rows as the equirect
+    family (both are exact with the same (dist, id) tiebreak).  A zero
+    brute budget forces the ladder for both."""
     monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
     K = 5
     imgs = synth.images_df(spark, N_IMAGES, partitions=8)
@@ -353,7 +372,7 @@ def test_knn_s2_family_matches_equirect(spark, monkeypatch):
         s2 = sp.knn(geo, queries, k=K, family="s2", trace=tr_s2).toPandas()
     finally:
         geo.unpersist()
-    assert "round0_job" in tr_eq and "round0_job" in tr_s2
+    assert "round0" in tr_eq and "round0" in tr_s2
     cols = ["query_id", "rank"]
     eq = eq.sort_values(cols).reset_index(drop=True)
     s2 = s2.sort_values(cols).reset_index(drop=True)
@@ -364,8 +383,8 @@ def test_knn_s2_family_matches_equirect(spark, monkeypatch):
 
 def test_knn_s2_polar_exact(spark, monkeypatch):
     """s2-family kNN at polar latitudes vs the brute numpy oracle —
-    the regime the quad-sphere ladder exists for (equirect cells
-    degenerate toward the poles; s2 cell area stays ~uniform).  Points
+    the regime where equirect cells degenerate toward the poles, so
+    the ladder's disk-exit certificate is tested hardest.  Points
     include both pole caps, face seams, and a sparse band.  A zero
     brute budget forces the ladder."""
     import pandas as pd
@@ -405,7 +424,7 @@ def test_knn_s2_polar_exact(spark, monkeypatch):
                      point_id="point_id", family="s2", trace=tr).toPandas()
     finally:
         pts.unpersist()
-    assert "round0_job" in tr, tr
+    assert "round0" in tr, tr
     ids = pdf["point_id"].to_numpy()
     for qi in range(qn):
         d = gk.haversine_m(qlat[qi], qlon[qi], lat, lon)
@@ -597,7 +616,7 @@ def test_point_in_polygon_bucketed_equals_dim_path(spark, points, points_pdf):
 def test_knn_join_exact_vs_brute(spark, monkeypatch):
     """Distributed corpus-x-corpus kNN join: exact (dist, id) top-k for
     every left row vs the numpy brute oracle, on a mixed hotspot +
-    sparse layout that forces ladder escalation AND the knn() tail
+    sparse layout that forces ladder escalation AND the brute tail
     fold; plus the exclude_self self-dedup shape."""
     import pandas as _pd
     rng = np.random.default_rng(11)
@@ -757,11 +776,11 @@ def test_knn_join_exact_polar(spark, monkeypatch):
 
 
 def test_knn_join_fold_tail_chunks_past_knn_guard(spark, monkeypatch):
-    """A ladder-exhausted fold LARGER than knn's query-side ceiling must
-    complete (in hash-chunked knn batches), not inherit the guard's
-    ValueError after every distributed round already ran (VERDICT r5
-    wrong #1 / ADVICE r5).  Single-rung ladder + globally sparse points
-    forces every left row through the fold."""
+    """A ladder-exhausted fold LARGER than KNN_MAX_QUERIES (the most
+    query rows one brute scan collects) must complete as several
+    hash-chunked brute scans, after every distributed round already
+    ran.  Single-rung ladder + globally sparse points forces every
+    left row through the fold."""
     import pandas as _pd
     rng = np.random.default_rng(33)
     NR, NL, K = 120, 60, 2
@@ -839,12 +858,11 @@ def test_disk_exit_bound_col_matches_numpy(spark):
         assert (np.isinf(g) == np.isinf(want)).all(), (level, ring)
 
 
-def test_knn_join_brute_fold_equals_knn_fold(spark, monkeypatch):
-    """The r6 brute sparse-tail short-circuit (_brute_force_knn when
-    fold x right ops fit brute_fold_ops) must be result-identical to
-    the chunked knn() fold it replaces — same distance kernel, same
-    (dist, id) tiebreak — including exclude_self, which the brute scan
-    applies in-scan and the knn() fold by a re-rank window."""
+def test_knn_join_chunked_fold_equals_unchunked(spark, monkeypatch):
+    """The ladder's fold is the brute scan, run in xxhash64 chunks once
+    it exceeds KNN_MAX_QUERIES rows: the chunked fold must return the
+    same rows as the one-scan fold and the numpy oracle, including
+    exclude_self, which the scan applies in-scan."""
     import pandas as _pd
     rng = np.random.default_rng(57)
     NR, NL, K = 150, 70, 3
@@ -853,16 +871,18 @@ def test_knn_join_brute_fold_equals_knn_fold(spark, monkeypatch):
     rlat = rng.uniform(-60, 60, NR)
     rlon = rng.uniform(-170, 170, NR)
     rids = np.array([f"r{i:05d}" for i in range(NR)])
+    llat = rng.uniform(-60, 60, NL)
+    llon = rng.uniform(-170, 170, NL)
+    lids = np.array([f"l{i:05d}" for i in range(NL)])
     right = spark.createDataFrame(_pd.DataFrame(
         {"right_id": rids, "lat": rlat, "lon": rlon}))
     left = spark.createDataFrame(_pd.DataFrame(
-        {"left_id": np.array([f"l{i:05d}" for i in range(NL)]),
-         "lat": rng.uniform(-60, 60, NL),
-         "lon": rng.uniform(-170, 170, NL)}))
+        {"left_id": lids, "lat": llat, "lon": llon}))
 
     monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
 
-    def run(lhs=left, **kw):
+    def run(lhs, max_queries, **kw):
+        monkeypatch.setattr(sp, "KNN_MAX_QUERIES", max_queries)
         tr = {}
         out = sp.knn_join(lhs, right, k=K, levels=(16,), trace=tr,
                           **kw).toPandas()
@@ -870,19 +890,28 @@ def test_knn_join_brute_fold_equals_knn_fold(spark, monkeypatch):
         assert "probe" in tr and "ladder_skipped" not in tr, tr
         return out.sort_values(["left_id", "rank"]).reset_index(drop=True)
 
-    brute = run()                      # default brute_fold_ops -> brute
-    chunk = run(brute_fold_ops=0.0)    # force the knn() chunked fold
-    assert brute[["left_id", "right_id", "rank"]].equals(
-        chunk[["left_id", "right_id", "rank"]])
-    assert np.allclose(brute["dist_m"], chunk["dist_m"], rtol=1e-9)
+    def oracle(qla, qlo, qids, exclude_self):
+        rows = []
+        for la, lo, qid in zip(qla, qlo, qids):
+            d = gk.haversine_m(la, lo, rlat, rlon)
+            keep = rids != qid if exclude_self else np.ones(NR, bool)
+            order = np.lexsort((rids[keep], d[keep]))[:K]
+            rows += [(qid, r, i + 1)
+                     for i, r in enumerate(rids[keep][order])]
+        return _pd.DataFrame(rows, columns=["left_id", "right_id", "rank"])
 
-    # exclude_self: the self-join shape through both fold paths
     sl = right.selectExpr("right_id as left_id", "lat", "lon")
-    b2 = run(sl, exclude_self=True)
-    c2 = run(sl, exclude_self=True, brute_fold_ops=0.0)
-    assert (b2["left_id"] != b2["right_id"]).all()
-    assert b2[["left_id", "right_id", "rank"]].equals(
-        c2[["left_id", "right_id", "rank"]])
+    for lhs, qla, qlo, qids, excl in ((left, llat, llon, lids, False),
+                                      (sl, rlat, rlon, rids, True)):
+        one = run(lhs, 1_000_000, exclude_self=excl)
+        chunked = run(lhs, 16, exclude_self=excl)   # 5+ fold chunks
+        cols = ["left_id", "right_id", "rank"]
+        assert chunked[cols].equals(one[cols])
+        assert np.allclose(chunked["dist_m"], one["dist_m"], rtol=1e-9)
+        want = oracle(qla, qlo, qids, excl)
+        assert one[cols].astype({"rank": "int64"}).equals(want), excl
+        if excl:
+            assert (one["left_id"] != one["right_id"]).all()
 
 
 def test_knn_join_releases_internal_blocks(spark, monkeypatch):
@@ -958,7 +987,7 @@ def test_knn_routes_brute_below_budget(spark, monkeypatch):
         monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)
         lj, lq = {}, {}
         j_lad, _, q_lad, _ = both(lj, lq)
-        assert "round0" in lj and "round0_job" in lq
+        assert "round0" in lj and "round0" in lq
     finally:
         geo.unpersist()
     for got, want, key in ((j, j_lad, ["left_id", "rank"]),
@@ -975,7 +1004,8 @@ def test_knn_join_ladder_when_left_exceeds_knn_max_queries(spark,
                                                             monkeypatch):
     """The brute route collects the left side to the driver, so a left
     side above KNN_MAX_QUERIES takes the distributed ladder even when
-    its pair-op count is tiny — and stays exact."""
+    its pair-op count is tiny — and stays exact.  The same holds for a
+    knn() query side: it runs the ladder instead of being refused."""
     import pandas as _pd
     rng = np.random.default_rng(5)
     NR, NL, K = 40, 200, 3
@@ -998,6 +1028,18 @@ def test_knn_join_ladder_when_left_exceeds_knn_max_queries(spark,
         sub = got[got["left_id"] == lids[li]].sort_values("rank")
         assert sub["right_id"].tolist() == rids[order].tolist(), lids[li]
         assert np.allclose(sub["dist_m"].to_numpy(), d[order], rtol=1e-9)
+
+    points = right.withColumnRenamed("right_id", "point_id")
+    queries = left.withColumnRenamed("left_id", "query_id")
+    tr = {}
+    nn = sp.knn(points, queries, k=K, point_id="point_id",
+                trace=tr).toPandas()
+    assert "ladder_skipped" not in tr and "round0" in tr, tr
+    nn = nn.sort_values(["query_id", "rank"]).reset_index(drop=True)
+    want = got.sort_values(["left_id", "rank"]).reset_index(drop=True)
+    assert nn["query_id"].tolist() == want["left_id"].tolist()
+    assert nn["point_id"].tolist() == want["right_id"].tolist()
+    assert nn["rank"].tolist() == want["rank"].tolist()
 
 
 def test_brute_store_keeps_one_broadcast(spark, monkeypatch):
