@@ -45,7 +45,7 @@ def timed(spark, name, fn, reps=2):
 
 def profile_tile(spark):
     from pbf2json_spark.operators.spatial import (
-        _list_parquet_files, _open_parquet, tile_assignment_direct)
+        _list_parquet_files, tile_assignment_direct)
     from pbf2json_spark.functions import imagecodec as ic
     from pbf2json_spark.functions import cellindex as cx
 
@@ -56,9 +56,10 @@ def profile_tile(spark):
 
     def mk(phase):
         def gen(batches):
+            import pyarrow.parquet as pq
             for pdf in batches:
                 for path in pdf["path"]:
-                    pf = _open_parquet(path)
+                    pf = pq.ParquetFile(path)
                     for rb in pf.iter_batches(
                             columns=["image_id", "bytes", "phash"],
                             batch_size=4096):

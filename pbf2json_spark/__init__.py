@@ -78,16 +78,13 @@ class Engine:
         return attach_geo(images, res_list, s2_levels=s2_levels)
 
     def point_in_polygon(self, points, polygons, res=9, point_id="image_id",
-                         family="equirect", bucketed=False):
-        """PIP hits; family='s2' uses quad-sphere coverings, and
-        bucketed=True routes to the fully-distributed variant for
-        polygon sides too large to broadcast (the path the dim-side
-        guard's error message points at)."""
-        from .operators.spatial import (point_in_polygon,
-                                        point_in_polygon_bucketed)
-        op = point_in_polygon_bucketed if bucketed else point_in_polygon
-        return op(points, polygons, res=res, point_id=point_id,
-                  family=family)
+                         family="equirect"):
+        """PIP hits; family='s2' uses quad-sphere coverings.  The
+        polygon side's vertex count picks the broadcast or the shuffle
+        plan."""
+        from .operators.spatial import point_in_polygon
+        return point_in_polygon(points, polygons, res=res,
+                                point_id=point_id, family=family)
 
     def knn(self, points, queries, k, point_id="image_id", **kw):
         """Exact top-k per query: one brute scan below the pair-op

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.session import plan_bytes
+
 # MinHash constants — shared verbatim with the SQL oracle
 MINHASH_PRIME = 1073741789          # ~2^30, keeps a*h+b < 2^63
 MINHASH_K = 16
@@ -239,6 +241,8 @@ def minhash_lsh_pairs(docs: DataFrame, tau: float = 0.5) -> DataFrame:
     ~1/3 of the operator's wall).  The returned pair set is eagerly
     materialized and both caches unpersisted (no cache entries
     outlive the call)."""
+    # read before anything is persisted: plan_bytes has no fallback
+    est = plan_bytes(docs)
     keyed = docs.select(F.md5("text").alias("tkey"), "doc_id")
     reps = keyed.groupBy("tkey").agg(F.min("doc_id").alias("rep_id"))
     mem = keyed.join(reps, "tkey").select("rep_id", "doc_id").persist()
@@ -261,12 +265,7 @@ def minhash_lsh_pairs(docs: DataFrame, tau: float = 0.5) -> DataFrame:
     # (measured at the sf0.1 gate: widening ADDED ~0.5 s), so tiny
     # corpora skip the widening — any real corpus clears 2 MB.
     par = docs.sparkSession.sparkContext.defaultParallelism
-    try:
-        est = int(docs._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:
-        est = None
-    if est is None or est >= (2 << 20):
+    if est >= (2 << 20):
         try:
             n_splits = (len(docs.inputFiles())
                         or docs.rdd.getNumPartitions())

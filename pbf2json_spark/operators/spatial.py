@@ -7,14 +7,19 @@ Design per operator (all range-like joins reduced to cell equi joins):
 - attach_geo: derive (lat, lon) from phash (the documented pure function
   — the base table keeps exactly the hinted shape) + cell ids at chosen
   resolutions, one vectorized Arrow pass, no shuffle.
-- point_in_polygon: polygons are a small dim side -> compute each
-  polygon's covering cells driver-side (vectorized numpy) and BROADCAST
-  the (cell -> poly) table; points equi-join on their cell id; exact
+- point_in_polygon: ONE operator, two plans picked by the polygon
+  side's exact vertex count.  A dim-sized side has its covering cells
+  computed driver-side (vectorized numpy) and BROADCAST as a
+  (cell -> poly) table; points equi-join on their cell id; exact
   ray-cast refine is a shuffle-free mapInPandas that follows the
   candidate partitioning, so one city-center polygon cannot pin a
-  single task.  Explicit hot-key salting lives in plans/salting.py and
-  applies where a SHUFFLE hash join exists (the denormalize node
-  join); this join is broadcast, so salting has nothing to split here.
+  single task.  A side above PIP_MAX_DIM_VERTICES runs the shuffle
+  plan (point_in_polygon_bucketed: executor-side coverings, cell
+  shuffle join, rings joined back by poly_id).  Both plans share the
+  ring split, the covering and the stacked-edge refine kernel.
+  Explicit hot-key salting lives in plans/salting.py and applies where
+  a SHUFFLE hash join exists (the denormalize node join); AQE's skew
+  join splitting covers the PIP shuffle plan.
 - knn / knn_join: ONE priced route rule (_brute_fits).  A call whose
   n_queries x n_points fits BRUTE_OPS_BUDGET (2e9 pair-ops) is one
   vectorized brute scan, with no ladder job at all.  Measured on a
@@ -51,12 +56,14 @@ from pyspark.sql import types as T
 from ..functions import cellindex as cx
 from ..functions import geokernels as gk
 from ..functions import imagecodec as ic
+from ..plans.session import plan_bytes
 
 DEFAULT_RES = 9
 KNN_RES = 12
 
-# hard bound on the PIP dim-side geometry (vertices) — beyond this the
-# collected rings stop being a broadcastable dim table
+# PIP dim-side geometry bound (vertices): beyond this the collected
+# rings stop being a broadcastable dim table and point_in_polygon runs
+# its shuffle plan
 PIP_MAX_DIM_VERTICES = 5_000_000
 # session-scoped polygon-covering memo (FIFO-bounded): an interactive
 # caller re-querying the same dim polygons pays the driver-side numpy
@@ -134,14 +141,89 @@ def attach_geo(images: DataFrame, res_list=(DEFAULT_RES,),
 # point-in-polygon
 # ---------------------------------------------------------------------------
 
+def _ring_pieces(ring_lats, ring_lons) -> list:
+    """Canonical plane pieces of one ring: the ring itself, or its
+    geokernels.split_antimeridian pieces when it wraps +-180 (e.g. a
+    Fiji polygon).  So the operator's contract is "any simple ring,
+    edges short-way in longitude" while the low-level coverings keep
+    their loud canonical-only precondition."""
+    rla = np.asarray(ring_lats, dtype=np.float64)
+    rlo = np.asarray(ring_lons, dtype=np.float64)
+    if gk.ring_is_canonical(rla, rlo):
+        return [(rla, rlo)]
+    return gk.split_antimeridian(rla, rlo)
+
+
+def _cover_cells(pieces, family: str, res: int, cache=None) -> set:
+    """Covering cells of one polygon's pieces, set-deduped: cells
+    straddling the +-180 cut are covered by both pieces, and a duplicate
+    (cell, poly_id) row would double-emit candidates and duplicate
+    refine output rows.  `cache` memoizes per piece (the driver's
+    _COVER_CACHE; executors pass none)."""
+    cover_fn = cx.cover_polygon if family == "equirect" \
+        else cx.s2_cover_polygon
+    cells = set()
+    for pla, plo in pieces:
+        key = (family, res, pla.tobytes(), plo.tobytes())
+        cov = None if cache is None else cache.get(key)
+        if cov is None:
+            cov = cover_fn(pla, plo, res).tolist()
+            if cache is not None:
+                if len(cache) >= _COVER_CACHE_MAX:
+                    cache.pop(next(iter(cache)))
+                cache[key] = cov
+        cells.update(cov)
+    return cells
+
+
+def _refine_candidates(pdf: pd.DataFrame, pieces_by_id: dict, tables,
+                       point_id: str) -> pd.DataFrame:
+    """The exact ray-cast refine of one Arrow batch of (poly_id,
+    point_id, lat, lon) candidates, shared by both PIP plans: one
+    vectorized parity pass over `tables` (gk.build_stacked_edges of
+    `pieces_by_id`), or — when the padded table would blow up memory and
+    came back None — the per-polygon loop, OR-ing the per-piece
+    ray-casts."""
+    lats = pdf["lat"].to_numpy()
+    lons = pdf["lon"].to_numpy()
+    if tables is not None:
+        codes = pdf["poly_id"].map(tables[0]).to_numpy(np.int64)
+        keep = gk.raycast_contains_stacked(tables, codes, lats, lons)
+    else:
+        keep = np.zeros(len(pdf), dtype=bool)
+        codes, uniq = pd.factorize(pdf["poly_id"])
+        for gi, pid in enumerate(uniq):
+            idx = np.nonzero(codes == gi)[0]
+            hit = np.zeros(len(idx), dtype=bool)
+            for rla, rlo in pieces_by_id[pid]:
+                hit |= gk.raycast_contains(rla, rlo, lats[idx], lons[idx])
+            keep[idx] = hit
+    return pdf.loc[keep, ["poly_id", point_id, "lat", "lon"]]
+
+
+def _pip_cell_col(family: str, res: int) -> str:
+    if family not in ("equirect", "s2"):
+        raise ValueError(f"unknown cell family {family!r}")
+    return f"cell_r{res}" if family == "equirect" else f"s2_l{res}"
+
+
+def _pip_schema(points: DataFrame, point_id: str) -> T.StructType:
+    return T.StructType([
+        T.StructField("poly_id", T.StringType()),
+        T.StructField(point_id, points.schema[point_id].dataType),
+        T.StructField("lat", T.DoubleType()),
+        T.StructField("lon", T.DoubleType()),
+    ])
+
+
 def point_in_polygon(points: DataFrame, polygons: DataFrame,
                      res: int = DEFAULT_RES,
                      point_id: str = "image_id",
                      family: str = "equirect") -> DataFrame:
     """(poly_id, <point_id>, lat, lon) for every point inside a polygon.
 
-    points must carry (point_id, lat, lon, cell_r{res}); polygons is the
-    small dim table (poly_id, ring_lats, ring_lons, ...).
+    points must carry (point_id, lat, lon, cell_r{res}); polygons is
+    (poly_id, ring_lats, ring_lons, ...).
 
     Rings may wrap the antimeridian (r5): a ring whose lons flip sign
     across +-180 (each edge taking the short way in longitude) is split
@@ -161,68 +243,36 @@ def point_in_polygon(points: DataFrame, polygons: DataFrame,
     exact ray-cast refine is identical, so results match the equirect
     family row-for-row (pinned in tests).
 
-    Plan shape: the polygon coverings are a broadcast (cell -> poly_id)
-    table; the candidate join is a cell-equi BroadcastHashJoin; the exact
-    ray-cast refine is a SHUFFLE-FREE mapInPandas over the join output —
-    inside each Arrow batch candidates are grouped by polygon and ray-cast
-    vectorized.  Skewed hot cells are AQE's problem at the join, and the
-    refine parallelism follows the candidate partitioning, so a hot
-    polygon never pins a single task.
-
-    The polygon side must be a dim table: its geometry is collected and
-    sc.broadcast to the refine workers (shipped once per executor, not
-    per task); a hard vertex-count guard refuses inputs that would turn
-    that broadcast into a driver/executor memory bomb."""
-    # one driver job: the vertex guard counts from the same collected
+    Plan choice: the polygon side is collected once and its exact
+    vertex count picks the plan.  Up to PIP_MAX_DIM_VERTICES it is a
+    dim table: the polygon coverings are a broadcast (cell -> poly_id)
+    table, the candidate join is a cell-equi BroadcastHashJoin, and the
+    ring geometry is sc.broadcast to the refine workers (shipped once
+    per executor, not per task).  The exact ray-cast refine is a
+    SHUFFLE-FREE mapInPandas over the join output, one stacked-edge
+    parity pass per Arrow batch; the refine parallelism follows the
+    candidate partitioning, so a hot polygon never pins a single task.
+    Above the bound the broadcast would be a driver/executor memory
+    bomb, so the call runs point_in_polygon_bucketed's shuffle plan.
+    The count needs the collect, so a side too large even to collect
+    once should call point_in_polygon_bucketed directly."""
+    cell_col = _pip_cell_col(family, res)
+    # one driver job: the vertex count comes from the same collected
     # frame the covering pass needs anyway (a separate sum(size())
     # aggregate was a whole extra scan before the real query — the
     # round-2 headline regression on pip)
     polys = polygons.select("poly_id", "ring_lats", "ring_lons").toPandas()
     n_vertices = int(polys["ring_lats"].map(len).sum()) if len(polys) else 0
     if n_vertices > PIP_MAX_DIM_VERTICES:
-        raise ValueError(
-            f"point_in_polygon: polygon side has {n_vertices} vertices "
-            f"(> {PIP_MAX_DIM_VERTICES}); it is not a broadcastable dim "
-            f"table — use point_in_polygon_bucketed (distributed "
-            f"coverings + shuffle cell join), or split the polygon set")
+        return point_in_polygon_bucketed(points, polygons, res=res,
+                                         point_id=point_id, family=family)
 
-    if family not in ("equirect", "s2"):
-        raise ValueError(f"unknown cell family {family!r}")
-    cover_fn = cx.cover_polygon if family == "equirect" \
-        else cx.s2_cover_polygon
-    cell_col = f"cell_r{res}" if family == "equirect" else f"s2_l{res}"
-
-    # covering cells per polygon, vectorized numpy, broadcast to executors.
-    # Antimeridian-wrapped rings (lons flipping sign across +-180, e.g. a
-    # Fiji polygon) are split into canonical plane pieces here — coverings
-    # union over the pieces, the refine ORs the per-piece ray-casts — so
-    # the operator's contract is "any simple ring, edges short-way in
-    # longitude" while the low-level coverings keep their loud
-    # canonical-only precondition (geokernels.split_antimeridian).
     cover_rows = []
     rings = {}
     for p in polys.itertuples():
-        rla = np.asarray(p.ring_lats, dtype=np.float64)
-        rlo = np.asarray(p.ring_lons, dtype=np.float64)
-        if gk.ring_is_canonical(rla, rlo):
-            pieces = [(rla, rlo)]
-        else:
-            pieces = gk.split_antimeridian(rla, rlo)
+        pieces = _ring_pieces(p.ring_lats, p.ring_lons)
         rings[p.poly_id] = pieces
-        # set-dedup: cells straddling the +-180 cut are covered by both
-        # pieces; a duplicate (cell, poly_id) row would double-emit
-        # candidates and duplicate refine output rows
-        cells = set()
-        for pla, plo in pieces:
-            key = (family, res, pla.tobytes(), plo.tobytes())
-            cov = _COVER_CACHE.get(key)
-            if cov is None:
-                cov = cover_fn(pla, plo, res).tolist()
-                if len(_COVER_CACHE) >= _COVER_CACHE_MAX:
-                    _COVER_CACHE.pop(next(iter(_COVER_CACHE)))
-                _COVER_CACHE[key] = cov
-            cells.update(cov)
-        for c in cells:
+        for c in _cover_cells(pieces, family, res, _COVER_CACHE):
             cover_rows.append((c, p.poly_id))
     spark = points.sparkSession
     cover = spark.createDataFrame(
@@ -237,98 +287,55 @@ def point_in_polygon(points: DataFrame, polygons: DataFrame,
     # right-size the refine's Arrow stage from the slim point view's
     # estimated bytes (not the byte-heavy parent's partitioning — a slim
     # projection inherits it: 70 KB partitions at a 300k-point geo view);
-    # coalesce only reduces, so a corpus-scale input is untouched.  The
-    # estimate reads a private JVM API: if a Spark upgrade breaks it,
-    # this fails loudly rather than silently skipping the right-sizing
-    est = int(pts_slim._jdf.queryExecution().optimizedPlan()
-              .stats().sizeInBytes())
-    pts_slim = pts_slim.coalesce(_python_stage_parts(spark, est))
+    # coalesce only reduces, so a corpus-scale input is untouched
+    pts_slim = pts_slim.coalesce(
+        _python_stage_parts(spark, plan_bytes(pts_slim)))
     cand = pts_slim.join(F.broadcast(cover), "cell").drop("cell")
-
-    out_schema = T.StructType([
-        T.StructField("poly_id", T.StringType()),
-        T.StructField(point_id, points.schema[point_id].dataType),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-    ])
 
     def refine(batches):
         ring_map = rings_bc.value
         # one stacked-edge table per task (r7): the per-batch
         # per-polygon loop paid ~20 numpy calls per (batch, polygon)
         # group — with 64 dim polygons over a couple hundred cached
-        # partitions that call overhead dominated the exact math.  One
-        # vectorized parity pass replaces the group loop; the padded
-        # table falls back to the loop on pathological vertex mixes.
+        # partitions that call overhead dominated the exact math
         tables = gk.build_stacked_edges(ring_map)
         for pdf in batches:
-            if pdf.empty:
-                continue
-            lats = pdf["lat"].to_numpy()
-            lons = pdf["lon"].to_numpy()
-            if tables is not None:
-                codes = pdf["poly_id"].map(tables[0]).to_numpy(np.int64)
-                keep = gk.raycast_contains_stacked(tables, codes,
-                                                   lats, lons)
-            else:
-                keep = np.zeros(len(pdf), dtype=bool)
-                codes, uniq = pd.factorize(pdf["poly_id"])
-                for gi, pid in enumerate(uniq):
-                    idx = np.nonzero(codes == gi)[0]
-                    hit = np.zeros(len(idx), dtype=bool)
-                    for rla, rlo in ring_map[pid]:
-                        hit |= gk.raycast_contains(rla, rlo,
-                                                   lats[idx], lons[idx])
-                    keep[idx] = hit
-            out = pdf.loc[keep, ["poly_id", point_id, "lat", "lon"]]
-            yield out
+            if not pdf.empty:
+                yield _refine_candidates(pdf, ring_map, tables, point_id)
 
-    return cand.mapInPandas(refine, out_schema)
+    return cand.mapInPandas(refine, _pip_schema(points, point_id))
 
 
 def point_in_polygon_bucketed(points: DataFrame, polygons: DataFrame,
                               res: int = DEFAULT_RES,
                               point_id: str = "image_id",
                               family: str = "equirect") -> DataFrame:
-    """point_in_polygon for polygon sides TOO LARGE to broadcast — the
-    path the dim-side guard's error message points at.  Same output,
-    fully distributed:
+    """point_in_polygon's shuffle plan, the one it runs when the polygon
+    side exceeds PIP_MAX_DIM_VERTICES.  Same output, fully distributed:
 
     - coverings are computed executor-side (one mapInPandas over the
-      polygon table; wrapped rings split exactly like the dim path),
-      emitting the (cell, poly_id) pair table — no driver collect, no
-      vertex ceiling;
+      polygon table, the same ring split and covering helpers as the
+      broadcast plan), emitting the (cell, poly_id) pair table — no
+      driver collect, no vertex ceiling;
     - candidates come from a SHUFFLE hash join on the cell key (AQE
       handles hot-cell skew; both sides are partitioned by cell, the
       distributed-geo equi-join shape);
-    - the exact ray-cast refine joins each candidate BATCH back to its
-      ring geometry by poly_id and vectorizes per polygon group within
-      the Arrow batch.
+    - each candidate joins back to its ring geometry by poly_id, and
+      the refine builds one stacked-edge table per Arrow batch from the
+      rings its candidates carry — the broadcast plan's kernel.
 
-    Cost model vs the dim path: ring coordinates travel once per
+    Cost model vs the broadcast plan: ring coordinates travel once per
     (polygon, candidate-batch-partition) through the poly_id join
     instead of once per executor via broadcast — the standard
-    amplification of non-broadcast spatial joins.  Prefer the dim path
-    whenever the polygon side fits PIP_MAX_DIM_VERTICES; this one
-    exists so a 10^7-polygon workload runs instead of being refused."""
-    if family not in ("equirect", "s2"):
-        raise ValueError(f"unknown cell family {family!r}")
-    cover_fn = cx.cover_polygon if family == "equirect" \
-        else cx.s2_cover_polygon
-    cell_col = f"cell_r{res}" if family == "equirect" else f"s2_l{res}"
-
+    amplification of non-broadcast spatial joins."""
+    cell_col = _pip_cell_col(family, res)
     poly_geo = polygons.select("poly_id", "ring_lats", "ring_lons")
 
     def gen_cover(batches):
         for pdf in batches:
             for p in pdf.itertuples():
-                rla = np.asarray(p.ring_lats, dtype=np.float64)
-                rlo = np.asarray(p.ring_lons, dtype=np.float64)
-                pieces = [(rla, rlo)] if gk.ring_is_canonical(rla, rlo) \
-                    else gk.split_antimeridian(rla, rlo)
-                cells = set()
-                for pla, plo in pieces:
-                    cells.update(cover_fn(pla, plo, res).tolist())
+                cells = _cover_cells(_ring_pieces(p.ring_lats, p.ring_lons),
+                                     family, res)
                 if cells:
                     yield pd.DataFrame({
                         "cell": np.fromiter(cells, dtype=np.int64,
@@ -344,35 +351,18 @@ def point_in_polygon_bucketed(points: DataFrame, polygons: DataFrame,
 
     withrings = cand.join(poly_geo, "poly_id")
 
-    out_schema = T.StructType([
-        T.StructField("poly_id", T.StringType()),
-        T.StructField(point_id, points.schema[point_id].dataType),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-    ])
-
     def refine(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            lats = pdf["lat"].to_numpy()
-            lons = pdf["lon"].to_numpy()
-            keep = np.zeros(len(pdf), dtype=bool)
-            codes, uniq = pd.factorize(pdf["poly_id"])
-            for gi, pid in enumerate(uniq):
-                idx = np.nonzero(codes == gi)[0]
-                r0 = idx[0]
-                rla = np.asarray(pdf["ring_lats"].iat[r0], dtype=np.float64)
-                rlo = np.asarray(pdf["ring_lons"].iat[r0], dtype=np.float64)
-                pieces = [(rla, rlo)] if gk.ring_is_canonical(rla, rlo) \
-                    else gk.split_antimeridian(rla, rlo)
-                hit = np.zeros(len(idx), dtype=bool)
-                for pla, plo in pieces:
-                    hit |= gk.raycast_contains(pla, plo, lats[idx], lons[idx])
-                keep[idx] = hit
-            yield pdf.loc[keep, ["poly_id", point_id, "lat", "lon"]]
+            first = pdf.drop_duplicates("poly_id")
+            pieces_by_id = {
+                p.poly_id: _ring_pieces(p.ring_lats, p.ring_lons)
+                for p in first.itertuples()}
+            tables = gk.build_stacked_edges(pieces_by_id)
+            yield _refine_candidates(pdf, pieces_by_id, tables, point_id)
 
-    return withrings.mapInPandas(refine, out_schema)
+    return withrings.mapInPandas(refine, _pip_schema(points, point_id))
 
 
 # ---------------------------------------------------------------------------
@@ -1465,12 +1455,6 @@ def _list_parquet_files(parquet_path: str) -> list:
     return sorted((scheme + i.path, i.size) for i in infos
                   if i.type == pafs.FileType.File
                   and i.path.endswith(".parquet"))
-
-
-def _open_parquet(path: str):
-    import pyarrow.parquet as pq
-    fs, p = _fs_and_path(path)
-    return pq.ParquetFile(fs.open_input_file(p))
 
 
 def _read_parquet_table(path: str, columns: list):

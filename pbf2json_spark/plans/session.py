@@ -137,6 +137,15 @@ def build_session(app_name: str = "pbf2json-spark",
     return spark
 
 
+def plan_bytes(df) -> int:
+    """Catalyst's size estimate of `df`'s optimized plan, in bytes.  It
+    reads a private JVM API (`_jdf.queryExecution()`) with no fallback:
+    if a Spark upgrade breaks it, callers fail loudly instead of
+    silently skipping the work the estimate sizes."""
+    return int(df._jdf.queryExecution().optimizedPlan()
+               .stats().sizeInBytes())
+
+
 def warm_python_workers(spark: SparkSession, parallelism: int | None = None) -> None:
     """Pre-fork the Python UDF worker pool.
 

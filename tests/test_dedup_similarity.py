@@ -57,6 +57,19 @@ def test_minhash_lsh_finds_near_dups(spark, docs_df):
     assert (2, 3) not in pairs
 
 
+def test_minhash_lsh_plan_estimate_failure_raises(spark, docs_df,
+                                                  monkeypatch):
+    """The corpus-widening decision reads the plan-size estimate
+    through a private JVM API; if that read breaks, the operator must
+    fail loudly instead of silently skipping the widening."""
+    def broken(df):
+        raise RuntimeError("optimizedPlan stats unavailable")
+
+    monkeypatch.setattr(dedup, "plan_bytes", broken)
+    with pytest.raises(RuntimeError, match="optimizedPlan"):
+        dedup.minhash_lsh_pairs(docs_df, tau=0.5)
+
+
 def _py_simhash(text):
     """Pure-python twin of simhash_signatures (md5-prefix token hash,
     60-bit sign-of-votes)."""

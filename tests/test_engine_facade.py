@@ -65,18 +65,21 @@ def test_engine_attach_s2_once_serves_many_consumers(spark):
 
 
 def test_engine_pip_family_and_bucketed_parity(spark):
-    """Engine.point_in_polygon exposes family= and bucketed= and
-    Engine.attach_geo passes s2_levels through (VERDICT r5 facade-parity
-    item): all four PIP routes agree on the hit set."""
+    """Engine.point_in_polygon exposes family= and Engine.attach_geo
+    passes s2_levels through (VERDICT r5 facade-parity item): both
+    families through the facade and both through the shuffle plan
+    (point_in_polygon_bucketed) agree on the hit set."""
+    from pbf2json_spark.operators import spatial as sp
     eng = Engine(spark)
     imgs = synth.images_df(spark, 200, partitions=2)
     geo = eng.attach_geo(imgs, res_list=(9,), s2_levels=(9,))
     assert "s2_l9" in geo.columns
     polys = synth.polygons_df(spark, 5)
-    base = set(map(tuple, eng.point_in_polygon(geo, polys, res=9)
-                   .select("poly_id", "image_id").collect()))
-    for kw in ({"bucketed": True}, {"family": "s2"},
-               {"family": "s2", "bucketed": True}):
-        got = set(map(tuple, eng.point_in_polygon(geo, polys, res=9, **kw)
-                      .select("poly_id", "image_id").collect()))
-        assert got == base, kw
+    hits = lambda df: set(map(tuple, df.select("poly_id", "image_id")
+                              .collect()))
+    base = hits(eng.point_in_polygon(geo, polys, res=9))
+    assert hits(eng.point_in_polygon(geo, polys, res=9,
+                                     family="s2")) == base
+    for family in ("equirect", "s2"):
+        assert hits(sp.point_in_polygon_bucketed(
+            geo, polys, res=9, family=family)) == base, family

@@ -59,14 +59,74 @@ def test_point_in_polygon_exact(spark, points, points_pdf):
     assert len(want_pairs) > 50, "fixture should put many points in hotspot polygons"
 
 
-def test_point_in_polygon_dim_side_guard(spark, points, monkeypatch):
-    """A polygon side too big to broadcast must be refused loudly, not
-    silently collected into a driver/task memory bomb."""
-    import pytest as _pytest
-    polys = synth.polygons_df(spark, 12)
+def test_point_in_polygon_routes_large_side_to_shuffle_plan(
+        spark, points, monkeypatch):
+    """A polygon side above PIP_MAX_DIM_VERTICES is not refused and not
+    broadcast: point_in_polygon runs its shuffle plan
+    (point_in_polygon_bucketed) and returns exactly the broadcast
+    plan's rows — both families, wrapped ring included, no duplicate
+    rows."""
+    from pbf2json_spark.functions.cellsql import with_s2_cell
+    rla, rlo = _wrapped_pentagon()
+    polys = synth.polygons_df(spark, 8).unionByName(
+        spark.createDataFrame(
+            [("wrapped", rla.tolist(), rlo.tolist(), {})],
+            schema="poly_id string, ring_lats array<double>, "
+                   "ring_lons array<double>, tags map<string,string>"))
+    pts_s2 = with_s2_cell(points.select("image_id", "lat", "lon"),
+                          "lat", "lon", 8, "s2_l8")
+    cases = [(points, sp.DEFAULT_RES, "equirect"), (pts_s2, 8, "s2")]
+    calls = []
+    shuffle_plan = sp.point_in_polygon_bucketed
+
+    def spy(*a, **kw):
+        calls.append(kw["family"])
+        return shuffle_plan(*a, **kw)
+
+    monkeypatch.setattr(sp, "point_in_polygon_bucketed", spy)
+    key = lambda d: set(zip(d["poly_id"], d["image_id"]))
+    want = [key(sp.point_in_polygon(pts, polys, res=r, family=f).toPandas())
+            for pts, r, f in cases]
+    assert calls == []                        # dim-sized: broadcast plan
+    assert all("wrapped" in {p for p, _ in w} for w in want)
+
     monkeypatch.setattr(sp, "PIP_MAX_DIM_VERTICES", 10)
-    with _pytest.raises(ValueError, match="not a broadcastable dim"):
-        sp.point_in_polygon(points, polys, res=sp.DEFAULT_RES)
+    for (pts, r, f), w in zip(cases, want):
+        got = sp.point_in_polygon(pts, polys, res=r, family=f).toPandas()
+        assert key(got) == w, f
+        assert len(got) == len(w), f          # no duplicate rows
+    assert calls == ["equirect", "s2"]
+
+
+def test_pip_refine_stacked_equals_per_polygon_fallback():
+    """Driver-only check of the refine kernel both PIP plans share: on
+    candidates mixing a wrapped polygon with ordinary ones, the
+    stacked-edge table and its tables=None per-polygon fallback return
+    identical rows."""
+    rla, rlo = _wrapped_pentagon()
+    pieces_by_id = {p.poly_id: sp._ring_pieces(p.ring_lats, p.ring_lons)
+                    for p in synth.gen_polygons_pdf(6).itertuples()}
+    pieces_by_id["wrapped"] = sp._ring_pieces(rla, rlo)
+    assert len(pieces_by_id["wrapped"]) == 2
+    # candidates scattered over each piece's bbox: hits and misses
+    rng = np.random.default_rng(5)
+    parts = []
+    for pid, pieces in pieces_by_id.items():
+        for pla, plo in pieces:
+            parts.append(pd.DataFrame({
+                "poly_id": pid,
+                "lat": rng.uniform(pla.min(), pla.max(), 300),
+                "lon": rng.uniform(plo.min(), plo.max(), 300)}))
+    pdf = pd.concat(parts).sample(frac=1, random_state=0)
+    pdf = pdf.assign(image_id=np.arange(len(pdf))).reset_index(drop=True)
+
+    tables = gk.build_stacked_edges(pieces_by_id)
+    assert tables is not None
+    stacked = sp._refine_candidates(pdf, pieces_by_id, tables, "image_id")
+    loop = sp._refine_candidates(pdf, pieces_by_id, None, "image_id")
+    pd.testing.assert_frame_equal(stacked, loop)
+    assert 0 < len(stacked) < len(pdf)
+    assert stacked["poly_id"].nunique() == len(pieces_by_id)
 
 
 def test_point_in_polygon_refine_input_sized_from_plan_estimate(
