@@ -37,10 +37,7 @@ class Engine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         from .plans.session import ship_package
-        try:
-            ship_package(spark)
-        except Exception:
-            pass
+        ship_package(spark)
 
     @classmethod
     def local(cls, cores: int = 8, **kw) -> "Engine":

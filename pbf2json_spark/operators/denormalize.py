@@ -31,9 +31,13 @@ and the order-preservation is sort_array over (pos, ...) structs.
 
 Scale notes (the 100 TB shape): the node store projects exactly 4
 columns (id, lat, lon, flags) — column pruning keeps the shuffle at
-~28 bytes/row like the reference's 12-byte records; the refs->nodes
-join and the way-regroup are the only two shuffles; both AQE-coalesced.
-The centroid UDAF is one Arrow batch pass over already-grouped arrays.
+~28 bytes/row like the reference's 12-byte records.  The shuffles are
+the refs->store regroup (per way), the relation member->way join and
+one rel_id regroup that applies J2, A5 and J3 as aggregates; all
+AQE-coalesced.  The admin_centre lookup joins only the admin members,
+a small side AQE can broadcast against the store.  The centroid UDAF
+is one Arrow batch pass over already-grouped arrays, and it also
+returns the A5 bbox area, so that rule lives only in geokernels.
 """
 
 from __future__ import annotations
@@ -60,13 +64,15 @@ _CB_SCHEMA = T.StructType([
     T.StructField("s", T.DoubleType()),
     T.StructField("e", T.DoubleType()),
     T.StructField("w", T.DoubleType()),
+    T.StructField("area", T.DoubleType()),
 ])
 
 
 def make_centroid_bounds_udf(strict_parity: bool = True):
     """Scalar Arrow-batched UDF: (lats, lons, ents, whls) arrays ->
-    centroid + bbox struct.  strict_parity applies the reference's
-    6-byte coordinate truncation first."""
+    centroid + bbox struct, plus the bbox area A5 ranks relation
+    members by (gk.ref_bbox_area).  strict_parity applies the
+    reference's 6-byte coordinate truncation first."""
 
     @F.pandas_udf(_CB_SCHEMA)
     def centroid_bounds(lats: pd.Series, lons: pd.Series,
@@ -85,14 +91,13 @@ def make_centroid_bounds_udf(strict_parity: bool = True):
             ent = np.asarray(ents.iloc[i], dtype=np.int64)
             whl = np.asarray(whls.iloc[i], dtype=np.int64)
             out[i, :] = gk.centroid_and_bounds(la, lo, ent, whl)
+        n, s, e, w = (out[:, j].astype(np.float64) for j in range(3, 7))
         return pd.DataFrame({
             "clat": out[:, 0].astype(np.float64),
             "clon": out[:, 1].astype(np.float64),
             "ctype": out[:, 2],
-            "n": out[:, 3].astype(np.float64),
-            "s": out[:, 4].astype(np.float64),
-            "e": out[:, 5].astype(np.float64),
-            "w": out[:, 6].astype(np.float64),
+            "n": n, "s": s, "e": e, "w": w,
+            "area": gk.ref_bbox_area(n, s, e, w),
         })
 
     return centroid_bounds
@@ -280,7 +285,9 @@ def denormalize_relations(nodes: DataFrame, ways: DataFrame,
                           relations: DataFrame, tag_spec: str,
                           strict_parity: bool = True,
                           salt_hot_refs: int = 0) -> DataFrame:
-    """Relation output rows (pbf2json.go:310-374)."""
+    """Relation output rows (pbf2json.go:310-374): one member explode,
+    a way lookup and an admin_centre node lookup, then one rel_id
+    aggregate applies J2, A5 and J3."""
     store = node_store(nodes)
 
     # P9 + tag match (index pass, pbf2json.go:142-154)
@@ -288,93 +295,64 @@ def denormalize_relations(nodes: DataFrame, ways: DataFrame,
         has_tags() & compile_tag_predicate(tag_spec)
         & F.exists("members", lambda m: m["type"] == 1)
     )
-
-    # J2: way members in member order
     memb = rels.select(
-        F.col("id").alias("rel_id"),
+        F.col("id").alias("rel_id"), "tags",
         F.posexplode("members").alias("mpos", "m"),
-    ).filter(F.col("m.type") == 1).select(
-        "rel_id", "mpos", F.col("m.ref").alias("way_id"))
+    )
+    way_members = memb.filter(F.col("m.type") == 1).select(
+        "rel_id", "tags", "mpos", F.col("m.ref").alias("way_id"))
+    admin_members = memb.filter(
+        (F.element_at("tags", F.lit("boundary")) == "administrative")
+        & (F.col("m.type") == 0) & (F.col("m.role") == "admin_centre")
+    ).select("rel_id", "mpos", F.col("m.ref").alias("ref"))
 
-    # the RelWays 'bitmask': only ways actually referenced get resolved
+    # the RelWays 'bitmask': only ways actually referenced get resolved;
+    # centroid/bounds are computed once per way, not per member instance
     rel_ways = ways.join(
-        memb.select(F.col("way_id").alias("id")).distinct(), "id", "leftsemi")
+        way_members.select(F.col("way_id").alias("id")), "id", "leftsemi")
     arr = way_point_arrays(rel_ways, store, salt_hot_refs) \
         .withColumnRenamed("id", "way_id")
-    # centroid/bounds are a pure function of the WAY — compute them once
-    # per distinct way here, not per member instance after the join (a
-    # popular way appearing in thousands of relations would otherwise
-    # re-run the UDAF thousands of times)
     arr = _attach_centroid_bounds(arr, strict_parity) \
         .select("way_id", "nrefs", "npts", "cb")
 
-    j = memb.join(arr, "way_id", "left")
-    j = j.withColumn(
-        "failed",
-        F.col("npts").isNull() | (F.col("npts") != F.col("nrefs")))
+    failed = F.col("npts").isNull() | (F.col("npts") != F.col("nrefs"))
+    way_rows = way_members.join(arr, "way_id", "left").select(
+        "rel_id", "tags",
+        F.when(failed, F.col("mpos")).alias("miss"),
+        # A5 candidate; ties on area fall to the larger -mpos, i.e. Go's
+        # first max (pbf2json.go:342)
+        F.when(~failed, F.struct(F.col("cb.area").alias("area"),
+                                 (-F.col("mpos")).alias("neg_mpos"), "cb"))
+        .alias("cand"))
+    # J3: the first *resolvable* admin_centre node (pbf2json.go:355-368)
+    admin_rows = admin_members.join(store, "ref").select(
+        "rel_id", F.struct("mpos", "lat", "lon", "ent", "whl").alias("adm"))
 
-    # truncate-on-first-miss quirk (pbf2json.go:397-399)
+    out = way_rows.unionByName(admin_rows, allowMissingColumns=True) \
+        .groupBy("rel_id").agg(
+            F.first("tags", ignorenulls=True).alias("tags"),
+            F.min("miss").alias("first_miss"),
+            F.collect_list("cand").alias("cands"),
+            F.min("adm").alias("adm"))
+    cands = F.col("cands")
     if strict_parity:
-        from pyspark.sql import Window
-        w = Window.partitionBy("rel_id")
-        j = j.withColumn(
-            "first_miss",
-            F.min(F.when(F.col("failed"), F.col("mpos"))).over(w))
-        ok = j.filter(
-            F.col("first_miss").isNull() | (F.col("mpos") < F.col("first_miss")))
-    else:
-        ok = j.filter(~F.col("failed"))
+        # J2: truncate at the first failed way member (pbf2json.go:397-399)
+        cands = F.filter(cands, lambda c: F.col("first_miss").isNull()
+                         | (-c["neg_mpos"] < F.col("first_miss")))
+    out = out.withColumn("cb", F.array_max(cands)["cb"]) \
+        .filter(F.col("cb").isNotNull())
 
-    # A5 argmax by bbox area over the per-way centroid+bounds (A1-A4)
-    cb = ok
-    width = gk.EARTH_RADIUS_M * F.abs(
-        F.radians(F.col("cb.e") - F.col("cb.w"))
-        * F.cos(F.radians((F.col("cb.n") + F.col("cb.s")) / 2.0)))
-    height = F.lit(gk.GEO_HEIGHT_M_PER_DEG) * (F.col("cb.n") - F.col("cb.s"))
-    cb = cb.withColumn(
-        "area", F.greatest(width, F.lit(1e-6)) * F.greatest(height, F.lit(1e-6)))
-
-    from pyspark.sql import Window
-    pick = Window.partitionBy("rel_id").orderBy(
-        F.desc("area"), F.asc("mpos"))  # Go keeps the FIRST max (:342)
-    best = (cb.withColumn("rn", F.row_number().over(pick))
-              .filter(F.col("rn") == 1)
-              .select("rel_id", "cb"))
-
-    # J3: first *resolvable* admin_centre node member (pbf2json.go:355-368)
-    admin_members = rels.filter(
-        F.element_at("tags", F.lit("boundary")) == "administrative"
-    ).select(
-        F.col("id").alias("rel_id"),
-        F.posexplode("members").alias("mpos", "m"),
-    ).filter((F.col("m.type") == 0) & (F.col("m.role") == "admin_centre")
-             ).select("rel_id", "mpos", F.col("m.ref").alias("node_ref"))
-    admin_nodes = admin_members.join(
-        store.withColumnRenamed("ref", "node_ref"), "node_ref")
-    first_admin = Window.partitionBy("rel_id").orderBy("mpos")
-    admin = (admin_nodes.withColumn("rn", F.row_number().over(first_admin))
-             .filter(F.col("rn") == 1)
-             .select("rel_id",
-                     F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"),
-                     F.col("ent").alias("a_ent"), F.col("whl").alias("a_whl")))
-
-    rel_tags = rels.select(F.col("id").alias("rel_id"), "tags")
-    out = (best.join(rel_tags, "rel_id")
-               .join(admin, "rel_id", "left"))
-
+    a_lat, a_lon = F.col("adm.lat"), F.col("adm.lon")
     if strict_parity:
-        a_lat = _trunc_scalar(F.col("a_lat"))
-        a_lon = _trunc_scalar(F.col("a_lon"))
-    else:
-        a_lat, a_lon = F.col("a_lat"), F.col("a_lon")
-
+        a_lat, a_lon = _trunc_scalar(a_lat), _trunc_scalar(a_lon)
+    a_ent, a_whl = F.col("adm.ent"), F.col("adm.whl")
     admin_centroid = F.map_filter(
         F.map_from_arrays(
             F.array(F.lit("lat"), F.lit("lon"), F.lit("type"),
                     F.lit("entrance"), F.lit("wheelchair")),
             F.array(_fmt7(a_lat), _fmt7(a_lon), F.lit("admin_centre"),
-                    F.when(F.col("a_ent") >= 0, F.col("a_ent").cast("string")),
-                    F.when(F.col("a_ent") >= 0, F.col("a_whl").cast("string"))),
+                    F.when(a_ent >= 0, a_ent.cast("string")),
+                    F.when(a_ent >= 0, a_whl.cast("string"))),
         ),
         lambda _k, v: v.isNotNull(),
     )
@@ -383,7 +361,7 @@ def denormalize_relations(nodes: DataFrame, ways: DataFrame,
         F.col("rel_id").alias("id"),
         F.lit("relation").alias("type"),
         trimmed_tags().alias("tags"),
-        F.when(F.col("a_lat").isNotNull(), admin_centroid)
+        F.when(F.col("adm").isNotNull(), admin_centroid)
          .otherwise(_centroid_map(F.col("cb"))).alias("centroid"),
         _bounds_map(F.col("cb")).alias("bounds"),
     )

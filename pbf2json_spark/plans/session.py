@@ -193,6 +193,8 @@ def ship_package(spark: SparkSession) -> None:
     whose PYTHONPATH doesn't include the repo."""
     import zipfile
 
+    from py4j.protocol import Py4JError
+
     import pbf2json_spark
 
     # spark-submit --py-files already distributed the package?  Adding
@@ -203,7 +205,7 @@ def ship_package(spark: SparkSession) -> None:
         for i in range(existing.size()):
             if "pbf2json_spark.zip" in str(existing.apply(i)):
                 return
-    except Exception:
+    except Py4JError:  # a JVM SparkContext without listFiles()
         pass
 
     pkg_dir = os.path.dirname(os.path.abspath(pbf2json_spark.__file__))

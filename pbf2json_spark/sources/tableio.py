@@ -22,6 +22,7 @@ import os
 import shutil
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,7 +40,7 @@ class TableIO:
         try:
             spark.sql(f"SHOW NAMESPACES IN {self.catalog}")
             return True
-        except Exception:
+        except AnalysisException:  # e.g. [SCHEMA_NOT_FOUND]: no such catalog
             return False
 
     # -- paths ------------------------------------------------------------
@@ -91,51 +92,29 @@ class TableIO:
         persist content_key + per-partition lineage, so CheckpointRunner
         resumes identically whichever storage is active."""
         spark = df.sparkSession
-        if self._iceberg_available(spark):
+        iceberg = self._iceberg_available(spark)
+        if iceberg:
             full = f"{self.catalog}.{name}"
             w = df.writeTo(full)
             if partition_by:
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
             out = spark.read.table(full)
-            lineage = self._lineage(out)
-            manifest = {
-                "backend": "iceberg",
-                "table": full,
-                "name": name,
-                "content_key": content_key,
-                "rows": sum(lineage.values()),
-                "partitions": len(lineage),
-                "partition_rows": lineage,
-                "schema": out.schema.jsonValue(),
-                "written_at": time.time(),
-            }
-            blob = json.dumps(manifest).replace("'", "''")
-            try:
-                spark.sql(f"ALTER TABLE {full} SET TBLPROPERTIES "
-                          f"('pbf2json.manifest' = '{blob}')")
-            except Exception:
-                pass  # property support varies by catalog; sidecar rules
-            tmp = self._sidecar_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.rename(tmp, self._sidecar_path(name))
-            return manifest
+        else:
+            path = self._path(name)
+            tmp = path + ".__tmp__"
+            shutil.rmtree(tmp, ignore_errors=True)
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(tmp)
+            # per-partition lineage from the written data (one extra scan
+            # of the materialized output, not a recompute of the input plan)
+            out = spark.read.parquet(tmp)
 
-        path = self._path(name)
-        tmp = path + ".__tmp__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-
-        # per-partition lineage from the written data (one extra scan of
-        # the materialized output, not a recompute of the input plan)
-        out = spark.read.parquet(tmp)
         lineage = self._lineage(out)
         manifest = {
-            "backend": "parquet-dir",
+            "backend": "iceberg" if iceberg else "parquet-dir",
             "name": name,
             "content_key": content_key,
             "rows": sum(lineage.values()),
@@ -144,10 +123,23 @@ class TableIO:
             "schema": out.schema.jsonValue(),
             "written_at": time.time(),
         }
-        with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-            json.dump(manifest, f)
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(tmp, path)
+        if iceberg:
+            manifest["table"] = full
+            blob = json.dumps(manifest).replace("'", "''")
+            try:
+                spark.sql(f"ALTER TABLE {full} SET TBLPROPERTIES "
+                          f"('pbf2json.manifest' = '{blob}')")
+            except AnalysisException:
+                pass  # property support varies by catalog; sidecar rules
+            tmp = self._sidecar_path(name) + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            os.rename(tmp, self._sidecar_path(name))
+        else:
+            with open(os.path.join(tmp, "_manifest.json"), "w") as f:
+                json.dump(manifest, f)
+            shutil.rmtree(path, ignore_errors=True)
+            os.rename(tmp, path)
         return manifest
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:

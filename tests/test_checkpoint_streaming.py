@@ -24,6 +24,20 @@ def test_tableio_roundtrip_and_lineage(spark, tmp_path):
     assert io.manifest("t1")["content_key"] == "k1"
 
 
+def test_tableio_iceberg_probe_narrow(spark, tmp_path, monkeypatch):
+    """A catalog that does not exist probes False (an AnalysisException);
+    any other failure of the probe propagates instead of silently
+    selecting the parquet backend."""
+    io = TableIO(str(tmp_path / "tables"), catalog="nocat")
+    assert io._iceberg_available(spark) is False
+
+    def broken_sql(*_a, **_kw):
+        raise RuntimeError("gateway down")
+    monkeypatch.setattr(spark, "sql", broken_sql)
+    with pytest.raises(RuntimeError, match="gateway down"):
+        io._iceberg_available(spark)
+
+
 def test_checkpoint_resume_skips_unchanged_stage(spark, tmp_path):
     io = TableIO(str(tmp_path / "ck"))
     runner = CheckpointRunner(spark, io)

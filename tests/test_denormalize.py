@@ -4,6 +4,7 @@ shapes (/root/reference/test/end-to-end.js:53-61)."""
 
 import json
 
+import pandas as pd
 import pytest
 
 from pbf2json_spark.operators import denormalize as dn
@@ -90,3 +91,92 @@ def test_dropped_entities(spark, tables):
                 and not any(m["type"] == 1 for m in r.members)]
     for rid in zero_way:
         assert f"relation:{rid}" not in got
+
+
+# ---------------------------------------------------------------------------
+# hand-built fixture pinning the relation rules J2, A5 and J3 in both modes
+# ---------------------------------------------------------------------------
+
+W_SMALL, W_LARGE, W_EQ_A, W_EQ_B, W_BROKEN, W_ABSENT = 1, 2, 3, 4, 5, 77
+ADMIN_NODE, LATER_ADMIN_NODE, MISSING_NODE = 10, 11, 998
+FIXTURE_SPEC = "building,boundary~administrative"
+# relation id -> the way whose geometry it must carry, per mode
+# (None: the relation is dropped)
+PICKS = {
+    101: {True: W_SMALL, False: W_LARGE},    # small, absent, large
+    102: {True: W_EQ_A, False: W_EQ_A},      # equal areas: first wins
+    103: {True: W_EQ_B, False: W_EQ_B},      # ... in either order
+    104: {True: None, False: W_SMALL},       # first way member broken
+    105: {True: W_LARGE, False: W_LARGE},    # admin boundary, J3 applies
+    106: {True: W_SMALL, False: W_SMALL},    # admin_centre, not admin
+    107: {True: W_LARGE, False: W_LARGE},    # shares W_LARGE with 101/105
+}
+
+
+@pytest.fixture(scope="module")
+def rule_tables(spark):
+    pts = {1: (1.0, 10.0), 2: (1.25, 10.25), 3: (1.0, 10.25),
+           4: (2.0, 20.0), 5: (4.0, 23.0),
+           6: (5.0, 30.0), 7: (5.5, 30.5), 8: (5.0, 40.0), 9: (5.5, 40.5),
+           ADMIN_NODE: (3.0, 21.0), LATER_ADMIN_NODE: (3.5, 22.0)}
+    nodes = pd.DataFrame({
+        "id": list(pts), "lat": [p[0] for p in pts.values()],
+        "lon": [p[1] for p in pts.values()],
+        "tags": [{"entrance": "main", "wheelchair": "yes"}
+                 if i == ADMIN_NODE else {} for i in pts]})
+    refs = {W_SMALL: [1, 2, 3], W_LARGE: [4, 5], W_EQ_A: [6, 7],
+            W_EQ_B: [8, 9], W_BROKEN: [1, MISSING_NODE]}
+    ways = pd.DataFrame({"id": list(refs), "refs": list(refs.values()),
+                         "tags": [{"building": "yes"}] * len(refs)})
+
+    def way(i):
+        return {"type": 1, "ref": i, "role": "outer"}
+
+    def admin(i):
+        return {"type": 0, "ref": i, "role": "admin_centre"}
+
+    bld = {"building": "yes"}
+    rels = pd.DataFrame([
+        (101, [way(W_SMALL), way(W_ABSENT), way(W_LARGE)], bld),
+        (102, [way(W_EQ_A), way(W_EQ_B)], bld),
+        (103, [way(W_EQ_B), way(W_EQ_A)], bld),
+        (104, [way(W_BROKEN), way(W_SMALL)], bld),
+        (105, [admin(MISSING_NODE), way(W_LARGE), admin(ADMIN_NODE),
+               admin(LATER_ADMIN_NODE)],
+         {"boundary": "administrative", "name": "b"}),
+        (106, [way(W_SMALL), admin(ADMIN_NODE)], bld),
+        (107, [way(W_LARGE)], bld),
+    ], columns=["id", "members", "tags"])
+    s = synth.spark_schemas()
+    pdfs = (nodes, ways, rels)
+    dfs = tuple(spark.createDataFrame(pdf, schema=s[name]) for name, pdf in
+                zip(("nodes", "ways", "relations"), pdfs))
+    return pdfs, dfs
+
+
+def _by_id(df):
+    return {r.id: r.asDict(recursive=True) for r in df.collect()}
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_relation_rules_fixture(spark, rule_tables, strict):
+    pdfs, (nodes, ways, rels) = rule_tables
+    got = _by_id(dn.denormalize_relations(nodes, ways, rels, FIXTURE_SPEC,
+                                          strict_parity=strict))
+    way_rows = _by_id(dn.denormalize_ways(nodes, ways, "building",
+                                          strict_parity=strict))
+    want_ids = {r for r, pick in PICKS.items() if pick[strict] is not None}
+    assert set(got) == want_ids
+    for rid in want_ids:
+        picked = way_rows[PICKS[rid][strict]]
+        assert got[rid]["bounds"] == picked["bounds"], rid
+        if rid != 105:
+            assert got[rid]["centroid"] == picked["centroid"], rid
+    assert got[105]["centroid"] == {
+        "lat": "3.0000000", "lon": "21.0000000", "type": "admin_centre",
+        "entrance": "2", "wheelchair": "2"}
+    if strict:
+        want = {int(g.split(":")[1]): w for g, w in
+                oracle_pipeline(*pdfs, FIXTURE_SPEC).items()
+                if g.startswith("relation:")}
+        assert got == want

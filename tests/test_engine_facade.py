@@ -1,6 +1,9 @@
 """Engine facade (the public API a reference user switches to)."""
 
+import pytest
+
 from pbf2json_spark import Engine
+from pbf2json_spark.plans import session
 from pbf2json_spark.sources import synth
 
 
@@ -16,6 +19,16 @@ def test_engine_runs_reference_pipeline(spark):
     for r in rows[:20]:
         d = json.loads(r.json)
         assert r.gid == f"{d['type']}:{d['id']}"
+
+
+def test_engine_surfaces_ship_package_failure(spark, monkeypatch):
+    """A package that cannot be shipped fails Engine() at once, not the
+    first pandas UDF on an executor later."""
+    def broken_ship(_spark):
+        raise OSError("no space left on device")
+    monkeypatch.setattr(session, "ship_package", broken_ship)
+    with pytest.raises(OSError, match="no space left"):
+        Engine(spark)
 
 
 def test_engine_spatial_surface(spark):
