@@ -27,7 +27,10 @@ the same NDJSON contract, minus the subprocess.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:  # importing PySpark here would run before plans.pyworker
+    from pyspark.sql import DataFrame, SparkSession
 
 
 class Engine:

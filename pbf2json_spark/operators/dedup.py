@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.session import plan_bytes
+from ..plans.session import fresh_pandas_udf, plan_bytes
 
 # MinHash constants — shared verbatim with the SQL oracle
 MINHASH_PRIME = 1073741789          # ~2^30, keeps a*h+b < 2^63
@@ -106,24 +106,24 @@ def _hash60(col):
 
 
 def _shingles():
-    """Distinct token 3-gram strings.
+    """Distinct token SHINGLE_N-gram strings.
 
-    Built with two zip_with passes over shifted slices instead of a
-    per-index transform+slice+concat_ws (measured 6x faster: the
-    interpreted slice allocates a fresh array per shingle).  Output is
-    element-for-element identical to the per-index form, including the
-    short-doc (< N tokens) whole-text fallback."""
+    Built with SHINGLE_N - 1 zip_with passes over shifted slices instead
+    of a per-index transform+slice+concat_ws (measured 6x faster for
+    trigrams: the interpreted slice allocates a fresh array per
+    shingle).  Pass j appends toks[i + j] to gram i; zip_with pads the
+    shorter slice with nulls, so the last j grams go null and are
+    filtered out.  Short docs (< N tokens) fall back to the whole
+    text."""
     toks = _tokens()
     n = F.size(toks)
-    # pair[i] = toks[i] + " " + toks[i+1]  (concat_ws skips the null pad)
-    pair = F.zip_with(toks, F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-                      lambda a, b: F.concat_ws(" ", a, b))
-    tri = F.filter(
-        F.zip_with(pair, F.slice(toks, 3, F.greatest(n - 2, F.lit(0))),
-                   lambda p, c: F.when(c.isNotNull(),
-                                       F.concat(p, F.lit(" "), c))),
-        lambda s: s.isNotNull())
-    return F.when(n >= SHINGLE_N, F.array_distinct(tri)) \
+    grams = toks
+    for j in range(1, SHINGLE_N):
+        grams = F.zip_with(
+            grams, F.slice(toks, j + 1, F.greatest(n - j, F.lit(0))),
+            lambda g, c: F.when(c.isNotNull(), F.concat(g, F.lit(" "), c)))
+    return F.when(n >= SHINGLE_N,
+                  F.array_distinct(F.filter(grams, lambda g: g.isNotNull()))) \
             .otherwise(F.array(F.array_join(toks, " ")))
 
 
@@ -140,12 +140,12 @@ _MH_A_NP = np.array(MINHASH_A, dtype=np.int64)[None, :]
 _MH_B_NP = np.array(MINHASH_B, dtype=np.int64)[None, :]
 
 
-@F.pandas_udf(T.StructType([
+@fresh_pandas_udf(T.StructType([
     T.StructField("sh", T.ArrayType(T.StringType())),
     T.StructField("mh", T.ArrayType(T.LongType()))]))
 def _shingle_mh(toks: pd.Series) -> pd.DataFrame:
     """Fused shingle + hash + minhash stage over JVM-tokenized arrays
-    (r7, guide §4.2): builds the distinct 3-gram strings, their md5
+    (r7, guide §4.2): builds the distinct SHINGLE_N-gram strings, their md5
     60-bit hashes and the K permutation minima in one Python pass.
     Token semantics stay JVM-side (_tokens()); everything here is
     byte-exact string joins + md5, so the output is element-identical
@@ -168,8 +168,8 @@ def _shingle_mh(toks: pd.Series) -> pd.DataFrame:
         n = len(t)
         if n >= SHINGLE_N:
             sh = list(dict.fromkeys(
-                t[i] + " " + t[i + 1] + " " + t[i + 2]
-                for i in range(n - 2)))
+                " ".join(t[i:i + SHINGLE_N])
+                for i in range(n - SHINGLE_N + 1)))
         else:
             sh = [" ".join(t)]
         hs = np.fromiter(
@@ -266,11 +266,7 @@ def minhash_lsh_pairs(docs: DataFrame, tau: float = 0.5) -> DataFrame:
     # corpora skip the widening — any real corpus clears 2 MB.
     par = docs.sparkSession.sparkContext.defaultParallelism
     if est >= (2 << 20):
-        try:
-            n_splits = (len(docs.inputFiles())
-                        or docs.rdd.getNumPartitions())
-        except Exception:
-            n_splits = docs.rdd.getNumPartitions()
+        n_splits = len(docs.inputFiles()) or docs.rdd.getNumPartitions()
         if n_splits < par:
             rep_docs = rep_docs.repartition(2 * par)
     base = rep_docs.select(
@@ -410,15 +406,13 @@ def _simhash_from_hashes(hs: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-_simhash_udf = F.pandas_udf(_simhash_from_hashes, T.LongType())
-
-
 def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): 60-bit SimHash.  Token hashing is JVM-side
     (md5-prefix, portable to the SQL oracle); the Python stage only does
     the vectorized numeric vote reduction."""
     tok_hashes = F.transform(_tokens(), _hash60)
-    return docs.select("doc_id", _simhash_udf(tok_hashes).alias("simhash"))
+    simhash = F.pandas_udf(_simhash_from_hashes, T.LongType())
+    return docs.select("doc_id", simhash(tok_hashes).alias("simhash"))
 
 
 def hash_near_pairs(df: DataFrame, hash_col: str, max_hamming: int,

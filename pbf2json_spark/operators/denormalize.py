@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from ..functions import geokernels as gk
 from ..functions.tagpredicate import (compile_tag_predicate, has_tags,
                                       trimmed_tags)
+from ..plans.session import fresh_pandas_udf
 
 # ---------------------------------------------------------------------------
 # the centroid/bounds UDAF (A1-A4 over grouped point arrays)
@@ -276,7 +277,7 @@ def _waynodes_col(strict_parity: bool):
 _TRUNC_SCHEMA = T.ArrayType(T.DoubleType())
 
 
-@F.pandas_udf(_TRUNC_SCHEMA)
+@fresh_pandas_udf(_TRUNC_SCHEMA)
 def _truncate_array_udf(vals: pd.Series) -> pd.Series:
     return vals.map(lambda a: gk.truncate_coords(np.asarray(a, dtype=np.float64)))
 
@@ -367,7 +368,7 @@ def denormalize_relations(nodes: DataFrame, ways: DataFrame,
     )
 
 
-@F.pandas_udf(T.DoubleType())
+@fresh_pandas_udf(T.DoubleType())
 def _trunc_scalar(v: pd.Series) -> pd.Series:
     return pd.Series(gk.truncate_coords(v.to_numpy(dtype=np.float64)))
 

@@ -89,16 +89,14 @@ def _python_stage_parts(spark, nbytes: int,
     derive partitioning from input size).
 
     Every Python task pays a fixed dispatch cost before the first line
-    of the UDF runs: 150-360 ms per task on a 4-core host.  cProfile of
-    pyspark.worker.main puts it in the worker's per-task
-    importlib.invalidate_caches() (worker_util.setup_spark_files), which
-    re-reads the zip directories on sys.path — pyspark.zip 12 times
-    (~13 ms each) and the spark-core jar twice (~55 ms each).  So tiny
-    partitions are pure overhead on any cluster.  A Python-list
-    createDataFrame is a Python RDD whose scan pays the same cost, and
-    warm_python_workers does not pre-warm that path (its first task per
-    worker measured ~1.6 s); driver-side tables are built from pandas
-    through Arrow instead, which analyzes to a JVM LocalRelation."""
+    of the UDF runs: ~0.06 s per task on a 4-core host under
+    plans.pyworker, the daemon build_session selects for local masters,
+    and 0.24 s under the stock daemon, whose per-task
+    importlib.invalidate_caches() re-reads the zip directories on
+    sys.path.  So tiny partitions are pure overhead.  A Python-list
+    createDataFrame is a Python RDD whose scan pays the same cost;
+    driver-side tables are built from pandas through Arrow instead,
+    which analyzes to a JVM LocalRelation."""
     par = spark.sparkContext.defaultParallelism
     return int(max(par, -(-nbytes // target_bytes)))
 

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the pbf2json_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
 
 def build_session(app_name: str = "pbf2json-spark",
                   cores: int | None = None,
@@ -23,7 +27,8 @@ def build_session(app_name: str = "pbf2json-spark",
     multi-JVM scaling legs (`local-cluster[N,cores,mem_mb]`: separate
     executor JVMs + real serialized shuffle over sockets, the closest
     this sandbox gets to a cluster; `cores` then just sizes shuffle
-    partitions).
+    partitions).  Under a local or local-cluster master, Python workers
+    start from plans.pyworker; any other master keeps pyspark.daemon.
 
     ``profile='corpus'`` applies the hard-won settings for long,
     multi-round corpus jobs (knn_join at millions of rows, large dedup
@@ -58,14 +63,12 @@ def build_session(app_name: str = "pbf2json-spark",
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     b = SparkSession.builder.appName(app_name)
+    if master is None and cores is not None:
+        master = f"local[{cores}]"
     if master is not None:
         b = b.master(master)
-        if shuffle_partitions is None and cores is not None:
-            shuffle_partitions = max(cores, 8)
-    elif cores is not None:
-        b = b.master(f"local[{cores}]")
-        if shuffle_partitions is None:
-            shuffle_partitions = max(cores, 8)
+    if shuffle_partitions is None and cores is not None:
+        shuffle_partitions = max(cores, 8)
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     defaults = {
@@ -115,6 +118,11 @@ def build_session(app_name: str = "pbf2json-spark",
     if cores is not None:  # local mode: loopback binding avoids DNS stalls
         defaults.setdefault("spark.driver.bindAddress", "127.0.0.1")
         defaults.setdefault("spark.driver.host", "127.0.0.1")
+    if master is not None and master.startswith(("local[", "local-cluster[")):
+        # workers run on this host, so they can import the daemon from
+        # the package's own directory (plans/pyworker.py)
+        defaults["spark.python.daemon.module"] = "pbf2json_spark.plans.pyworker"
+        defaults["spark.executorEnv.PYTHONPATH"] = _PACKAGE_PARENT
     if profile == "corpus":
         defaults["spark.cleaner.periodicGC.interval"] = "1min"
         if master is not None and master.startswith("local-cluster"):
@@ -147,28 +155,26 @@ def plan_bytes(df) -> int:
 
 
 def warm_python_workers(spark: SparkSession, parallelism: int | None = None) -> None:
-    """Pre-fork the Python UDF worker pool.
+    """Start the Python worker daemon and fork one worker per task slot.
 
-    The FIRST job that crosses into Python spawns one worker per task
-    slot; on sandboxed filesystems that import storm is dominated by
-    kernel time (observed: ~25 s at 96% sys for 32 slots) and lands
-    inside whatever query runs first.  One trivial pass per eval type
-    (scalar pandas_udf + mapInPandas) moves that cost to session setup;
-    workers are reused afterwards (spark.python.worker.reuse).
+    The FIRST job that crosses into Python starts the daemon and forks
+    its workers; on sandboxed filesystems that import storm is
+    dominated by kernel time (observed: ~25 s at 96% sys for 32 slots)
+    and would land inside whatever query runs first.  One mapInPandas
+    pass over 2 x `parallelism` tasks moves it to session setup;
+    workers are reused afterwards (spark.python.worker.reuse).  Every
+    eval type shares the one daemon and pool, so one pass warms all.
 
-    Warm workers do not remove the per-task dispatch cost: every Python
-    task still spends 150-360 ms (4-core host) between launch and the
-    first UDF line, in the worker's per-task
-    importlib.invalidate_caches(), which re-reads the zip directories of
-    pyspark.zip and the spark-core jar (see
-    operators.spatial._python_stage_parts).  The Python-list path —
-    createDataFrame(<list>), a plain Python RDD — is NOT pre-warmed
-    here: its first task per worker measured ~1.6 s.  The engine
-    therefore builds driver-side tables from pandas through Arrow (a JVM
-    LocalRelation whose scan starts no Python worker)."""
+    In a running JVM, on a 4-core host, the pass takes ~1.0 s under
+    plans.pyworker (the daemon build_session selects for local
+    masters), down from 1.6-2.2 s under the stock daemon, which
+    compiles PySpark from pyspark.zip.  Per-task dispatch afterwards is
+    ~0.06 s (0.24 s stock; see operators.spatial._python_stage_parts).
+    The Python-list path — createDataFrame(<list>), a plain Python RDD
+    — is NOT warmed here, so the engine builds driver-side tables from
+    pandas through Arrow (a JVM LocalRelation whose scan starts no
+    Python worker)."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     n = parallelism or spark.sparkContext.defaultParallelism
 
@@ -176,14 +182,27 @@ def warm_python_workers(spark: SparkSession, parallelism: int | None = None) -> 
         for pdf in batches:
             yield pdf
 
-    df = spark.range(n * 2, numPartitions=n * 2)
-    df.mapInPandas(_id_map, "id long").count()
+    spark.range(n * 2, numPartitions=n * 2).mapInPandas(
+        _id_map, "id long").count()
 
-    @F.pandas_udf(T.LongType())
-    def _id_udf(s):
-        return s
 
-    df.select(_id_udf("id")).count()
+def fresh_pandas_udf(return_type):
+    """``@F.pandas_udf(return_type)`` for module-level functions, built
+    afresh at each call.  A pandas_udf object binds its JVM function at
+    first use, and with it that SparkContext's Python accumulator.  Used
+    again under a later SparkContext in the same process (a stopped and
+    rebuilt session), every task of it then logs ``Failed to update
+    accumulator ... Broken pipe``: the driver merges the task's
+    accumulator update into the stopped context's accumulator server.
+    The plain function stays reachable as ``.func``."""
+    from pyspark.sql import functions as F
+
+    def wrap(fn):
+        def build(*cols):
+            return F.pandas_udf(fn, return_type)(*cols)
+        build.func = fn
+        return build
+    return wrap
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -194,8 +213,6 @@ def ship_package(spark: SparkSession) -> None:
     import zipfile
 
     from py4j.protocol import Py4JError
-
-    import pbf2json_spark
 
     # spark-submit --py-files already distributed the package?  Adding
     # a second zip with the same name makes executors fail with
@@ -208,7 +225,7 @@ def ship_package(spark: SparkSession) -> None:
     except Py4JError:  # a JVM SparkContext without listFiles()
         pass
 
-    pkg_dir = os.path.dirname(os.path.abspath(pbf2json_spark.__file__))
+    pkg_dir = os.path.join(_PACKAGE_PARENT, "pbf2json_spark")
     zip_path = os.path.join(spark.sparkContext._temp_dir, "pbf2json_spark.zip")
     if not os.path.exists(zip_path):
         with zipfile.ZipFile(zip_path, "w") as zf:
@@ -216,6 +233,6 @@ def ship_package(spark: SparkSession) -> None:
                 for f in files:
                     if f.endswith(".py"):
                         full = os.path.join(root, f)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                        rel = os.path.relpath(full, _PACKAGE_PARENT)
                         zf.write(full, rel)
         spark.sparkContext.addPyFile(zip_path)

@@ -6,6 +6,7 @@ multimodal plumbing shapes."""
 import hashlib
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -68,6 +69,70 @@ def test_minhash_lsh_plan_estimate_failure_raises(spark, docs_df,
     monkeypatch.setattr(dedup, "plan_bytes", broken)
     with pytest.raises(RuntimeError, match="optimizedPlan"):
         dedup.minhash_lsh_pairs(docs_df, tau=0.5)
+
+
+SHINGLE_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "a b a b a b a b",              # repeated n-grams: first occurrence wins
+    "  Mixed   CASE\twhitespace  here ",
+    "two words",
+    "one",
+    "",
+]
+
+
+def _ngram_oracle(text, n):
+    """Distinct word n-grams in first-occurrence order; a text shorter
+    than n tokens is its own single shingle."""
+    toks = " ".join(text.lower().split()).split(" ")
+    if len(toks) < n:
+        return [" ".join(toks)]
+    grams = zip(*(toks[i:] for i in range(n)))
+    return list(dict.fromkeys(" ".join(g) for g in grams))
+
+
+@pytest.mark.parametrize("n", [2, 3, 4])
+def test_shingles_follow_shingle_n(spark, monkeypatch, n):
+    """Both shingle paths, the JVM expression chain (_shingles) and the
+    fused pandas stage (_shingle_mh), build SHINGLE_N-grams.  Other
+    lengths patch the constant, and the pandas stage then runs on the
+    driver (`.func`), where the patch surely applies.  n = 2 and 4 fail
+    while either path hard-codes trigrams."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(SHINGLE_TEXTS)),
+                      "text": SHINGLE_TEXTS}))
+    want = [_ngram_oracle(t, n) for t in SHINGLE_TEXTS]
+    if n == dedup.SHINGLE_N:
+        rows = df.orderBy("doc_id").select(
+            dedup._shingle_mh(dedup._tokens()).alias("smh")).collect()
+        assert [list(r.smh.sh) for r in rows] == want
+    monkeypatch.setattr(dedup, "SHINGLE_N", n)
+    rows = df.orderBy("doc_id").select(
+        dedup._shingles().alias("sh"), dedup._tokens().alias("toks")).collect()
+    assert [list(r.sh) for r in rows] == want
+    fused = dedup._shingle_mh.func(pd.Series([list(r.toks) for r in rows]))
+    assert [list(sh) for sh in fused["sh"]] == want
+
+
+@pytest.mark.parametrize("source", ["local_relation", "parquet"])
+def test_minhash_lsh_widening_probe(spark, monkeypatch, tmp_path, source):
+    """Above 2 MB of estimated text, minhash_lsh_pairs probes the scan's
+    width (inputFiles(), else the RDD's partitions) and widens a narrow
+    corpus; the probe must work on a JVM LocalRelation (no input files)
+    and on a parquet scan, and the pairs must not change.  Passes with
+    or without a broad except around the probe."""
+    docs = spark.createDataFrame(pd.DataFrame(
+        DOCS, columns=["doc_id", "text", "lang", "source", "n_chars"]))
+    if source == "parquet":
+        docs.coalesce(1).write.parquet(str(tmp_path / "docs"))
+        docs = spark.read.parquet(str(tmp_path / "docs"))
+    want = {(r.doc_a, r.doc_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(docs, tau=0.5).collect()}
+    monkeypatch.setattr(dedup, "plan_bytes", lambda df: 3 << 20)
+    got = {(r.doc_a, r.doc_b, r.jaccard)
+           for r in dedup.minhash_lsh_pairs(docs, tau=0.5).collect()}
+    assert got == want
+    assert (0, 4, 1.0) in got
 
 
 def _py_simhash(text):
