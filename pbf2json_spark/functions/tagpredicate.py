@@ -20,29 +20,37 @@ only, pbf2json.go:238,285,371).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def compile_tag_predicate(spec: str, tags_col: str = "tags") -> Column:
-    """'building,amenity~toilets+name' -> Column over a map column."""
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _dnf(spec: str, term) -> Column:
+    """The grammar as one SQL expression (a single parse, not a tree of
+    Column calls); term(key, value_or_None) -> SQL text of one term."""
     if not spec:
         raise ValueError("empty tag spec: you must specify tags to match against")
-    tags = F.col(tags_col)
-    group_exprs = []
+    groups = []
     for group in spec.split(","):
         conds = []
-        for term in group.split("+"):
-            parts = term.split("~")
-            key = parts[0]
-            cond = F.map_contains_key(tags, F.lit(key))
-            if len(parts) > 1:
-                cond = cond & (F.element_at(tags, F.lit(key)) == F.lit(parts[1]))
-            conds.append(cond)
-        group_exprs.append(reduce(lambda a, b: a & b, conds))
-    return reduce(lambda a, b: a | b, group_exprs)
+        for t in group.split("+"):
+            parts = t.split("~")
+            conds.append(term(parts[0], parts[1] if len(parts) > 1 else None))
+        groups.append("(" + " AND ".join(conds) + ")")
+    return F.expr(" OR ".join(groups))
+
+
+def compile_tag_predicate(spec: str, tags_col: str = "tags") -> Column:
+    """'building,amenity~toilets+name' -> Column over a map column."""
+    def term(key, value):
+        cond = f"map_contains_key({tags_col}, {_sql_str(key)})"
+        if value is None:
+            return cond
+        return f"{cond} AND {tags_col}[{_sql_str(key)}] = {_sql_str(value)}"
+    return _dnf(spec, term)
 
 
 def compile_tag_predicate_flat(spec: str, columns: dict[str, str]) -> Column:
@@ -52,30 +60,21 @@ def compile_tag_predicate_flat(spec: str, columns: dict[str, str]) -> Column:
     parquet scan (PushedFilters), which map lookups can never achieve.
     Keys without a promoted column raise — silent fallback would
     silently change scan cost by 100x at scale."""
-    if not spec:
-        raise ValueError("empty tag spec: you must specify tags to match against")
-    group_exprs = []
-    for group in spec.split(","):
-        conds = []
-        for term in group.split("+"):
-            parts = term.split("~")
-            key = parts[0]
-            if key not in columns:
-                raise KeyError(
-                    f"tag key {key!r} has no promoted column; promote it "
-                    f"or use compile_tag_predicate on the map column")
-            col = F.col(columns[key])
-            cond = col.isNotNull()
-            if len(parts) > 1:
-                cond = cond & (col == F.lit(parts[1]))
-            conds.append(cond)
-        group_exprs.append(reduce(lambda a, b: a & b, conds))
-    return reduce(lambda a, b: a | b, group_exprs)
+    def term(key, value):
+        if key not in columns:
+            raise KeyError(
+                f"tag key {key!r} has no promoted column; promote it "
+                f"or use compile_tag_predicate on the map column")
+        col = columns[key]
+        if value is None:
+            return f"{col} IS NOT NULL"
+        return f"{col} IS NOT NULL AND {col} = {_sql_str(value)}"
+    return _dnf(spec, term)
 
 
 def has_tags(tags_col: str = "tags") -> Column:
     """Reference hasTags (pbf2json.go:649-655): non-empty tag map."""
-    return F.size(F.col(tags_col)) > 0
+    return F.expr(f"size({tags_col}) > 0")
 
 
 def trimmed_tags(tags_col: str = "tags") -> Column:
@@ -83,11 +82,8 @@ def trimmed_tags(tags_col: str = "tags") -> Column:
     keys and values (emit-time projection).  Requires the session config
     spark.sql.mapKeyDedupPolicy=LAST_WIN if trimming can collide keys —
     Go's map overwrite is order-nondeterministic there anyway."""
-    c = F.col(tags_col)
-    return F.transform_values(
-        F.transform_keys(c, lambda k, _v: F.trim(k)),
-        lambda _k, v: F.trim(v),
-    )
+    return F.expr(f"transform_values(transform_keys({tags_col}, "
+                  "(k, v) -> trim(k)), (k, v) -> trim(v))")
 
 
 def match_tags_py(tags: dict, spec: str) -> bool:

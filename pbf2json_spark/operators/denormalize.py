@@ -29,15 +29,21 @@ hash join (broadcast or shuffle, AQE decides and splits skew), the
 bitmask semi-joins ARE the inner-join structure + runtime bloom filters,
 and the order-preservation is sort_array over (pos, ...) structs.
 
-Scale notes (the 100 TB shape): the node store projects exactly 4
-columns (id, lat, lon, flags) — column pruning keeps the shuffle at
-~28 bytes/row like the reference's 12-byte records.  The shuffles are
-the refs->store regroup (per way), the relation member->way join and
-one rel_id regroup that applies J2, A5 and J3 as aggregates; all
-AQE-coalesced.  The admin_centre lookup joins only the admin members,
-a small side AQE can broadcast against the store.  The centroid UDAF
-is one Arrow batch pass over already-grouped arrays, and it also
-returns the A5 bbox area, so that rule lives only in geokernels.
+Scale notes (the 100 TB shape): each way is resolved once, as in the
+reference's one cache pass (pbf2json.go:242-375).  The tag-matched ways
+and the ways relation members name (gathered by one regroup of the
+members by way id: the RelWays bitmask) are one set, which goes through
+one refs explode, one node-store join, one regroup per way and one
+centroid UDF pass.  Each resolved way then emits its output roles: its
+own row if it matched, and an A5 candidate per relation member slot it
+fills.  One regroup keyed by output gid merges them with a header row
+per relation (its tags and way-member slots, for J2) and its
+admin_centre nodes (J3).  The node store projects 5 columns (ref, lat,
+lon, ent, whl), near the reference's 12-byte records; the admin_centre
+lookup joins only the admin members, a small side AQE can broadcast.
+The centroid UDF also returns the A5 bbox area, so that rule lives only
+in geokernels.  The fixed expressions are SQL text: building the plan
+takes few driver calls.
 """
 
 from __future__ import annotations
@@ -104,33 +110,77 @@ def make_centroid_bounds_udf(strict_parity: bool = True):
     return centroid_bounds
 
 
+@fresh_pandas_udf(T.ArrayType(T.DoubleType()))
+def _truncate_array_udf(vals: pd.Series) -> pd.Series:
+    return vals.map(lambda a: gk.truncate_coords(np.asarray(a, dtype=np.float64)))
+
+
+# ---------------------------------------------------------------------------
+# the output expressions, as SQL text (one parse each, no Column building)
+# ---------------------------------------------------------------------------
+
+def _fmt7(col: str) -> str:
+    return f"format_string('%.7f', {col})"
+
+
+def _map_of(keys: str, vals: str) -> str:
+    """map<string,string> of the non-null values."""
+    return (f"map_filter(map_from_arrays(array({keys}), array({vals})), "
+            f"(k, v) -> v IS NOT NULL)")
+
+
+def _flag(col: str, ent: str) -> str:
+    """ent/whl as the reference prints them: only with a stored flag byte."""
+    return f"CASE WHEN {ent} >= 0 THEN CAST({col} AS STRING) END"
+
+
+# {lat, lon[, type]} (omits type when '')
+_CENTROID = _map_of("'lat', 'lon', 'type'",
+                    f"{_fmt7('cb.clat')}, {_fmt7('cb.clon')}, "
+                    "CASE WHEN cb.ctype != '' THEN cb.ctype END")
+# J3: the admin_centre node replaces the centroid (pbf2json.go:355-368)
+_ADMIN_CENTROID = _map_of(
+    "'lat', 'lon', 'type', 'entrance', 'wheelchair'",
+    f"{_fmt7('adm.ll[0]')}, {_fmt7('adm.ll[1]')}, 'admin_centre', "
+    f"{_flag('adm.ent', 'adm.ent')}, {_flag('adm.whl', 'adm.ent')}")
+_BOUNDS = ("map_from_arrays(array('n', 's', 'e', 'w'), "
+           f"transform(array(cb.n, cb.s, cb.e, cb.w), x -> {_fmt7('x')}))")
+# the --waynodes array: [{lat,lon[,entrance,wheelchair]}] strings, from
+# the cache codec (so truncated + %.7f, pbf2json.go:498-522)
+_WAYNODES = ("transform(pts.lats, (la, i) -> " + _map_of(
+    "'lat', 'lon', 'entrance', 'wheelchair'",
+    f"{_fmt7('la')}, {_fmt7('pts.lons[i]')}, "
+    f"{_flag('pts.ents[i]', 'pts.ents[i]')}, "
+    f"{_flag('pts.whls[i]', 'pts.ents[i]')}") + ")")
+
+
+def _lower(key: str) -> str:
+    """tags[key] lower-cased over ASCII only.  Only ASCII case variants
+    lower-case to the ASCII words compared below, so this equals
+    lower(), which would first build ICU's case tables (~1.5 s of one
+    task's CPU, once per JVM, with the other tasks blocked on it)."""
+    return (f"translate(tags['{key}'], 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', "
+            "'abcdefghijklmnopqrstuvwxyz')")
+
+
 # ---------------------------------------------------------------------------
 # node store projection (the LevelDB-record equivalent)
 # ---------------------------------------------------------------------------
 
 def node_store(nodes: DataFrame) -> DataFrame:
     """Project nodes to the reference's cache record: (ref, lat, lon,
-    ent, whl).  ent/whl mirror the flag byte: ent is the entrance class
-    when > 0, else -1 meaning 'no flag byte stored'
-    (pbf2json.go:536-548); whl is only stored alongside an entrance."""
-    ent_raw = (
-        F.when(F.lower(F.element_at("tags", F.lit("entrance"))) == "main", 2)
-         .when(F.lower(F.element_at("tags", F.lit("entrance")))
-                .isin("yes", "home", "staircase"), 1)
-         .otherwise(0)
-    )
-    whl_raw = (
-        F.when(F.lower(F.element_at("tags", F.lit("wheelchair"))) == "yes", 2)
-         .when(F.lower(F.element_at("tags", F.lit("wheelchair"))) == "no", 0)
-         .when(F.element_at("tags", F.lit("wheelchair")).isNotNull(), 1)
-         .otherwise(0)
-    )
-    return nodes.select(
-        F.col("id").alias("ref"),
-        "lat", "lon",
-        F.when(ent_raw > 0, ent_raw).otherwise(F.lit(-1)).alias("ent"),
-        F.when(ent_raw > 0, whl_raw).otherwise(F.lit(-1)).alias("whl"),
-    )
+    ent, whl).  ent/whl mirror the flag byte (pbf2json.go:536-548): ent
+    is the entrance class (2 main, 1 yes/home/staircase), else -1
+    meaning 'no flag byte stored'; whl is only stored alongside an
+    entrance."""
+    ent, whl = _lower("entrance"), _lower("wheelchair")
+    return nodes.selectExpr(
+        "id AS ref", "lat", "lon",
+        f"CASE {ent} WHEN 'main' THEN 2 WHEN 'yes' THEN 1 WHEN 'home' THEN 1"
+        " WHEN 'staircase' THEN 1 ELSE -1 END AS ent",
+        f"CASE WHEN {ent} IN ('main', 'yes', 'home', 'staircase') THEN "
+        f"CASE {whl} WHEN 'yes' THEN 2 WHEN 'no' THEN 0 "
+        "ELSE IF(tags['wheelchair'] IS NULL, 0, 1) END ELSE -1 END AS whl")
 
 
 # ---------------------------------------------------------------------------
@@ -139,9 +189,11 @@ def node_store(nodes: DataFrame) -> DataFrame:
 
 def way_point_arrays(ways: DataFrame, store: DataFrame,
                      salt_hot_refs: int = 0) -> DataFrame:
-    """(id, tags, nrefs, npts, lats, lons, ents, whls) — one row per way
-    that resolved AT LEAST one node; npts < nrefs marks an incomplete
-    way (J1 dropped downstream; J2 treats it as a failed member).
+    """(id, <the other columns of ways>, nrefs, npts, lats, lons, ents,
+    whls) — one row per way that resolved AT LEAST one node; npts <
+    nrefs marks an incomplete way (J1 dropped downstream; J2 treats it
+    as a failed member).  Every column of `ways` but id and refs rides
+    along (first per way).
 
     salt_hot_refs > 0 switches the refs->node-store lookup join to the
     explicit salted form (plans/salting.py) with that many salts — for
@@ -150,62 +202,119 @@ def way_point_arrays(ways: DataFrame, store: DataFrame,
     is too large to broadcast.  Default off: AQE's skew split covers
     the partition-level case and the salting pass adds a hot-key
     detection job."""
-    refs = ways.select(
-        "id", "tags",
-        F.size("refs").alias("nrefs"),
-        F.posexplode("refs").alias("pos", "ref"),
-    )
+    carry = [c for c in ways.columns if c not in ("id", "refs")]
+    refs = ways.selectExpr("id", *carry, "size(refs) AS nrefs",
+                           "posexplode(refs) AS (pos, ref)")
     if salt_hot_refs:
         from ..plans.salting import salted_equijoin
         joined = salted_equijoin(refs, store, "ref", n_salts=salt_hot_refs,
                                  sample_fraction=0.01)
     else:
         joined = refs.join(store, "ref")  # inner: missing nodes vanish
-    return (
-        joined.groupBy("id")
-        .agg(
-            F.first("tags").alias("tags"),
-            F.first("nrefs").alias("nrefs"),
-            F.sort_array(F.collect_list(
-                F.struct("pos", "lat", "lon", "ent", "whl"))).alias("pts"),
-        )
-        .select(
-            "id", "tags", "nrefs",
-            F.size("pts").alias("npts"),
-            F.col("pts.lat").alias("lats"),
-            F.col("pts.lon").alias("lons"),
-            F.col("pts.ent").alias("ents"),
-            F.col("pts.whl").alias("whls"),
-        )
-    )
+    return joined.groupBy("id").agg(
+        *(F.expr(f"first({c}) AS {c}") for c in carry + ["nrefs"]),
+        F.expr("sort_array(collect_list(struct(pos, lat, lon, ent, whl))) "
+               "AS pts"),
+    ).selectExpr("id", *carry, "nrefs", "size(pts) AS npts",
+                 "pts.lat AS lats", "pts.lon AS lons", "pts.ent AS ents",
+                 "pts.whl AS whls")
 
 
-def _attach_centroid_bounds(arr: DataFrame, strict_parity: bool) -> DataFrame:
-    udf = make_centroid_bounds_udf(strict_parity)
-    return arr.withColumn("cb", udf("lats", "lons", "ents", "whls"))
+# ---------------------------------------------------------------------------
+# the one way resolution behind every way and relation output
+# ---------------------------------------------------------------------------
 
-
-def _fmt7(col):
-    return F.format_string("%.7f", col)
-
-
-def _centroid_map(cb):
-    """{lat, lon[, type]} as map<string,string> (omits type when '')."""
-    return F.map_filter(
-        F.map_from_arrays(
-            F.array(F.lit("lat"), F.lit("lon"), F.lit("type")),
-            F.array(_fmt7(cb.clat), _fmt7(cb.clon),
-                    F.when(cb.ctype != "", cb.ctype)),
-        ),
-        lambda _k, v: v.isNotNull(),
-    )
-
-
-def _bounds_map(cb):
-    return F.map_from_arrays(
-        F.array(F.lit("n"), F.lit("s"), F.lit("e"), F.lit("w")),
-        F.array(_fmt7(cb.n), _fmt7(cb.s), _fmt7(cb.e), _fmt7(cb.w)),
-    )
+def _denormalize(nodes: DataFrame, ways: DataFrame,
+                 relations: DataFrame | None, tag_spec: str,
+                 match_ways: bool, waynodes: bool, strict_parity: bool,
+                 salt_hot_refs: int) -> DataFrame:
+    """Way rows (when match_ways) and relation rows (when relations is
+    given): id, type, tags, centroid, bounds[, nodes].  Ways are
+    resolved once, whichever outputs need them."""
+    store = node_store(nodes)
+    matched = has_tags() & compile_tag_predicate(tag_spec)
+    ways = ways.select("id", "refs", "tags",
+                       (matched if match_ways else F.lit(False))
+                       .alias("matched"))
+    # the output roles a resolved way fills: its own row (rel_id null)
+    # and one A5 candidate slot per relation member naming it
+    targets = ("IF(matched, array(named_struct('rel_id', CAST(NULL AS "
+               "BIGINT), 'mpos', 0)), array())")
+    if relations is None:
+        ways = ways.where("matched")
+    else:
+        # P9 + tag match (index pass, pbf2json.go:142-154)
+        rels = relations.where(
+            matched & F.expr("exists(members, m -> m.type = 1)"))
+        memb = rels.selectExpr("id AS rel_id", "tags",
+                               "posexplode(members) AS (mpos, m)")
+        # the RelWays 'bitmask': only ways actually referenced resolve
+        refd = memb.where("m.type = 1").groupBy(F.expr("m.ref AS id")) \
+            .agg(F.expr("collect_list(struct(rel_id, mpos)) AS rels"))
+        ways = ways.join(refd, "id", "left") \
+            .where("matched OR rels IS NOT NULL")
+        targets = f"concat({targets}, coalesce(rels, array()))"
+    arr = way_point_arrays(ways, store, salt_hot_refs) \
+        .where("npts = nrefs")  # J1; an incomplete member is a J2 miss
+    arr = arr.withColumn("cb", make_centroid_bounds_udf(strict_parity)(
+        "lats", "lons", "ents", "whls"))
+    if waynodes and strict_parity:
+        arr = arr.withColumns({"lats": _truncate_array_udf("lats"),
+                               "lons": _truncate_array_udf("lons")})
+    # A5 candidates rank by (area, -mpos): ties on area fall to the
+    # larger -mpos, i.e. Go's first max (pbf2json.go:342)
+    pts = ("'pts', IF(t.rel_id IS NULL, named_struct('lats', lats, 'lons', "
+           "lons, 'ents', ents, 'whls', whls), NULL), " if waynodes else "")
+    roles = arr.selectExpr(
+        f"inline(transform({targets}, t -> named_struct("
+        "'type', IF(t.rel_id IS NULL, 'way', 'relation'), "
+        "'id', coalesce(t.rel_id, id), "
+        "'tags', IF(t.rel_id IS NULL, tags, NULL), " + pts +
+        "'cand', named_struct('area', cb.area, 'neg_mpos', -t.mpos, "
+        "'cb', cb))))")
+    centroid = _CENTROID
+    if relations is None:
+        out = roles.selectExpr("*", "cand.cb AS cb")
+    else:
+        # one header per relation: its tags and way-member slots
+        header = rels.selectExpr(
+            "'relation' AS type", "id", "tags",
+            "filter(transform(members, (m, i) -> IF(m.type = 1, i, NULL)),"
+            " i -> i IS NOT NULL) AS members")
+        # J3: the first *resolvable* admin_centre node (pbf2json.go:355-368)
+        adm = memb.where(
+            "tags['boundary'] = 'administrative' AND m.type = 0 "
+            "AND m.role = 'admin_centre'").selectExpr(
+            "'relation' AS type", "rel_id AS id", "mpos", "m.ref AS ref") \
+            .join(store, "ref")
+        ll = F.expr("array(lat, lon)")
+        adm = adm.select("type", "id", F.struct(
+            "mpos", (_truncate_array_udf(ll) if strict_parity else ll)
+            .alias("ll"), "ent", "whl").alias("adm"))
+        out = roles.unionByName(header, allowMissingColumns=True) \
+            .unionByName(adm, allowMissingColumns=True) \
+            .groupBy("type", "id").agg(
+                F.expr("first(tags, true) AS tags"),
+                F.expr("collect_list(cand) AS cands"),
+                F.expr("min(adm) AS adm"),
+                # J2's first failed way member: a member slot no
+                # complete way filled (pbf2json.go:387-406)
+                F.expr("array_min(array_except(first(members, true), "
+                       "collect_list(-cand.neg_mpos))) AS first_miss"),
+                *([F.expr("first(pts, true) AS pts")] if waynodes else []))
+        cands = "cands"
+        if strict_parity:
+            # J2: truncate at the first failed way member (pbf2json.go:397-399)
+            cands = ("filter(cands, c -> first_miss IS NULL "
+                     "OR -c.neg_mpos < first_miss)")
+        out = out.selectExpr("*", f"array_max({cands}).cb AS cb") \
+            .where("cb IS NOT NULL")
+        centroid = f"CASE WHEN adm IS NULL THEN {_CENTROID} " \
+                   f"ELSE {_ADMIN_CENTROID} END"
+    return out.select(
+        "id", "type", trimmed_tags().alias("tags"),
+        F.expr(centroid).alias("centroid"), F.expr(_BOUNDS).alias("bounds"),
+        *([F.expr(_WAYNODES).alias("nodes")] if waynodes else []))
 
 
 # ---------------------------------------------------------------------------
@@ -231,146 +340,18 @@ def denormalize_ways(nodes: DataFrame, ways: DataFrame, tag_spec: str,
     """Way output rows (pbf2json.go:271-292): id, type, tags, centroid,
     bounds[, nodes].  Ways failing to fully denormalize are dropped.
     salt_hot_refs > 0 salts the node-lookup join (plans/salting.py)."""
-    matched = ways.filter(has_tags() & compile_tag_predicate(tag_spec))
-    arr = way_point_arrays(matched, node_store(nodes), salt_hot_refs)
-    complete = arr.filter(F.col("npts") == F.col("nrefs"))
-    cb = _attach_centroid_bounds(complete, strict_parity)
-    if waynodes and strict_parity:
-        cb = (cb.withColumn("t_lats", _truncate_array_udf("lats"))
-                .withColumn("t_lons", _truncate_array_udf("lons")))
-    out = cb.select(
-        "id", F.lit("way").alias("type"),
-        trimmed_tags().alias("tags"),
-        _centroid_map(F.col("cb")).alias("centroid"),
-        _bounds_map(F.col("cb")).alias("bounds"),
-        *(_waynodes_col(strict_parity) if waynodes else []),
-    )
-    return out
-
-
-def _waynodes_col(strict_parity: bool):
-    """The --waynodes array: [{lat,lon[,entrance,wheelchair]}] strings,
-    from the cache codec (so truncated + %.7f, pbf2json.go:498-522)."""
-    if strict_parity:
-        lat_arr, lon_arr = F.col("t_lats"), F.col("t_lons")
-    else:
-        lat_arr, lon_arr = F.col("lats"), F.col("lons")
-    nodes_arr = F.zip_with(
-        F.zip_with(lat_arr, lon_arr, lambda a, b: F.struct(
-            a.alias("lat"), b.alias("lon"))),
-        F.zip_with(F.col("ents"), F.col("whls"), lambda e, w: F.struct(
-            e.alias("ent"), w.alias("whl"))),
-        lambda p, f: F.map_filter(
-            F.map_from_arrays(
-                F.array(F.lit("lat"), F.lit("lon"),
-                        F.lit("entrance"), F.lit("wheelchair")),
-                F.array(_fmt7(p.lat), _fmt7(p.lon),
-                        F.when(f.ent >= 0, f.ent.cast("string")),
-                        F.when(f.ent >= 0, f.whl.cast("string"))),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ),
-    ).alias("nodes")
-    return [nodes_arr]
-
-
-_TRUNC_SCHEMA = T.ArrayType(T.DoubleType())
-
-
-@fresh_pandas_udf(_TRUNC_SCHEMA)
-def _truncate_array_udf(vals: pd.Series) -> pd.Series:
-    return vals.map(lambda a: gk.truncate_coords(np.asarray(a, dtype=np.float64)))
+    return _denormalize(nodes, ways, None, tag_spec, True, waynodes,
+                        strict_parity, salt_hot_refs)
 
 
 def denormalize_relations(nodes: DataFrame, ways: DataFrame,
                           relations: DataFrame, tag_spec: str,
                           strict_parity: bool = True,
                           salt_hot_refs: int = 0) -> DataFrame:
-    """Relation output rows (pbf2json.go:310-374): one member explode,
-    a way lookup and an admin_centre node lookup, then one rel_id
-    aggregate applies J2, A5 and J3."""
-    store = node_store(nodes)
-
-    # P9 + tag match (index pass, pbf2json.go:142-154)
-    rels = relations.filter(
-        has_tags() & compile_tag_predicate(tag_spec)
-        & F.exists("members", lambda m: m["type"] == 1)
-    )
-    memb = rels.select(
-        F.col("id").alias("rel_id"), "tags",
-        F.posexplode("members").alias("mpos", "m"),
-    )
-    way_members = memb.filter(F.col("m.type") == 1).select(
-        "rel_id", "tags", "mpos", F.col("m.ref").alias("way_id"))
-    admin_members = memb.filter(
-        (F.element_at("tags", F.lit("boundary")) == "administrative")
-        & (F.col("m.type") == 0) & (F.col("m.role") == "admin_centre")
-    ).select("rel_id", "mpos", F.col("m.ref").alias("ref"))
-
-    # the RelWays 'bitmask': only ways actually referenced get resolved;
-    # centroid/bounds are computed once per way, not per member instance
-    rel_ways = ways.join(
-        way_members.select(F.col("way_id").alias("id")), "id", "leftsemi")
-    arr = way_point_arrays(rel_ways, store, salt_hot_refs) \
-        .withColumnRenamed("id", "way_id")
-    arr = _attach_centroid_bounds(arr, strict_parity) \
-        .select("way_id", "nrefs", "npts", "cb")
-
-    failed = F.col("npts").isNull() | (F.col("npts") != F.col("nrefs"))
-    way_rows = way_members.join(arr, "way_id", "left").select(
-        "rel_id", "tags",
-        F.when(failed, F.col("mpos")).alias("miss"),
-        # A5 candidate; ties on area fall to the larger -mpos, i.e. Go's
-        # first max (pbf2json.go:342)
-        F.when(~failed, F.struct(F.col("cb.area").alias("area"),
-                                 (-F.col("mpos")).alias("neg_mpos"), "cb"))
-        .alias("cand"))
-    # J3: the first *resolvable* admin_centre node (pbf2json.go:355-368)
-    admin_rows = admin_members.join(store, "ref").select(
-        "rel_id", F.struct("mpos", "lat", "lon", "ent", "whl").alias("adm"))
-
-    out = way_rows.unionByName(admin_rows, allowMissingColumns=True) \
-        .groupBy("rel_id").agg(
-            F.first("tags", ignorenulls=True).alias("tags"),
-            F.min("miss").alias("first_miss"),
-            F.collect_list("cand").alias("cands"),
-            F.min("adm").alias("adm"))
-    cands = F.col("cands")
-    if strict_parity:
-        # J2: truncate at the first failed way member (pbf2json.go:397-399)
-        cands = F.filter(cands, lambda c: F.col("first_miss").isNull()
-                         | (-c["neg_mpos"] < F.col("first_miss")))
-    out = out.withColumn("cb", F.array_max(cands)["cb"]) \
-        .filter(F.col("cb").isNotNull())
-
-    a_lat, a_lon = F.col("adm.lat"), F.col("adm.lon")
-    if strict_parity:
-        a_lat, a_lon = _trunc_scalar(a_lat), _trunc_scalar(a_lon)
-    a_ent, a_whl = F.col("adm.ent"), F.col("adm.whl")
-    admin_centroid = F.map_filter(
-        F.map_from_arrays(
-            F.array(F.lit("lat"), F.lit("lon"), F.lit("type"),
-                    F.lit("entrance"), F.lit("wheelchair")),
-            F.array(_fmt7(a_lat), _fmt7(a_lon), F.lit("admin_centre"),
-                    F.when(a_ent >= 0, a_ent.cast("string")),
-                    F.when(a_ent >= 0, a_whl.cast("string"))),
-        ),
-        lambda _k, v: v.isNotNull(),
-    )
-
-    return out.select(
-        F.col("rel_id").alias("id"),
-        F.lit("relation").alias("type"),
-        trimmed_tags().alias("tags"),
-        F.when(F.col("adm").isNotNull(), admin_centroid)
-         .otherwise(_centroid_map(F.col("cb"))).alias("centroid"),
-        _bounds_map(F.col("cb")).alias("bounds"),
-    )
-
-
-@fresh_pandas_udf(T.DoubleType())
-def _trunc_scalar(v: pd.Series) -> pd.Series:
-    return pd.Series(gk.truncate_coords(v.to_numpy(dtype=np.float64)))
+    """Relation output rows (pbf2json.go:310-374): id, type, tags,
+    centroid, bounds.  J2, A5 and J3 are aggregates of one regroup."""
+    return _denormalize(nodes, ways, relations, tag_spec, False, False,
+                        strict_parity, salt_hot_refs)
 
 
 def run_pipeline(nodes: DataFrame, ways: DataFrame, relations: DataFrame,
@@ -379,17 +360,12 @@ def run_pipeline(nodes: DataFrame, ways: DataFrame, relations: DataFrame,
                  salt_hot_refs: int = 0) -> DataFrame:
     """The full reference job: matched nodes + denormalized ways +
     denormalized relations, keyed by gid (test/end-to-end.js:28)."""
-    n = matched_nodes(nodes, tag_spec).select(
-        F.concat(F.col("type"), F.lit(":"), F.col("id")).alias("gid"),
-        F.to_json(F.struct("id", "type", "lat", "lon", "tags")).alias("json"))
-    w = denormalize_ways(nodes, ways, tag_spec, waynodes, strict_parity,
-                         salt_hot_refs)
-    w = w.select(
-        F.concat(F.col("type"), F.lit(":"), F.col("id")).alias("gid"),
-        F.to_json(F.struct(*[F.col(c) for c in w.columns])).alias("json"))
-    r = denormalize_relations(nodes, ways, relations, tag_spec, strict_parity,
-                              salt_hot_refs)
-    r = r.select(
-        F.concat(F.col("type"), F.lit(":"), F.col("id")).alias("gid"),
-        F.to_json(F.struct("id", "type", "tags", "centroid", "bounds")).alias("json"))
-    return n.unionByName(w).unionByName(r)
+    n = matched_nodes(nodes, tag_spec).selectExpr(
+        "concat(type, ':', id) AS gid",
+        "to_json(struct(id, type, lat, lon, tags)) AS json")
+    wr = _denormalize(nodes, ways, relations, tag_spec, True, waynodes,
+                      strict_parity, salt_hot_refs).selectExpr(
+        "concat(type, ':', id) AS gid",
+        "to_json(struct(id, type, tags, centroid, bounds"
+        f"{', nodes' if waynodes else ''})) AS json")
+    return n.unionByName(wr)

@@ -111,6 +111,15 @@ def build_session(app_name: str = "pbf2json-spark",
         # trimTags can collide keys after whitespace strip; Go map insert
         # order is nondeterministic there, LAST_WIN is our deterministic pick
         "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+        # generated-code cache, sized to hold a whole job's classes.  At
+        # Spark's default of 100 entries (an LRU in 4 segments of 25) a
+        # benchmark raster_osm job compiles 97 classes, and each later
+        # job recompiled 43 of them (0.3-0.6 s of Janino plus their
+        # JIT); at 1,000 it recompiles none.  A full cache costs ~26 KB
+        # of heap and ~5 KB of metaspace per entry (1,800 small
+        # compiles: +23 MB heap over a full 100-entry cache), small
+        # against the 8g driver
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": "8g",

@@ -7,16 +7,21 @@ runtime jar, so TableIO abstracts the two backends behind one surface:
   configured (probed at runtime, used transparently on a real cluster);
 - ``parquet-dir`` fallback with an identical logical layout plus a
   ``_manifest.json`` carrying what Iceberg's snapshot metadata would:
-  schema, row count, per-partition lineage (written file -> row count,
-  derived at read time — no internal column is added to the stored
-  schema), and the content key used for idempotent stage resume.
+  schema, row count, per-partition lineage (written file -> row count)
+  and the content key used for idempotent stage resume.
 
 Every write records per-partition row counts — the "per-partition
 lineage + metrics" the north rule requires each stage to checkpoint.
+The parquet-dir backend reads them from the written files' parquet
+footers, keyed by path relative to the table directory (the file name
+when unpartitioned): no internal column, no re-scan job.  Its manifest
+records the schema a reader sees, and ``read`` applies it, so neither
+the write nor the read-back infers a schema from the files.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -25,6 +30,7 @@ import time
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class TableIO:
@@ -70,12 +76,8 @@ class TableIO:
         raise FileNotFoundError(f"no manifest for table {name!r}")
 
     def _lineage(self, out: DataFrame) -> dict:
-        """Per-partition row counts of the MATERIALIZED table, keyed by
-        the written file (basename) — derived at read time from
-        input_file_name(), so the user-visible table schema never
-        carries an internal lineage column (round-2 review: a stored
-        `_part` column leaked into every non-TableIO reader and
-        disagreed with the manifest's declared schema)."""
+        """Iceberg: per-file row counts of the materialized table, keyed
+        by file basename, from input_file_name() at read time."""
         fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
         rows = (out.groupBy(fname.alias("_file")).count().collect())
         lineage = {str(r["_file"]): r["count"] for r in rows}
@@ -84,6 +86,17 @@ class TableIO:
                     .count().collect())
             lineage = {str(r["_p"]): r["count"] for r in rows}
         return lineage
+
+    @staticmethod
+    def _footer_lineage(path: str) -> dict:
+        """parquet-dir: rows per non-empty written file, from its footer,
+        keyed by its path relative to the table directory."""
+        import pyarrow.parquet as pq
+        files = glob.glob(os.path.join(path, "**", "*.parquet"),
+                          recursive=True)
+        rows = {os.path.relpath(f, path): pq.read_metadata(f).num_rows
+                for f in sorted(files)}
+        return {f: n for f, n in rows.items() if n}
 
     def write(self, df: DataFrame, name: str, content_key: str = "",
               partition_by: list[str] | None = None) -> dict:
@@ -100,6 +113,7 @@ class TableIO:
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
             out = spark.read.table(full)
+            lineage, schema = self._lineage(out), out.schema
         else:
             path = self._path(name)
             tmp = path + ".__tmp__"
@@ -108,11 +122,13 @@ class TableIO:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(tmp)
-            # per-partition lineage from the written data (one extra scan
-            # of the materialized output, not a recompute of the input plan)
-            out = spark.read.parquet(tmp)
-
-        lineage = self._lineage(out)
+            lineage = self._footer_lineage(tmp)
+            # the read-back schema (data columns nullable, partition
+            # columns typed from the directory names): given the data
+            # columns, Spark lists the files but runs no inference job
+            data = T.StructType([f for f in df.schema.fields
+                                 if f.name not in (partition_by or ())])
+            schema = spark.read.schema(data).parquet(tmp).schema
         manifest = {
             "backend": "iceberg" if iceberg else "parquet-dir",
             "name": name,
@@ -120,7 +136,7 @@ class TableIO:
             "rows": sum(lineage.values()),
             "partitions": len(lineage),
             "partition_rows": lineage,
-            "schema": out.schema.jsonValue(),
+            "schema": schema.jsonValue(),
             "written_at": time.time(),
         }
         if iceberg:
@@ -145,4 +161,5 @@ class TableIO:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         if self._iceberg_available(spark):
             return spark.read.table(f"{self.catalog}.{name}")
-        return spark.read.parquet(self._path(name))
+        schema = T.StructType.fromJson(self.manifest(name)["schema"])
+        return spark.read.schema(schema).parquet(self._path(name))

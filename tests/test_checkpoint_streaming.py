@@ -153,6 +153,53 @@ def test_tableio_partitioned_write_prunes_at_scan(spark, tmp_path):
     assert rd.count() == 250
 
 
+def test_tableio_partitioned_lineage_counts_every_file(spark, tmp_path):
+    """Partitioned lineage keys each written file by its path relative
+    to the table directory: same-named part files of different partition
+    directories stay apart, so `partitions` equals the parquet files on
+    disk and `rows` still sums."""
+    tio = TableIO(str(tmp_path / "tables"))
+    df = spark.range(0, 2000).select(
+        F.col("id"), (F.col("id") % 8).alias("coarse_cell"))
+    man = tio.write(df, "pts", content_key="k1",
+                    partition_by=["coarse_cell"])
+    root = tmp_path / "tables" / "pts"
+    files = {str(p.relative_to(root)) for p in root.rglob("*.parquet")}
+    assert man["partitions"] == len(files) == len(man["partition_rows"])
+    assert set(man["partition_rows"]) == files
+    assert man["rows"] == sum(man["partition_rows"].values()) == 2000
+
+
+def test_tableio_write_and_resume_run_no_extra_jobs(spark, tmp_path):
+    """The parquet-dir write runs only the data write's own jobs (lineage
+    comes from the parquet footers, the schema from the writer), and a
+    stage's read-back applies the manifest schema: no schema-inference
+    job before the caller's own action."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(group, fn):
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    df = spark.range(1000).withColumn("x", F.col("id") * 2)
+    _, plain = jobs("plain", lambda: df.write.parquet(str(tmp_path / "p")))
+    io = TableIO(str(tmp_path / "ck"))
+    runner = CheckpointRunner(spark, io)
+    (back, _), staged = jobs("stage", lambda: runner.stage(
+        "s", {}, [], lambda: df))
+    assert staged == plain
+    (back2, _), resumed = jobs("resume", lambda: CheckpointRunner(
+        spark, io).stage("s", {}, [], lambda: df))
+    assert resumed == 0 and runner.metrics["s"]["resumed"] is False
+    assert back.schema == back2.schema
+    assert back.schema.jsonValue() == io.manifest("s")["schema"]
+    assert back2.count() == 1000
+
+
 def test_streaming_first_seen_dedup_across_batches(spark, tmp_path):
     """Stateful streaming dedup: keys first seen in batch 1 are
     suppressed in batch 2 (state survives via the streaming

@@ -180,3 +180,88 @@ def test_relation_rules_fixture(spark, rule_tables, strict):
                 oracle_pipeline(*pdfs, FIXTURE_SPEC).items()
                 if g.startswith("relation:")}
         assert got == want
+
+
+def test_node_store_flags_fold_case_like_the_oracle(spark):
+    """node_store's flag byte over case variants and non-ASCII
+    look-alikes of the entrance/wheelchair words equals the Python
+    oracle's (str.lower() in geokernels)."""
+    from pbf2json_spark.functions import geokernels as gk
+    ents = ["main", "MAIN", "Main", "YeS", "home", "HOME", "StairCase",
+            "exit", "", None, "ma\u0131n", "MA\u0130N", "\uff2d\uff21\uff29\uff2e",
+            "main "]
+    whls = ["yes", "YES", "No", "limited", "", None, "\uff39\uff25\uff33"]
+    rows, want = [], {}
+    for i, (e, w) in enumerate((e, w) for e in ents for w in whls):
+        tags = {k: v for k, v in (("entrance", e), ("wheelchair", w)) if v is not None}
+        rows.append((i, 0.0, 0.0, tags))
+        ent = gk.entrance_class(e)
+        want[i] = (ent if ent > 0 else -1,
+                   gk.wheelchair_class(w) if ent > 0 else -1)
+    nodes = spark.createDataFrame(rows, synth.spark_schemas()["nodes"])
+    got = {r.ref: (r.ent, r.whl) for r in dn.node_store(nodes).collect()}
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# the one way resolution: output bytes, plan shape and driver budget
+# ---------------------------------------------------------------------------
+
+# sha256 prefix of the sorted "gid\tjson" lines of run_pipeline over the
+# module tables, per (strict_parity, waynodes): the output bytes any
+# plan change must keep
+PINNED_SPEC = "boundary~administrative,building"
+PINNED = {(True, False): (263, "794382133f5bc2de"),
+          (True, True): (263, "d693a904601919c9"),
+          (False, False): (265, "dc8897033858823f"),
+          (False, True): (265, "1b344bc5ec42881a")}
+
+
+@pytest.mark.parametrize("strict,waynodes", sorted(PINNED))
+def test_pipeline_output_bytes_pinned(spark, tables, strict, waynodes):
+    import hashlib
+    _, (nodes, ways, rels) = tables
+    rows = sorted((r.gid, r.json) for r in dn.run_pipeline(
+        nodes, ways, rels, PINNED_SPEC, waynodes=waynodes,
+        strict_parity=strict).collect())
+    digest = hashlib.sha256("\n".join(
+        f"{g}\t{j}" for g, j in rows).encode()).hexdigest()
+    assert (len(rows), digest[:16]) == PINNED[(strict, waynodes)]
+
+
+def test_pipeline_resolves_each_way_once(spark, tables):
+    """The executed plan (AQE's final plan) explodes refs once and runs
+    the centroid UDF once, for matched and relation-member ways alike."""
+    _, (nodes, ways, rels) = tables
+    df = dn.run_pipeline(nodes, ways, rels, "building,shop")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Generate posexplode(refs") == 1, final
+    assert final.count("ArrowEvalPython [centroid_bounds(") == 1, final
+
+
+def test_pipeline_driver_budget(spark, tables):
+    """Building the run_pipeline DataFrame takes at most 1,000 py4j round
+    trips: its fixed expressions are SQL text, not trees of Column
+    calls (one round trip or more per call)."""
+    import gc
+
+    import py4j.clientserver as cs
+    _, (nodes, ways, rels) = tables
+    send = cs.ClientServerConnection.send_command
+    calls = []
+
+    def counted(conn, command):
+        calls.append(command[:1])
+        return send(conn, command)
+    dn.run_pipeline(nodes, ways, rels, "building,shop")  # warm the caches
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = counted
+    try:
+        dn.run_pipeline(nodes, ways, rels, "building,shop")
+    finally:
+        cs.ClientServerConnection.send_command = send
+        gc.enable()
+    assert len(calls) <= 1000, len(calls)

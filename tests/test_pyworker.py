@@ -241,7 +241,6 @@ def test_engine_udfs_survive_a_session_restart(tmp_path):
                 {{"doc_id": [0, 1], "text": ["a b c d", "a b c e"],
                   "x": [1.123456789, -2.5]}}))
             got = docs.select(
-                denormalize._trunc_scalar("x"),
                 denormalize._truncate_array_udf(F.array("x")),
                 dedup._shingle_mh(dedup._tokens())).collect()
             print("ROWS", got,
