@@ -69,7 +69,7 @@ def run_knn(master, n_images=120_000, n_queries=20_000):
     best = float("inf")
     for _ in range(reps):
         t0 = time.perf_counter()
-        n = knn(geo, queries, k=10, res=12, initial_ring=2).count()
+        n = knn(geo, queries, k=10, initial_ring=2).count()
         best = min(best, time.perf_counter() - t0)
     return spark, {"workload": "knn", "master": master, "cores": cores,
                    "n_images": n_images, "n_queries": n_queries,

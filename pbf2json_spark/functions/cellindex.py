@@ -3,31 +3,36 @@
 Neither `h3` nor `s2sphere` is installable in this environment (SURVEY.md
 §7), so the engine ships its own deterministic hierarchical cell codec
 with the same *roles* the north rule assigns to H3 (res 7-12) and S2
-coverings (repo BASELINE.json:6):
+coverings (repo BASELINE.json:6).  Two families, each one codec plus
+its coverings:
 
-- `cell_id(lat, lon, res)` — int64 cell at resolution `res` (0..26).
-  The grid at res r is 2^r latitude rows x 2^(r+1) longitude columns of
-  equal-degree cells (~squares at the equator; res 7 ~ 1.4deg, res 12 ~
-  0.04deg ~ 4.9 km, halving per res).  Ids pack (res, Morton(i, j)) so
-  sorting by id gives Z-order spatial locality — the property Iceberg/
-  Parquet layouts exploit for partition pruning.
-- containment is hierarchical: `parent(cell)` truncates Morton bits,
-  and a point's res-r cell is always a descendant of its res-(r-1) cell
-  (property-tested).
-- `disk(cells, k)` — the (2k+1)^2 neighbourhood with longitude wrap and
-  latitude clamping (the H3 k_ring role, used for kNN expansion).
-- `cover_bbox` / `cover_polygon` — the S2 covering role: the set of
-  res-r cells intersecting a bbox / polygon (superset guarantee for the
-  polygon interior; used as the PIP equi-join prefilter).
-- `disk_exit_distance_m` — a conservative lower bound on the distance
-  from a query point to anything *outside* its k-disk; this is the kNN
-  termination guarantee (escalate k until kth-candidate distance is
-  below it).
+- equirect: `cell_id(lat, lon, res)` — int64 cell at resolution `res`
+  (0..26).  The grid at res r is 2^r latitude rows x 2^(r+1) longitude
+  columns of equal-degree cells (~squares at the equator; res 7 ~
+  1.4deg, res 12 ~ 0.04deg ~ 4.9 km, halving per res).  Ids pack (res,
+  Morton(i, j)) so sorting by id gives Z-order spatial locality — the
+  property Iceberg/Parquet layouts exploit for partition pruning.
+  Containment is hierarchical: `parent(cell)` truncates Morton bits, and
+  a point's res-r cell is always a descendant of its res-(r-1) cell
+  (property-tested).  `cover_bbox` / `cover_polygon` are the S2
+  covering role: the set of res-r cells intersecting a bbox / polygon
+  (superset guarantee for the polygon interior; the PIP equi-join
+  prefilter).
+- quad-sphere: `s2_cell_id` / `s2_decode` / `s2_parent` and
+  `s2_cover_bbox` / `s2_cover_polygon`, the same roles on the six
+  faces of a cube (near-uniform cell ground area; see below).
+
+`disk(cells, k)` (the (2k+1)^2 neighbourhood with longitude wrap and
+latitude clamping, the H3 k_ring role) and `disk_exit_distance_m` (a
+conservative lower bound on the distance from a query point to
+anything *outside* its k-disk) are the numpy references for the kNN
+ladder's JVM expressions in operators/spatial.py, which tests pin
+against them.
 
 All functions are vectorized numpy over arrays of cells/points; they run
-inside Arrow-batched pandas UDFs on the Spark side.  Distances use the
-same sphere as geokernels (R = 6378137 m) so guarantees and re-rank
-distances are mutually consistent.
+on the driver (coverings) and inside Arrow-batched pandas UDFs (cell
+keys).  Distances use the same sphere as geokernels (R = 6378137 m) so
+guarantees and re-rank distances are mutually consistent.
 """
 
 from __future__ import annotations
@@ -42,9 +47,9 @@ _RES_SHIFT = np.uint64(54)
 __all__ = [
     "cell_id", "decode", "parent", "cell_center", "cell_bounds",
     "disk", "cover_bbox", "cover_polygon", "disk_exit_distance_m",
-    "res_of", "MAX_RES",
+    "MAX_RES",
     "s2_cell_id", "s2_decode", "s2_parent", "S2_MAX_LEVEL",
-    "s2_cell_center", "s2_cell_corners", "s2_neighbors", "s2_disk",
+    "s2_cell_center", "s2_cell_corners",
     "s2_cover_bbox", "s2_cover_polygon",
 ]
 
@@ -87,10 +92,6 @@ def cell_id(lat, lon, res: int):
     jf = np.mod((lo + 180.0) / 360.0, 1.0) * nlon
     j = np.clip(np.floor(jf), 0, nlon - 1).astype(np.uint64)
     return _encode_ij(i, j, res)
-
-
-def res_of(cell):
-    return ((np.asarray(cell, dtype=np.int64).view(np.uint64)) >> _RES_SHIFT).astype(np.int64)
 
 
 def decode(cell):
@@ -304,8 +305,7 @@ def _latlon_to_xyz(lat, lon):
 
 def _st(p):
     """S2's quadratic uv -> st transform: near-uniform ground area per
-    cell.  Monotone on all of R (the extension beyond [-1, 1] is what
-    lets cross-face neighbor math stay in one coordinate frame)."""
+    cell.  Monotone on all of R."""
     # max(.., 0) keeps the not-taken where-branch out of sqrt's
     # domain (|p| <= 1 on the taken branch by construction)
     p = np.asarray(p, dtype=np.float64)
@@ -322,9 +322,20 @@ def _st_inv(s):
                     (1.0 - 4.0 * (1.0 - s) * (1.0 - s)) / 3.0)
 
 
-def _s2_xyz_to_cell(x, y, z, level: int):
-    """Unit-sphere direction -> quad-sphere cell id (the core of
-    s2_cell_id, reused by the edge-transition probe)."""
+def _s2_encode_fij(face, level: int, i, j):
+    morton = _part1by1(j.astype(np.uint64)) \
+        | (_part1by1(i.astype(np.uint64)) << np.uint64(1))
+    out = ((face.astype(np.uint64) << _S2_FACE_SHIFT)
+           | (np.uint64(level) << _S2_LEVEL_SHIFT) | morton)
+    return out.astype(np.uint64).view(np.int64)
+
+
+def s2_cell_id(lat, lon, level: int):
+    """Vectorized (lat, lon) -> quad-sphere cell id at `level`
+    (2^level x 2^level cells per cube face)."""
+    if not 0 <= level <= S2_MAX_LEVEL:
+        raise ValueError(f"level must be in [0, {S2_MAX_LEVEL}]")
+    x, y, z = _latlon_to_xyz(lat, lon)
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
     # dominant axis picks the face: 0:+x 1:-x 2:+y 3:-y 4:+z 5:-z
     face = np.where(
@@ -341,19 +352,7 @@ def _s2_xyz_to_cell(x, y, z, level: int):
         .astype(np.uint64)
     j = np.clip(np.floor(_st(v) * np.float64(n)), 0, np.float64(n) - 1) \
         .astype(np.uint64)
-    morton = _part1by1(j) | (_part1by1(i) << np.uint64(1))
-    out = ((face << _S2_FACE_SHIFT)
-           | (np.uint64(level) << _S2_LEVEL_SHIFT) | morton)
-    return out.astype(np.uint64).view(np.int64)
-
-
-def s2_cell_id(lat, lon, level: int):
-    """Vectorized (lat, lon) -> quad-sphere cell id at `level`
-    (2^level x 2^level cells per cube face)."""
-    if not 0 <= level <= S2_MAX_LEVEL:
-        raise ValueError(f"level must be in [0, {S2_MAX_LEVEL}]")
-    x, y, z = _latlon_to_xyz(lat, lon)
-    return _s2_xyz_to_cell(x, y, z, level)
+    return _s2_encode_fij(face, level, i, j)
 
 
 def s2_decode(cell):
@@ -373,16 +372,12 @@ def s2_parent(cell, parent_level: int):
     if np.any(level < parent_level):
         raise ValueError("parent_level must be <= cell level")
     sh = (level - parent_level).astype(np.uint64)
-    iu = i.astype(np.uint64) >> sh
-    ju = j.astype(np.uint64) >> sh
-    morton = _part1by1(ju) | (_part1by1(iu) << np.uint64(1))
-    out = ((np.asarray(face, dtype=np.uint64) << _S2_FACE_SHIFT)
-           | (np.uint64(parent_level) << _S2_LEVEL_SHIFT) | morton)
-    return out.astype(np.uint64).view(np.int64)
+    return _s2_encode_fij(face, parent_level, i.astype(np.uint64) >> sh,
+                          j.astype(np.uint64) >> sh)
 
 
 # face-local (u, v, 1) -> world xyz, derived by inverting the encode
-# tables in _s2_xyz_to_cell (dom = 1 scale; unit-normalization is
+# tables in s2_cell_id (dom = 1 scale; unit-normalization is
 # irrelevant for face/cell assignment, which is scale-invariant):
 #   face 0 (+x): ( 1,  u,  v)    face 1 (-x): (-1, -u,  v)
 #   face 2 (+y): (-u,  1,  v)    face 3 (-y): ( u, -1,  v)
@@ -443,195 +438,6 @@ def s2_cell_corners(cell):
     la, lo = _xyz_to_latlon(*_s2_uv_to_xyz(f4.reshape(-1),
                                            u.reshape(-1), v.reshape(-1)))
     return la.reshape(u.shape), lo.reshape(u.shape)
-
-
-def _derive_s2_edge_table():
-    """Derive the 24 cube-face edge transitions from the FORWARD
-    projection itself (no hand-written adjacency table to get wrong).
-
-    Faces sharing a cube edge parameterize it with the SAME |uv|
-    coordinate (up to sign), and _st is one fixed function, so their
-    cell boundaries along the edge coincide EXACTLY at every level;
-    a transition is therefore a pure integer rule:
-
-        (face, side) -> (tface, swap, perp_from_low, flip_along)
-
-    where side is 0:i<0  1:i>=n  2:j<0  3:j>=n, `swap` says whether the
-    along-edge index lands in the target's i (True) or j, perp_from_low
-    says depth d maps to row d-1 (True) or n-d, and flip_along mirrors
-    the along index.  The rule is probed at level 10 with depth-1/2
-    samples away from corners (where the phantom-center float probe is
-    provably within half a cell) and verified on extra samples."""
-    L, n = 10, 1 << 10
-    table = {}
-    for face in range(6):
-        for side in range(4):
-            def probe(depth, along):
-                if side == 0:
-                    ii, jj = -depth + 0.5, along + 0.5
-                elif side == 1:
-                    ii, jj = n + depth - 0.5, along + 0.5
-                elif side == 2:
-                    ii, jj = along + 0.5, -depth + 0.5
-                else:
-                    ii, jj = along + 0.5, n + depth - 0.5
-                u = _st_inv(np.array([ii / n]))
-                v = _st_inv(np.array([jj / n]))
-                x, y, z = _s2_uv_to_xyz(np.array([face]), u, v)
-                tf, tl, ti, tj = s2_decode(_s2_xyz_to_cell(x, y, z, L))
-                return int(tf[0]), int(ti[0]), int(tj[0])
-            f1, i1, j1 = probe(1, 100)
-            f2, i2, j2 = probe(1, 900)
-            f3, i3, j3 = probe(2, 100)
-            assert f1 == f2 == f3, (face, side, f1, f2, f3)
-            # the along coordinate is the one that moved between the
-            # two depth-1 samples; the other is the perp coordinate
-            if i1 != i2:
-                swap, a1, a2, p1, p3 = True, i1, i2, j1, j3
-            else:
-                swap, a1, a2, p1, p3 = False, j1, j2, i1, i3
-            assert p1 in (0, n - 1), (face, side, p1)
-            perp_from_low = p1 == 0
-            assert p3 == (1 if perp_from_low else n - 2), (face, side, p3)
-            flip_along = a2 < a1
-            assert (a1, a2) == ((n - 101, n - 901) if flip_along
-                                else (100, 900)), (face, side, a1, a2)
-            # independent verification sample
-            fv, iv, jv = probe(1, 500)
-            av, pv = (iv, jv) if swap else (jv, iv)
-            assert fv == f1 and pv == p1, (face, side)
-            assert av == (n - 501 if flip_along else 500), (face, side)
-            table[(face, side)] = (f1, swap, perp_from_low, flip_along)
-    return table
-
-
-_S2_EDGE_TABLE = _derive_s2_edge_table()
-
-
-def _s2_apply_transition(face, side, depth, along, level: int):
-    """Vectorized integer edge transition: arrays (face, side, depth,
-    along) -> (tface, ti, tj) at `level`."""
-    n = np.int64(1 << level)
-    tface = np.empty_like(face)
-    ti = np.empty_like(along)
-    tj = np.empty_like(along)
-    key = face * 4 + side
-    for (f, s), (tf, swap, plow, flip) in _S2_EDGE_TABLE.items():
-        m = key == f * 4 + s
-        if not m.any():
-            continue
-        perp = depth[m] - 1 if plow else n - depth[m]
-        al = (n - 1) - along[m] if flip else along[m]
-        tface[m] = tf
-        ti[m] = al if swap else perp
-        tj[m] = perp if swap else al
-    return tface, ti, tj
-
-
-def _s2_encode_fij(face, level: int, i, j):
-    morton = _part1by1(j.astype(np.uint64)) \
-        | (_part1by1(i.astype(np.uint64)) << np.uint64(1))
-    out = ((face.astype(np.uint64) << _S2_FACE_SHIFT)
-           | (np.uint64(level) << _S2_LEVEL_SHIFT) | morton)
-    return out.astype(np.uint64).view(np.int64)
-
-
-def s2_neighbors(cells):
-    """(m,) quad-sphere cells -> (m, 8) int64 neighbor matrix, -1 where
-    a neighbor does not exist (the diagonal across a cube vertex: only
-    three cells meet there, so corner cells have 7 neighbors).  Exact
-    across face edges via the derived transition table; the relation is
-    symmetric (property-tested)."""
-    c = np.atleast_1d(np.asarray(cells, dtype=np.int64))
-    face, level, i, j = s2_decode(c)
-    lv = int(level[0]) if c.size else 0
-    if c.size and not np.all(level == lv):
-        raise ValueError("s2_neighbors() requires uniform level")
-    n = np.int64(1 << lv)
-    di = np.array([-1, -1, -1, 0, 0, 1, 1, 1], dtype=np.int64)
-    dj = np.array([-1, 0, 1, -1, 1, -1, 0, 1], dtype=np.int64)
-    ii = i[:, None] + di[None, :]
-    jj = j[:, None] + dj[None, :]
-    fcol = np.broadcast_to(face[:, None], ii.shape)
-    out = np.full(ii.shape, -1, dtype=np.int64)
-
-    i_lo, i_hi = ii < 0, ii >= n
-    j_lo, j_hi = jj < 0, jj >= n
-    inside = ~(i_lo | i_hi | j_lo | j_hi)
-    if inside.any():
-        out[inside] = _s2_encode_fij(fcol[inside], lv,
-                                     ii[inside], jj[inside])
-    # exactly one axis out of range -> an edge transition; both out ->
-    # across a cube vertex -> no such cell (stays -1)
-    one_out = (i_lo | i_hi) ^ (j_lo | j_hi)
-    if one_out.any():
-        side = np.where(i_lo, 0, np.where(i_hi, 1, np.where(j_lo, 2, 3)))
-        depth = np.where(i_lo, -ii, np.where(i_hi, ii - (n - 1),
-                         np.where(j_lo, -jj, jj - (n - 1))))
-        along = np.where(i_lo | i_hi, jj, ii)
-        tf, ti, tj = _s2_apply_transition(
-            fcol[one_out].astype(np.int64), side[one_out],
-            depth[one_out], along[one_out], lv)
-        out[one_out] = _s2_encode_fij(tf, lv, ti, tj)
-    if lv == 0:  # 6 cells: in-face window is empty, dedupe transitions
-        for r in range(out.shape[0]):
-            seen = set()
-            for k in range(8):
-                if out[r, k] in seen or out[r, k] == c[r]:
-                    out[r, k] = -1
-                else:
-                    seen.add(out[r, k])
-    return out
-
-
-def s2_disk(cells, k: int):
-    """(m,) cells -> (m, w) matrix of the k-disk (all cells within k
-    steps of 8-adjacency, the H3 k_ring role on the quad-sphere
-    family), -1 padded.  Interior rows (window fully inside one face)
-    take a direct vectorized path; rows near a face edge take k exact
-    BFS steps over s2_neighbors."""
-    c = np.atleast_1d(np.asarray(cells, dtype=np.int64))
-    if k == 0:
-        return c[:, None].copy()
-    face, level, i, j = s2_decode(c)
-    lv = int(level[0]) if c.size else 0
-    if c.size and not np.all(level == lv):
-        raise ValueError("s2_disk() requires uniform level")
-    n = np.int64(1 << lv)
-    interior = (i >= k) & (i < n - k) & (j >= k) & (j < n - k)
-    w = (2 * k + 1) ** 2
-    out = np.full((len(c), w), -1, dtype=np.int64)
-    if interior.any():
-        di, dj = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1),
-                             indexing="ij")
-        ii = i[interior, None] + di.reshape(-1)[None, :]
-        jj = j[interior, None] + dj.reshape(-1)[None, :]
-        fc = np.broadcast_to(face[interior, None], ii.shape)
-        out[interior] = _s2_encode_fij(fc, lv, ii, jj)
-    bidx = np.nonzero(~interior)[0]
-    if len(bidx):
-        # per-row BFS, exact; face-edge rows are rare in practice
-        # (fraction ~4k/2^level of the corpus)
-        rows = []
-        for r in bidx:
-            seen = {int(c[r])}
-            frontier = np.array([c[r]], dtype=np.int64)
-            for _ in range(k):
-                nb = s2_neighbors(frontier).reshape(-1)
-                nb = nb[nb >= 0]
-                new = [int(x) for x in nb if int(x) not in seen]
-                if not new:
-                    break
-                seen.update(new)
-                frontier = np.array(sorted(set(new)), dtype=np.int64)
-            rows.append(np.fromiter(seen, dtype=np.int64))
-        wmax = max(w, max(len(x) for x in rows))
-        if wmax > w:
-            pad = np.full((len(c), wmax - w), -1, dtype=np.int64)
-            out = np.concatenate([out, pad], axis=1)
-        for r, vals in zip(bidx, rows):
-            out[r, :len(vals)] = vals
-    return out
 
 
 # latitude (deg) of a cube-face corner: atan(1/sqrt(2)).  Equatorial
@@ -896,53 +702,3 @@ def s2_cover_polygon(ring_lats, ring_lons, level: int,
     inside = raycast_contains(rla, rlo, clat, clon)
     return cand[crosses | inside]
 
-
-def s2_disk_exit_distance_m(lat, lon, level: int, k: int):
-    """Conservative lower bound (meters, sphere R=6378137) on the
-    distance from each point to anything OUTSIDE its quad-sphere
-    k-disk — the kNN termination certificate on this family.
-
-    Quad-sphere cell edges are GREAT CIRCLES (constant-u or constant-v
-    curves on a face are central planes), so for a k-window that stays
-    inside one face the bound is exact-to-the-boundary: the min over
-    the 4 window-edge planes of R*asin(|n_hat . p_hat|) — distance to
-    the full great circle lower-bounds distance to the edge arc.
-    Windows that cross a face edge return 0.0 (no certificate; such
-    queries escalate or fold to the brute tail — a ~4k/2^level
-    fraction of a uniform corpus).  Unlike the equirect bound, this
-    one does NOT degrade toward the poles: cell widths are near-
-    uniform, which is the family's point."""
-    la = np.asarray(lat, dtype=np.float64)
-    lo = np.asarray(lon, dtype=np.float64)
-    x, y, z = _latlon_to_xyz(la, lo)
-    cell = _s2_xyz_to_cell(x, y, z, level)
-    face, _, i, j = s2_decode(cell)
-    n = np.int64(1 << level)
-    in_face = (i - k >= 0) & (i + k + 1 <= n) & (j - k >= 0) & (j + k + 1 <= n)
-
-    nf = np.float64(n)
-    u_lo = _st_inv((i - k) / nf)
-    u_hi = _st_inv((i + k + 1) / nf)
-    v_lo = _st_inv((j - k) / nf)
-    v_hi = _st_inv((j + k + 1) / nf)
-
-    # point direction in the FACE frame (x_f = dominant axis, y_f = u
-    # axis, z_f = v axis): p_f = (1, u_p, v_p) up to scale.  Recover
-    # (u_p, v_p) by re-projecting, face-consistently.
-    dom = np.choose(face, [x, -x, y, -y, z, -z])
-    u_p = np.choose(face, [y, -y, -x, x, y, -y]) / dom
-    v_p = np.choose(face, [z, z, z, z, -x, x]) / dom
-    norm_p = np.sqrt(1.0 + u_p * u_p + v_p * v_p)
-
-    def plane_dist(a, b, c):
-        # |n . p| / (|n| |p|) with n, p in the face frame
-        dot = np.abs(a + b * u_p + c * v_p)
-        return EARTH_RADIUS_M * np.arcsin(np.clip(
-            dot / (np.sqrt(a * a + b * b + c * c) * norm_p), 0.0, 1.0))
-
-    d = np.minimum(
-        np.minimum(plane_dist(-u_lo, 1.0, np.zeros_like(u_lo)),
-                   plane_dist(-u_hi, 1.0, np.zeros_like(u_hi))),
-        np.minimum(plane_dist(-v_lo, np.zeros_like(v_lo), 1.0),
-                   plane_dist(-v_hi, np.zeros_like(v_hi), 1.0)))
-    return np.where(in_face, d, 0.0)

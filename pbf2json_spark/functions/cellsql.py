@@ -1,22 +1,15 @@
-"""JVM-side (Catalyst expression) twins of cellindex.cell_id and
-cellindex.s2_cell_id.
+"""JVM-side (Catalyst expression) cell keys: the equirect grid
+coordinates that the kNN ladder packs into its join keys, and the
+quad-sphere twin of cellindex.s2_cell_id.
 
 A corpus-side cell-key build runs over the whole table; doing it as a
 pandas UDF made the first join's scan a Python stage (Arrow crossing +
 worker pool) for what is just float math + bit interleaving.  This
-module builds the IDENTICAL int64 cell id as a pure Spark column
-expression — whole-stage-codegen-able, no Python anywhere — with the
-exact same float semantics (same op order, pmod == np.mod for the
-floored longitude wrap), property-tested against the numpy codec in
+module builds the same values as pure Spark column expressions —
+whole-stage-codegen-able, no Python anywhere — with the exact same
+float semantics as the numpy codec (same op order, pmod == np.mod for
+the floored longitude wrap), pinned against it in
 tests/test_cellindex.py.
-
-The Morton bit-spread is a BYTE-WISE LOOKUP against a 256-entry
-array literal rather than the 5-step mask-shift cascade: each cascade
-step references its input twice, so the expression TREE doubles per
-step (2^5 copies of the upstream float math) and multi-level variants
-blew straight through janino's 64 KB generated-method limit, knocking
-the whole stage back to interpreted mode.  Four element_at lookups
-keep the tree linear and codegen tiny.
 """
 
 from __future__ import annotations
@@ -25,88 +18,18 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .cellindex import MAX_RES, S2_MAX_LEVEL, _part1by1
-
-# spread table for one byte: _SPREAD[b] has b's bits at even positions
-_SPREAD = [int(v) for v in _part1by1(np.arange(256)).tolist()]
-_TAB_CACHE: list = []
+from .cellindex import MAX_RES, S2_MAX_LEVEL
 
 
-def _tab() -> Column:
-    """The lookup table as ONE shared Column literal.  Constructing an
-    array literal costs a py4j conversion per element; building it per
-    lookup (8 per cell id x levels) measured ~4 s of pure driver-side
-    expression construction.  Column objects are immutable expression
-    trees, so one instance is safely shared by every call."""
-    if not _TAB_CACHE:
-        # explicit bigint elements: an inferred array<int> would make
-        # the downstream shiftleft a 32-bit Java shift (mod-32 wrap)
-        _TAB_CACHE.append(F.lit(_SPREAD).cast("array<bigint>"))
-    return _TAB_CACHE[0]
-
-
-def _part1by1_col(x: Column) -> Column:
-    """Spread the low 27 bits of a long column to even bit positions
-    via 4 byte lookups (== cellindex._part1by1)."""
-    tab = _tab()
-
-    def lk(shift: int) -> Column:
-        b = F.shiftright(x, shift).bitwiseAND(F.lit(255))
-        return F.element_at(tab, (b + 1).cast("int"))
-
-    out = lk(0)
-    for byte in (1, 2, 3):
-        out = out.bitwiseOR(F.shiftleft(lk(8 * byte), 16 * byte))
-    return out
-
-
-def cell_id_col(lat: Column, lon: Column, res: int) -> Column:
-    """(lat, lon) columns -> int64 equirect-Morton cell id at `res`,
-    bit-identical to cellindex.cell_id (same float op order; pmod is
-    np.mod's floored modulo, exact for the shared fmod+adjust path)."""
+def cell_ij_cols(lat: Column, lon: Column, res: int):
+    """(i, j) equirect grid coordinates at `res` as a pair of long
+    Columns — cellindex.cell_id's clamped/wrapped index math without
+    the Morton pack, for the kNN ladder, which packs its own keys.
+    Materialize these via a projection before fanning out: each ring
+    key references them twice and janino compile cost grows with the
+    duplicated floor/pmod subtree otherwise."""
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    nlat, nlon = 1 << res, 2 << res
-    i = F.least(
-        F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(nlat))),
-                   F.lit(0)),
-        F.lit(nlat - 1)).cast("long")
-    j = F.least(
-        F.greatest(F.floor(F.pmod((lon + F.lit(180.0)) / F.lit(360.0),
-                                  F.lit(1.0)) * F.lit(float(nlon))),
-                   F.lit(0)),
-        F.lit(nlon - 1)).cast("long")
-    morton = _part1by1_col(j).bitwiseOR(F.shiftleft(_part1by1_col(i), 1))
-    return F.shiftleft(F.lit(res).cast("long"), 54).bitwiseOR(morton)
-
-
-def cells_array_col(lat: Column, lon: Column, levels: tuple) -> Column:
-    """array<long> of equirect cell ids at `levels`, element-identical
-    to [cell_id_col(lat, lon, L) for L in levels] but ~5x cheaper for
-    multi-level key builds (r7): the floor/clamp/Morton-spread chain
-    runs ONCE at the finest level and every other level is 2 bit ops.
-
-    Exactness argument (pinned in tests/test_s2cells.py): scaling a
-    double by a power of two is lossless, so
-    floor(x * 2^l) == floor(x * 2^f) >> (f - l) for x >= 0, and the
-    per-level clamps commute with the shift (all-ones shifts to
-    all-ones, zero to zero); quadtree Morton codes nest, so
-    morton_l == morton_f >> 2*(f - l)."""
-    for L in levels:
-        if not 0 <= L <= MAX_RES:
-            raise ValueError(f"levels must be in [0, {MAX_RES}]")
-    finest = max(levels)
-    morton_f = equirect_morton_col(lat, lon, finest)
-    return F.array(*[
-        F.shiftleft(F.lit(L).cast("long"), 54).bitwiseOR(
-            F.shiftright(morton_f, 2 * (finest - L)))
-        for L in levels])
-
-
-def equirect_morton_col(lat: Column, lon: Column, res: int) -> Column:
-    """Untagged equirect Morton code at `res` (cell_id_col without the
-    level tag): the shared single chain that multi-level key builds
-    shift per level."""
     nlat, nlon = 1 << res, 2 << res
     i = F.least(
         F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0)
@@ -117,13 +40,13 @@ def equirect_morton_col(lat: Column, lon: Column, res: int) -> Column:
                                   F.lit(1.0)) * F.lit(float(nlon))),
                    F.lit(0)),
         F.lit(nlon - 1)).cast("long")
-    return _part1by1_col(j).bitwiseOR(F.shiftleft(_part1by1_col(i), 1))
+    return i, j
 
 
 # ---------------------------------------------------------------------------
 # quad-sphere ("s2") family twin
 # ---------------------------------------------------------------------------
-# Replicates cellindex._s2_xyz_to_cell op-for-op in Catalyst
+# Replicates cellindex.s2_cell_id op-for-op in Catalyst
 # expressions.  Float-parity notes:
 # - np.radians(x) is x * C with C = round(pi/180) precomputed
 #   (verified bit-identical to the mul-const form; Spark's F.radians
@@ -138,10 +61,10 @@ def equirect_morton_col(lat: Column, lon: Column, res: int) -> Column:
 #   and asserts full bit-identity; exact face-corner inputs are the
 #   measure-zero caveat, same class as the equirect codec's boundary
 #   note.
-# - The face/s/t subexpressions are built ONCE per call and shared by
-#   every level of the array form; whole-stage codegen's
-#   subexpression elimination keeps the generated code from
-#   re-deriving the trig per level.
+# - with_s2_fst materializes the face/s/t subexpressions ONCE as
+#   projections; with_s2_cell derives the level's i/j from them, and
+#   keep_fst=True lets later calls reuse them instead of re-deriving
+#   the trig.
 
 _DEG2RAD = float(np.pi / 180.0)
 
@@ -165,109 +88,6 @@ def _s2_choose(face: Column, opts) -> Column:
     all 6 element expressions are cheap column (neg)ations, so eager
     evaluation costs nothing."""
     return F.element_at(F.array(*opts), (face + 1).cast("int"))
-
-
-def _s2_face_uv_cols(lat: Column, lon: Column):
-    """(face, s, t) level-independent Column triple: face index and the
-    st coordinates of the point, shared by every level."""
-    la = lat * F.lit(_DEG2RAD)
-    lo = lon * F.lit(_DEG2RAD)
-    cl = F.cos(la)
-    x = cl * F.cos(lo)
-    y = cl * F.sin(lo)
-    z = F.sin(la)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    face = F.when((ax >= ay) & (ax >= az),
-                  F.when(x >= 0.0, F.lit(0)).otherwise(F.lit(1))) \
-            .otherwise(
-                F.when(ay >= az,
-                       F.when(y >= 0.0, F.lit(2)).otherwise(F.lit(3)))
-                 .otherwise(
-                       F.when(z >= 0.0, F.lit(4)).otherwise(F.lit(5)))) \
-            .cast("long")
-
-    dom = _s2_choose(face, [x, -x, y, -y, z, -z])
-    u = _s2_choose(face, [y, -y, -x, x, y, -y]) / dom
-    v = _s2_choose(face, [z, z, z, z, -x, x]) / dom
-    return face, _st_col(u), _st_col(v)
-
-
-def _s2_ij_morton(face: Column, s: Column, t: Column,
-                  level: int) -> Column:
-    n = 1 << level
-    i = F.least(F.greatest(F.floor(s * F.lit(float(n))), F.lit(0)),
-                F.lit(n - 1)).cast("long")
-    j = F.least(F.greatest(F.floor(t * F.lit(float(n))), F.lit(0)),
-                F.lit(n - 1)).cast("long")
-    morton = _part1by1_col(j).bitwiseOR(F.shiftleft(_part1by1_col(i), 1))
-    return F.shiftleft(face, 59) \
-            .bitwiseOR(F.shiftleft(F.lit(level).cast("long"), 54)) \
-            .bitwiseOR(morton)
-
-
-def cell_ij_cols(lat: Column, lon: Column, res: int):
-    """(i, j) grid coordinates at `res` as a pair of long Columns —
-    the clamped/wrapped index math of cell_id_col without the Morton
-    pack, for callers that need NEIGHBOR cells (disk_cells_col).
-    Materialize these via a projection before fanning out: each
-    neighbor references them twice and janino compile cost grows with
-    the duplicated floor/pmod subtree otherwise."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}]")
-    nlat, nlon = 1 << res, 2 << res
-    i = F.least(
-        F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0)
-                           * F.lit(float(nlat))), F.lit(0)),
-        F.lit(nlat - 1)).cast("long")
-    j = F.least(
-        F.greatest(F.floor(F.pmod((lon + F.lit(180.0)) / F.lit(360.0),
-                                  F.lit(1.0)) * F.lit(float(nlon))),
-                   F.lit(0)),
-        F.lit(nlon - 1)).cast("long")
-    return i, j
-
-
-def disk_cells_col(i: Column, j: Column, res: int, ring: int = 1) -> Column:
-    """array<long> of the (2*ring+1)^2 k-disk cell ids around grid
-    coordinate (i, j) at `res` — the pure-JVM twin of
-    cellindex.disk(cell_id, ring): longitude wraps (pmod nlon);
-    out-of-range latitude rows become NULL elements (callers explode
-    and filter isNotNull) — the resulting cell SET equals disk()'s
-    clamp-then-dedup at the poles, since clamping i±ring merely
-    re-includes boundary rows already in range.  i/j must be CHEAP
-    column refs (cell_ij_cols through a projection): each element
-    references them once more."""
-    nlat, nlon = 1 << res, 2 << res
-    cells = []
-    for di in range(-ring, ring + 1):
-        for dj in range(-ring, ring + 1):
-            ii = i + F.lit(di)
-            jj = F.pmod(j + F.lit(dj), F.lit(nlon))
-            morton = _part1by1_col(jj).bitwiseOR(
-                F.shiftleft(_part1by1_col(ii), 1))
-            cell = F.shiftleft(F.lit(res).cast("long"), 54) \
-                    .bitwiseOR(morton)
-            cells.append(
-                F.when((ii >= 0) & (ii < nlat), cell))
-    return F.array(*cells)
-
-
-def s2_cell_id_col(lat: Column, lon: Column, level: int) -> Column:
-    """(lat, lon) columns -> int64 quad-sphere cell id at `level`,
-    the pure-JVM twin of cellindex.s2_cell_id (pinned bit-identical
-    over property-sampled points in tests/test_cellindex.py).  Closes
-    the one Python stage left in the family='s2' kNN/PIP hot path
-    (VERDICT r3 missing #3).
-
-    NOTE: as ONE expression the trig subtree is re-evaluated per CASE
-    WHEN branch reference (codegen subexpression elimination stops at
-    conditionals) — fine for one-off key columns, but hot corpus
-    scans should use with_s2_cell / with_s2_fst, which materialize
-    the shared subexpressions across cheap chained projections."""
-    if not 0 <= level <= S2_MAX_LEVEL:
-        raise ValueError(f"level must be in [0, {S2_MAX_LEVEL}]")
-    face, s, t = _s2_face_uv_cols(lat, lon)
-    return _s2_ij_morton(face, s, t, level)
 
 
 _S2_SCRATCH = ("_s2x", "_s2y", "_s2z", "_s2u", "_s2v",
@@ -336,18 +156,14 @@ def with_s2_fst(df, lat_col: str, lon_col: str,
     STALENESS CALLER CONTRACT (applies to every keeper of these
     columns, ADVICE r4): like any precomputed index column, (f, s, t)
     are a pure function of the lat/lon values AT DERIVATION TIME.
-    Consumers that detect and reuse them (with_s2_cell,
-    with_s2_cells) cannot tell if lat/lon were rewritten afterwards —
-    re-derive after any coordinate mutation.
+    with_s2_cell, which detects and reuses them, cannot tell if
+    lat/lon were rewritten afterwards — re-derive after any coordinate
+    mutation.
 
-    Two measured reasons this is not a single Column:
-    - codegen subexpression elimination does NOT reach inside CASE
-      WHEN branches, so the one-expression form recomputes the trig
-      per branch reference — 3x slower than the Arrow pandas UDF it
-      was meant to beat (1M-row groupBy microbench);
-    - inlining the tree per level of a multi-level array grew the
-      Generate stage's doConsume past janino's 64 KB method limit
-      (whole stage knocked back to interpreted mode).
+    Why this is not a single Column: codegen subexpression elimination
+    does NOT reach inside CASE WHEN branches, so the one-expression
+    form recomputes the trig per branch reference — 3x slower than the
+    Arrow pandas UDF it was meant to beat (1M-row groupBy microbench).
     Each hop below references the previous hop's non-cheap aliases
     more than once, which is exactly the condition under which
     Catalyst's CollapseProject keeps the projections separate."""
@@ -371,7 +187,7 @@ def with_s2_fst(df, lat_col: str, lon_col: str,
             .cast("long")
 
     # source-column stamp (ADVICE r5): consumers that REUSE fst columns
-    # (with_s2_cell/with_s2_cells; knn family='s2' checks too) verify
+    # (with_s2_cell; knn family='s2' checks too) verify
     # that the requested lat/lon pair is the one fst was derived from —
     # presence-only detection silently keyed cells on the WRONG
     # coordinate pair when a frame carried fst from a different pair
@@ -395,11 +211,13 @@ def with_s2_fst(df, lat_col: str, lon_col: str,
 # _part1by1's mask-shift cascade, as CHAINED PROJECTIONS (each step
 # references the previous step's alias twice, which is exactly what
 # keeps CollapseProject from re-inlining it into a doubled tree).
-# This replaces the byte-table element_at form on the s2 side: the
+# A byte-table element_at spread is the other option, but its
 # 256-literal arrays fused into a parquet-scan stage measured ~3.8 s
 # of per-query janino compile (and the compile is paid per query —
 # fresh exprIds defeat the codegen source cache); the cascade chain
-# compiles in milliseconds.
+# compiles in milliseconds.  Two steps per projection: the input of
+# each step is a cheap column ref, so the within-projection tree
+# stays tiny, and three projections keep the fused chain shallow.
 _SPREAD_MASKS = (0x0000FFFF0000FFFF, 0x00FF00FF00FF00FF,
                  0x0F0F0F0F0F0F0F0F, 0x3333333333333333,
                  0x5555555555555555)
@@ -420,77 +238,6 @@ def _spread_steps(col: Column, pairs) -> Column:
     return out
 
 
-def s2_cells_from_fst(face: Column, s: Column, t: Column,
-                      levels) -> Column:
-    """array<long> of cell ids (one per level) from MATERIALIZED
-    (face, s, t) columns, as one compact expression.  ONE morton
-    spread at the finest level serves every rung: i at a coarser
-    level is exactly i_finest >> delta (scaling s by a power of two
-    is exponent-only, so floor commutes with the shift bit-exactly),
-    and Morton interleave turns that into morton_finest >> 2*delta —
-    per level the element is 3 bit ops, so the expression stays tiny
-    at any ladder width.  The cascade inputs must be CHEAP column
-    refs: each cascade step references its input twice, so an
-    expression input would double per step (the r2 janino lesson)."""
-    levels = tuple(levels)
-    for L in levels:
-        if not 0 <= L <= S2_MAX_LEVEL:
-            raise ValueError(f"level must be in [0, {S2_MAX_LEVEL}]")
-    max_l = max(levels)
-    n = 1 << max_l
-
-    def ij(col):
-        # byte-table spread, same as the equirect codec: the clipped
-        # index is a ~6-node chain over a cheap column ref, so the 4
-        # lookups' duplication stays tiny and the tree LINEAR — the
-        # mask-shift cascade doubled the tree per step (2^5 copies)
-        # and measured ~3x the per-query codegen time of this form
-        v = F.least(F.greatest(F.floor(col * F.lit(float(n))),
-                               F.lit(0)), F.lit(n - 1)).cast("long")
-        return _part1by1_col(v)
-
-    morton = ij(t).bitwiseOR(F.shiftleft(ij(s), 1))
-    fhi = F.shiftleft(face, 59)
-    return F.array(*[
-        fhi.bitwiseOR(F.lit(L << 54).cast("long"))
-           .bitwiseOR(F.shiftright(morton, 2 * (max_l - L)))
-        for L in levels])
-
-
-def with_s2_cells(df, lat_col: str, lon_col: str, levels,
-                  out_col: str):
-    """df + array<long> of quad-sphere cell ids, one per level — the
-    multi-level form: with_s2_fst's chained
-    projections + one s2_cells_from_fst element.
-
-    SCALE/FUSION NOTE: feeding this chain PLUS a posexplode straight
-    off a COLUMNAR source (parquet scan or a cached InMemoryRelation)
-    OOMed the driver inside janino's local-variable-map pass — the
-    fused ColumnarToRow + projections + Generate method goes
-    quadratic.  Exploding callers must put a
-    materialization boundary between the fst derivation and the
-    Generate: persist the fst columns (they are ingest-time columns
-    in a real deployment), then explode off the cache."""
-    reused_fst = {"_s2f", "_s2s", "_s2t"} <= set(df.columns)
-    if reused_fst:
-        _guard_s2_scratch(df)
-        check_fst_source(df, lat_col, lon_col)
-    else:
-        df = with_s2_fst(df, lat_col, lon_col)
-    df = df.select("*", s2_cells_from_fst(
-        F.col("_s2f"), F.col("_s2s"), F.col("_s2t"), levels)
-        .alias(out_col))
-    return df if reused_fst else df.drop("_s2f", "_s2s", "_s2t")
-
-
-# mask-shift cascade constants for the chained-projection spread used
-# by with_s2_cell (the scan-fused context): janino compiles the
-# 256-literal byte tables ~10x slower when they are FUSED into a
-# parquet-scan stage (measured 5.5 s vs 0.56 s on a 1500-row join),
-# while behind a cache boundary the byte tables win (s2_cells_from_fst
-# keeps them for the kNN path).  Two steps per projection: the input
-# of each step is a cheap column ref, so the within-projection tree
-# stays tiny, and three projections keep the fused chain shallow.
 def with_s2_cell(df, lat_col: str, lon_col: str, level: int,
                  out_col: str, keep_fst: bool = False):
     """df + one quad-sphere cell column at `level` — the fast path for
@@ -501,10 +248,9 @@ def with_s2_cell(df, lat_col: str, lon_col: str, level: int,
     columnar parquet scan.
 
     keep_fst=True leaves the (_s2f, _s2s, _s2t) columns on the frame —
-    the ingest-time pattern: downstream consumers (with_s2_cells,
-    and this function itself on a later call) detect and REUSE them
-    instead of re-deriving the trig chain, saving one projection-chain
-    compile + evaluation per query.  STALENESS CALLER CONTRACT: the
+    the ingest-time pattern: later calls of this function detect and
+    REUSE them instead of re-deriving the trig chain, saving one
+    projection-chain compile + evaluation per query.  STALENESS CALLER CONTRACT: the
     reused (f, s, t) must have been derived from the CURRENT lat/lon
     values — a coordinate rewrite after keep_fst silently keys every
     downstream cell on the old coordinates (see with_s2_fst)."""

@@ -718,15 +718,42 @@ TILE_SCHEMA = T.StructType([
     T.StructField("mean_intensity", T.DoubleType()),
 ])
 
-# footprint constant lives beside the shared block kernels so the
-# Spark-free oracle twin (sources/synth.gen_tile_blocks_pdf) uses the
-# identical arithmetic; re-exported here for compatibility
-DEG_PER_PX = ic.DEG_PER_PX
-
 
 # ---------------------------------------------------------------------------
 # kNN JOIN (corpus x corpus)
 # ---------------------------------------------------------------------------
+
+def _pk(level: Column, i: Column, j: Column) -> Column:
+    """Packed ladder key level<<54 | i<<27 | j.  The ladder only needs
+    SOME per-(level, cell) key both sides derive identically, and
+    plain shift-or packing is ~3 scalar bit ops where the Morton
+    byte-table codec was 8 element_at lookups per key (that form,
+    x 9 disk keys x active levels x both sides, measured ~27 s of
+    serial driver planning/codegen in round 0 at 600k)."""
+    return F.shiftleft(level.cast("long"), 54) \
+        .bitwiseOR(F.shiftleft(i.cast("long"), 27)) \
+        .bitwiseOR(j.cast("long"))
+
+
+def _ring_keys(level: Column, i: Column, j: Column, ring: int) -> Column:
+    """array<long> of the (2*ring+1)^2 packed keys of the ring-disk
+    around grid cell (i, j) at `level` — the cell set of
+    cellindex.disk(cell, ring), pinned against it in
+    tests/test_spatial.py.  Longitude wraps (pmod 2<<level);
+    out-of-range latitude rows are NULL elements (callers explode and
+    drop nulls), which equals disk()'s drop at the poles.  i and j
+    must be cheap column refs: each key references them again."""
+    lv = level.cast("int")
+    nlat = F.call_function("shiftleft", F.lit(1).cast("long"), lv)
+    nlon = F.call_function("shiftleft", F.lit(2).cast("long"), lv)
+    keys = []
+    for di in range(-ring, ring + 1):
+        for dj in range(-ring, ring + 1):
+            ii = i + F.lit(di)
+            jj = F.pmod(j + F.lit(dj), nlon)
+            keys.append(F.when((ii >= 0) & (ii < nlat), _pk(level, ii, jj)))
+    return F.array(*keys)
+
 
 def _disk_exit_bound_col(lat: Column, lon: Column,
                          i_l: Column, j_l: Column,
@@ -820,7 +847,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
          coarser level's coordinates are exact right-shifts (floor
          commutes with power-of-2 scaling), so the per-row 3x3 disk
          explode is a small branch over lvl_idx of pure bit math
-         (packed shift-or keys with disk_cells_col's wrap/drop rules);
+         (_ring_keys: packed shift-or keys, cellindex.disk's cells);
       2. cell-equi join against the right side, exploded from one
          persisted N-row (id, lat, lon, i, j) index to ONLY the
          round's active levels (pure shift-or key math — the
@@ -918,23 +945,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             if trace is not None:
                 trace["ladder_skipped"] = n_left
             fold_rows = left_raw
-        # PACKED KEYS everywhere (r6): the round join, like the W table,
-        # only needs SOME per-(level, cell) key both sides derive
-        # identically — so the whole ladder path skips the morton
-        # byte-table codec for plain shift-or packing (level<<54 | i<<27 |
-        # j).  The morton form (72 element_at per disk, x active levels,
-        # x both sides, rebuilt each round) was measured as ~27 s of
-        # SERIAL driver planning/codegen in round 0 at 600k (S+W/c fit of
-        # the 2/8/32-core legs) — the single largest Amdahl term in the
-        # operator.  Wrap/drop rules mirror disk_cells_col exactly
-        # (longitude pmod-wraps, out-of-range latitude drops), so the
-        # covered cell set — and with it the disk-exit certificate — is
-        # unchanged.
-        def _pk(L, i, j):
-            return F.shiftleft(F.lit(int(L)).cast("long"), 54) \
-                .bitwiseOR(F.shiftleft(i.cast("long"), 27)) \
-                .bitwiseOR(j.cast("long"))
-
         if run_ladder:
             # persist the right side ONCE at N rows with its finest (i, j)
             # pair; every round derives its join keys from these by pure
@@ -997,7 +1007,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # branches — 9 parallel stages AND 9 plan subtrees whose
             # driver-side planning gaps outweighed the cluster work.)
             anc = F.array(*[
-                _pk(L, F.shiftright(F.col("_i"), finest - L),
+                _pk(F.lit(L), F.shiftright(F.col("_i"), finest - L),
                     F.shiftright(F.col("_j"), finest - L))
                 for L in levels])
             cnt_all = cnt_f.select(F.explode(anc).alias("_ck"), "count") \
@@ -1019,26 +1029,17 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             cnt_all = cnt_all.repartition(n_scatter, "_ck")
             # ring scatter off the DECODED key (shifts, no codec): the
             # (2*ring+1)^2 window sum at cell x = sum over cells whose
-            # disk holds x — offsets match the round-loop window (ADVICE
-            # r6 #1: a hardcoded 3x3 here under ring>1 silently measured
-            # undersized windows; results stayed exact via the
-            # certificate, but start levels were mis-priced)
+            # disk holds x — the same _ring_keys disk the rounds join
+            # on (ADVICE r6 #1: a hardcoded 3x3 here under ring>1
+            # silently measured undersized windows; results stayed exact
+            # via the certificate, but start levels were mis-priced)
             cn = cnt_all.select(
                 "_n", F.shiftright(F.col("_ck"), 54).alias("_L"),
                 F.shiftright(F.col("_ck"), 27)
                  .bitwiseAND(F.lit((1 << 27) - 1)).alias("_ic"),
                 F.col("_ck").bitwiseAND(F.lit((1 << 27) - 1)).alias("_jc"))
-            nlat_c = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(_L AS INT))")
-            nlon_c = F.expr("shiftleft(CAST(2 AS BIGINT), CAST(_L AS INT))")
-            nbrs = []
-            for di in range(-ring, ring + 1):
-                for dj in range(-ring, ring + 1):
-                    ii = F.col("_ic") + F.lit(di)
-                    jj = F.pmod(F.col("_jc") + F.lit(dj), nlon_c)
-                    key = F.shiftleft(F.col("_L"), 54) \
-                        .bitwiseOR(F.shiftleft(ii, 27)).bitwiseOR(jj)
-                    nbrs.append(F.when((ii >= 0) & (ii < nlat_c), key))
-            wtab = cn.select(F.explode(F.array(*nbrs)).alias("_c"), "_n") \
+            nbrs = _ring_keys(F.col("_L"), F.col("_ic"), F.col("_jc"), ring)
+            wtab = cn.select(F.explode(nbrs).alias("_c"), "_n") \
                 .filter(F.col("_c").isNotNull()) \
                 .groupBy("_c").agg(F.sum("_n").alias("_w"))
             # prune entries that can never set a start level (_w too small
@@ -1075,7 +1076,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # lookup row (wtab left-join -> all-null -> sentinel/coarsest).
             liF, ljF = cell_ij_cols(F.col("l_lat"), F.col("l_lon"), finest)
             lkey = left_raw.select(F.col(left_id), "l_lat", "l_lon",
-                                   _pk(finest, liF, ljF).alias("_fk"))
+                                   _pk(F.lit(finest), liF, ljF).alias("_fk"))
             cells = lkey.select("_fk").distinct()
             # decode-then-shift (mask BEFORE the ancestor shift: the packed
             # level field sits directly above the i field, so shifting the
@@ -1085,7 +1086,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                 .bitwiseAND(F.lit((1 << 27) - 1))
             _fj = F.col("_fk").bitwiseAND(F.lit((1 << 27) - 1))
             canc = F.array(*[
-                _pk(L, F.shiftright(_fi, finest - L),
+                _pk(F.lit(L), F.shiftright(_fi, finest - L),
                     F.shiftright(_fj, finest - L))
                 for L in levels])
             cx = cells.select("_fk", F.posexplode(canc).alias("_lx", "_c"))
@@ -1142,7 +1143,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # 64 KB method limit at 7 ladder rungs; the union keeps every
             # doConsume tiny and the branches all read the same
             # checkpointed frame.  Disk keys are packed shift-or combos
-            # (see _pk above) — each array element is ~8 scalar bit ops,
+            # (_ring_keys) — each array element is ~8 scalar bit ops,
             # so even a ring-2 25-element Generate compiles in ms where
             # the byte-table morton form blew the 64 KB janino limit and
             # cost ~27 s/round of serial driver codegen.
@@ -1151,7 +1152,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                 if idx not in active:
                     continue
                 sh = finest - L
-                nlat_l, nlon_l = 1 << L, 2 << L
                 p0 = base.filter(F.col("_li") == idx).select(
                     F.col(left_id), "l_lat", "l_lon",
                     F.shiftright(F.col("_if"), sh).alias("_iL"),
@@ -1173,24 +1173,16 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                 xb = _disk_exit_bound_col(
                     F.col("l_lat"), F.col("l_lon"),
                     F.col("_iL"), F.col("_jL"), L, ring)
-                cells = []
-                for di in range(-ring, ring + 1):
-                    for dj in range(-ring, ring + 1):
-                        ii = F.col("_iL") + F.lit(di)
-                        jj = F.pmod(F.col("_jL") + F.lit(dj),
-                                    F.lit(nlon_l))
-                        cells.append(
-                            F.when((ii >= 0) & (ii < nlat_l),
-                                   _pk(L, ii, jj)))
+                cells = _ring_keys(F.lit(L), F.col("_iL"), F.col("_jL"), ring)
                 p = p0.select(F.col(left_id), "l_lat", "l_lon",
                               xb.alias("_xb"),
-                              F.explode(F.array(*cells)).alias("_c"))
+                              F.explode(cells).alias("_c"))
                 parts.append(p.filter(F.col("_c").isNotNull()))
             lw = parts[0]
             for p in parts[1:]:
                 lw = lw.unionByName(p)
             r_anc = F.array(*[
-                _pk(levels[i],
+                _pk(F.lit(levels[i]),
                     F.shiftright(F.col("_ri"), finest - levels[i]),
                     F.shiftright(F.col("_rj"), finest - levels[i]))
                 for i in sorted(active)])

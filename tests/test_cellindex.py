@@ -120,15 +120,16 @@ def test_zorder_locality():
 
 
 def test_cell_id_col_matches_numpy_codec(spark):
-    """The JVM expression twin (functions/cellsql.py) must produce the
-    IDENTICAL int64 id as the numpy codec for every res the engine
-    uses, including poles, antimeridian, and exact cell boundaries."""
+    """The JVM grid-coordinate expressions (cellsql.cell_ij_cols, the
+    (i, j) the kNN ladder packs its keys from) must equal the numpy
+    codec's decoded (i, j) for every res the engine uses, including
+    poles, antimeridian, and exact cell boundaries."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
 
     from pbf2json_spark.functions import cellindex as cx
-    from pbf2json_spark.functions.cellsql import cell_id_col
+    from pbf2json_spark.functions.cellsql import cell_ij_cols
 
     rng = np.random.Generator(np.random.Philox(key=np.uint64(5)))
     lat = np.concatenate([
@@ -144,27 +145,26 @@ def test_cell_id_col_matches_numpy_codec(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"lat": lat, "lon": lon}), "lat double, lon double")
     for res in (0, 2, 6, 9, 12, 18, 26):
-        got = df.select(cell_id_col(F.col("lat"), F.col("lon"), res)
-                        .alias("c")).toPandas()["c"].to_numpy()
-        want = cx.cell_id(lat, lon, res)
-        assert (got == want).all(), res
+        i, j = cell_ij_cols(F.col("lat"), F.col("lon"), res)
+        got = df.select(i.alias("i"), j.alias("j")).toPandas()
+        _, want_i, want_j = cx.decode(cx.cell_id(lat, lon, res))
+        assert (got["i"].to_numpy() == want_i).all(), res
+        assert (got["j"].to_numpy() == want_j).all(), res
 
 
 def test_s2_cell_id_col_matches_numpy_codec(spark):
-    """The JVM quad-sphere expression twin (cellsql.s2_cell_id_col /
-    with_s2_cells / with_s2_cell) must produce the IDENTICAL int64 id as
-    cellindex.s2_cell_id — including poles, antimeridian, face
-    corners (lat +-35.264..., lon multiples of 45) and near-boundary
-    points.  numpy and the JVM implement sin/cos independently (each
-    <=1 ulp), so exact face-boundary inputs are the measure-zero
-    caveat; this fixed-seed sample pins full bit-identity (VERDICT r3
-    missing #3 done-criterion)."""
+    """The JVM quad-sphere expression twin (cellsql.with_s2_cell, the
+    form Engine.attach_s2 and the s2 PIP/kNN gates attach keys with)
+    must produce the IDENTICAL int64 id as cellindex.s2_cell_id —
+    including poles, antimeridian, face corners (lat +-35.264..., lon
+    multiples of 45) and near-boundary points.  numpy and the JVM
+    implement sin/cos independently (each <=1 ulp), so exact
+    face-boundary inputs are the measure-zero caveat; this fixed-seed
+    sample pins full bit-identity (VERDICT r3 missing #3
+    done-criterion)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from pbf2json_spark.functions.cellsql import (s2_cell_id_col,
-                                                  with_s2_cell,
-                                                  with_s2_cells)
+    from pbf2json_spark.functions.cellsql import with_s2_cell
 
     rng = np.random.Generator(np.random.Philox(key=np.uint64(9)))
     corner_lat = np.degrees(np.arctan(1.0 / np.sqrt(2.0)))
@@ -187,122 +187,15 @@ def test_s2_cell_id_col_matches_numpy_codec(spark):
     lat, lon = lat[:m], lon[:m]
     df = spark.createDataFrame(
         pd.DataFrame({"lat": lat, "lon": lon}), "lat double, lon double")
-    levels = (0, 1, 5, 9, 12, 20, 26)
-    got = with_s2_cells(
-        df.select("lat", "lon",
-                  *[s2_cell_id_col(F.col("lat"), F.col("lon"), L)
-                    .alias(f"c{L}") for L in levels]),
-        "lat", "lon", levels, "arr") \
-        .select(*[f"c{L}" for L in levels], "arr").toPandas()
-    arr = np.stack(got["arr"].to_numpy()).astype(np.int64)
-    for k, L in enumerate(levels):
-        want = cx.s2_cell_id(lat, lon, L)
-        assert (got[f"c{L}"].to_numpy(np.int64) == want).all(), L
-        assert (arr[:, k] == want).all(), L
-    # the mask-shift-cascade path (with_s2_cell — the form the PIP/kNN
-    # gates attach keys with) pinned DIRECTLY too: it shares no morton
-    # code with the byte-table forms above, so a cascade regression
-    # cannot cancel out against itself here
-    for L in (0, 9, 26):
-        got1 = with_s2_cell(df, "lat", "lon", L, "c") \
+    for L in (0, 1, 5, 9, 12, 20, 26):
+        got = with_s2_cell(df, "lat", "lon", L, "c") \
             .select("c").toPandas()["c"].to_numpy(np.int64)
-        assert (got1 == cx.s2_cell_id(lat, lon, L)).all(), L
+        assert (got == cx.s2_cell_id(lat, lon, L)).all(), L
 
 
 # ---------------------------------------------------------------------------
-# quad-sphere neighbors / disks / coverings (VERDICT r2 item 6)
+# quad-sphere coverings (VERDICT r2 item 6)
 # ---------------------------------------------------------------------------
-
-def _s2_random_cells(level, n, seed):
-    """Random cells biased toward face edges (where transitions live)."""
-    rng = np.random.Generator(np.random.Philox(key=np.uint64(seed)))
-    lat = rng.uniform(-90, 90, n)
-    lon = rng.uniform(-180, 180, n)
-    # bias: points near face boundaries (lon multiples of 45, lat +-35)
-    lat = np.concatenate([lat, np.full(20, 35.26) + rng.uniform(-2, 2, 20),
-                          np.full(10, 89.99), np.full(10, -89.99)])
-    lon = np.concatenate([lon, rng.choice([-135.0, -45.0, 45.0, 135.0], 40)
-                          + rng.uniform(-0.5, 0.5, 40)])
-    return np.unique(cx.s2_cell_id(lat, lon, level))
-
-
-@pytest.mark.parametrize("level", [1, 2, 5, 9])
-def test_s2_neighbors_symmetric_across_faces(level):
-    cells = _s2_random_cells(level, 300, seed=11 + level)
-    nb = cx.s2_neighbors(cells)
-    nb_map = {int(c): {int(x) for x in row if x >= 0}
-              for c, row in zip(cells, nb)}
-    for c, ns in nb_map.items():
-        assert c not in ns                      # never its own neighbor
-        for x in ns:
-            back = {int(y) for y in cx.s2_neighbors(np.array([x]))[0]
-                    if y >= 0}
-            assert c in back, (level, c, x)     # symmetry
-    # no duplicate entries within a row
-    for c, row in zip(cells, nb):
-        vals = [int(x) for x in row if x >= 0]
-        assert len(vals) == len(set(vals)), (level, int(c))
-        face, lv, i, j = cx.s2_decode(np.array([c]))
-        n = 1 << level
-        corner = (i[0] in (0, n - 1)) and (j[0] in (0, n - 1))
-        assert len(vals) == (7 if corner and level >= 1 else 8) \
-            or level == 0, (level, int(c), len(vals))
-
-
-def test_s2_disk_matches_corner_adjacency_bfs():
-    """Exhaustive at level 3 (384 cells): the disk must equal BFS over
-    GEOMETRIC touching (cells sharing a corner point), the definition
-    the transition table is supposed to encode.  At a cube vertex only
-    3 cells meet and each pair shares a cube-edge segment, so geometric
-    touching and 8-adjacency-with-transitions must agree everywhere."""
-    level = 3
-    face, lv, i, j = np.meshgrid(np.arange(6), [level],
-                                 np.arange(8), np.arange(8), indexing="ij")
-    cells = cx._s2_encode_fij(face.reshape(-1).astype(np.int64), level,
-                              i.reshape(-1).astype(np.int64),
-                              j.reshape(-1).astype(np.int64))
-    la, lo = cx.s2_cell_corners(cells)
-    xyz = np.stack(cx._latlon_to_xyz(la.reshape(-1), lo.reshape(-1)),
-                   axis=1).reshape(len(cells), 4, 3)
-    # geometric adjacency: share a corner within 1e-9 chord distance
-    adj = {int(c): set() for c in cells}
-    flat = xyz.reshape(-1, 3)
-    owner = np.repeat(np.arange(len(cells)), 4)
-    # bucket corners by rounded coords to avoid the n^2 corner compare
-    keys = np.round(flat * 1e7).astype(np.int64)
-    buckets = {}
-    for idx, key in enumerate(map(tuple, keys)):
-        buckets.setdefault(key, []).append(idx)
-    # also merge buckets of nearly-equal corners straddling a rounding
-    # boundary: probe the 3^3 neighborhood of each key
-    import itertools
-    for key, idxs in list(buckets.items()):
-        for d in itertools.product((-1, 0, 1), repeat=3):
-            if d == (0, 0, 0):
-                continue
-            k2 = (key[0] + d[0], key[1] + d[1], key[2] + d[2])
-            for other in buckets.get(k2, []):
-                if np.linalg.norm(flat[idxs[0]] - flat[other]) < 1e-9:
-                    idxs.append(other)
-    for idxs in buckets.values():
-        cs = {int(cells[owner[x]]) for x in idxs
-              if np.linalg.norm(flat[x] - flat[idxs[0]]) < 1e-6}
-        for a in cs:
-            for b in cs:
-                if a != b:
-                    adj[a].add(b)
-    nb = cx.s2_neighbors(cells)
-    for c, row in zip(cells, nb):
-        got = {int(x) for x in row if x >= 0}
-        assert got == adj[int(c)], int(c)
-    # disk(2) == 2-step BFS closure over the same adjacency
-    d2 = cx.s2_disk(cells[::7], 2)
-    for c, row in zip(cells[::7], d2):
-        got = {int(x) for x in row if x >= 0}
-        want = {int(c)} | adj[int(c)]
-        want = want | {y for x in want for y in adj[x]}
-        assert got == want, int(c)
-
 
 def test_s2_cover_bbox_superset():
     """Every point of the bbox lies in an emitted cell — including
@@ -451,52 +344,3 @@ def test_s2_cover_bbox_not_degenerate():
     # polar box: annular-sector rect over-covers but boundedly
     cov = cx.s2_cover_bbox(88.0, 90.0, -180.0, 180.0, 9)
     assert 1 <= len(cov) < 2000
-
-
-def test_s2_parent_contains_disk_center():
-    """Hierarchy still holds for cells produced by transitions."""
-    cells = _s2_random_cells(9, 200, seed=31)
-    nb = cx.s2_neighbors(cells)
-    flat = nb[nb >= 0]
-    pf, pl, pi, pj = cx.s2_decode(cx.s2_parent(flat, 4))
-    la, lo = cx.s2_cell_center(flat)
-    direct = cx.s2_cell_id(la, lo, 4)
-    df, dl, di, dj = cx.s2_decode(direct)
-    same = (pf == df) & (pi == di) & (pj == dj)
-    assert same.mean() > 0.99  # centers on face seams may flip faces
-
-
-def test_s2_disk_exit_distance_conservative():
-    """The s2 exit bound must lower-bound the true distance from each
-    point to every point whose cell is OUTSIDE the point's k-disk —
-    the kNN termination certificate on the quad-sphere family.  Zero
-    (no certificate) is required whenever the window crosses a face
-    edge, and allowed never otherwise to be exceeded."""
-    rng = np.random.Generator(np.random.Philox(key=np.uint64(41)))
-    n, m = 150, 4000
-    la = rng.uniform(-89, 89, n)
-    lo = rng.uniform(-180, 180, n)
-    qla = rng.uniform(-90, 90, m)
-    qlo = rng.uniform(-180, 180, m)
-    for level, k in ((5, 1), (7, 2), (9, 1)):
-        bound = cx.s2_disk_exit_distance_m(la, lo, level, k)
-        cells = cx.s2_cell_id(la, lo, level)
-        disks = cx.s2_disk(cells, k)
-        qcells = cx.s2_cell_id(qla, qlo, level)
-        for i in range(n):
-            if bound[i] == 0.0:
-                continue
-            inside = np.isin(qcells, disks[i][disks[i] >= 0])
-            if (~inside).sum() == 0:
-                continue
-            d = gk.haversine_m(np.full((~inside).sum(), la[i]),
-                               np.full((~inside).sum(), lo[i]),
-                               qla[~inside], qlo[~inside])
-            assert d.min() >= bound[i] - 1e-6, (level, k, i,
-                                                d.min(), bound[i])
-        assert (bound > 0).mean() > 0.5  # certificates usually exist
-    # windows crossing a face edge carry no certificate
-    edge_la = np.array([0.0, 44.0])
-    edge_lo = np.array([44.999, 0.0])
-    b = cx.s2_disk_exit_distance_m(edge_la, edge_lo, 3, 1)
-    assert b[0] == 0.0

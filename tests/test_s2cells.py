@@ -104,7 +104,7 @@ def test_fst_source_mismatch_refused(spark):
     wrong-cells path into a loud ValueError at plan-build time."""
     import pytest
 
-    from pbf2json_spark.functions.cellsql import with_s2_cell, with_s2_cells
+    from pbf2json_spark.functions.cellsql import with_s2_cell
     df = spark.range(5).select(
         (F.rand(1) * 100 - 50).alias("pick_lat"),
         (F.rand(2) * 300 - 150).alias("pick_lon"),
@@ -113,8 +113,6 @@ def test_fst_source_mismatch_refused(spark):
     once = with_s2_cell(df, "pick_lat", "pick_lon", 9, "c9", keep_fst=True)
     with pytest.raises(ValueError, match="derived from"):
         with_s2_cell(once, "lat", "lon", 9, "c9b")
-    with pytest.raises(ValueError, match="derived from"):
-        with_s2_cells(once, "lat", "lon", (9, 12), "cells")
     # the matching pair still reuses (and the cells stay correct)
     ok = with_s2_cell(once, "pick_lat", "pick_lon", 12, "c12")
     got = ok.select("pick_lat", "pick_lon", "c12").toPandas()
@@ -133,36 +131,3 @@ def test_fst_source_mismatch_refused(spark):
                               F.lit(0.0).alias("lon"))
     with pytest.raises(ValueError, match="derived from"):
         sp.knn(pts, q, k=1, family="s2")
-
-
-def test_cells_array_col_matches_per_level_cell_id_col(spark):
-    """The r7 multi-level key build (cells_array_col: one finest-level
-    floor/Morton chain + shifts) must be element-identical to the
-    per-level cell_id_col expressions (which are themselves pinned
-    bit-identical to the numpy codec), including poles, dateline and
-    clamp edges."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from pbf2json_spark.functions.cellsql import (cell_id_col,
-                                                  cells_array_col)
-
-    rng = np.random.default_rng(1234)
-    lat = rng.uniform(-90, 90, 4000)
-    lon = rng.uniform(-180, 180, 4000)
-    edges = np.array([-90.0, 90.0, 0.0, -0.0, 89.9999999999,
-                      -89.9999999999, 45.0, -45.0])
-    lat = np.concatenate([lat, edges, np.zeros(8)])
-    lon = np.concatenate([lon, np.zeros(8),
-                          np.array([-180.0, 180.0, 179.9999999999,
-                                    -179.9999999999, 0.0, -0.0,
-                                    90.0, -90.0])])
-    pdf = __import__("pandas").DataFrame({"p_lat": lat, "p_lon": lon})
-    df = spark.createDataFrame(pdf)
-    for levels in ((2, 5, 9, 12, 16), (12,), (0, 1, 18)):
-        per = F.array(*[cell_id_col(F.col("p_lat"), F.col("p_lon"), L)
-                        for L in levels])
-        fused = cells_array_col(F.col("p_lat"), F.col("p_lon"), levels)
-        bad = df.select(per.alias("a"), fused.alias("b")) \
-                .filter(~(F.col("a") == F.col("b"))).count()
-        assert bad == 0, f"levels={levels}: {bad} mismatching rows"

@@ -274,8 +274,8 @@ def test_tile_assignment_matches_pandas(spark, points, points_pdf):
         g = 4
         bh, bw = max(h // g, 1), max(w // g, 1)
         blocks = px[:bh * g, :bw * g].reshape(g, bh, g, bw).mean(axis=(1, 3))
-        dy = (np.arange(g) - (g - 1) / 2.0) * bh * sp.DEG_PER_PX
-        dx = (np.arange(g) - (g - 1) / 2.0) * bw * sp.DEG_PER_PX
+        dy = (np.arange(g) - (g - 1) / 2.0) * bh * ic.DEG_PER_PX
+        dx = (np.arange(g) - (g - 1) / 2.0) * bw * ic.DEG_PER_PX
         bla = (r.lat - dy[:, None] + np.zeros((1, g))).reshape(-1)
         blo = (r.lon + dx[None, :] + np.zeros((g, 1))).reshape(-1)
         cells = cx.cell_id(bla, blo, sp.KNN_RES)
@@ -729,12 +729,15 @@ def test_knn_join_exact_vs_brute(spark, monkeypatch):
 
 
 def test_disk_cells_col_matches_numpy_disk(spark):
-    """The JVM neighbor-disk expression equals cellindex.disk cell-for-
-    cell, including lon wrap and pole clamp-dedup."""
+    """knn_join's ring-key helper (spatial._ring_keys, the one builder
+    of the W-table scatter and the round disks) covers exactly
+    cellindex.disk's cells, including lon wrap and the pole drop.
+    Keys are packed (level<<54 | i<<27 | j), so disk()'s Morton ids
+    are decoded and packed the same way before comparing sets."""
     import pandas as _pd
     from pyspark.sql import functions as F
 
-    from pbf2json_spark.functions.cellsql import cell_ij_cols, disk_cells_col
+    from pbf2json_spark.functions.cellsql import cell_ij_cols
     rng = np.random.default_rng(4)
     lat = np.concatenate([rng.uniform(-90, 90, 300),
                           [89.9, -89.9, 0.0, 45.0]])
@@ -743,23 +746,23 @@ def test_disk_cells_col_matches_numpy_disk(spark):
     pdf = _pd.DataFrame({"lat": lat, "lon": lon})
     df = spark.createDataFrame(pdf)
     dfi = df.select("*", F.monotonically_increasing_id().alias("rid"))
+    rid_order = dfi.select("rid").toPandas()["rid"].to_numpy()
     for res in (3, 6, 9):
         i, j = cell_ij_cols(F.col("lat"), F.col("lon"), res)
         # explode + null-filter JVM-side: a nullable long ARRAY column
         # round-trips through pandas as float64, which cannot represent
-        # res-9 cell ids exactly (> 2^53) — the operator never does
-        # that conversion, only this test would have
+        # packed keys exactly (> 2^53) — the operator never does that
+        # conversion, only this test would have
         out = dfi.select("rid", i.alias("_i"), j.alias("_j")) \
-            .select("rid", F.explode(disk_cells_col(
-                F.col("_i"), F.col("_j"), res, 1)).alias("c")) \
+            .select("rid", F.explode(sp._ring_keys(
+                F.lit(res), F.col("_i"), F.col("_j"), 1)).alias("c")) \
             .filter(F.col("c").isNotNull()).toPandas()
         got_sets = out.groupby("rid")["c"].apply(set)
         base = cx.cell_id(lat, lon, res)
-        rid_order = dfi.select("rid").toPandas()["rid"].to_numpy()
         for r in range(len(lat)):
-            want = {c for c in np.asarray(
-                cx.disk(np.array([base[r]]), 1)).ravel().tolist()
-                if c != -1}
+            d = np.asarray(cx.disk(np.array([base[r]]), 1)).ravel()
+            lv, di, dj = cx.decode(d[d != -1])
+            want = set(((lv << 54) | (di << 27) | dj).tolist())
             assert got_sets[rid_order[r]] == want, (lat[r], lon[r], res)
 
 
