@@ -1,10 +1,9 @@
-"""Multimodal column operators: image / audio / video payloads as opaque
-binary columns with typed metadata, processed in Arrow-batched
-mapInPandas pipelines.
+"""Multimodal column operators: image payloads as opaque binary columns
+with typed metadata, processed in Arrow-batched mapInPandas pipelines.
 
 The Spark-side plumbing (schemas, batch shapes, partitioning, UDF
 signatures) is real and tested.  Decoders for the engine's own formats
-(raw/rle/qdct) are real numpy; external codecs (jpeg/png/mp3/mp4) are
+(raw/rle/qdct) are real numpy; external codecs (jpeg/png/webp) are
 STUBBED — the container has no Pillow/ffmpeg (SURVEY.md §7) — behind
 ``NotImplementedError`` with a clearly marked seam where a real decoder
 plugs in.
@@ -16,7 +15,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import imagecodec as ic
 
@@ -33,105 +31,6 @@ def decode_pixels(data: bytes, fmt: str) -> np.ndarray:
             f"external image codec '{fmt}' not available in this "
             f"environment — plug a decoder into multimodal.decode_pixels")
     raise ValueError(f"unknown image format {fmt!r}")
-
-
-FEATURE_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType()),
-    T.StructField("mean_r", T.DoubleType()),
-    T.StructField("mean_g", T.DoubleType()),
-    T.StructField("mean_b", T.DoubleType()),
-    T.StructField("std_gray", T.DoubleType()),
-    T.StructField("edge_energy", T.DoubleType()),
-])
-
-
-def image_features(images: DataFrame) -> DataFrame:
-    """Decode + feature-extract: per-image channel means, gray std, and
-    a gradient-energy score.  One mapInPandas pass; column pruning keeps
-    the scan at (image_id, bytes, fmt)."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                px = decode_pixels(bytes(r.bytes), r.fmt).astype(np.float64)
-                gray = px.mean(axis=2)
-                gy, gx = np.gradient(gray)
-                rows.append((r.image_id, px[:, :, 0].mean(), px[:, :, 1].mean(),
-                             px[:, :, 2].mean(), gray.std(),
-                             float(np.mean(gx * gx + gy * gy))))
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA])
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(gen, FEATURE_SCHEMA)
-
-
-def resize_images(images: DataFrame, out_w: int, out_h: int,
-                  out_fmt: str = "raw") -> DataFrame:
-    """Decode -> area-resample to (out_w, out_h) -> re-encode.  Returns
-    the same hinted schema so resized tables compose with every other
-    operator."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                px = decode_pixels(bytes(r.bytes), r.fmt).astype(np.float64)
-                h, w = px.shape[:2]
-                ry = int(np.lcm(h, out_h) // h)
-                rx = int(np.lcm(w, out_w) // w)
-                up = np.repeat(np.repeat(px, ry, axis=0), rx, axis=1)
-                hh, ww = up.shape[:2]
-                small = up.reshape(out_h, hh // out_h, out_w, ww // out_w, 3) \
-                          .mean(axis=(1, 3))
-                spx = np.clip(np.round(small), 0, 255).astype(np.uint8)
-                rows.append((r.image_id, ic.encode_image(spx, out_fmt),
-                             out_w, out_h, out_fmt, r.caption,
-                             ic.phash64(spx)))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h",
-                                              "fmt", "caption", "phash"])
-
-    from ..sources.synth import spark_schemas
-    return images.mapInPandas(gen, spark_schemas()["images"])
-
-
-# --- video: opaque binary = concatenated raw frames (deterministic fake
-# container; a real demuxer plugs into _split_frames) -------------------
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("video_id", T.StringType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("frame_bytes", T.BinaryType()),
-])
-
-
-def _split_frames(data: bytes, n_frames: int) -> list[bytes]:
-    step = len(data) // max(n_frames, 1)
-    return [data[i * step:(i + 1) * step] for i in range(n_frames)]
-
-
-def sample_frames(videos: DataFrame, every_n: int = 2,
-                  id_col: str = "video_id", bytes_col: str = "bytes",
-                  nframes_col: str = "n_frames") -> DataFrame:
-    """Frame sampling plumbing: explode every Nth frame of each opaque
-    video payload.  Real partition/batch mechanics; the 'demuxer' is the
-    deterministic byte-splitter above."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids, idxs, blobs = [], [], []
-            for r in pdf.itertuples():
-                frames = _split_frames(bytes(getattr(r, bytes_col)),
-                                       int(getattr(r, nframes_col)))
-                for i in range(0, len(frames), every_n):
-                    ids.append(getattr(r, id_col))
-                    idxs.append(i)
-                    blobs.append(frames[i])
-            yield pd.DataFrame({"video_id": ids, "frame_idx": idxs,
-                                "frame_bytes": blobs})
-
-    return videos.select(
-        F.col(id_col), F.col(bytes_col), F.col(nframes_col)
-    ).mapInPandas(gen, FRAME_SCHEMA)
 
 
 def phash_images(images: DataFrame) -> DataFrame:

@@ -39,10 +39,14 @@ Design per operator (all range-like joins reduced to cell equi joins):
   knn() is an adapter: its queries become knn_join's left side.  This
   is the reference-free operator the survey maps from 'H3 k-ring
   expansion + distance re-rank'.
-- tile_assignment: decode image bytes (mapInPandas batches), block-
-  reduce pixels to a gxg grid, map each block to the geo cell under its
-  footprint, and aggregate per cell — raster->vector, 'assign decoded
-  image rasters to vector cells'.
+- tile_assignment: ONE operator, two input routes — raster->vector,
+  'assign decoded image rasters to vector cells'.  A DataFrame is one
+  mapInArrow over its (id, bytes, geotag) columns; a parquet path is
+  decoded file-parallel, tasks reading their files with pyarrow.  Both
+  run one kernel (Arrow buffers -> gxg block means -> the cell under
+  each block, either family) and pre-aggregate per (row, cell) in the
+  task; the final per-cell aggregate counts distinct image ids, so
+  n_images stays exact when ids repeat.
 """
 
 from __future__ import annotations
@@ -707,19 +711,6 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
 
 
 # ---------------------------------------------------------------------------
-# raster tile assignment
-# ---------------------------------------------------------------------------
-
-TILE_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType()),
-    T.StructField("cell", T.LongType()),
-    T.StructField("block_row", T.IntegerType()),
-    T.StructField("block_col", T.IntegerType()),
-    T.StructField("mean_intensity", T.DoubleType()),
-])
-
-
-# ---------------------------------------------------------------------------
 # kNN JOIN (corpus x corpus)
 # ---------------------------------------------------------------------------
 
@@ -1351,6 +1342,9 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
         raise
 
 
+# ---------------------------------------------------------------------------
+# raster tile assignment
+# ---------------------------------------------------------------------------
 
 def _block_cell_fn(res: int, family: str):
     """Block-center -> cell mapper for the chosen index family."""
@@ -1361,67 +1355,93 @@ def _block_cell_fn(res: int, family: str):
     raise ValueError(f"unknown cell family {family!r}")
 
 
+def _tile_cols(names) -> list:
+    """The kernel's input columns: id, blob, and lat/lon when present,
+    else the phash the geotag is derived from inside the same Arrow
+    pass (a geo pandas_udf stage in front would double the per-slot
+    worker count and move the bytes column across the channel twice)."""
+    return ["image_id", "bytes"] + (["lat", "lon"] if "lat" in names
+                                    else ["phash"])
+
+
+def _binary_np(arr, ids):
+    """(data uint8, offsets int64) view of an Arrow Binary/LargeBinary
+    array without materializing per-row Python bytes; a null blob
+    raises, naming its image."""
+    import pyarrow as pa
+    if arr.null_count:
+        i = arr.is_null().to_pylist().index(True)
+        raise ValueError(f"image {ids[i].as_py()!r} has a null bytes value")
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, offsets, data = arr.buffers()
+    offsets = np.frombuffer(offsets, dtype=odt)[
+        arr.offset: arr.offset + len(arr) + 1]
+    return np.frombuffer(data, dtype=np.uint8), offsets.astype(np.int64)
+
+
+def _decode_blocks(rb, grid: int, to_cell):
+    """The one decode kernel: an Arrow batch of _tile_cols -> (row,
+    cell, value) of its grid x grid blocks, flat in row-major block
+    order.  Same-shape images decode as one stacked numpy op."""
+    if "lat" in rb.schema.names:
+        lat, lon = (rb.column(c).to_numpy().astype(np.float64, copy=False)
+                    for c in ("lat", "lon"))
+    else:
+        lat, lon = ic.geotag_from_phash(
+            rb.column("phash").to_numpy().astype(np.int64, copy=False))
+    data, offsets = _binary_np(rb.column("bytes"), rb.column("image_id"))
+    vals, blas, blos = ic.block_means_batch(data, offsets, lat, lon, grid)
+    return (np.repeat(np.arange(rb.num_rows), grid * grid),
+            to_cell(blas.reshape(-1), blos.reshape(-1)), vals.reshape(-1))
+
+
+def _cell_partials(batches, grid: int, to_cell):
+    """mapInArrow body of both tile_assignment routes: one partial per
+    (row, cell) = (cell, image_id, nb = the row's blocks there, s =
+    their sum), aggregated in the task before any shuffle."""
+    import pyarrow as pa
+    for rb in batches:
+        if rb.num_rows:
+            row, cells, vals = _decode_blocks(rb, grid, to_cell)
+            (rk, ck), inv = np.unique(np.stack([row, cells]), axis=1,
+                                      return_inverse=True)
+            inv = inv.reshape(-1)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ck), rb.column("image_id").take(rk),
+                 pa.array(np.bincount(inv)),
+                 pa.array(np.bincount(inv, weights=vals))],
+                names=["cell", "image_id", "nb", "s"])
+
+
+def _partial_schema(id_type: T.DataType) -> str:
+    return f"cell long, image_id {id_type.simpleString()}, nb long, s double"
+
+
 def image_blocks(images: DataFrame, grid: int = 4,
                  res: int = KNN_RES, family: str = "equirect") -> DataFrame:
-    """Decode every image, reduce to grid x grid mean-intensity blocks,
-    and assign each block the cell under its footprint center.
-
-    Accepts either a geo-attached frame (lat/lon columns) or the raw
-    images table — in the latter case the geotag is derived from phash
-    INSIDE the same Arrow pass, so the whole operator is a single
-    Python stage (chaining a geo pandas_udf stage in front doubles the
-    per-slot worker count and the bytes column crosses the channel
-    once more)."""
-    has_geo = "lat" in images.columns
-    cols = ["image_id", "bytes"] + (["lat", "lon"] if has_geo else ["phash"])
+    """One row per decoded block: (image_id, cell, block_row, block_col,
+    mean_intensity), the cell being the one under the block's center;
+    `images` is a geo-attached frame or the raw images table."""
+    import pyarrow as pa
     to_cell = _block_cell_fn(res, family)
-    gr, gc = np.meshgrid(np.arange(grid), np.arange(grid), indexing="ij")
-    gr, gc = gr.reshape(-1), gc.reshape(-1)
 
     def gen(batches):
-        for pdf in batches:
-            if has_geo:
-                lat = pdf["lat"].to_numpy(np.float64)
-                lon = pdf["lon"].to_numpy(np.float64)
-            else:
-                lat, lon = ic.geotag_from_phash(pdf["phash"].to_numpy(np.int64))
-            n_img = len(pdf)
-            n = grid * grid
-            # one contiguous buffer + offsets -> the batched kernel
-            # (groups same-shape images and decodes each group as one
-            # stacked numpy op instead of a per-image Python loop;
-            # bit-identical values, r7 measurement in BENCH/BASELINE.md)
-            blobs = [bytes(b) for b in pdf["bytes"]]
-            data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-            lens = np.fromiter((len(b) for b in blobs), dtype=np.int64,
-                               count=n_img)
-            offsets = np.concatenate(([0], np.cumsum(lens)))
-            vals, blas, blos = ic.block_means_batch(
-                data, offsets, lat, lon, grid)
-            cells = to_cell(blas.reshape(-1), blos.reshape(-1))
-            yield pd.DataFrame({
-                "image_id": np.repeat(pdf["image_id"].to_numpy(), n),
-                "cell": cells,
-                "block_row": np.tile(gr, n_img),
-                "block_col": np.tile(gc, n_img),
-                "mean_intensity": vals.reshape(-1)})
+        for rb in batches:
+            if rb.num_rows:
+                row, cells, vals = _decode_blocks(rb, grid, to_cell)
+                blk = np.tile(np.arange(grid * grid, dtype=np.int32),
+                              rb.num_rows)
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("image_id").take(row), pa.array(cells),
+                     pa.array(blk // grid), pa.array(blk % grid),
+                     pa.array(vals)],
+                    names=["image_id", "cell", "block_row", "block_col",
+                           "mean_intensity"])
 
-    return images.select(*cols).mapInPandas(gen, TILE_SCHEMA)
-
-
-def tile_assignment(images: DataFrame, grid: int = 4,
-                    res: int = KNN_RES,
-                    family: str = "equirect") -> DataFrame:
-    """Aggregate decoded raster blocks per vector cell: (cell, n_blocks,
-    n_images, avg_intensity) — partial aggregation is map-side, the
-    only shuffle is the final groupBy(cell).  family='s2' assigns
-    blocks to quad-sphere cells (near-uniform ground area — the right
-    partition key when tiles feed a 10^12-row storage layout)."""
-    blocks = image_blocks(images, grid, res, family)
-    return (blocks.groupBy("cell")
-            .agg(F.count("*").alias("n_blocks"),
-                 F.countDistinct("image_id").alias("n_images"),
-                 F.avg("mean_intensity").alias("avg_intensity")))
+    id_type = images.schema["image_id"].dataType.simpleString()
+    return images.select(*_tile_cols(images.columns)).mapInArrow(
+        gen, f"image_id {id_type}, cell long, block_row int, "
+             "block_col int, mean_intensity double")
 
 
 def _fs_and_path(path: str):
@@ -1447,70 +1467,16 @@ def _list_parquet_files(parquet_path: str) -> list:
                   and i.path.endswith(".parquet"))
 
 
-def _read_parquet_table(path: str, columns: list):
-    """Whole-file single-threaded read (each Spark task is already one
-    core; pyarrow's own pool would oversubscribe).  Measured ~30%
-    faster than iter_batches on the bench image files (r7)."""
+def _path_partials(parquet_path: str, grid: int, to_cell) -> DataFrame:
+    """The file-parallel route: each task reads whole parquet files with
+    pyarrow, single-threaded (a task is one core; measured ~30% faster
+    than iter_batches on the bench image files), so the blobs never
+    cross the JVM<->Python channel (which anti-scales: 670 MB/s at 8
+    workers, 400 MB/s at 32)."""
     import pyarrow.parquet as pq
-    fs, p = _fs_and_path(path)
-    return pq.read_table(p, columns=columns, filesystem=fs,
-                         use_threads=False)
-
-
-def _binary_np(arr):
-    """(data uint8, offsets int64) view of an Arrow Binary/LargeBinary
-    array without materializing per-row Python bytes.  None when the
-    array has nulls (caller falls back to the per-row path)."""
-    import pyarrow as pa
-    if arr.null_count:
-        return None
-    bufs = arr.buffers()
-    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offsets = np.frombuffer(bufs[1], dtype=odt)[
-        arr.offset: arr.offset + len(arr) + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
-    return data, offsets.astype(np.int64)
-
-
-def _decoded_tile_batches(path: str, grid: int, res: int):
-    """Per record batch of one parquet file: (flat cell ids
-    (n_img*grid^2,), flat block means, n_img)."""
-    tbl = _read_parquet_table(path, ["bytes", "phash"])
-    for rb in tbl.to_batches():
-        n_img = rb.num_rows
-        if n_img == 0:
-            continue
-        ph = rb.column(1).to_numpy()
-        lat, lon = ic.geotag_from_phash(ph.astype(np.int64, copy=False))
-        bb = _binary_np(rb.column(0))
-        if bb is not None:
-            data, offsets = bb
-        else:  # nulls: materialize and re-pack
-            blobs = [bytes(b) for b in rb.column(0).to_pylist()]
-            data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-            lens = np.fromiter((len(b) for b in blobs),
-                               dtype=np.int64, count=n_img)
-            offsets = np.concatenate(([0], np.cumsum(lens)))
-        vals, blas, blos = ic.block_means_batch(data, offsets, lat, lon,
-                                                grid)
-        cells = cx.cell_id(blas.reshape(-1), blos.reshape(-1), res)
-        yield cells, vals, n_img
-
-
-def tile_assignment_direct(spark, parquet_path: str, grid: int = 4,
-                           res: int = KNN_RES) -> DataFrame:
-    """tile_assignment over a parquet path via a direct scan: Spark
-    parallelizes over parquet FILES and each Python task reads its files
-    with pyarrow locally, so the bytes column never crosses the
-    JVM<->Python channel (which anti-scales: 670 MB/s at 8 workers,
-    400 MB/s at 32).  The per-(cell, image) partial aggregation runs
-    INSIDE the task (guide §2.3 'aggregate before you shuffle'): every
-    image's blocks live in exactly one task (files are never split), so
-    grouping blocks by (cell, image) locally is exact — n_images becomes
-    a plain count of the partial rows and image_id is never read (r7:
-    output rows drop ~2x, the countDistinct Expand disappears from the
-    plan).  avg_intensity = sum/count is the same weighted mean as
-    avg(mean_intensity), differing only in float summation order."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.pandas.types import from_arrow_type
+    spark = SparkSession.active()
     files = _list_parquet_files(parquet_path)
     if not files:
         raise ValueError(f"no parquet files under {parquet_path}")
@@ -1521,39 +1487,53 @@ def tile_assignment_direct(spark, parquet_path: str, grid: int = 4,
     n = min(len(files), 2 * spark.sparkContext.defaultParallelism,
             _python_stage_parts(spark, sum(size for _, size in files)))
     paths = [path for path, _ in files]
-    g2 = grid * grid
+    fs, first = _fs_and_path(paths[0])
+    schema = pq.read_schema(first, filesystem=fs)
+    cols = _tile_cols(schema.names)
+
+    def read(path):
+        fs, p = _fs_and_path(path)
+        return pq.read_table(p, columns=cols, filesystem=fs,
+                             use_threads=False).to_batches()
 
     def gen(batches):
-        import pyarrow as pa
-        schema = pa.schema([
-            pa.field("cell", pa.int64()),
-            pa.field("nb", pa.int64()),
-            pa.field("s", pa.float64()),
-        ])
         mine = [path for rb_in in batches
                 for i in rb_in.column(0).to_pylist() for path in paths[i::n]]
-        for path in mine:
-            for cells, vals, n_img in _decoded_tile_batches(
-                    path, grid, res):
-                img = np.repeat(np.arange(n_img, dtype=np.int64), g2)
-                order = np.lexsort((cells, img))
-                ck = cells[order]
-                ik = img[order]
-                v = vals.reshape(-1)[order]
-                new = np.empty(len(ck), dtype=bool)
-                new[0] = True
-                new[1:] = (ck[1:] != ck[:-1]) | (ik[1:] != ik[:-1])
-                gstart = np.nonzero(new)[0]
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(ck[gstart]),
-                    pa.array(np.diff(np.append(gstart, len(ck)))
-                               .astype(np.int64)),
-                    pa.array(np.add.reduceat(v, gstart)),
-                ], schema=schema)
+        yield from _cell_partials((rb for path in mine for rb in read(path)),
+                                  grid, to_cell)
 
-    partial = spark.range(n, numPartitions=n).mapInArrow(
-        gen, "cell long, nb long, s double")
-    return (partial.groupBy("cell")
+    return spark.range(n, numPartitions=n).mapInArrow(
+        gen, _partial_schema(from_arrow_type(schema.field("image_id").type)))
+
+
+def tile_assignment(images: DataFrame | str, grid: int = 4,
+                    res: int = KNN_RES,
+                    family: str = "equirect") -> DataFrame:
+    """Aggregate decoded raster blocks per vector cell: (cell, n_blocks,
+    n_images, avg_intensity).  The input's type picks the route:
+    a DataFrame (lat/lon columns, or the raw table whose phash carries
+    the geotag) is one mapInArrow over (image_id, bytes, geotag); a
+    parquet path string is the file-parallel decode (_path_partials).
+    Both run one kernel (_decode_blocks, for either family) and
+    pre-aggregate per (row, cell) in the task, then end in one exact
+    aggregate: n_images counts distinct image_ids, so an id repeated
+    across rows or files counts once.  Repartitioning by cell first
+    puts the distinct count behind a single exchange.  family='s2'
+    assigns blocks to quad-sphere cells (near-uniform ground area)."""
+    to_cell = _block_cell_fn(res, family)
+    if isinstance(images, str):
+        partial = _path_partials(images, grid, to_cell)
+    else:
+        partial = images.select(*_tile_cols(images.columns)).mapInArrow(
+            lambda batches: _cell_partials(batches, grid, to_cell),
+            _partial_schema(images.schema["image_id"].dataType))
+    return (partial.repartition("cell").groupBy("cell")
             .agg(F.sum("nb").alias("n_blocks"),
-                 F.count("*").alias("n_images"),
+                 F.countDistinct("image_id").alias("n_images"),
                  (F.sum("s") / F.sum("nb")).alias("avg_intensity")))
+
+
+def tile_assignment_direct(spark, parquet_path: str, grid: int = 4,
+                           res: int = KNN_RES) -> DataFrame:
+    """tile_assignment over a parquet path (the file-parallel route)."""
+    return tile_assignment(parquet_path, grid, res)

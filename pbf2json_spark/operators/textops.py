@@ -96,51 +96,3 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     fp = F.conv(F.substring(F.md5(norm), 1, 15), 16, 10).cast("bigint")
     return docs.select("doc_id", fp.alias("fp"))
 
-
-ROLL_BASE = 257
-# Mersenne modulus keeps every intermediate < 2^40: acc*base and
-# c_out*base^(w-1) both fit a bigint with no silent Java overflow (the
-# previous 2^61 modulus overflowed the JVM multiply)
-ROLL_MOD = (1 << 31) - 1
-
-
-def rolling_fingerprint_shingles(docs: DataFrame, window: int = 16) -> DataFrame:
-    """Winnowing-style fingerprint: (doc_id, rolling_fp) = the MINIMUM
-    rolling polynomial hash over ALL length-`window` character windows
-    of the normalized text (whole text when shorter than `window`).
-
-    One JVM-side pass: the first window's hash is a left fold, then a
-    single `aggregate` over the remaining positions slides the hash
-    with the classic Rabin-Karp update
-        h' = ((h - c_out * base^(w-1)) * base + c_in) mod M
-    carrying (h, min) in a struct accumulator — O(n) total, not the
-    O(n*w) of re-hashing every window.  Pytest pins it against a pure-
-    Python twin on texts where the minimum is NOT the first window."""
-    pw = pow(ROLL_BASE, window - 1, ROLL_MOD)
-    chars = F.split(F.regexp_replace(F.lower("text"), r"\s+", " "), "")
-    codes = F.transform(chars, lambda c: F.ascii(c).cast("bigint"))
-    n = F.size(codes)
-    h0 = F.aggregate(
-        F.slice(codes, 1, window),
-        F.lit(0).cast("bigint"),
-        lambda acc, c: F.pmod(acc * ROLL_BASE + c, F.lit(ROLL_MOD)),
-    )
-
-    def slide(codes_col):
-        def step(st, i):
-            out = F.element_at(codes_col, (i - window).cast("int"))
-            inc = F.element_at(codes_col, i.cast("int"))
-            h = F.pmod(
-                F.pmod(st["h"] - out * F.lit(pw), F.lit(ROLL_MOD))
-                * ROLL_BASE + inc,
-                F.lit(ROLL_MOD))
-            return F.struct(h.alias("h"), F.least(st["mn"], h).alias("mn"))
-
-        return F.aggregate(
-            F.sequence(F.lit(window + 1).cast("bigint"), n.cast("bigint")),
-            F.struct(h0.alias("h"), h0.alias("mn")),
-            step,
-            lambda st: st["mn"])
-
-    fp = F.when(n <= window, h0).otherwise(slide(codes))
-    return docs.select("doc_id", fp.alias("rolling_fp"))

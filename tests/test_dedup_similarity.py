@@ -320,39 +320,11 @@ def test_phash_near_dup_pairs(spark):
     assert ("img1", "img11") in got             # noised copy is near
 
 
-def test_image_features_and_resize(spark):
-    imgs = synth.images_df(spark, 24, partitions=2)
-    feats = multimodal.image_features(imgs).collect()
-    assert len(feats) == 24
-    for r in feats:
-        assert 0 <= r.mean_r <= 255 and r.std_gray > 0
-    small = multimodal.resize_images(imgs, 8, 8)
-    rows = small.collect()
-    assert all(r.w == 8 and r.h == 8 and r.fmt == "raw" for r in rows)
-    from pbf2json_spark.functions import imagecodec as ic
-    px = ic.decode_image(bytes(rows[0].bytes))
-    assert px.shape == (8, 8, 3)
-
-
 def test_external_format_decode_is_stubbed():
     with pytest.raises(NotImplementedError):
         multimodal.decode_pixels(b"\xff\xd8\xff", "jpeg")
     with pytest.raises(ValueError):
         multimodal.decode_pixels(b"????", "tiff")
-
-
-def test_frame_sampling_shapes(spark):
-    vids = spark.createDataFrame(
-        [("v0", bytes(range(256)) * 4, 8), ("v1", bytes(256), 4)],
-        "video_id string, bytes binary, n_frames int")
-    out = multimodal.sample_frames(vids, every_n=2).collect()
-    by_vid = {}
-    for r in out:
-        by_vid.setdefault(r.video_id, []).append(r.frame_idx)
-    assert sorted(by_vid["v0"]) == [0, 2, 4, 6]
-    assert sorted(by_vid["v1"]) == [0, 2]
-    v0_frame = [r for r in out if r.video_id == "v0" and r.frame_idx == 0][0]
-    assert len(bytes(v0_frame.frame_bytes)) == 1024 // 8
 
 
 def test_image_duplicates_pipeline(spark):

@@ -62,6 +62,24 @@ def test_attach_geo_and_tile_assignment_s2(spark):
                         for r in rows)
 
 
+def test_tile_assignment_s2_path_route_equals_frame_route(spark, tmp_path):
+    """family='s2' on the parquet-path route: the same cells, block and
+    image counts as the frame route over the same table."""
+    from pbf2json_spark.operators.spatial import tile_assignment
+    from pbf2json_spark.sources.synth import images_df
+    path = str(tmp_path / "imgs")
+    images_df(spark, 300, partitions=3).write.parquet(path)
+    a = tile_assignment(spark.read.parquet(path), res=12, family="s2") \
+        .orderBy("cell").toPandas()
+    b = tile_assignment(path, res=12, family="s2").orderBy("cell").toPandas()
+    assert len(a) > 0
+    assert a["cell"].tolist() == b["cell"].tolist()
+    assert a["n_blocks"].tolist() == b["n_blocks"].tolist()
+    assert a["n_images"].tolist() == b["n_images"].tolist()
+    assert np.allclose(a["avg_intensity"], b["avg_intensity"])
+    assert (cx.s2_decode(b["cell"].to_numpy())[1] == 12).all()
+
+
 def test_with_s2_scratch_name_guard(spark):
     """Reserved _s2* scratch names on the input frame must be refused
     up front (ADVICE r4: duplicate columns -> ambiguous-reference

@@ -366,6 +366,50 @@ def test_tile_assignment_direct_one_decode_wave(spark, three_file_images):
     assert ran[0].numTasks == 3 <= sc.defaultParallelism
 
 
+def test_tile_assignment_counts_repeated_ids_once(spark, tmp_path):
+    """A 2-file table where 10 of 50 image_ids appear in both files:
+    both routes (and the tile_assignment_direct wrapper) count an id
+    once per cell (n_images = pandas nunique) and every row's blocks in
+    n_blocks."""
+    pdf = synth.gen_images_pdf(50)
+    path = tmp_path / "imgs"
+    path.mkdir()
+    pdf.iloc[:30].to_parquet(path / "part-0.parquet", index=False)
+    pdf.iloc[20:].to_parquet(path / "part-1.parquet", index=False)
+    blocks = synth.gen_tile_blocks_pdf(50)
+    rows = pd.concat([blocks[blocks["image_id"].isin(pdf["image_id"][:30])],
+                      blocks[blocks["image_id"].isin(pdf["image_id"][20:])]])
+    want = rows.groupby("cell").agg(
+        n_blocks=("mean_intensity", "size"),
+        n_images=("image_id", "nunique"),
+        avg_intensity=("mean_intensity", "mean")).reset_index()
+    for tiles in (lambda: sp.tile_assignment(spark.read.parquet(str(path))),
+                  lambda: sp.tile_assignment_direct(spark, str(path)),
+                  lambda: sp.tile_assignment(str(path))):
+        got = tiles().orderBy("cell").toPandas()
+        assert got["cell"].tolist() == want["cell"].tolist()
+        assert got["n_blocks"].tolist() == want["n_blocks"].tolist()
+        assert got["n_images"].tolist() == want["n_images"].tolist()
+        assert np.allclose(got["avg_intensity"], want["avg_intensity"])
+
+
+def test_tile_assignment_null_blob_names_image(spark, tmp_path):
+    """A null bytes value fails loudly on both routes, naming the
+    image, instead of a TypeError or a silent re-pack."""
+    pdf = synth.gen_images_pdf(6)[["image_id", "bytes", "phash"]]
+    pdf.loc[3, "bytes"] = None
+    bad = pdf.loc[3, "image_id"]
+    path = tmp_path / "imgs"
+    path.mkdir()
+    pdf.to_parquet(path / "part-0.parquet", index=False)
+    frame = spark.createDataFrame(
+        pdf, "image_id string, bytes binary, phash long")
+    for images in (frame, str(path)):
+        with pytest.raises(Exception, match=rf"ValueError: image '{bad}' "
+                                            "has a null bytes value"):
+            sp.tile_assignment(images).collect()
+
+
 def test_tile_oracle_fixture_pins_operator(spark):
     """The committed q_tile_assignment oracle fixture (tests/fixtures/
     tile_blocks_1000.parquet) must match (a) a fresh run of the
