@@ -87,8 +87,9 @@ class Engine:
                                 point_id=point_id, family=family)
 
     def knn(self, points, queries, k, point_id="image_id", **kw):
-        """Exact top-k per query: one brute scan below the pair-op
-        budget, knn_join's distributed ladder above it."""
+        """Exact top-k per query: knn_join with the queries as its left
+        side (one brute scan below the pair-op budget, the distributed
+        ladder above it)."""
         from .operators.spatial import knn
         return knn(points, queries, k, point_id=point_id, **kw)
 

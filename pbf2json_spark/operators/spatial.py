@@ -20,24 +20,25 @@ Design per operator (all range-like joins reduced to cell equi joins):
   Explicit hot-key salting lives in plans/salting.py and applies where
   a SHUFFLE hash join exists (the denormalize node join); AQE's skew
   join splitting covers the PIP shuffle plan.
-- knn / knn_join: ONE priced route rule (_brute_fits).  A call whose
-  n_queries x n_points fits BRUTE_OPS_BUDGET (2e9 pair-ops) is one
-  vectorized brute scan, with no ladder job at all.  Measured on a
+- knn_join: the one kNN operator; knn() is knn_join with its queries
+  as the left side.  ONE priced route rule (_brute_fits), decided from
+  one bounded collect of the left side: a call whose n_left x n_right
+  fits BRUTE_OPS_BUDGET (2e9 pair-ops) is one vectorized brute scan
+  over the collected frame, with no ladder job at all.  Measured on a
   4-core host (warm knn_join, zipfian, k=8, exclude_self; identical
   ids and ranks on both routes), brute vs ladder:
       2e7 pair-ops  (2k x 10k)     1.3 s  vs   8.8 s
       5e8 pair-ops  (5k x 100k)    3.8 s  vs  12.9 s
       2e9 pair-ops  (20k x 100k)  11.7 s  vs  14.6 s
-  so the budget sits near the crossover.  Above it runs ONE cell
-  ladder, knn_join's: a distributed exact window-occupancy table starts
+  so the budget sits near the crossover.  Above it runs the cell
+  ladder: a distributed exact window-occupancy table starts
   every row at the finest level whose cell disk holds ~margin*k points
   (fine in zipfian hotspots, coarse in sparse regions); rounds are
   cell-equi joins re-ranked by a JVM-side haversine under one rank<=k
   window (WindowGroupLimit partial top-k); a row is done when k
   candidates lie within its conservative disk-exit bound, unsatisfied
   rows coarsen one level, and the rest fold into the same brute scan.
-  knn() is an adapter: its queries become knn_join's left side.  This
-  is the reference-free operator the survey maps from 'H3 k-ring
+  This is the reference-free operator the survey maps from 'H3 k-ring
   expansion + distance re-rank'.
 - tile_assignment: ONE operator, two input routes — raster->vector,
   'assign decoded image rasters to vector cells'.  A DataFrame is one
@@ -389,13 +390,15 @@ BRUTE_OPS_BUDGET = 2_000_000_000
 
 
 def _brute_fits(n_queries: int, n_points: int) -> bool:
-    """The single kNN route rule (knn and knn_join entry, and the
-    ladder's small-tail fold): brute scan iff the pair-op count fits
+    """The single kNN route rule (knn_join's entry, and the ladder's
+    small-tail fold): brute scan iff the pair-op count fits
     BRUTE_OPS_BUDGET.  The scan collects the query side to the driver,
     so it also requires n_queries <= KNN_MAX_QUERIES — a larger side
-    stays on the distributed ladder."""
+    stays on the distributed ladder.  An empty corpus is priced as one
+    point, so knn_join's collect bound is exactly the largest
+    n_queries this admits."""
     return (n_queries <= KNN_MAX_QUERIES
-            and n_queries * n_points <= BRUTE_OPS_BUDGET)
+            and n_queries * max(n_points, 1) <= BRUTE_OPS_BUDGET)
 
 
 # packed brute-scan point store (ids + unit xyz + its broadcast) of the
@@ -650,64 +653,25 @@ def knn(points: DataFrame, queries: DataFrame, k: int,
         trace: dict | None = None) -> DataFrame:
     """Exact top-k nearest points per query, (dist, id) tiebreak.
 
-    points: (point_id, lat, lon); queries: (query_id, lat, lon).
-    Returns (query_id, <point_id>, dist_m, rank).
+    points: (point_id, lat, lon); queries: (query_id, lat, lon), both
+    ids strings.  Returns (query_id, <point_id>, dist_m, rank).
 
-    An adapter over the one kNN engine.  The query side is collected
-    to the driver once (queries are the dim side), and the call takes
-    one of two routes by the priced rule _brute_fits:
-
-    - n_queries x n_points fits BRUTE_OPS_BUDGET (2e9 pair-ops, the
-      measured crossover in the module docstring) and n_queries <=
-      KNN_MAX_QUERIES: ONE vectorized brute scan (_brute_force_knn).  Its packed point store is
-      memoized on (points, point_id), so warm repeated calls over one
-      corpus DataFrame skip the collect and the broadcast.
-    - otherwise: knn_join(queries, points) with `initial_ring` as its
-      ring — the distributed cell ladder, both sides DataFrames.
-
-    `res` does not affect the plan (the ladder picks per-row levels
-    from measured density); it is accepted for existing callers.
-    `family` must be 'equirect' or 's2'.  Both run the same engine and
-    return identical exact rows.  An s2 point side that carries the
-    (face, s, t) ingest columns (cellsql.with_s2_cell(keep_fst=True))
-    must have derived them from its (lat, lon), or the call raises.
-
-    Pass a dict as `trace`: the brute route records ladder_skipped
-    and fold {sec, rows}, the same keys knn_join records; the ladder
-    route records knn_join's dict."""
+    knn_join with the queries as its left side and `initial_ring` as
+    its ring: the same bounded-collect route decision, brute scan and
+    ladder, and the same `trace` keys.  `res` does not affect the plan
+    (the ladder picks per-row levels from measured density); it is
+    accepted for existing callers.  `family` must be 'equirect' or
+    's2'.  Both run the same engine and return identical exact rows.
+    An s2 point side that carries the (face, s, t) ingest columns
+    (cellsql.with_s2_cell(keep_fst=True)) must have derived them from
+    its (lat, lon), or the call raises."""
     if family not in ("equirect", "s2"):
         raise ValueError(f"unknown cell family {family!r}")
     if family == "s2" and {"_s2f", "_s2s", "_s2t"} <= set(points.columns):
         from ..functions.cellsql import check_fst_source
         check_fst_source(points, "lat", "lon")
-    spark = points.sparkSession
-    remaining = queries.select("query_id", "lat", "lon").toPandas()
-    if remaining.empty:
-        # an empty Arrow table analyzes to a JVM LocalRelation; an empty
-        # pandas frame or list would take the Python-RDD path
-        import pyarrow as pa
-        return spark.createDataFrame(pa.schema([
-            ("query_id", pa.string()), (point_id, pa.string()),
-            ("dist_m", pa.float64()), ("rank", pa.int32())]).empty_table(),
-            schema=f"query_id string, {point_id} string, "
-                   f"dist_m double, rank int")
-    n_points = points.count()
-    if not _brute_fits(len(remaining), n_points):
-        return knn_join(queries, points, k, left_id="query_id",
-                        right_id=point_id, ring=initial_ring,
-                        trace=trace) \
-            .select("query_id", point_id, "dist_m", "rank")
-    import time as _time
-    _t0 = _time.perf_counter()
-    pts = points.select(F.col(point_id), F.col("lat").alias("p_lat"),
-                        F.col("lon").alias("p_lon"))
-    out = _brute_force_knn(pts, remaining, k, point_id, n_points,
-                           (points, point_id)).localCheckpoint(eager=True)
-    if trace is not None:
-        trace["ladder_skipped"] = len(remaining)
-        trace["fold"] = {"sec": round(_time.perf_counter() - _t0, 2),
-                         "rows": len(remaining)}
-    return out
+    return knn_join(queries, points, k, left_id="query_id",
+                    right_id=point_id, ring=initial_ring, trace=trace)
 
 
 # ---------------------------------------------------------------------------
@@ -792,17 +756,24 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     """EXACT k nearest `right` rows for EVERY `left` row — the one kNN
     engine.  BOTH sides are unbounded DataFrames, and only a left side
     or fold chunk within KNN_MAX_QUERIES rows is ever collected to the
-    driver; knn() is an adapter whose queries become the left side.
-    ROUTE — the priced rule _brute_fits: when
-    n_left x n_right fits BRUTE_OPS_BUDGET (2e9 pair-ops, the measured
-    crossover — table in the module docstring) and n_left <=
-    KNN_MAX_QUERIES, the whole call is the exact tail fold below (one
-    vectorized brute scan): no W-table probe, no rounds, no histogram
-    collects.  Above it the distributed ladder runs.
+    driver; knn() is this call with its queries as the left side.
+    ROUTE — the priced rule _brute_fits, decided from ONE bounded
+    collect: the right side is counted once, and the left side is
+    collected up to min(KNN_MAX_QUERIES, BRUTE_OPS_BUDGET // n_right)
+    + 1 rows.  Within that bound the frame is the whole left side, and
+    the call is the exact tail fold below over it (one vectorized
+    brute scan): no W-table probe, no rounds, no histogram collects,
+    and a lazy result.  Past it the distributed ladder runs, and only
+    that route counts the left side.
 
-    left: (left_id, lat, lon); right: (right_id, lat, lon).  Returns
-    (left_id, right_id, dist_m, rank) with the (dist, id) tiebreak —
-    identical ordering to knn()/the SQL oracle.
+    left: (left_id, lat, lon); right: (right_id, lat, lon), both ids
+    strings (else ValueError).  Returns (left_id, right_id, dist_m,
+    rank) with the (dist, id) tiebreak — identical ordering to the SQL
+    oracle.
+
+    Pass a dict as `trace`: the brute route records ladder_skipped
+    (the left row count); the ladder records probe {sec, start_hist}
+    and round{i} {sec, remaining}; both record fold {sec, rows}.
 
     DENSITY-AWARE PER-ROW LEVELS (the hot-cell survival property): a
     single global join level dies on zipfian geo data — a city-center
@@ -900,10 +871,19 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                 f"ring")
     finest = levels[0]
     n_lvls = len(levels)
+    # string ids only: the scan types ids string and breaks distance
+    # ties on their string order, so a bigint id would fail the scan
+    # in a worker, and the ladder's window would rank ties numerically
+    for df, col in ((left, left_id), (right, right_id)):
+        dt = df.schema[col].dataType
+        if not isinstance(dt, T.StringType):
+            raise ValueError(f"knn_join: id column {col!r} is "
+                             f"{dt.simpleString()}; kNN ids must be "
+                             f"strings")
 
     # entry snapshot for deterministic block release (ADVICE r5): every
     # persisted/checkpointed RDD this call creates — round tops, round
-    # remainings, the right-side key table, the fold's scan output — is
+    # remainings, the right-side key table, the fold rows — is
     # released by id-diff once the final result has its own blocks.
     # The Dataset API exposes no unpersist for localCheckpoint blocks
     # (they otherwise wait on driver GC), so without this a long
@@ -918,25 +898,36 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
         left_raw = left.select(
             F.col(left_id), F.col("lat").alias("l_lat"),
             F.col("lon").alias("l_lon"))
-        n_left = left_raw.count()
-        n_right = right_base.count() if n_left else 0
+        # the brute scan's query frame, (query_id, lat, lon)
+        as_queries = (F.col(left_id).alias("query_id"),
+                      F.col("l_lat").alias("lat"),
+                      F.col("l_lon").alias("lon"))
+        n_right = right_base.count()
+        import time as _time
+        _tp0 = _time.perf_counter()
+        # ONE bounded collect decides the route: the left side up to the
+        # largest count _brute_fits admits against n_right, plus one
+        # row.  Within the bound the frame IS the whole left side and
+        # the brute scan's query side; past it the ladder runs.
+        cap = min(KNN_MAX_QUERIES, BRUTE_OPS_BUDGET // max(n_right, 1))
+        left_pdf = left_raw.select(*as_queries).limit(cap + 1).toPandas()
+        run_ladder = not _brute_fits(len(left_pdf), n_right)
 
         results = []
         fold_rows = None
         n_rem = 0
-        import time as _time
-        _tp0 = _time.perf_counter()
-        run_ladder = not _brute_fits(n_left, n_right)
-        if not run_ladder and n_left > 0:
+        if not run_ladder:
             # LADDER SKIP: below the priced crossover the round machinery
             # (W probe, key-table build, join, window, histogram collects:
             # ~30 fixed job floors at 2,000 x 10,000) costs more than the
             # whole brute scan.  The fold is exact, so results are
             # identical to the ladder's.
+            n_left = len(left_pdf)
             if trace is not None:
                 trace["ladder_skipped"] = n_left
-            fold_rows = left_raw
-        if run_ladder:
+        else:
+            left_pdf = None   # truncated; the fold collects its own rows
+            n_left = left_raw.count()
             # persist the right side ONCE at N rows with its finest (i, j)
             # pair; every round derives its join keys from these by pure
             # shifts, exploded ONLY to the round's ACTIVE levels.  The r5
@@ -1266,47 +1257,45 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             fold_rows = remaining if fold_rows is None else \
                 fold_rows.unionByName(remaining)
 
-        if fold_rows is not None and run_ladder:
+        if fold_rows is not None:
             # one materialization serves the size check AND every chunk's
             # collect (the union's branches re-aggregate round tops
-            # otherwise).  On the ladder-skip path fold_rows is the raw
-            # left scan: size already known, nothing to materialize.
+            # otherwise)
             fold_rows = fold_rows.localCheckpoint(eager=False)
             n_fold = fold_rows.count()
         else:
-            n_fold = n_left if fold_rows is not None else 0
+            n_fold = 0 if left_pdf is None else len(left_pdf)
         _tf0 = _time.perf_counter()
-        if n_fold:
-            # the fold is the exact brute scan: fold x right distance ops,
-            # BLAS-chunked, distributed by queries (broadcast store) or by
-            # points (running top-k merge), nothing driver-side but the
-            # fold rows themselves; the scan drops self pairs in-scan.
-            # It collects its queries, so a fold above KNN_MAX_QUERIES
-            # rows (most of a pathological left side sparse at every
-            # ladder level) runs as one scan per hash chunk.  The 0.9
-            # slack absorbs hash imbalance; xxhash64 keeps chunking
-            # deterministic.
-            n_chunks = 1 if n_fold <= KNN_MAX_QUERIES else \
-                -(-n_fold // int(0.9 * KNN_MAX_QUERIES))
-            q_all = fold_rows.select(F.col(left_id).alias("query_id"),
-                                     F.col("l_lat").alias("lat"),
-                                     F.col("l_lon").alias("lon"))
-            bpts = right_base.select(F.col(right_id).alias("_pid"),
-                                     F.col("r_lat").alias("p_lat"),
-                                     F.col("r_lon").alias("p_lon"))
-            for chunk in range(n_chunks):
-                q = q_all if n_chunks == 1 else q_all.filter(
-                    F.pmod(F.xxhash64("query_id"), F.lit(n_chunks))
-                    == chunk)
+        # the fold is the exact brute scan: fold x right distance ops,
+        # BLAS-chunked, distributed by queries (broadcast store) or by
+        # points (running top-k merge), nothing driver-side but the fold
+        # rows themselves; the scan drops self pairs in-scan.  The brute
+        # route's fold is the collected left frame.  A ladder fold above
+        # KNN_MAX_QUERIES rows (most of a pathological left side sparse
+        # at every ladder level) runs as one scan per hash chunk.  The
+        # 0.9 slack absorbs hash imbalance; xxhash64 keeps chunking
+        # deterministic.
+        n_chunks = 1 if n_fold <= KNN_MAX_QUERIES else \
+            -(-n_fold // int(0.9 * KNN_MAX_QUERIES))
+        bpts = right_base.select(F.col(right_id).alias("_pid"),
+                                 F.col("r_lat").alias("p_lat"),
+                                 F.col("r_lon").alias("p_lon"))
+        for chunk in range(n_chunks if n_fold else 0):
+            fold_pdf = left_pdf
+            if fold_pdf is None:
+                q = fold_rows.select(*as_queries)
+                if n_chunks > 1:
+                    q = q.filter(F.pmod(F.xxhash64("query_id"),
+                                        F.lit(n_chunks)) == chunk)
                 fold_pdf = q.toPandas()
-                if fold_pdf.empty:
-                    continue
-                folded = _brute_force_knn(bpts, fold_pdf, k, "_pid",
-                                          n_right, (right, right_id),
-                                          exclude_self)
-                results.append(folded.select(
-                    F.col("query_id").alias(left_id),
-                    F.col("_pid").alias(right_id), "dist_m", "rank"))
+            if fold_pdf.empty:
+                continue
+            folded = _brute_force_knn(bpts, fold_pdf, k, "_pid",
+                                      n_right, (right, right_id),
+                                      exclude_self)
+            results.append(folded.select(
+                F.col("query_id").alias(left_id),
+                F.col("_pid").alias(right_id), "dist_m", "rank"))
         if trace is not None:
             trace["fold"] = {"sec": round(_time.perf_counter() - _tf0, 2),
                              "rows": int(n_fold)}
@@ -1323,12 +1312,16 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             out = out.unionByName(r)
         # snapshot BEFORE the output materializes: everything registered
         # between entry and here is call-internal state (round blocks, key
-        # table, folded scan outputs) and is released once `out` has copied
-        # the result rows into its own blocks; `out`'s blocks appear after
-        # this snapshot and are the caller's to keep.
+        # table) and is released once `out` has copied the result rows
+        # into its own blocks; `out`'s blocks appear after this snapshot
+        # and are the caller's to keep.  The brute route registers
+        # nothing, so its result stays lazy: an eager checkpoint there
+        # would only add a job (its store broadcast is unpersisted, never
+        # destroyed, on eviction, so a later action re-fetches it).
         _ids_internal = _persistent_rdd_ids(spark_cx) - _ids_entry
-        out = out.localCheckpoint(eager=True)
-        _unpersist_rdd_ids(spark_cx, _ids_internal)
+        if _ids_internal:
+            out = out.localCheckpoint(eager=True)
+            _unpersist_rdd_ids(spark_cx, _ids_internal)
         return out
     except BaseException:
         # exception-safe release (ADVICE r6 #3): without this, an

@@ -244,16 +244,21 @@ def test_pipeline_resolves_each_way_once(spark, tables):
 def test_pipeline_driver_budget(spark, tables):
     """Building the run_pipeline DataFrame takes at most 1,000 py4j round
     trips: its fixed expressions are SQL text, not trees of Column
-    calls (one round trip or more per call)."""
+    calls (one round trip or more per call).  Only the calling thread's
+    commands count: py4j's finalizer thread sends its asynchronous
+    object-release commands through the same method."""
     import gc
+    import threading
 
     import py4j.clientserver as cs
     _, (nodes, ways, rels) = tables
     send = cs.ClientServerConnection.send_command
     calls = []
+    caller = threading.get_ident()
 
     def counted(conn, command):
-        calls.append(command[:1])
+        if threading.get_ident() == caller:
+            calls.append(command[:1])
         return send(conn, command)
     dn.run_pipeline(nodes, ways, rels, "building,shop")  # warm the caches
     gc.collect()

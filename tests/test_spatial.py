@@ -1107,6 +1107,60 @@ def test_knn_routes_brute_below_budget(spark, monkeypatch):
         assert np.abs(got["dist_m"] - want["dist_m"]).max() <= 1e-6
 
 
+def test_knn_brute_route_job_count(spark):
+    """Below the budget the route is decided by one bounded collect of
+    the left side, and the result stays lazy: at the
+    test_knn_routes_brute_below_budget shape, knn_join runs the right
+    count (2 jobs under AQE), the left collect, the store collect and
+    the caller's action — 5 jobs — and knn, the same call with its
+    queries as the left side, runs as many."""
+    from pyspark.sql import functions as F
+    imgs = synth.images_df(spark, 10_000, partitions=8)
+    geo = sp.attach_geo(imgs, res_list=(9, 12)).persist()
+    geo.count()
+    left = geo.filter(F.substring("image_id", -1, 1).isin("0", "5")) \
+        .selectExpr("image_id as left_id", "lat", "lon")
+    right = geo.selectExpr("image_id as right_id", "lat", "lon")
+    queries = left.selectExpr("left_id as query_id", "lat", "lon")
+    K = 8
+    tj, tq = {}, {}
+    try:
+        j, n_join = _run_counting_jobs(spark, lambda: sp.knn_join(
+            left, right, k=K, exclude_self=True, trace=tj).toPandas())
+        q, n_knn = _run_counting_jobs(spark, lambda: sp.knn(
+            geo, queries, k=K, res=12, trace=tq).toPandas())
+    finally:
+        geo.unpersist()
+    assert tj["ladder_skipped"] == tq["ladder_skipped"] == 2000
+    assert len(j) == len(q) == 2000 * K
+    assert n_join <= 5, n_join
+    assert n_knn <= 5, n_knn
+
+
+@pytest.mark.parametrize("budget", [None, 0], ids=["brute", "ladder"])
+def test_knn_refuses_non_string_ids(spark, monkeypatch, budget):
+    """kNN ids must be strings, checked once at knn_join's entry: the
+    brute scan types ids string and breaks distance ties on their
+    string order, so a bigint id column raises ValueError naming the
+    column on both routes instead of failing in a worker (brute) or
+    ranking ties in numeric order (ladder)."""
+    if budget is not None:
+        monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", budget)
+    rng = np.random.default_rng(11)
+    N = 40
+    lat, lon = rng.normal(48, 0.5, N), rng.normal(11, 0.5, N)
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"image_id": np.arange(N, dtype=np.int64), "lat": lat, "lon": lon}))
+    queries = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [f"q{i}" for i in range(N)], "lat": lat, "lon": lon}))
+    with pytest.raises(ValueError, match="'image_id' is bigint"):
+        sp.knn(pts, queries, k=3).toPandas()
+    left = pts.withColumnRenamed("image_id", "left_id")
+    right = queries.withColumnRenamed("query_id", "right_id")
+    with pytest.raises(ValueError, match="'left_id' is bigint"):
+        sp.knn_join(left, right, k=3).toPandas()
+
+
 def test_knn_join_ladder_when_left_exceeds_knn_max_queries(spark,
                                                             monkeypatch):
     """The brute route collects the left side to the driver, so a left
