@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
 """Event-log stage profile of one knn_join run.
-Usage: python3 BENCH/knn_join_profile_evt.py <n> <cpus> <spacing> <margin>"""
+Usage: python3 BENCH/knn_join_profile_evt.py <n> <cpus> <spacing> <margin>
+Each run writes its event log to a new temporary directory (printed as
+`evt_dir`), so concurrent runs never share or delete each other's."""
 
 import glob
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-EVT_DIR = "/tmp/knnj-evt"
 
 
 def main():
@@ -28,15 +29,13 @@ def main():
     from pbf2json_spark.plans.session import (build_session,
                                               warm_python_workers)
 
-    import shutil
-    shutil.rmtree(EVT_DIR, ignore_errors=True)
-    os.makedirs(EVT_DIR, exist_ok=True)
+    evt_dir = tempfile.mkdtemp(prefix="knnj-evt-")
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     spark = build_session(app_name="knnj-prof", cores=cpus,
                           shuffle_partitions=2 * cpus,
                           extra={"spark.eventLog.enabled": "true",
                                  "spark.eventLog.compress": "false",
-                                 "spark.eventLog.dir": EVT_DIR,
+                                 "spark.eventLog.dir": evt_dir,
                                  "spark.driver.memory": mem})
     spark.sparkContext.setLogLevel("ERROR")
     warm_python_workers(spark)
@@ -73,7 +72,7 @@ def main():
     time.sleep(2)
 
     # parse event log: per-stage duration, task time, shuffle bytes
-    logfs = [f for f in glob.glob(EVT_DIR + "/**/*", recursive=True)
+    logfs = [f for f in glob.glob(evt_dir + "/**/*", recursive=True)
              if os.path.isfile(f) and "appstatus" not in f]
     stages = []
     jobs = []
@@ -136,7 +135,8 @@ def main():
 
     stages.sort(key=lambda s: -s["dur_s"])
     print(json.dumps({"wall": round(wall, 2), "out_rows": n_out,
-                      "trace": tr, "n_jobs_total": len(jobs)}))
+                      "trace": tr, "n_jobs_total": len(jobs),
+                      "evt_dir": evt_dir}))
     print("top stages by duration:")
     for s in stages[:18]:
         sw, sr, sp, rec = sbytes.get(s["stage"], [0, 0, 0, 0])

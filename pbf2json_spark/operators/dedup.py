@@ -31,6 +31,14 @@ Spark-first shapes:
 At 100 TB the LSH path is the only quadratic-free variant; banding
 keys are salted-friendly (band index is part of the join key, so hot
 signatures spread across B bands).
+
+Every operator here that persists or checkpoints an intermediate does
+it through one plans.session.Intermediates per call, which releases
+exactly those blocks on return or on any exception.  Such a call's
+result is an eager localCheckpoint: pair outputs are small
+(candidates, not corpus rows), and its blocks are freed by the
+ContextCleaner once the caller drops it, where a persist would leak a
+SQL cache entry until an explicit unpersist.
 """
 
 from __future__ import annotations
@@ -41,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.session import fresh_pandas_udf, plan_bytes
+from ..plans.session import Intermediates, fresh_pandas_udf, plan_bytes
 
 # MinHash constants — shared verbatim with the SQL oracle
 MINHASH_PRIME = 1073741789          # ~2^30, keeps a*h+b < 2^63
@@ -65,24 +73,9 @@ SIMHASH_CHUNKS = 4
 SIMHASH_CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS
 SIMHASH_CHUNK_MASK = (1 << SIMHASH_CHUNK_BITS) - 1
 
-
-def _eager_release(result: DataFrame, *bases: DataFrame) -> DataFrame:
-    """Materialize `result` executor-side (localCheckpoint) and unpersist
-    the intermediate `bases`.
-
-    The pair-finding operators persist a shared base (shingles,
-    signature chunks) that both sides of a self-join read; returning a
-    lazy result would force the caller to own that persist for the
-    plan's lifetime — the session-leak the round-2 review flagged.
-    Pair outputs are small (candidates, not corpus rows), so an eager
-    executor-side materialization is cheap, and localCheckpoint blocks
-    are freed by the ContextCleaner when the caller drops the result —
-    unlike CacheManager entries, which leak until an explicit
-    unpersist."""
-    result = result.localCheckpoint(eager=True)
-    for b in bases:
-        b.unpersist()
-    return result
+# dedup_groups' round bound: star contraction converges in O(log n)
+# alternating rounds, so 25 covers any component this engine can hold
+DEDUP_MAX_ROUNDS = 25
 
 
 def _verify_partitions(docs: DataFrame) -> int:
@@ -238,93 +231,94 @@ def minhash_lsh_pairs(docs: DataFrame, tau: float = 0.5) -> DataFrame:
     TableIO stage checkpoint.  The group-membership table is also
     persisted — it feeds four expansion subtrees that would otherwise
     each recompute the md5-groupBy chain (r7: that recomputation was
-    ~1/3 of the operator's wall).  The returned pair set is eagerly
-    materialized and both caches unpersisted (no cache entries
-    outlive the call)."""
+    ~1/3 of the operator's wall).  Both persists are the call's own
+    (plans.session.Intermediates): the pair set is checkpointed
+    eagerly and both released on return, or on any exception."""
     # read before anything is persisted: plan_bytes has no fallback
     est = plan_bytes(docs)
-    keyed = docs.select(F.md5("text").alias("tkey"), "doc_id")
-    reps = keyed.groupBy("tkey").agg(F.min("doc_id").alias("rep_id"))
-    mem = keyed.join(reps, "tkey").select("rep_id", "doc_id").persist()
+    with Intermediates() as held:
+        keyed = docs.select(F.md5("text").alias("tkey"), "doc_id")
+        reps = keyed.groupBy("tkey").agg(F.min("doc_id").alias("rep_id"))
+        mem = held.persist(keyed.join(reps, "tkey").select("rep_id", "doc_id"))
 
-    rep_docs = docs.join(
-        mem.select(F.col("rep_id").alias("doc_id")).distinct(),
-        "doc_id", "leftsemi")
-    # the fused shingle stage is the operator's CPU; a small/packed
-    # corpus (one parquet file = one scan split) would otherwise run
-    # it on a single core (r7: the whole 50k-doc stage sat on 1 of 32
-    # slots).  Only widen — an already well-partitioned corpus never
-    # pays a text shuffle for this.
-    # probe the SCAN's width cheaply: inputFiles() is metadata-only,
-    # while converting a plan to an RDD just to count partitions cost
-    # ~0.5 s of driver time.  A file-backed corpus with >= par files
-    # is already wide; non-file-backed frames fall back to the RDD
-    # probe (never blind-repartition a corpus-sized frame).  Below
-    # ~2 MB of text the single-core shingle stage costs less than the
-    # repartition exchange + a cluster-wide wave of Arrow task floors
-    # (measured at the sf0.1 gate: widening ADDED ~0.5 s), so tiny
-    # corpora skip the widening — any real corpus clears 2 MB.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if est >= (2 << 20):
-        n_splits = len(docs.inputFiles()) or docs.rdd.getNumPartitions()
-        if n_splits < par:
-            rep_docs = rep_docs.repartition(2 * par)
-    base = rep_docs.select(
-        "doc_id", _shingle_mh(_tokens()).alias("smh")
-    ).select("doc_id", F.col("smh.sh").alias("sh"),
-             F.col("smh.mh").alias("mh")).persist()
+        rep_docs = docs.join(
+            mem.select(F.col("rep_id").alias("doc_id")).distinct(),
+            "doc_id", "leftsemi")
+        # the fused shingle stage is the operator's CPU; a small/packed
+        # corpus (one parquet file = one scan split) would otherwise run
+        # it on a single core (r7: the whole 50k-doc stage sat on 1 of 32
+        # slots).  Only widen — an already well-partitioned corpus never
+        # pays a text shuffle for this.
+        # probe the SCAN's width cheaply: inputFiles() is metadata-only,
+        # while converting a plan to an RDD just to count partitions cost
+        # ~0.5 s of driver time.  A file-backed corpus with >= par files
+        # is already wide; non-file-backed frames fall back to the RDD
+        # probe (never blind-repartition a corpus-sized frame).  Below
+        # ~2 MB of text the single-core shingle stage costs less than the
+        # repartition exchange + a cluster-wide wave of Arrow task floors
+        # (measured at the sf0.1 gate: widening ADDED ~0.5 s), so tiny
+        # corpora skip the widening — any real corpus clears 2 MB.
+        par = docs.sparkSession.sparkContext.defaultParallelism
+        if est >= (2 << 20):
+            n_splits = len(docs.inputFiles()) or docs.rdd.getNumPartitions()
+            if n_splits < par:
+                rep_docs = rep_docs.repartition(2 * par)
+        base = held.persist(rep_docs.select(
+            "doc_id", _shingle_mh(_tokens()).alias("smh")
+        ).select("doc_id", F.col("smh.sh").alias("sh"),
+                 F.col("smh.mh").alias("mh")))
 
-    sig = base.select("doc_id", *[
-        F.col("mh")[i].alias(f"mh_{i}") for i in range(MINHASH_K)])
+        sig = base.select("doc_id", *[
+            F.col("mh")[i].alias(f"mh_{i}") for i in range(MINHASH_K)])
 
-    banded = _band_rows(sig)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-             .distinct())
+        banded = _band_rows(sig)
+        a = banded.alias("a")
+        b = banded.alias("b")
+        cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
+                       & (F.col("a.sig") == F.col("b.sig"))
+                       & (F.col("a.doc_id") < F.col("b.doc_id")))
+                 .select(F.col("a.doc_id").alias("doc_a"),
+                         F.col("b.doc_id").alias("doc_b"))
+                 .distinct())
 
-    # spread the exact-jaccard evaluation (guide §2.5): AQE coalesces
-    # the verify join by shuffle BYTES, but candidate rows are skinny
-    # while the per-row set intersection over the attached shingle
-    # arrays is compute-heavy — the event-log profile showed ALL 138k
-    # verifications packed into 2 tasks (2.9 s straggler).  The
-    # explicit hash repartition BETWEEN the joins pins the second
-    # join's stage (where the jaccard + filter live and below which
-    # they cannot be pushed) at full parallelism; a repartition AFTER
-    # the join is useless — the optimizer pushes the deterministic
-    # filter (and the jaccard it needs) straight through it.
-    j = (cand
-         .join(base.select(F.col("doc_id").alias("doc_a"),
-                           F.col("sh").alias("sh_a")), "doc_a")
-         .repartition(_verify_partitions(docs), "doc_b")
-         .join(base.select(F.col("doc_id").alias("doc_b"),
-                           F.col("sh").alias("sh_b")), "doc_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    rep_pairs = (j.select("doc_a", "doc_b",
-                          F.round(inter / union, 9).alias("jaccard"))
-                  .filter(F.col("jaccard") >= tau))
+        # spread the exact-jaccard evaluation (guide §2.5): AQE coalesces
+        # the verify join by shuffle BYTES, but candidate rows are skinny
+        # while the per-row set intersection over the attached shingle
+        # arrays is compute-heavy — the event-log profile showed ALL 138k
+        # verifications packed into 2 tasks (2.9 s straggler).  The
+        # explicit hash repartition BETWEEN the joins pins the second
+        # join's stage (where the jaccard + filter live and below which
+        # they cannot be pushed) at full parallelism; a repartition AFTER
+        # the join is useless — the optimizer pushes the deterministic
+        # filter (and the jaccard it needs) straight through it.
+        j = (cand
+             .join(base.select(F.col("doc_id").alias("doc_a"),
+                               F.col("sh").alias("sh_a")), "doc_a")
+             .repartition(_verify_partitions(docs), "doc_b")
+             .join(base.select(F.col("doc_id").alias("doc_b"),
+                               F.col("sh").alias("sh_b")), "doc_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+        union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+        rep_pairs = (j.select("doc_a", "doc_b",
+                              F.round(inter / union, 9).alias("jaccard"))
+                      .filter(F.col("jaccard") >= tau))
 
-    # expand representatives back to all group members
-    ma = mem.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("a"))
-    mb = mem.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("b"))
-    cross = (rep_pairs.join(ma, "doc_a").join(mb, "doc_b")
-             .select(F.least("a", "b").alias("doc_a"),
-                     F.greatest("a", "b").alias("doc_b"),
-                     "jaccard"))
-    if tau > 1.0:   # identical texts (jaccard exactly 1.0) can't pass
-        return _eager_release(cross, base, mem)
-    wa = mem.select("rep_id", F.col("doc_id").alias("a"))
-    wb = mem.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("b"))
-    within = (wa.join(wb, (F.col("rep_id") == F.col("rep_b"))
-                      & (F.col("a") < F.col("b")))
-              .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
-                      F.lit(1.0).alias("jaccard")))
-    return _eager_release(cross.unionByName(within), base, mem)
+        # expand representatives back to all group members
+        ma = mem.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("a"))
+        mb = mem.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("b"))
+        cross = (rep_pairs.join(ma, "doc_a").join(mb, "doc_b")
+                 .select(F.least("a", "b").alias("doc_a"),
+                         F.greatest("a", "b").alias("doc_b"),
+                         "jaccard"))
+        if tau > 1.0:   # identical texts (jaccard exactly 1.0) can't pass
+            return held.result(cross)
+        wa = mem.select("rep_id", F.col("doc_id").alias("a"))
+        wb = mem.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("b"))
+        within = (wa.join(wb, (F.col("rep_id") == F.col("rep_b"))
+                          & (F.col("a") < F.col("b")))
+                  .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
+                          F.lit(1.0).alias("jaccard")))
+        return held.result(cross.unionByName(within))
 
 
 # ---------------------------------------------------------------------------
@@ -341,40 +335,41 @@ def ngram_jaccard_pairs(docs: DataFrame, tau: float = 0.3,
     within their first |s| - ceil(tau*|s|) + 1 sorted shingles.  The
     join key is (lang, lb, prefix-shingle) — sub-quadratic in block
     size instead of the blocked cross join."""
-    base = docs.select(
-        "doc_id", "lang",
-        (F.col("n_chars") / length_bucket).cast("int").alias("lb"),
-        F.array_sort(_shingles()).alias("sh")).persist()
-    # prefix length p = n - ceil(tau*n) + 1
-    n = F.size("sh")
-    plen = (n - F.ceil(F.lit(tau) * n).cast("int") + 1).cast("int")
-    pref = base.select(
-        "doc_id", "lang", "lb",
-        F.explode(F.slice("sh", 1, plen)).alias("ptok"))
-    a = pref.select(F.col("doc_id").alias("doc_a"), "lang", "lb", "ptok")
-    b = pref.select(F.col("doc_id").alias("doc_b"),
-                    F.col("lang").alias("lang_b"),
-                    F.col("lb").alias("lb_b"), F.col("ptok").alias("ptok_b"))
-    cand = (a.join(b, (F.col("lang") == F.col("lang_b"))
-                   & (F.col("lb") == F.col("lb_b"))
-                   & (F.col("ptok") == F.col("ptok_b"))
-                   & (F.col("doc_a") < F.col("doc_b")))
-            .select("doc_a", "doc_b").distinct())
-    # same verify-stage spreading as minhash_lsh_pairs (AQE coalesces
-    # skinny pair rows into too few compute-heavy tasks; the explicit
-    # hash repartition must sit BETWEEN the joins — see the note there)
-    j = (cand
-         .join(base.select(F.col("doc_id").alias("doc_a"),
-                           F.col("sh").alias("sh_a")), "doc_a")
-         .repartition(_verify_partitions(docs), "doc_b")
-         .join(base.select(F.col("doc_id").alias("doc_b"),
-                           F.col("sh").alias("sh_b")), "doc_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (j.select("doc_a", "doc_b",
-                    F.round(inter / union, 9).alias("jaccard"))
-           .filter(F.col("jaccard") >= tau))
-    return _eager_release(out, base)
+    with Intermediates() as held:
+        base = held.persist(docs.select(
+            "doc_id", "lang",
+            (F.col("n_chars") / length_bucket).cast("int").alias("lb"),
+            F.array_sort(_shingles()).alias("sh")))
+        # prefix length p = n - ceil(tau*n) + 1
+        n = F.size("sh")
+        plen = (n - F.ceil(F.lit(tau) * n).cast("int") + 1).cast("int")
+        pref = base.select(
+            "doc_id", "lang", "lb",
+            F.explode(F.slice("sh", 1, plen)).alias("ptok"))
+        a = pref.select(F.col("doc_id").alias("doc_a"), "lang", "lb", "ptok")
+        b = pref.select(F.col("doc_id").alias("doc_b"),
+                        F.col("lang").alias("lang_b"),
+                        F.col("lb").alias("lb_b"), F.col("ptok").alias("ptok_b"))
+        cand = (a.join(b, (F.col("lang") == F.col("lang_b"))
+                       & (F.col("lb") == F.col("lb_b"))
+                       & (F.col("ptok") == F.col("ptok_b"))
+                       & (F.col("doc_a") < F.col("doc_b")))
+                .select("doc_a", "doc_b").distinct())
+        # same verify-stage spreading as minhash_lsh_pairs (AQE coalesces
+        # skinny pair rows into too few compute-heavy tasks; the explicit
+        # hash repartition must sit BETWEEN the joins — see the note there)
+        j = (cand
+             .join(base.select(F.col("doc_id").alias("doc_a"),
+                               F.col("sh").alias("sh_a")), "doc_a")
+             .repartition(_verify_partitions(docs), "doc_b")
+             .join(base.select(F.col("doc_id").alias("doc_b"),
+                               F.col("sh").alias("sh_b")), "doc_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+        union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+        out = (j.select("doc_a", "doc_b",
+                        F.round(inter / union, 9).alias("jaccard"))
+               .filter(F.col("jaccard") >= tau))
+        return held.result(out)
 
 
 # ---------------------------------------------------------------------------
@@ -427,31 +422,32 @@ def hash_near_pairs(df: DataFrame, hash_col: str, max_hamming: int,
     chunk_bits = bits // n_chunks
     mask = (1 << chunk_bits) - 1
     h = F.col(hash_col)
-    chunks = df.select(
-        F.col(id_col), h.alias("_h"),
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("chunk"),
-                     F.shiftright(h, chunk_bits * c)
-                      .bitwiseAND(F.lit(mask)).alias("val"))
-            for c in range(n_chunks)])).alias("cv"),
-    ).select(id_col, "_h",
-             F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
-    # both sides of the self-join read this — without the persist the
-    # upstream signature pipeline (hashing + any UDF) evaluates twice
-    chunks = chunks.persist()
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (a.join(b, (F.col("a.chunk") == F.col("b.chunk"))
-                   & (F.col("a.val") == F.col("b.val"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"),
-                     F.col("a._h").alias("h_a"),
-                     F.col("b._h").alias("h_b"))
-             .distinct())
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("int")
-    out = (cand.select("id_a", "id_b", hamming.alias("hamming"))
-           .filter(F.col("hamming") <= max_hamming))
-    return _eager_release(out, chunks)
+    with Intermediates() as held:
+        chunks = df.select(
+            F.col(id_col), h.alias("_h"),
+            F.explode(F.array(*[
+                F.struct(F.lit(c).alias("chunk"),
+                         F.shiftright(h, chunk_bits * c)
+                          .bitwiseAND(F.lit(mask)).alias("val"))
+                for c in range(n_chunks)])).alias("cv"),
+        ).select(id_col, "_h",
+                 F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
+        # both sides of the self-join read this — without the persist the
+        # upstream signature pipeline (hashing + any UDF) evaluates twice
+        chunks = held.persist(chunks)
+        a, b = chunks.alias("a"), chunks.alias("b")
+        cand = (a.join(b, (F.col("a.chunk") == F.col("b.chunk"))
+                       & (F.col("a.val") == F.col("b.val"))
+                       & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+                 .select(F.col(f"a.{id_col}").alias("id_a"),
+                         F.col(f"b.{id_col}").alias("id_b"),
+                         F.col("a._h").alias("h_a"),
+                         F.col("b._h").alias("h_b"))
+                 .distinct())
+        hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("int")
+        out = (cand.select("id_a", "id_b", hamming.alias("hamming"))
+               .filter(F.col("hamming") <= max_hamming))
+        return held.result(out)
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -464,30 +460,8 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
                       F.col("id_b").alias("doc_b"), "hamming")
 
 
-def _persistent_rdd_ids(spark) -> set:
-    """Ids of currently persisted RDDs (localCheckpoint blocks included)."""
-    out = set()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        out.add(it.next()._1())
-    return out
-
-
-def _unpersist_rdd_ids(spark, ids) -> None:
-    """Deterministically release checkpoint blocks by RDD id.  The
-    Dataset API exposes no unpersist for localCheckpoint (blocks wait
-    for driver GC + ContextCleaner otherwise — fine for one result,
-    not for one block-set per iteration of a loop)."""
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    for i in ids:
-        opt = m.get(i)
-        if not opt.isEmpty():
-            opt.get().unpersist(False)
-
-
 def dedup_groups(pairs: DataFrame, nodes: DataFrame | None = None,
                  id_a: str = "doc_a", id_b: str = "doc_b",
-                 max_rounds: int = 25,
                  stats: dict | None = None) -> DataFrame:
     """(doc_id, group_rep): connected components of the near-dup pair
     graph, giving each document its transitive duplicate group's
@@ -505,95 +479,84 @@ def dedup_groups(pairs: DataFrame, nodes: DataFrame | None = None,
     a hot star (one template duplicated 10^8 times) never materializes
     a neighborhood array.  Convergence is detected by an edge-set
     fingerprint (count + order-independent hash sum), one extra Q-row
-    aggregate per round.
+    aggregate per round; no convergence within DEDUP_MAX_ROUNDS
+    raises.
 
     `nodes` (optional, a 1-col DataFrame of ids): documents with no
     near-dup pair become their own representative.  Pass a dict as
     `stats` to receive {'rounds': N} — the O(log n) round-count claim
-    is pinned against this in tests and BENCH/dedup_groups_scale.py.  All intermediates
-    are unpersisted before return; the result is localCheckpointed
-    (same caller contract as the pair operators)."""
+    is pinned against this in tests and BENCH/dedup_groups_scale.py.
+    The edge set and the round checkpoints are the call's own
+    (plans.session.Intermediates): each round retires the previous
+    round's, so one round's blocks are live at a time, and the result
+    is localCheckpointed (same caller contract as the pair
+    operators)."""
     # ids keep their input type: casting to string would silently
     # change which member is "min" (lexicographic "10" < "9"), i.e.
     # a different canonical representative than the caller's ordering
-    spark = pairs.sparkSession
-    edges = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-             .filter(F.col("u") != F.col("v")).distinct().persist())
-    cached = [edges]
-    prev_fp = None
-    prev_ck_ids: set = set()
-    rounds_run = 0
-    for _ in range(max_rounds):
-        rounds_run += 1
-        # large-star: every neighbor bigger than u attaches to the min
-        # of u's closed neighborhood
+    with Intermediates() as held:
+        edges = held.persist(
+            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+            .filter(F.col("u") != F.col("v")).distinct())
+        prev_fp = None
+        for rounds_run in range(1, DEDUP_MAX_ROUNDS + 1):
+            # large-star: every neighbor bigger than u attaches to the
+            # min of u's closed neighborhood
+            sym = edges.union(edges.select(F.col("v").alias("u"),
+                                           F.col("u").alias("v")))
+            mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
+            m = F.least(F.col("u"), F.col("mn"))
+            ls = (sym.join(mins, "u")
+                  .filter(F.col("v") > F.col("u"))
+                  .select(F.col("v").alias("u"), m.alias("v"))
+                  .filter(F.col("u") != F.col("v")).distinct())
+            # small-star: point edges downward, attach every smaller
+            # neighbor (and u itself) to the min
+            down = ls.select(F.greatest("u", "v").alias("u"),
+                             F.least("u", "v").alias("v"))
+            dmins = down.groupBy("u").agg(F.min("v").alias("mn"))
+            joined = down.join(dmins, "u")      # (u, v, mn), mn <= v < u
+            # localCheckpoint, not persist: each round builds on the
+            # last, and without a LINEAGE cut the logical plan doubles
+            # per round (the 2000-node-path test OOMed the driver just
+            # PRINTING the round-12 plan).  The retired round's blocks
+            # are released as soon as this one is materialized, not
+            # left to driver-GC timing (one block-set per iteration is
+            # a leak under memory pressure).
+            ss = held.checkpoint(
+                joined.select(F.col("v").alias("u"), F.col("mn").alias("v"))
+                .union(joined.select("u", F.col("mn").alias("v")))
+                .filter(F.col("u") != F.col("v")).distinct(), eager=True)
+            # order-independent, overflow-free fingerprint (ANSI-safe: a
+            # plain sum of hashes overflows long under ANSI mode)
+            fp = ss.agg(
+                F.count("*").alias("n"),
+                F.bit_xor(F.xxhash64("u", "v")).alias("h")).first()
+            held.release(edges)                 # prev round retired
+            edges = ss
+            if stats is not None:
+                stats["rounds"] = rounds_run
+            if prev_fp is not None and (fp["n"], fp["h"]) == prev_fp:
+                break
+            prev_fp = (fp["n"], fp["h"])
+        else:
+            # extracting reps from an UNconverged edge set would
+            # silently split groups — fail loudly instead
+            raise RuntimeError(
+                f"dedup_groups: no convergence after DEDUP_MAX_ROUNDS = "
+                f"{DEDUP_MAX_ROUNDS} rounds (last fingerprint {prev_fp})")
+
+        # after convergence every component is a star rooted at its min;
+        # rep(u) = min over the closed neighborhood
         sym = edges.union(edges.select(F.col("v").alias("u"),
                                        F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F.least(F.col("u"), F.col("mn"))
-        ls = (sym.join(mins, "u")
-              .filter(F.col("v") > F.col("u"))
-              .select(F.col("v").alias("u"), m.alias("v"))
-              .filter(F.col("u") != F.col("v")).distinct())
-        # small-star: point edges downward, attach every smaller
-        # neighbor (and u itself) to the min
-        down = ls.select(F.greatest("u", "v").alias("u"),
-                         F.least("u", "v").alias("v"))
-        dmins = down.groupBy("u").agg(F.min("v").alias("mn"))
-        joined = down.join(dmins, "u")          # (u, v, mn), mn <= v < u
-        # localCheckpoint, not persist: each round builds on the last,
-        # and without a LINEAGE cut the logical plan doubles per round
-        # (the 2000-node-path test OOMed the driver just PRINTING the
-        # round-12 plan).  The retired round's blocks are released
-        # DETERMINISTICALLY by rdd-id (a loop that leaves one
-        # block-set per iteration to driver-GC timing is a leak under
-        # memory pressure, exactly what the round-2 review flagged
-        # about persists).
-        before = _persistent_rdd_ids(spark)
-        ss = (joined.select(F.col("v").alias("u"), F.col("mn").alias("v"))
-              .union(joined.select("u", F.col("mn").alias("v")))
-              .filter(F.col("u") != F.col("v")).distinct()
-              .localCheckpoint(eager=True))
-        new_ck_ids = _persistent_rdd_ids(spark) - before
-        # order-independent, overflow-free fingerprint (ANSI-safe: a
-        # plain sum of hashes overflows long under ANSI mode)
-        fp = ss.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h")).first()
-        _unpersist_rdd_ids(spark, prev_ck_ids)   # prev round retired
-        prev_ck_ids = new_ck_ids
-        edges = ss
-        if stats is not None:
-            stats["rounds"] = rounds_run
-        if prev_fp is not None and (fp["n"], fp["h"]) == prev_fp:
-            break
-        prev_fp = (fp["n"], fp["h"])
-    else:
-        # star contraction converges in O(log n) alternating rounds;
-        # 25 covers any component this engine can hold.  Extracting
-        # reps from an UNconverged edge set would silently split
-        # groups — fail loudly instead.
-        _unpersist_rdd_ids(spark, prev_ck_ids)
-        for c in cached:
-            c.unpersist()
-        raise RuntimeError(
-            f"dedup_groups: no convergence after {max_rounds} rounds "
-            f"(last fingerprint {prev_fp}); raise max_rounds")
-
-    # after convergence every component is a star rooted at its min;
-    # rep(u) = min over the closed neighborhood
-    sym = edges.union(edges.select(F.col("v").alias("u"),
-                                   F.col("u").alias("v")))
-    rep = (sym.groupBy("u").agg(F.min("v").alias("mn"))
-           .select(F.col("u").alias("doc_id"),
-                   F.least(F.col("u"), F.col("mn")).alias("group_rep")))
-    if nodes is not None:
-        ids = nodes.select(F.col(nodes.columns[0]).alias("doc_id"))
-        rep = (ids.join(rep, "doc_id", "left")
-               .select("doc_id", F.coalesce("group_rep",
-                                            F.col("doc_id")).alias("group_rep")))
-    out = rep.localCheckpoint(eager=True)
-    _unpersist_rdd_ids(spark, prev_ck_ids)       # last round retired
-    for c in cached:
-        c.unpersist()
-    return out
+        rep = (sym.groupBy("u").agg(F.min("v").alias("mn"))
+               .select(F.col("u").alias("doc_id"),
+                       F.least(F.col("u"), F.col("mn")).alias("group_rep")))
+        if nodes is not None:
+            ids = nodes.select(F.col(nodes.columns[0]).alias("doc_id"))
+            rep = (ids.join(rep, "doc_id", "left")
+                   .select("doc_id",
+                           F.coalesce("group_rep",
+                                      F.col("doc_id")).alias("group_rep")))
+        return held.result(rep)

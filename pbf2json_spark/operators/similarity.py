@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.session import Intermediates
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -340,94 +342,89 @@ def embedding_near_dup_pairs(embeddings: DataFrame, tau: float = 0.95,
         dim = int(first["d"]) if first else 0
     w = 1.01 * float(np.sqrt(max(2.0 - 2.0 * tau, 1e-12)))
     grid_helps = dim > 0 and w < 6.0 / np.sqrt(dim)
-    base = None
+    with Intermediates() as held:
+        if grid_helps:
+            grid_self = _grid_udf(tau, neighbors=False)
+            grid_nbrs = _grid_udf(tau, neighbors=True)
+            a = embeddings.select(F.col(id_col).alias("id_a"),
+                                  F.col(block_col).alias("blk"),
+                                  F.col("embedding").alias("emb_a"),
+                                  F.explode(grid_nbrs("embedding")).alias("cell"))
+            b = embeddings.select(F.col(id_col).alias("id_b"),
+                                  F.col(block_col).alias("blk_b"),
+                                  F.col("embedding").alias("emb_b"),
+                                  F.explode(grid_self("embedding")).alias("cell_b"))
+            pairs = a.join(b, (F.col("blk") == F.col("blk_b"))
+                           & (F.col("cell") == F.col("cell_b"))
+                           & (F.col("id_a") < F.col("id_b")))
+        elif mode == "auto":
+            # the silent exact->approximate switch was an ADVICE r3 finding:
+            # 'auto' keeps LSH as the scale-safe default for the regime where
+            # exact would be quadratic, but it must never be silent
+            import warnings
+            warnings.warn(
+                f"embedding_near_dup_pairs(mode='auto'): the projection grid "
+                f"cannot discriminate at dim={dim}, tau={tau}; engaging "
+                f"sign-LSH candidates (recall < 1 — true pairs can be "
+                f"missed).  Pass mode='exact' for the exhaustive quadratic "
+                f"join, or tune (lsh_tables, lsh_planes) for recall.",
+                stacklevel=2)
+            # sign-LSH candidates: persist the bucketed base so the self-
+            # join doesn't recompute the bucket UDF per branch
+            buckets = make_buckets_udf(dim, lsh_tables, lsh_planes,
+                                       seed=NEAR_DUP_SEED)
+            base = held.persist(embeddings.select(
+                id_col, block_col, "embedding",
+                F.posexplode(buckets("embedding")).alias("tbl", "bucket")))
+            a = base.select(F.col(id_col).alias("id_a"),
+                            F.col(block_col).alias("blk"),
+                            F.col("embedding").alias("emb_a"),
+                            "tbl", "bucket")
+            b = base.select(F.col(id_col).alias("id_b"),
+                            F.col(block_col).alias("blk_b"),
+                            F.col("embedding").alias("emb_b"),
+                            F.col("tbl").alias("tbl_b"),
+                            F.col("bucket").alias("bucket_b"))
+            pairs = (a.join(b, (F.col("blk") == F.col("blk_b"))
+                            & (F.col("tbl") == F.col("tbl_b"))
+                            & (F.col("bucket") == F.col("bucket_b"))
+                            & (F.col("id_a") < F.col("id_b")))
+                     .dropDuplicates(["id_a", "id_b"]))
+        else:
+            a = embeddings.select(F.col(id_col).alias("id_a"),
+                                  F.col(block_col).alias("blk"),
+                                  F.col("embedding").alias("emb_a"))
+            b = embeddings.select(F.col(id_col).alias("id_b"),
+                                  F.col(block_col).alias("blk_b"),
+                                  F.col("embedding").alias("emb_b"))
+            pairs = a.join(b, (F.col("blk") == F.col("blk_b"))
+                           & (F.col("id_a") < F.col("id_b")))
+        # vectorized verify: one Arrow pass computes all pair cosines with
+        # the same sequential dim fold as the JVM/SQL forms (the per-pair
+        # interpreted zip_with fold was ~25us/pair — 5s for 200k pairs)
+        id_t = embeddings.schema[id_col].dataType.simpleString()
+        raw_schema = f"id_a {id_t}, id_b {id_t}, cos double"
 
-    if grid_helps:
-        grid_self = _grid_udf(tau, neighbors=False)
-        grid_nbrs = _grid_udf(tau, neighbors=True)
-        a = embeddings.select(F.col(id_col).alias("id_a"),
-                              F.col(block_col).alias("blk"),
-                              F.col("embedding").alias("emb_a"),
-                              F.explode(grid_nbrs("embedding")).alias("cell"))
-        b = embeddings.select(F.col(id_col).alias("id_b"),
-                              F.col(block_col).alias("blk_b"),
-                              F.col("embedding").alias("emb_b"),
-                              F.explode(grid_self("embedding")).alias("cell_b"))
-        pairs = a.join(b, (F.col("blk") == F.col("blk_b"))
-                       & (F.col("cell") == F.col("cell_b"))
-                       & (F.col("id_a") < F.col("id_b")))
-    elif mode == "auto":
-        # the silent exact->approximate switch was an ADVICE r3 finding:
-        # 'auto' keeps LSH as the scale-safe default for the regime where
-        # exact would be quadratic, but it must never be silent
-        import warnings
-        warnings.warn(
-            f"embedding_near_dup_pairs(mode='auto'): the projection grid "
-            f"cannot discriminate at dim={dim}, tau={tau}; engaging "
-            f"sign-LSH candidates (recall < 1 — true pairs can be "
-            f"missed).  Pass mode='exact' for the exhaustive quadratic "
-            f"join, or tune (lsh_tables, lsh_planes) for recall.",
-            stacklevel=2)
-        # sign-LSH candidates: persist the bucketed base so the self-
-        # join doesn't recompute the bucket UDF per branch
-        buckets = make_buckets_udf(dim, lsh_tables, lsh_planes,
-                                   seed=NEAR_DUP_SEED)
-        base = embeddings.select(
-            id_col, block_col, "embedding",
-            F.posexplode(buckets("embedding")).alias("tbl", "bucket")
-        ).persist()
-        a = base.select(F.col(id_col).alias("id_a"),
-                        F.col(block_col).alias("blk"),
-                        F.col("embedding").alias("emb_a"),
-                        "tbl", "bucket")
-        b = base.select(F.col(id_col).alias("id_b"),
-                        F.col(block_col).alias("blk_b"),
-                        F.col("embedding").alias("emb_b"),
-                        F.col("tbl").alias("tbl_b"),
-                        F.col("bucket").alias("bucket_b"))
-        pairs = (a.join(b, (F.col("blk") == F.col("blk_b"))
-                        & (F.col("tbl") == F.col("tbl_b"))
-                        & (F.col("bucket") == F.col("bucket_b"))
-                        & (F.col("id_a") < F.col("id_b")))
-                 .dropDuplicates(["id_a", "id_b"]))
-    else:
-        a = embeddings.select(F.col(id_col).alias("id_a"),
-                              F.col(block_col).alias("blk"),
-                              F.col("embedding").alias("emb_a"))
-        b = embeddings.select(F.col(id_col).alias("id_b"),
-                              F.col(block_col).alias("blk_b"),
-                              F.col("embedding").alias("emb_b"))
-        pairs = a.join(b, (F.col("blk") == F.col("blk_b"))
-                       & (F.col("id_a") < F.col("id_b")))
-    # vectorized verify: one Arrow pass computes all pair cosines with
-    # the same sequential dim fold as the JVM/SQL forms (the per-pair
-    # interpreted zip_with fold was ~25us/pair — 5s for 200k pairs)
-    id_t = embeddings.schema[id_col].dataType.simpleString()
-    raw_schema = f"id_a {id_t}, id_b {id_t}, cos double"
+        def verify(batches):
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                a = np.stack(pdf["emb_a"].to_numpy()).astype(np.float64)
+                b = np.stack(pdf["emb_b"].to_numpy()).astype(np.float64)
+                dot = np.zeros(len(pdf))
+                na = np.zeros(len(pdf))
+                nb = np.zeros(len(pdf))
+                for i in range(a.shape[1]):
+                    dot += a[:, i] * b[:, i]
+                    na += a[:, i] * a[:, i]
+                    nb += b[:, i] * b[:, i]
+                cos = dot / (np.sqrt(na) * np.sqrt(nb))
+                yield pd.DataFrame({"id_a": pdf["id_a"], "id_b": pdf["id_b"],
+                                    "cos": cos})
 
-    def verify(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            a = np.stack(pdf["emb_a"].to_numpy()).astype(np.float64)
-            b = np.stack(pdf["emb_b"].to_numpy()).astype(np.float64)
-            dot = np.zeros(len(pdf))
-            na = np.zeros(len(pdf))
-            nb = np.zeros(len(pdf))
-            for i in range(a.shape[1]):
-                dot += a[:, i] * b[:, i]
-                na += a[:, i] * a[:, i]
-                nb += b[:, i] * b[:, i]
-            cos = dot / (np.sqrt(na) * np.sqrt(nb))
-            yield pd.DataFrame({"id_a": pdf["id_a"], "id_b": pdf["id_b"],
-                                "cos": cos})
-
-    scored = pairs.select("id_a", "id_b", "emb_a", "emb_b") \
-                  .mapInPandas(verify, raw_schema)
-    out = (scored.select("id_a", "id_b",
-                         F.round(F.col("cos"), 9).alias("cos"))
-           .filter(F.col("cos") >= tau))
-    if base is not None:  # LSH path: release the bucketed base eagerly
-        out = out.localCheckpoint(eager=True)
-        base.unpersist()
-    return out
+        scored = pairs.select("id_a", "id_b", "emb_a", "emb_b") \
+                      .mapInPandas(verify, raw_schema)
+        out = (scored.select("id_a", "id_b",
+                             F.round(F.col("cos"), 9).alias("cos"))
+               .filter(F.col("cos") >= tau))
+        return held.result(out)

@@ -61,7 +61,7 @@ from pyspark.sql import types as T
 from ..functions import cellindex as cx
 from ..functions import geokernels as gk
 from ..functions import imagecodec as ic
-from ..plans.session import plan_bytes
+from ..plans.session import Intermediates, plan_bytes
 
 DEFAULT_RES = 9
 KNN_RES = 12
@@ -388,6 +388,11 @@ def _haversine_col(lat1, lon1, lat2, lon2):
 # count (measured crossover table: module docstring)
 BRUTE_OPS_BUDGET = 2_000_000_000
 
+# knn_join's ladder also folds early once its unsatisfied rows are at
+# most this fraction of the left side: another round costs fixed job
+# floors that the exact brute fold does not
+KNN_TAIL_FOLD_FRAC = 0.01
+
 
 def _brute_fits(n_queries: int, n_points: int) -> bool:
     """The single kNN route rule (knn_join's entry, and the ladder's
@@ -710,6 +715,14 @@ def _ring_keys(level: Column, i: Column, j: Column, ring: int) -> Column:
     return F.array(*keys)
 
 
+def _anc_keys(i: Column, j: Column, finest: int, levels) -> Column:
+    """array<long> of the packed keys of finest-level cell (i, j)'s
+    ancestor at each of `levels`: a coarser level's coordinates are
+    exact right-shifts (floor commutes with power-of-2 scaling)."""
+    return F.array(*[_pk(F.lit(L), F.shiftright(i, finest - L),
+                         F.shiftright(j, finest - L)) for L in levels])
+
+
 def _disk_exit_bound_col(lat: Column, lon: Column,
                          i_l: Column, j_l: Column,
                          level: int, ring: int) -> Column:
@@ -750,7 +763,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
              left_id: str = "left_id", right_id: str = "right_id",
              levels=(24, 22, 20, 18, 16, 14, 12, 10, 8, 6, 4),
              margin: float = 4.0, ring: int = 1,
-             tail_fold_frac: float = 0.01,
              exclude_self: bool = False,
              trace: dict | None = None) -> DataFrame:
     """EXACT k nearest `right` rows for EVERY `left` row — the one kNN
@@ -839,8 +851,9 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     per-query ladder (corpus-linear per round) was still running at
     +970 s.  The ladder
     also stops early and folds once the unsatisfied rows are at most
-    tail_fold_frac of the left side or their op count fits the route
-    rule — another round costs fixed job floors the scan does not.
+    KNN_TAIL_FOLD_FRAC of the left side or their op count fits the
+    route rule — another round costs fixed job floors the scan does
+    not.
 
     Exactness across levels: recomputing at a coarser level never
     loses candidates — a point's ring-1 window at level L is
@@ -851,8 +864,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     exclude_self drops left_id == right_id pairs BEFORE ranking (the
     self-dedup shape), on the folded tail too."""
     from ..functions.cellsql import cell_ij_cols
-
-    from .dedup import _persistent_rdd_ids, _unpersist_rdd_ids
 
     levels = sorted({int(L) for L in levels}, reverse=True)
     if not levels:
@@ -881,17 +892,13 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                              f"{dt.simpleString()}; kNN ids must be "
                              f"strings")
 
-    # entry snapshot for deterministic block release (ADVICE r5): every
-    # persisted/checkpointed RDD this call creates — round tops, round
-    # remainings, the right-side key table, the fold rows — is
-    # released by id-diff once the final result has its own blocks.
-    # The Dataset API exposes no unpersist for localCheckpoint blocks
-    # (they otherwise wait on driver GC), so without this a long
-    # interactive session accumulates one block-set per call.
+    # every block this call stores — the right-side key table, round
+    # tops, round remainings, the fold rows — is held by `held` and
+    # released once the result has its own blocks, or on any exception
+    # (without it a long interactive session accumulates one block-set
+    # per call, and a failed round or fold chunk leaks its blocks)
     spark_cx = left.sparkSession
-    _ids_entry = _persistent_rdd_ids(spark_cx)
-    try:
-
+    with Intermediates() as held:
         right_base = right.select(
             F.col(right_id), F.col("lat").alias("r_lat"),
             F.col("lon").alias("r_lon"))
@@ -938,8 +945,8 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # are separate jobs — no exchange reuse), ~4x the matchable
             # volume at the measured start histograms.
             iR, jR = cell_ij_cols(F.col("r_lat"), F.col("r_lon"), finest)
-            right_idx = right_base \
-                .select("*", iR.alias("_ri"), jR.alias("_rj")).persist()
+            right_idx = held.persist(right_base.select(
+                "*", iR.alias("_ri"), jR.alias("_rj")))
             # W TABLE — exact 3x3-window occupancy per (level, cell), built
             # fully distributed from the cell-scale count table: one N-row
             # groupBy at the finest ladder level, then per-level parent
@@ -988,10 +995,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # cell) pairs at once.  (The first cut ran 9 per-level groupBy
             # branches — 9 parallel stages AND 9 plan subtrees whose
             # driver-side planning gaps outweighed the cluster work.)
-            anc = F.array(*[
-                _pk(F.lit(L), F.shiftright(F.col("_i"), finest - L),
-                    F.shiftright(F.col("_j"), finest - L))
-                for L in levels])
+            anc = _anc_keys(F.col("_i"), F.col("_j"), finest, levels)
             cnt_all = cnt_f.select(F.explode(anc).alias("_ck"), "count") \
                 .groupBy("_ck").agg(F.sum("count").alias("_n"))
             # pin the ring-scatter stage's parallelism (r7): AQE
@@ -1067,10 +1071,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             _fi = F.shiftright(F.col("_fk"), 27) \
                 .bitwiseAND(F.lit((1 << 27) - 1))
             _fj = F.col("_fk").bitwiseAND(F.lit((1 << 27) - 1))
-            canc = F.array(*[
-                _pk(F.lit(L), F.shiftright(_fi, finest - L),
-                    F.shiftright(_fj, finest - L))
-                for L in levels])
+            canc = _anc_keys(_fi, _fj, finest, levels)
             cx = cells.select("_fk", F.posexplode(canc).alias("_lx", "_c"))
             cs = cx.join(wtab, "_c", "left") \
                 .withColumn("_wv", F.coalesce(F.col("_w"), F.lit(0)) - adj) \
@@ -1095,11 +1096,11 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # plan only contains Generate branches for levels that hold
             # rows (a 13-branch every-level union was measured costing
             # ~5 s/round of empty partition scans at 128 partitions)
-            labeled = lkey.join(cell_start, "_fk", "left") \
+            labeled = held.checkpoint(
+                lkey.join(cell_start, "_fk", "left")
                 .select(F.col(left_id), "l_lat", "l_lon",
                         F.coalesce(F.col("_li"), F.lit(n_lvls))
-                         .cast("int").alias("_li")) \
-                .localCheckpoint(eager=False)
+                         .cast("int").alias("_li")))
             remaining = labeled.filter(F.col("_li") < n_lvls)
             fold_rows = labeled.filter(F.col("_li") >= n_lvls)
             hist = {int(r["_li"]): int(r["count"])
@@ -1163,11 +1164,8 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             lw = parts[0]
             for p in parts[1:]:
                 lw = lw.unionByName(p)
-            r_anc = F.array(*[
-                _pk(F.lit(levels[i]),
-                    F.shiftright(F.col("_ri"), finest - levels[i]),
-                    F.shiftright(F.col("_rj"), finest - levels[i]))
-                for i in sorted(active)])
+            r_anc = _anc_keys(F.col("_ri"), F.col("_rj"), finest,
+                              [levels[i] for i in sorted(active)])
             rl = right_idx.select("*", F.explode(r_anc).alias("_c")) \
                 .drop("_ri", "_rj")
             cand = lw.join(rl, "_c")
@@ -1197,13 +1195,13 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # exchange+sort wrote > 30 GB of shuffle/spill with the wide
             # row and exhausted a 57 GB scratch disk; the trimmed row
             # fits the same leg comfortably.
-            top = cand.select(F.col(left_id), F.col(right_id),
-                              dist.alias("dist_m"), "_xb") \
-                      .filter(F.col("dist_m") <= F.col("_xb")) \
-                      .drop("_xb") \
-                      .withColumn("rank", F.row_number().over(w)) \
-                      .filter(F.col("rank") <= k) \
-                      .localCheckpoint(eager=False)
+            top = held.checkpoint(
+                cand.select(F.col(left_id), F.col(right_id),
+                            dist.alias("dist_m"), "_xb")
+                .filter(F.col("dist_m") <= F.col("_xb"))
+                .drop("_xb")
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k))
             # ONE left-join against the round's stats decides done/unsat:
             # a two-branch shape (ok-filter union leftanti) referenced the
             # stats aggregate twice, and with the lazy top checkpoint the
@@ -1227,9 +1225,9 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             exhausted = unsat.filter(F.col("_li") >= n_lvls - 1)
             fold_rows = exhausted if fold_rows is None else \
                 fold_rows.unionByName(exhausted)
-            remaining = unsat.filter(F.col("_li") < n_lvls - 1) \
-                .withColumn("_li", F.col("_li") + 1) \
-                .localCheckpoint(eager=False)
+            remaining = held.checkpoint(
+                unsat.filter(F.col("_li") < n_lvls - 1)
+                .withColumn("_li", F.col("_li") + 1))
             # THE round barrier: one histogram job materializes this
             # round's remaining AND (transitively, through stats) the
             # round's top-k blocks, and returns the next active-level set
@@ -1247,7 +1245,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # job floors regardless of size; below this fraction, or once
             # the stragglers' op count fits the route rule, the fold
             # finishes them faster than the round machinery restarts
-            if (n_rem <= tail_fold_frac * n_left
+            if (n_rem <= KNN_TAIL_FOLD_FRAC * n_left
                     or _brute_fits(n_rem, n_right)):
                 fold_rows = remaining if fold_rows is None else \
                     fold_rows.unionByName(remaining)
@@ -1261,7 +1259,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # one materialization serves the size check AND every chunk's
             # collect (the union's branches re-aggregate round tops
             # otherwise)
-            fold_rows = fold_rows.localCheckpoint(eager=False)
+            fold_rows = held.checkpoint(fold_rows)
             n_fold = fold_rows.count()
         else:
             n_fold = 0 if left_pdf is None else len(left_pdf)
@@ -1310,29 +1308,12 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
         out = results[0]
         for r in results[1:]:
             out = out.unionByName(r)
-        # snapshot BEFORE the output materializes: everything registered
-        # between entry and here is call-internal state (round blocks, key
-        # table) and is released once `out` has copied the result rows
-        # into its own blocks; `out`'s blocks appear after this snapshot
-        # and are the caller's to keep.  The brute route registers
-        # nothing, so its result stays lazy: an eager checkpoint there
-        # would only add a job (its store broadcast is unpersisted, never
-        # destroyed, on eviction, so a later action re-fetches it).
-        _ids_internal = _persistent_rdd_ids(spark_cx) - _ids_entry
-        if _ids_internal:
-            out = out.localCheckpoint(eager=True)
-            _unpersist_rdd_ids(spark_cx, _ids_internal)
-        return out
-    except BaseException:
-        # exception-safe release (ADVICE r6 #3): without this, an
-        # error escaping mid-call (e.g. a failed job in a round or
-        # fold chunk) leaks every internal block until driver GC.
-        # NOTE the id-diff assumes a single-threaded session: a
-        # concurrent thread's persists registered during this call
-        # would be released here too.
-        _unpersist_rdd_ids(spark_cx,
-                           _persistent_rdd_ids(spark_cx) - _ids_entry)
-        raise
+        # the ladder's result is checkpointed eagerly before its round
+        # blocks and key table go; the brute route stores nothing, so
+        # its result stays lazy: an eager checkpoint there would only
+        # add a job (its store broadcast is unpersisted, never
+        # destroyed, on eviction, so a later action re-fetches it)
+        return held.result(out)
 
 
 # ---------------------------------------------------------------------------

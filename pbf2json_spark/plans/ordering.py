@@ -22,13 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import Intermediates
+
 PART_COL = "__gs_part"
 LOCAL_COL = "__gs_local"
 
 
 def global_seq(df: DataFrame, order_col: str,
-               out_col: str = "seq",
-               materialize: bool = True) -> DataFrame:
+               out_col: str = "seq") -> DataFrame:
     """df + `out_col` = 1-based global rank of `order_col` (which must
     be unique), computed without a single-partition window.
 
@@ -38,50 +39,41 @@ def global_seq(df: DataFrame, order_col: str,
     otherwise get a silently split-dependent rank.
 
     The range-partitioned input is persisted so the per-partition count
-    pass doesn't recompute it.  With materialize=True (default) the
-    OUTPUT is localCheckpoint'ed and that persist released before
-    returning, so no cache entry outlives the call; pass
-    materialize=False when the output is too large to hold as blocks
-    (at 100 TB you materialize this stage through TableIO instead) —
-    the caller then owns releasing the returned plan's cached input
-    via spark.catalog.clearCache() or an explicit unpersist."""
-    parts = (df.repartitionByRange(F.col(order_col))
-               .sortWithinPartitions(order_col)
-               .withColumn(PART_COL, F.spark_partition_id())
-               .persist())
-    cdf = parts.groupBy(PART_COL).agg(
-        F.count("*").alias("count"),
-        F.count_distinct(F.col(order_col)).alias("n_distinct")).collect()
-    counts = {r[PART_COL]: r["count"] for r in cdf}
-    dup_parts = [r[PART_COL] for r in cdf if r["count"] != r["n_distinct"]]
-    if dup_parts:
-        parts.unpersist()
-        raise ValueError(
-            f"global_seq: duplicate {order_col!r} values detected in "
-            f"partitions {dup_parts[:5]} — ranks of duplicates would "
-            f"depend on the range split; deduplicate or pick a unique key")
-    if not counts:  # empty input: create_map() with zero args is invalid
-        out = (parts.drop(PART_COL)
-               .withColumn(out_col, F.lit(None).cast("long")))
-        if materialize:
-            out = out.localCheckpoint(eager=True)
-            parts.unpersist()
-        return out
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_expr = F.create_map(*[
-        x for pid, off in offsets.items()
-        for x in (F.lit(pid), F.lit(off))])
-    w = Window.partitionBy(PART_COL).orderBy(order_col)
-    out = (parts.withColumn(LOCAL_COL, F.row_number().over(w))
-           .withColumn(out_col,
-                       (F.col(LOCAL_COL)
-                        + F.element_at(off_expr, F.col(PART_COL)))
-                       .cast("long"))
-           .drop(PART_COL, LOCAL_COL))
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        parts.unpersist()
-    return out
+    pass doesn't recompute it.  That persist is the call's own
+    (plans.session.Intermediates): the OUTPUT is localCheckpoint'ed
+    and the persist released before returning, or on the duplicate
+    error, so no cache entry outlives the call."""
+    with Intermediates() as held:
+        parts = held.persist(df.repartitionByRange(F.col(order_col))
+                             .sortWithinPartitions(order_col)
+                             .withColumn(PART_COL, F.spark_partition_id()))
+        cdf = parts.groupBy(PART_COL).agg(
+            F.count("*").alias("count"),
+            F.count_distinct(F.col(order_col)).alias("n_distinct")).collect()
+        counts = {r[PART_COL]: r["count"] for r in cdf}
+        dup_parts = [r[PART_COL] for r in cdf
+                     if r["count"] != r["n_distinct"]]
+        if dup_parts:
+            raise ValueError(
+                f"global_seq: duplicate {order_col!r} values detected in "
+                f"partitions {dup_parts[:5]} — ranks of duplicates would "
+                f"depend on the range split; deduplicate or pick a unique "
+                f"key")
+        if not counts:  # empty input: create_map() with zero args is invalid
+            return held.result(parts.drop(PART_COL).withColumn(
+                out_col, F.lit(None).cast("long")))
+        offsets, acc = {}, 0
+        for pid in sorted(counts):
+            offsets[pid] = acc
+            acc += counts[pid]
+        off_expr = F.create_map(*[
+            x for pid, off in offsets.items()
+            for x in (F.lit(pid), F.lit(off))])
+        w = Window.partitionBy(PART_COL).orderBy(order_col)
+        return held.result(
+            parts.withColumn(LOCAL_COL, F.row_number().over(w))
+            .withColumn(out_col,
+                        (F.col(LOCAL_COL)
+                         + F.element_at(off_expr, F.col(PART_COL)))
+                        .cast("long"))
+            .drop(PART_COL, LOCAL_COL))

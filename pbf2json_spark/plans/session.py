@@ -163,6 +163,61 @@ def plan_bytes(df) -> int:
                .stats().sizeInBytes())
 
 
+class Intermediates:
+    """The owner of what one operator call stores:
+
+        with Intermediates() as held:
+            base = held.persist(...)
+            step = held.checkpoint(...)
+            return held.result(out)
+
+    It records each frame the call persists and the RDD of each
+    localCheckpoint it makes, read from the checkpoint's plan (a
+    `LogicalRDD`; the same private JVM API as plan_bytes), and on
+    leaving the block, by return or by any exception, releases exactly
+    those: a persist by `unpersist` (which also drops its SQL cache
+    entry), a checkpoint by unpersisting its RDD.  The Dataset API has
+    no unpersist for a localCheckpoint, whose blocks otherwise wait on
+    driver GC.  Nothing else is released, whichever thread made it.
+    `result` checkpoints the call's output eagerly only when something
+    is still held (its plan may read those blocks); the output's own
+    blocks are the caller's, freed by the ContextCleaner once dropped.
+    `release` retires one frame early (a loop's previous round)."""
+
+    def __init__(self):
+        self._held = []             # (frame, its release callable)
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        while self._held:
+            self._held.pop()[1]()
+        return False
+
+    def persist(self, df):
+        df = df.persist()
+        self._held.append((df, df.unpersist))
+        return df
+
+    def checkpoint(self, df, eager: bool = False):
+        df = df.localCheckpoint(eager=eager)
+        rdd = df._jdf.queryExecution().logical().rdd()
+        self._held.append((df, lambda: rdd.unpersist(False)))
+        return df
+
+    def release(self, df) -> None:
+        for n, (frame, free) in enumerate(self._held):
+            if frame is df:
+                del self._held[n]
+                free()
+                return
+        raise ValueError("release: frame is not held by this call")
+
+    def result(self, df):
+        return df.localCheckpoint(eager=True) if self._held else df
+
+
 def warm_python_workers(spark: SparkSession, parallelism: int | None = None) -> None:
     """Start the Python worker daemon and fork one worker per task slot.
 

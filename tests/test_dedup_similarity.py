@@ -420,6 +420,33 @@ def test_pair_ops_leave_no_cache_entries(spark, docs_df):
     from pbf2json_spark.plans.ordering import global_seq
     df = spark.range(0, 500).select(F.col("id").alias("k"))
     global_seq(df, "k").collect()
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "doc_a long, doc_b long")
+    dedup.dedup_groups(pairs).collect()
+    # the embedding operator's sign-LSH path (dim 512, tau 0.9: the
+    # projection grid cannot discriminate) persists its bucketed base
+    rng = np.random.default_rng(3)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=512)], "all")
+         for i in range(20)],
+        "vec_id long, embedding array<float>, label string")
+    with pytest.warns(UserWarning, match="sign-LSH"):
+        similarity.embedding_near_dup_pairs(emb, tau=0.9, dim=512).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "ngram_jaccard_pairs"])
+def test_pair_op_failure_leaves_no_cache_entries(spark, docs_df,
+                                                 monkeypatch, op):
+    """A pair operator that fails after persisting its bases must still
+    release them: the error propagates and the SQL cache is empty."""
+    def broken(docs):
+        raise RuntimeError("verify stage unavailable")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(dedup, "_verify_partitions", broken)
+    with pytest.raises(RuntimeError, match="verify stage"):
+        getattr(dedup, op)(docs_df)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

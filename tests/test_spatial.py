@@ -1021,21 +1021,37 @@ def test_knn_join_chunked_fold_equals_unchunked(spark, monkeypatch):
             assert (one["left_id"] != one["right_id"]).all()
 
 
+def _persistent_rdd_ids(spark) -> set:
+    """Ids of the RDDs the SparkContext holds as persisted (checkpoint
+    blocks included)."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet() \
+        .iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
+def _ladder_sides(spark, n=400):
+    rng = np.random.default_rng(7)
+    pdf = pd.DataFrame({"right_id": [f"r{i}" for i in range(n)],
+                         "lat": rng.normal(40, 3, n),
+                         "lon": rng.normal(-3, 4, n)})
+    right = spark.createDataFrame(pdf)
+    return right.selectExpr("right_id as left_id", "lat", "lon"), right
+
+
 def test_knn_join_releases_internal_blocks(spark, monkeypatch):
     """knn_join must release every call-internal persisted RDD (round
     tops/remainings, right key table, fold outputs) once its result is
     materialized — only the result's own blocks survive (ADVICE r5:
-    checkpoint blocks accumulated per call in long sessions)."""
-    import pandas as _pd
-    from pbf2json_spark.operators.dedup import _persistent_rdd_ids
-    rng = np.random.default_rng(7)
+    checkpoint blocks accumulated per call in long sessions) — and
+    leave no SQL cache entry (the right key table is a DataFrame
+    persist)."""
     N = 400
-    pdf = _pd.DataFrame({"right_id": [f"r{i}" for i in range(N)],
-                         "lat": rng.normal(40, 3, N),
-                         "lon": rng.normal(-3, 4, N)})
-    right = spark.createDataFrame(pdf)
-    left = right.selectExpr("right_id as left_id", "lat", "lon")
+    left, right = _ladder_sides(spark, N)
     monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
+    spark.catalog.clearCache()
     before = _persistent_rdd_ids(spark)
     tr = {}
     out = sp.knn_join(left, right, k=3, exclude_self=True, trace=tr)
@@ -1044,6 +1060,29 @@ def test_knn_join_releases_internal_blocks(spark, monkeypatch):
     delta = _persistent_rdd_ids(spark) - before
     # the result's own checkpoint is the only surviving registration
     assert len(delta) <= 1, delta
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_knn_join_keeps_checkpoints_it_did_not_make(spark, monkeypatch):
+    """A checkpoint that other code makes while a ladder knn_join runs
+    is not the call's to release: it survives the call, blocks and
+    all."""
+    left, right = _ladder_sides(spark)
+    made = []
+    exit_bound = sp._disk_exit_bound_col
+
+    def making_one(*args):
+        if not made:
+            made.append(spark.range(100).localCheckpoint(eager=True))
+        return exit_bound(*args)
+
+    monkeypatch.setattr(sp, "_disk_exit_bound_col", making_one)
+    monkeypatch.setattr(sp, "BRUTE_OPS_BUDGET", 0)   # force the ladder
+    assert sp.knn_join(left, right, k=3).count() == 400 * 3
+    assert made, "the ladder never built an exit bound"
+    rdd_id = made[0]._jdf.queryExecution().logical().rdd().id()
+    assert rdd_id in _persistent_rdd_ids(spark)
+    assert made[0].count() == 100
 
 
 def _run_counting_jobs(spark, fn):
